@@ -2,6 +2,7 @@
 # Run a graft main directly against compiled classes (no sbt lock): mirrors
 # build.sbt's forked-JVM flags. usage: scripts/run_main.sh <MainClass> [args...]
 set -u
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 MEM=${SPARK_DRIVER_MEM:-8g}
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
@@ -11,4 +12,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
 done
 exec java $OPENS -Xmx$MEM \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"

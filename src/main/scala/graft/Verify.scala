@@ -18,6 +18,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    println(graft.core.Sizing.describe(sfDir))
     new java.io.File(outDir).mkdirs()
     // Local iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the dump (the
     // driver never sets it — full run in the gate).

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Tables
+import graft.core.{Sizing, Tables}
 import graft.queries.Registry
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -13,8 +13,15 @@ import org.apache.spark.sql.functions.col
   * Runnable: `runMain graft.pipeline.DailyPipeline <sfDir> <outDir>` */
 object DailyPipeline {
 
-  /** The warehouse build: raw → facts → derived reports → dashboard marts. */
+  /** The warehouse build: raw → facts → derived reports → dashboard marts.
+    * Every job runs in the execution mode `sfDir` calls for (`Sizing.mode`),
+    * on a session scoped to that job. */
   def jobs(sfDir: String, outDir: String): Seq[Job] = {
+    val mode = Sizing.mode(sfDir)
+    declaredJobs(sfDir, outDir).map(j => j.copy(run = s => j.run(Sizing.session(s, mode))))
+  }
+
+  private def declaredJobs(sfDir: String, outDir: String): Seq[Job] = {
     // heavy = the declared memory class (see Job.heavy): plans whose shuffle
     // state is candidate-PAIR-sized (simhash/minhash band joins, embedding
     // ring joins), which the Dag serializes against each other per wave
@@ -592,7 +599,7 @@ object DailyPipeline {
     // the round-8 sf10 run showed the warehouse build spilling at the
     // 32-partition default. SPARK_GRAFT_SHUFFLE remains as an A/B override.
     val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.core.Sizing.shufflePartitions(sfDir, cpus.toInt).toString)
+      Sizing.shufflePartitions(sfDir, cpus.toInt).toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.plans.GraftExtensions)
@@ -604,6 +611,7 @@ object DailyPipeline {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    println(Sizing.describe(sfDir))
     val results = new Dag(jobs(sfDir, outDir))
       .runParallel(spark, sys.env.getOrElse("SPARK_GRAFT_DAG_PARALLELISM", "4").toInt)
     results.foreach(r => println(

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.core.Sizing
+
 /** All declared queries, keyed by name. Each family object contributes a Seq[Q];
   * `SparkEntry` exposes the union to the driver's Verify/Bench harness. */
 object Registry {
@@ -29,10 +31,17 @@ object Registry {
     Reports.qs,
     EventsTable.qs)
 
-  lazy val all: Seq[Q] = {
+  /** The queries as declared: each runs in whatever execution mode the
+    * session it is given is in. */
+  lazy val declared: Seq[Q] = {
     val qs = families.flatten
     val dup = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(dup.isEmpty, s"duplicate query names: ${dup.mkString(",")}")
     qs
   }
+
+  /** The queries every caller runs: each call runs in the execution mode its
+    * input directory calls for (`Sizing.mode`), scoped to that call. */
+  lazy val all: Seq[Q] =
+    declared.map(q => q.copy(run = (s, d) => q.run(Sizing.session(s, Sizing.mode(d)), d)))
 }

@@ -5,6 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (build.sbt forks tests with the
   * JDK17 add-opens and UTC timezone). */
 object TestSpark {
+
+  /** The generated test tables, one directory per scale factor. */
+  def data(scale: String): String = s"/root/testdata/$scale"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
