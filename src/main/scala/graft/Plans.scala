@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspector: prints the formatted physical plan of the named queries
   * (or all bench queries) — the review loop for shuffle/pushdown/broadcast
@@ -9,17 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session(sfDir)
     val wanted = if (args.nonEmpty) Registry.all.filter(q => args.contains(q.name))
                  else Registry.all.filter(_.bench)
     wanted.foreach { q =>

@@ -1,19 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke: mirrors the driver's `SparkEntry.entry` rows>0 check. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session(SparkEntry.EntryData)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

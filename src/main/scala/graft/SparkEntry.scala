@@ -8,11 +8,14 @@ import org.apache.spark.sql.functions._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
+  /** The scale directory [[entry]] reads. */
+  val EntryData = "/root/testdata/sf0.001"
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Revenue by (nation, month) through broadcast dims — scan → broadcast
     * joins → hash agg, the engine's bread-and-butter shape. */
   def entry(spark: SparkSession): DataFrame = {
-    val d = "/root/testdata/sf0.001"
+    val d = EntryData
     val li = Tables.lineitem(spark, d)
     val sup = Tables.supplier(spark, d)
     val nat = Tables.nation(spark, d)

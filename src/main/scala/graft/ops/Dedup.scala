@@ -132,18 +132,6 @@ object Dedup {
     jaccardFor(cands, shVerify, idCol)
   }
 
-  /** [[incrementalNearDup]] with the bucket cap OFF: exhaustive candidate
-    * pairs, bit-identical to the pre-cap semantics at ANY bucket occupancy.
-    * The capped form became the default in round 7 (the production posture
-    * — see README "Semantics changelog"); this variant makes the opt-out
-    * discoverable for callers that need every pair of a degenerate bucket
-    * and accept the m²/2 blow-up that entails. */
-  def incrementalNearDupExhaustive(delta: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, k: Int, numHashes: Int,
-      bandSize: Int): DataFrame =
-    incrementalNearDup(delta, corpus, idCol, textCol, k, numHashes, bandSize,
-      maxBucket = Int.MaxValue)
-
   /** Near-containment pairs via RARE-SHINGLE BLOCKING: candidates are any
     * two docs sharing a shingle with document frequency <= `maxDf`, verified
     * by exact intersection/size counts. Containment |A∩B|/|A| is asymmetric
@@ -309,10 +297,10 @@ object Dedup {
     * candidate self-join emit m(m−1)/2 pairs: a single hot key that kills
     * the job at 100 TB no matter how many executors exist. 1024 is far
     * above every honestly-similar cluster observed in the synthetic corpus
-    * (bucket max: 3 at sf0.01, 8 at sf0.1 — graft.tools.BucketOcc), so
-    * capped and uncapped candidates are bit-identical at every gated and
-    * probed scale, while a true pathological bucket degrades to 1023 star
-    * edges instead of 500k+ pairs. */
+    * (bucket max: 3 at sf0.01, 8 at sf0.1 — BENCH_NOTES "LSH bucket
+    * occupancy"), so capped and uncapped candidates are bit-identical at
+    * every gated and probed scale, while a true pathological bucket
+    * degrades to 1023 star edges instead of 500k+ pairs. */
   val DefaultLshMaxBucket = 1024
 
   /** Candidate pairs sharing >= 1 band signature: (id_a, id_b, n_bands).
@@ -707,10 +695,9 @@ object Dedup {
   }
 
   /** The (ranked spine, prefix index, candidate pairs) stages of
-    * [[prefixJaccardPairs]], exposed package-wide so the stage-level probe
-    * (tools.ProfileD10) times the PRODUCTION shapes and can never drift
-    * from them. */
-  private[graft] def prefixJaccardStages(df: DataFrame, idCol: String,
+    * [[prefixJaccardPairs]] — the stages of the d10 stage profile in
+    * BENCH_NOTES ("Round-7: d10 buy-back"). */
+  private def prefixJaccardStages(df: DataFrame, idCol: String,
       textCol: String, tauNum: Int, tauDen: Int, shingleK: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     require(tauNum > 0 && tauDen >= tauNum, s"tau must be in (0,1]: $tauNum/$tauDen")
@@ -850,10 +837,9 @@ object Dedup {
   }
 
   /** The (weighted postings, ranked spine, filtered candidates) stages of
-    * [[cosinePrefixPairs]], exposed package-wide so the stage-level probe
-    * (tools.ProfileD11) times the PRODUCTION shapes and can never drift
-    * from them. */
-  private[graft] def cosineStages(df: DataFrame, idCol: String, textCol: String,
+    * [[cosinePrefixPairs]] — the stages of the d11 stage profile in
+    * BENCH_NOTES ("d11 engineering record"). */
+  private def cosineStages(df: DataFrame, idCol: String, textCol: String,
       tauNum: Int, tauDen: Int, shingleK: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     val w = cosinePostings(df, idCol, textCol, shingleK)
@@ -863,11 +849,11 @@ object Dedup {
   }
 
   /** Stage 1 of [[cosinePrefixPairs]]: the weighted posting spine.
-    * Exposed separately (with [[cosineRanked]]/[[cosineCand]]) so
-    * tools.ProfileD11 can time each stage INCREMENTALLY over a prebuilt
-    * predecessor — the stages eagerly checkpoint, so timing a composed
-    * call attributes every upstream stage to whichever probe runs it. */
-  private[graft] def cosinePostings(df: DataFrame, idCol: String,
+    * Separate from [[cosineRanked]]/[[cosineCand]] because the stages
+    * eagerly checkpoint: a stage profile times each one over a prebuilt
+    * predecessor, or every upstream stage is charged to whichever stage runs
+    * it (BENCH_NOTES, "d11 engineering record"). */
+  private def cosinePostings(df: DataFrame, idCol: String,
       textCol: String, shingleK: Int): DataFrame = {
     // checkpointed at the NARROWEST frame (the (doc, term, count) pre-agg):
     // it feeds the vocabulary aggregation AND the postings join, and the
@@ -901,7 +887,7 @@ object Dedup {
   /** Stage 2 of [[cosinePrefixPairs]]: the globally-ranked spine with
     * per-term suffix potentials and doc norms, over a [[cosinePostings]]
     * frame. τ-independent. */
-  private[graft] def cosineRanked(w: DataFrame, idCol: String): DataFrame = {
+  private def cosineRanked(w: DataFrame, idCol: String): DataFrame = {
     val wDoc = Window.partitionBy(col(idCol)).orderBy(col("dfq"), col("word"))
     // EVERY term ranked under the one global (dfq asc, word) order, with its
     // remaining-suffix potential — the spine both the prefix index AND the
@@ -936,7 +922,7 @@ object Dedup {
 
   /** Stage 3 of [[cosinePrefixPairs]]: the prefix index and the
     * bound-filtered candidate pairs, over a [[cosineRanked]] spine. */
-  private[graft] def cosineCand(ranked: DataFrame, idCol: String,
+  private def cosineCand(ranked: DataFrame, idCol: String,
       tauNum: Int, tauDen: Int): DataFrame = {
     require(tauNum > 0 && tauDen >= tauNum, s"tau must be in (0,1]: $tauNum/$tauDen")
     // corpus norm envelope: ONE driver-side row (the t33 KB-state license);

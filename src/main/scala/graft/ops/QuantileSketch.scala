@@ -89,11 +89,6 @@ object QuantileSketch {
        | ELSE CAST(CAST(($be) % 100 AS VARCHAR) || repeat('0', ($be) // 100 - 2) AS BIGINT) END)"""
       .stripMargin.replace("\n", " ")
 
-  def bucketHighSql(be: String): String =
-    s"""(CASE WHEN ($be) // 100 = 1 THEN CAST(($be) % 100 + 1 AS BIGINT)
-       | ELSE CAST(CAST(($be) % 100 + 1 AS VARCHAR) || repeat('0', ($be) // 100 - 2) AS BIGINT) END)"""
-      .stripMargin.replace("\n", " ")
-
   /** The sketch's value domain: [0, 10^14) — DECIMAL(18,4) holds 14 integer
     * digits, so a larger value would overflow the qunits cast (an error
     * under ANSI, a silently mis-sorted NULL bucket otherwise). The

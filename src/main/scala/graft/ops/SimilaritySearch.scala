@@ -577,7 +577,7 @@ object SimilaritySearch {
     * high cosine agree on most sign bits, so sorting a bucket by this
     * integer puts true near-dups next to each other (Manku '07
     * rotate-and-sort, applied to the SNM window order). */
-  private[graft] def srpFineCol(vecCol: String, offset: Int, bits: Int,
+  private def srpFineCol(vecCol: String, offset: Int, bits: Int,
       dim: Int): Column = {
     val h = srpNumerators(offset + bits, dim)
     (0 until bits).map { j =>

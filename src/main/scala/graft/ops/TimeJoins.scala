@@ -19,18 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object TimeJoins {
 
-  /** J4: point-in-interval join — attach interval rows whose [start,end] spans
-    * the probe's point. Equi part: `keys`; residual: containment.
-    * Reference: `get_active_memberships_for_date`
-    * `/root/reference/data_pipeline/fetch_capitan_membership_data.py:299-312`. */
-  def pointInInterval(points: DataFrame, intervals: DataFrame, keys: Seq[(String, String)],
-      point: Column, start: Column, end: Column, how: String = "inner"): DataFrame = {
-    val residual = point >= start && point <= end
-    val cond = keys.map { case (pk, ik) => points(pk) === intervals(ik) }
-      .reduceOption(_ && _).map(_ && residual).getOrElse(residual)
-    points.join(intervals, cond, how)
-  }
-
   /** J5: as-of join — for each left row, the single latest right row (same key)
     * with right time <= left time (`direction = "backward"`), or the earliest
     * right row strictly after (`"forward"`). Deterministic via `rightTiebreak`.

@@ -32,14 +32,6 @@ object Windows {
     df.withColumn(as, count(lit(1)).over(w))
   }
 
-  /** W3: gap to the previous row per key (in the unit of `axis`).
-    * Reference: `customer_flags_config.py:354-358`. */
-  def gapFromPrevious(df: DataFrame, key: Column, axis: Column, tiebreak: Column,
-      as: String = "gap"): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(axis, tiebreak)
-    df.withColumn(as, axis - lag(axis, 1).over(w))
-  }
-
   /** W5: keep the single best row per key group, ranked by `pref` descending
     * (deterministic via `tiebreak`).
     * Reference: sort + drop_duplicates `build_family_relationships.py:455-462`. */
@@ -59,16 +51,6 @@ object Windows {
     * that dies at 100 TB. */
   def topK(df: DataFrame, k: Int, rank: Column, tiebreak: Column): DataFrame =
     df.orderBy(rank.desc, tiebreak).limit(k)
-
-  /** W6 + rank column: top-k with an explicit 1-based `rank` output. The
-    * window runs AFTER the limit, over exactly k rows — the single-partition
-    * window is on a k-row frame, never the full input (the constant
-    * partition key silences the global-window warning; same plan). */
-  def topKRanked(df: DataFrame, k: Int, rank: Column, tiebreak: Column,
-      as: String = "rank"): DataFrame =
-    topK(df, k, rank, tiebreak)
-      .withColumn(as, row_number().over(
-        Window.partitionBy(lit(0)).orderBy(rank.desc, tiebreak)))
 
   /** W8: gap-based sessionization — consecutive rows per key share a session
     * while the step on `axis` is <= maxGap; `as` is the 1-based session

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import graft.core.{Sizing, Tables}
+import graft.core.{Session, Sizing, Tables}
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** The engine's EP1-shaped daily batch: materialize the warehouse's derived
@@ -593,25 +592,7 @@ object DailyPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_warehouse"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions derive from the data (Sizing: input footprint ×
-    // expansion / AQE advisory size), not from a fixed session constant —
-    // the round-8 sf10 run showed the warehouse build spilling at the
-    // 32-partition default. SPARK_GRAFT_SHUFFLE remains as an A/B override.
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      Sizing.shufflePartitions(sfDir, cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(Sizing.describe(sfDir))
+    val spark = Session(sfDir)
     val results = new Dag(jobs(sfDir, outDir))
       .runParallel(spark, sys.env.getOrElse("SPARK_GRAFT_DAG_PARALLELISM", "4").toInt)
     results.foreach(r => println(

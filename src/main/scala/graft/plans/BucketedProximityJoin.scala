@@ -91,7 +91,8 @@ object BucketedProximityJoin extends Rule[LogicalPlan] with PredicateHelper {
     Project(j.output, Union(branches))
   }
 
-  /** Wire-up for SparkSession.builder().withExtensions(...). */
+  /** This rule alone, for a session builder's `withExtensions(...)`; the
+    * engine's sessions get it through [[GraftExtensions]]. */
   class Extensions extends (SparkSessionExtensions => Unit) {
     override def apply(e: SparkSessionExtensions): Unit =
       e.injectOptimizerRule(_ => BucketedProximityJoin)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -135,11 +134,5 @@ object IntervalBucketJoin extends Rule[LogicalPlan] with PredicateHelper {
       if (pointOnLeft) Join(j.left, exploded, j.joinType, Some(newCond), j.hint)
       else Join(exploded, j.right, j.joinType, Some(newCond), j.hint)
     Project(j.output, newJoin)
-  }
-
-  /** Wire-up for SparkSession.builder().withExtensions(...). */
-  class Extensions extends (SparkSessionExtensions => Unit) {
-    override def apply(e: SparkSessionExtensions): Unit =
-      e.injectOptimizerRule(_ => IntervalBucketJoin)
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe data generator: replicate a testdata scale-factor directory
@@ -38,15 +38,7 @@ object ScaleUp {
     // input axis independently — the fourth-decade tail probes); default all
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session(src)
 
     def table(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
     // cast before getLong: key columns are int64 today, but an int32

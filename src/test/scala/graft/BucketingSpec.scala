@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{Session, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,18 +13,8 @@ class BucketingSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bucketing")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the SMJ path
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session(sf, cpus = 4)
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the SMJ path
     s
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import graft.plans.{GraftExtensions, IntervalBucketJoin}
+import graft.core.Session
+import graft.plans.IntervalBucketJoin
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,14 +14,9 @@ class IntervalBucketJoinSpec extends AnyFunSuite {
   private def freshSession(width: Long): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-interval-rule-$width")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(IntervalBucketJoin.WidthKey, width.toString)
-    b.withExtensions(new GraftExtensions).getOrCreate()
+    val s = Session(TestSpark.data("sf0.001"), cpus = 4)
+    s.conf.set(IntervalBucketJoin.WidthKey, width.toString)
+    s
   }
 
   private lazy val spark: SparkSession = freshSession(width = 1000L)
