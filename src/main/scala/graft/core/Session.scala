@@ -37,12 +37,13 @@ object Session {
     * output). `getOrCreate` ignores extensions when a default session
     * already exists; a caller that needs a fresh session clears the default
     * first. */
-  def apply(dataDir: String, cpus: Int = cpus): SparkSession = {
+  def apply(dataDir: String): SparkSession = {
     System.err.println(Sizing.describe(dataDir))
+    val n = cpus
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(s"local[$n]")
       .withExtensions(new graft.plans.GraftExtensions)
-      .config(settings(dataDir, cpus))
+      .config(settings(dataDir, n))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

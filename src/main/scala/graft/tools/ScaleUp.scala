@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
   *    grows like a real corpus instead of collapsing onto 4 exact copies
   *    (embeddings scale factor/2.5, matching the generator's 4× per 10×).
   *
-  * Usage: `runMain graft.tools.ScaleUp <srcSfDir> <outDir> <factor>`
+  * Usage: `SPARK_GRAFT_CPUS=32 runMain graft.tools.ScaleUp <srcSfDir> <outDir> <factor>`
+  * (threads from `SPARK_GRAFT_CPUS`, default 4; the tool ran on 32 threads
+  * before it got its session from `graft.core.Session`)
   * This is probe tooling: outputs live outside the repo and are never an
   * oracle input (DuckDB correctness always runs on driver-written data).
   */

@@ -13,7 +13,7 @@ class BucketingSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = Session(sf, cpus = 4)
+    val s = Session(sf)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the SMJ path
     s
   }

@@ -14,7 +14,7 @@ class IntervalBucketJoinSpec extends AnyFunSuite {
   private def freshSession(width: Long): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = Session(TestSpark.data("sf0.001"), cpus = 4)
+    val s = Session(TestSpark.data("sf0.001"))
     s.conf.set(IntervalBucketJoin.WidthKey, width.toString)
     s
   }

@@ -2057,8 +2057,10 @@ class OpsSpec extends AnyFunSuite {
     import graft.core.Sizing
     // missing path -> 0 bytes -> cpus floor
     assert(Sizing.shufflePartitions("/nonexistent/dir", 32) == 32)
-    // the gated scales reproduce the historical session default exactly
-    assert(Sizing.shufflePartitions("/root/testdata/sf0.1", 32) == 32)
+    // the gated scales reproduce the historical session default exactly:
+    // as many partitions as threads
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); cpus <- Seq(4, 32))
+      assert(Sizing.shufflePartitions(s"/root/testdata/$sf", cpus) == cpus, s"$sf at $cpus")
     // formula: bytes*Expansion/TargetBytes inside the clamp
     val b = Sizing.inputBytes("/root/testdata/sf0.1")
     assert(b > 0L)

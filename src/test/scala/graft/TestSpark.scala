@@ -10,8 +10,8 @@ object TestSpark {
   /** The generated test tables, one directory per scale factor. */
   def data(scale: String): String = s"/root/testdata/$scale"
 
-  /** Four threads and four shuffle partitions, whatever `SPARK_GRAFT_CPUS`
-    * says: specs that count partitions or tasks see the same session on
-    * every host. */
-  lazy val spark: SparkSession = Session(data("sf0.001"), cpus = 4)
+  /** Four threads and four shuffle partitions: build.sbt pins
+    * `SPARK_GRAFT_CPUS=4` for the forked test JVM, so specs that count
+    * partitions or tasks see the same session on every host. */
+  lazy val spark: SparkSession = Session(data("sf0.001"))
 }
