@@ -20,7 +20,7 @@ object Checkpoints {
   /** True when `df`'s analyzed plan is only Project/Filter over LogicalRDD
     * checkpoints — i.e. re-running it per consumer is as cheap as reading
     * the checkpoint it would create. */
-  private[graft] def cheapOverCheckpoint(df: DataFrame): Boolean =
+  private def cheapOverCheckpoint(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collect {
       case n => n.getClass.getSimpleName
     }.forall(Set("LogicalRDD", "Project", "Filter").contains)

@@ -439,20 +439,12 @@ object Dedup {
     // bound is statistical, not structural — so checkpoint the candidate set
     // (it is reused four times below anyway), measure it, and only force the
     // hint under MaxBroadcastPairs; beyond that fall back to AQE-planned
-    // shuffle joins. Callers that already checkpointed (d2 does) are not
-    // re-materialized: a LogicalRDD input is used as-is. Deliberate
-    // trade-off: building this DataFrame runs the candidate job EAGERLY
-    // (plan-only consumers pay it too) — the measured hint decision needs a
-    // real count, and every non-trivial caller executes the result anyway.
-    // "already materialized" = the whole plan is Project/Filter over a
-    // LogicalRDD checkpoint — those re-run cheaply per consumer. Anything
-    // heavier above the checkpoint (a join, an aggregate) must still be
-    // materialized here, or the count plus four downstream consumers would
-    // re-execute it five times.
-    val cheapOverCheckpoint = pairs.queryExecution.analyzed.collect {
-      case n => n.getClass.getSimpleName
-    }.forall(Set("LogicalRDD", "Project", "Filter").contains)
-    val pairsCk = if (cheapOverCheckpoint) pairs else pairs.localCheckpoint(true)
+    // shuffle joins. Deliberate trade-off: building this DataFrame runs the
+    // candidate job EAGERLY (plan-only consumers pay it too) — the measured
+    // hint decision needs a real count, and every non-trivial caller
+    // executes the result anyway.
+    // d2's already-checkpointed pairs are used as-is; a join would re-run 5x.
+    val pairsCk = Checkpoints.ckUnlessCheap(pairs)
     val small = pairsCk.count() <= MaxBroadcastPairs
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val candIds = pairsCk.select(col("id_a").as("cid"))

@@ -1,26 +1,29 @@
 package graft.pipeline
 
+import java.util.concurrent.{ExecutorCompletionService, Executors}
 import org.apache.spark.sql.SparkSession
 
-/** Topologically-ordered job runner with per-job failure isolation
+/** Dependency-ordered job runner with per-job failure isolation
   * (SURVEY.md §3 EP1/EP2, §7.1 `pipeline/Dag.scala`).
   *
   * The reference sequences ~25 fetch→transform→upload stages, each wrapped in
   * try/except so one failure doesn't halt the day's run
   * (`/root/reference/run_daily_pipeline.py:49-55`). Here the same contract is
-  * explicit: jobs declare dependencies, run in topological order, a failed
-  * job is recorded and its transitive dependents are SKIPPED (running them on
-  * missing/stale inputs — the reference's actual behavior — is the one
-  * deviation we do not reproduce), and everything independent still runs.
+  * explicit: jobs declare dependencies, a job runs only after all of them
+  * succeeded, a failed job is recorded and its transitive dependents are
+  * SKIPPED (running them on missing/stale inputs — the reference's actual
+  * behavior — is the one deviation we do not reproduce), and everything
+  * independent still runs.
   */
 /** @param heavy declared MEMORY class, not a speed hint: `true` marks a job
   *   whose plan materializes candidate-PAIR-scale shuffle state (simhash /
   *   minhash band joins, embedding ring joins — state ~O(candidate pairs),
-  *   not O(rows)). [[Dag.runParallel]] admits at most `heavyCap` (default 1)
-  *   heavy jobs per wave: two pair builds co-resident in one 32-thread JVM
-  *   OOM'd the sf10 run (round 10, measured), and the fix must not depend on
-  *   a fortuitous lineage dep existing between whichever two heavy jobs land
-  *   in the same wave next. Light jobs co-schedule freely. */
+  *   not O(rows)). [[Dag.runParallel]] keeps at most ONE heavy job in flight
+  *   at any moment: two pair builds co-resident in one 32-thread JVM OOM'd
+  *   the sf10 run (round 10, measured), and the fix must not depend on a
+  *   fortuitous lineage dep existing between whichever two heavy jobs become
+  *   ready together. A ready heavy job waits for the running one to finish;
+  *   light jobs co-schedule freely. */
 final case class Job(name: String, deps: Seq[String], run: SparkSession => Unit,
     heavy: Boolean = false)
 
@@ -32,104 +35,71 @@ final class Dag(jobs: Seq[Job]) {
   private val byName = jobs.map(j => j.name -> j).toMap
   jobs.foreach(j => j.deps.foreach(d =>
     require(byName.contains(d), s"job ${j.name} depends on unknown job $d")))
-
-  /** Kahn topological order; deterministic (insertion order among ready jobs). */
-  private def topoOrder: Seq[Job] = {
-    val order = scala.collection.mutable.ArrayBuffer.empty[Job]
-    val done = scala.collection.mutable.Set.empty[String]
+  // Kahn peel: a cycle is rejected here, before any job can run
+  locally {
+    var done = Set.empty[String]
     var remaining = jobs
     while (remaining.nonEmpty) {
       val (ready, blocked) = remaining.partition(_.deps.forall(done.contains))
       require(ready.nonEmpty, s"dependency cycle among: ${remaining.map(_.name).mkString(",")}")
-      ready.foreach { j => order += j; done += j.name }
+      done ++= ready.map(_.name)
       remaining = blocked
     }
-    order.toSeq
   }
 
-  /** Wave-parallel run: every dependency-ready job of a wave executes
-    * concurrently on a bounded pool (concurrent actions on one SparkSession
-    * are safe and keep the cluster busy while another job's stage tail
-    * finishes). Same failure isolation as [[run]]: a failed job poisons its
-    * transitive dependents, everything else proceeds.
-    *
-    * Memory-aware admission: at most `heavyCap` [[Job.heavy]] jobs are
-    * admitted per wave — the rest stay in the ready queue for a later wave
-    * (their deps are already satisfied, so they are first in line). This
-    * bounds peak executor memory to one pair-machinery working set plus the
-    * light jobs' mart-sized state, whatever shape the DAG grows into. */
-  def runParallel(spark: SparkSession, parallelism: Int = 4,
-      heavyCap: Int = 1): Seq[JobResult] = {
-    // contract: at LEAST one heavy job must be admissible per wave, or a
-    // heavy-only frontier would deadlock the scheduler; heavyCap = 0 is
-    // therefore rejected loudly instead of being silently promoted to 1
-    // (r11 ADVICE — the old max(1, cap) made "0" mean "1")
-    require(heavyCap >= 1, s"heavyCap must be >= 1 (got $heavyCap): every " +
-      "wave must be able to admit one heavy job or heavy-only frontiers stall")
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, JobResult]
-    val failed = scala.collection.mutable.Set.empty[String]
-    var remaining = topoOrder
-    try {
-      while (remaining.nonEmpty) {
-        val done = results.keySet.toSet
-        val (ready, blocked) = remaining.partition(_.deps.forall(done.contains))
-        // memory-class admission: skipped-to-be jobs (poisoned upstream)
-        // consume no memory, so they never count against the heavy cap
-        val (heavyReady, rest) =
-          ready.partition(j => j.heavy && !j.deps.exists(failed.contains))
-        val admitted = rest ++ heavyReady.take(heavyCap)
-        val deferred = heavyReady.drop(heavyCap)
-        val wave = admitted.map { job =>
-          if (job.deps.exists(failed.contains)) {
-            failed += job.name
-            job.name -> Future.successful(JobResult(job.name, "skipped",
-              Some(s"upstream failed: ${job.deps.filter(failed.contains).mkString(",")}"), 0L))
-          } else job.name -> Future {
-            val t0 = System.nanoTime()
-            try {
-              job.run(spark)
-              JobResult(job.name, "ok", None, (System.nanoTime() - t0) / 1000000L)
-            } catch {
-              case e: Throwable => JobResult(job.name, "failed",
-                Some(e.toString.take(500)), (System.nanoTime() - t0) / 1000000L)
-            }
-          }
-        }
-        wave.foreach { case (name, fut) =>
-          val r = Await.result(fut, Duration.Inf)
-          if (r.status == "failed") failed += name
-          results += name -> r
-        }
-        remaining = deferred ++ blocked
+  /** Runs every job on a fixed pool of `parallelism` threads (concurrent
+    * actions on one SparkSession are safe and keep the cluster busy while
+    * another job's stage tail finishes). Each finished job posts its result
+    * to a completion queue; on each completion the calling thread records
+    * it, marks every dependent of a failed or skipped job `skipped` (no
+    * slot used), then launches ready jobs in declaration order while a slot
+    * is free. A job therefore starts as soon as its last dependency ends,
+    * not when an unrelated sibling does. A heavy job ([[Job.heavy]])
+    * launches only when no other heavy job is in flight. Results come back
+    * in declaration order. */
+  def runParallel(spark: SparkSession, parallelism: Int = 4): Seq[JobResult] = {
+    val slots = math.max(1, parallelism)
+    val pool = Executors.newFixedThreadPool(slots)
+    val done = new ExecutorCompletionService[JobResult](pool)
+    val results = scala.collection.mutable.Map.empty[String, JobResult]
+    def bad(d: String) = results.get(d).exists(_.status != "ok")
+    var pending = jobs
+    var inFlight = 0
+    var heavyInFlight = false
+    def launch(): Unit = {
+      var poisoned = pending.filter(_.deps.exists(bad))
+      while (poisoned.nonEmpty) { // a skip can poison a job declared before it
+        poisoned.foreach(j => results(j.name) = JobResult(j.name, "skipped",
+          Some(s"upstream failed: ${j.deps.filter(bad).mkString(",")}"), 0L))
+        pending = pending.diff(poisoned)
+        poisoned = pending.filter(_.deps.exists(bad))
       }
-    } finally pool.shutdown()
-    results.values.toSeq
-  }
-
-  def run(spark: SparkSession): Seq[JobResult] = {
-    val failed = scala.collection.mutable.Set.empty[String]
-    topoOrder.map { job =>
-      val t0 = System.nanoTime()
-      if (job.deps.exists(failed.contains)) {
-        failed += job.name // transitively poison dependents
-        JobResult(job.name, "skipped",
-          Some(s"upstream failed: ${job.deps.filter(failed.contains).mkString(",")}"), 0L)
-      } else {
-        try {
-          job.run(spark)
-          JobResult(job.name, "ok", None, (System.nanoTime() - t0) / 1000000L)
-        } catch {
-          case e: Throwable =>
-            failed += job.name
-            JobResult(job.name, "failed", Some(e.toString.take(500)),
-              (System.nanoTime() - t0) / 1000000L)
+      pending.foreach { job => // every recorded dep of a pending job is ok
+        if (inFlight < slots && job.deps.forall(results.contains) &&
+            !(job.heavy && heavyInFlight)) {
+          pending = pending.filterNot(_ eq job)
+          inFlight += 1
+          heavyInFlight ||= job.heavy
+          done.submit(() => {
+            val t0 = System.nanoTime()
+            val (status, error) =
+              try { job.run(spark); ("ok", None) }
+              catch { case e: Throwable => ("failed", Some(e.toString.take(500))) }
+            JobResult(job.name, status, error, (System.nanoTime() - t0) / 1000000L)
+          })
         }
       }
     }
+    try {
+      launch()
+      while (inFlight > 0) {
+        val r = done.take().get()
+        inFlight -= 1
+        if (byName(r.name).heavy) heavyInFlight = false
+        results(r.name) = r
+        launch()
+      }
+    } finally pool.shutdown()
+    jobs.map(j => results(j.name))
   }
 }

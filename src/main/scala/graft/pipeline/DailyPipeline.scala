@@ -23,7 +23,7 @@ object DailyPipeline {
   private def declaredJobs(sfDir: String, outDir: String): Seq[Job] = {
     // heavy = the declared memory class (see Job.heavy): plans whose shuffle
     // state is candidate-PAIR-sized (simhash/minhash band joins, embedding
-    // ring joins), which the Dag serializes against each other per wave
+    // ring joins), of which the Dag keeps at most one in flight
     def materialize(query: String, table: String, deps: Seq[String] = Nil,
         heavy: Boolean = false): Job =
       Job(table, deps, s =>
@@ -323,11 +323,11 @@ object DailyPipeline {
       // 1/cluster_size (exact ppm) — the mixer-facing alternative to
       // dropping. heavy: rebuilds the d5/d6 simhash pair graph — round 10's
       // OOM was exactly this job co-resident with the clustering report's
-      // pair build in one 32-thread JVM wave (the 93-job sf10 run died at
+      // pair build in one 32-thread JVM (the 93-job sf10 run died at
       // 3 min where the 92-job tree passed in 851 s). The round-10 fix was
       // an ordering dep on dup_clustering_report; the memory class replaces
-      // it — the Dag now guarantees no two pair builds co-schedule, whoever
-      // adds the next one.
+      // it — the Dag keeps one heavy job in flight at a time, so no two pair
+      // builds co-schedule, whoever adds the next one.
       materialize("d13_soft_dedup_weights", "soft_dedup_weights", heavy = true),
       // soft-weighted training mixture: the c5 UniMax budget cut run on
       // the MATERIALIZED soft-dedup weights (the ev2 injection pattern:
@@ -593,8 +593,7 @@ object DailyPipeline {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_warehouse"
     val spark = Session(sfDir)
-    val results = new Dag(jobs(sfDir, outDir))
-      .runParallel(spark, sys.env.getOrElse("SPARK_GRAFT_DAG_PARALLELISM", "4").toInt)
+    val results = new Dag(jobs(sfDir, outDir)).runParallel(spark)
     results.foreach(r => println(
       s"[pipeline] ${r.name}: ${r.status} (${r.durationMs} ms)${r.error.map(" — " + _).getOrElse("")}"))
     val ok = results.count(_.status == "ok")

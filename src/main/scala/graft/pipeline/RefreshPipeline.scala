@@ -103,7 +103,7 @@ object RefreshPipeline {
     val spark = graft.core.Session(sfDir)
 
     if (!new java.io.File(s"$whDir/combined_transactions").exists())
-      new Dag(DailyPipeline.jobs(sfDir, whDir)).run(spark)
+      new Dag(DailyPipeline.jobs(sfDir, whDir)).runParallel(spark)
 
     // 1-2: refetch the trailing week of events from the source and splice.
     val stored = Tables.events(spark, sfDir) // stands in for the stored fact table

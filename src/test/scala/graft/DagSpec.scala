@@ -15,7 +15,7 @@ class DagSpec extends AnyFunSuite {
       Job("d", Seq("a"), _ => ran += "d"),      // independent of b — runs
       Job("e", Seq("c", "d"), _ => ran += "e")  // skipped (c skipped)
     ))
-    val results = dag.run(spark).map(r => r.name -> r.status).toMap
+    val results = dag.runParallel(spark, parallelism = 1).map(r => r.name -> r.status).toMap
     assert(ran.toSeq == Seq("a", "b", "d"))
     assert(results == Map("a" -> "ok", "b" -> "failed", "c" -> "skipped",
       "d" -> "ok", "e" -> "skipped"))
@@ -101,8 +101,23 @@ class DagSpec extends AnyFunSuite {
       "x" -> "failed", "y" -> "skipped"))
   }
 
+  test("runParallel: a job starts once its deps finish, not when an unrelated sibling does") {
+    // `slow` holds its slot until `b` has finished or 10 s have passed; a
+    // scheduler that held `b` behind `slow` (a wave barrier) times it out
+    val bDone = new java.util.concurrent.CountDownLatch(1)
+    @volatile var slowSawB = false
+    val dag = new Dag(Seq(
+      Job("slow", Nil, _ => slowSawB = bDone.await(10, java.util.concurrent.TimeUnit.SECONDS)),
+      Job("a", Nil, _ => ()),
+      Job("b", Seq("a"), _ => bDone.countDown())))
+    val results = dag.runParallel(spark, parallelism = 2)
+    assert(results.map(r => r.name -> r.status) ==
+      Seq("slow" -> "ok", "a" -> "ok", "b" -> "ok"))
+    assert(slowSawB, "b did not start and finish while slow was still blocked")
+  }
+
   test("runParallel: two heavy-class jobs never co-schedule") {
-    // round-10 lesson: two simhash pair builds co-resident in one wave OOM'd
+    // round-10 lesson: two simhash pair builds running at once OOM'd
     // the 32-thread JVM at sf10 — the Dag's memory-class admission must make
     // that combination impossible regardless of the dependency shape.
     val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -120,7 +135,7 @@ class DagSpec extends AnyFunSuite {
       Job("l1", Nil, _ => ()),
       Job("l2", Seq("l1"), _ => ()),
       // a heavy job with a FAILED upstream is a no-op skip — it must not
-      // hold a heavy slot (nor block the wave) while being poisoned
+      // hold a heavy slot (nor hold back other jobs) while being poisoned
       Job("x", Nil, _ => throw new RuntimeException("boom")),
       Job("h4", Seq("x"), _ => heavyBody(), heavy = true)))
     val results = dag.runParallel(spark, parallelism = 8)
@@ -135,7 +150,7 @@ class DagSpec extends AnyFunSuite {
     // the memory-class policy only protects jobs that DECLARE the class —
     // pin the tag on the known candidate-pair-scale plans so a retag slip
     // (or a new pair build landing untagged next to these) is a red test,
-    // not an sf10 OOM three waves into a nightly run
+    // not an sf10 OOM midway through a nightly run
     val heavy = graft.pipeline.DailyPipeline
       .jobs("/root/testdata/sf0.001", "/tmp/never_run")
       .filter(_.heavy).map(_.name).toSet
@@ -150,7 +165,20 @@ class DagSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       new Dag(Seq(Job("a", Seq("missing"), _ => ())))
     }
-    val cyclic = new Dag(Seq(Job("a", Seq("b"), _ => ()), Job("b", Seq("a"), _ => ())))
-    intercept[IllegalArgumentException] { cyclic.run(spark) }
+    intercept[IllegalArgumentException] {
+      new Dag(Seq(Job("a", Seq("b"), _ => ()), Job("b", Seq("a"), _ => ())))
+    }
+  }
+
+  test("a cyclic DAG runs no job body, not even an independent one") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[IllegalArgumentException] {
+      new Dag(Seq(
+        Job("free", Nil, _ => ran.incrementAndGet()),
+        Job("a", Seq("free", "b"), _ => ran.incrementAndGet()),
+        Job("b", Seq("a"), _ => ran.incrementAndGet()))).runParallel(spark)
+    }
+    assert(e.getMessage.contains("dependency cycle among: a,b"))
+    assert(ran.get() == 0)
   }
 }
