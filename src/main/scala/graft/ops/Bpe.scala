@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,7 +72,7 @@ object Bpe {
     val vocab = df.select(explode(split(col(textCol), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-    var sym = initSymbols(vocab).localCheckpoint(true)
+    var sym = initSymbols(vocab).barrier()
     val out = Seq.newBuilder[(Long, String, String, String, Long)]
     val byPos = Window.partitionBy(col("word")).orderBy(col("pos"))
     var k = 1
@@ -87,7 +88,7 @@ object Bpe {
       else {
         val (a, b, pc) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         out += ((k.toLong, a, b, a + b, pc))
-        sym = applyMerge(sym, a, b).localCheckpoint(true)
+        sym = applyMerge(sym, a, b).barrier()
         k += 1
       }
     }

@@ -1,31 +1,57 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Shared eager-checkpoint discipline for the iterative operators.
+/** The engine's one barrier and its one driver-side overlap: no other file
+  * calls `localCheckpoint` or overlaps barrier chains on its own threads.
   *
-  * An eager `localCheckpoint(true)` is a scheduler BARRIER (one job per
-  * call, plus one job per AQE exchange in the plan above it) bought to stop
-  * multi-consumer re-execution of heavy subtrees. When the frame is already
-  * just a narrow view over a checkpoint, the barrier buys nothing: each
-  * consumer re-runs a Project/Filter over cached partitions at memory
-  * speed. The d2 jaccardFor path has applied this test since round 7; r12
-  * hoists it here so every iterative op (pageRank, PPR, CC, LPA) can skip
-  * its redundant setup barriers — measured 2-4 fewer jobs per graph query
-  * at identical results (checkpoint placement cannot change arithmetic;
-  * every declared query is partitioning-invariant by contract).
-  */
+  * [[barrier]] (`ds.barrier()`) is an eager `localCheckpoint(true)`: one
+  * job, plus one per AQE exchange above it, that stops multi-consumer
+  * re-execution and cuts iterative lineage. It returns `ds` unchanged, with
+  * no job, when the plan is only Project/Filter over materialized
+  * checkpoints: each consumer then re-runs a narrow view over cached
+  * partitions. It keeps the barrier for any other leaf, a LogicalRDD that
+  * is not a checkpoint (micro-batch, `createDataFrame(rdd)`) included, and
+  * for a plan that is not `deterministic` (`Skew`'s `rand` salt), so every
+  * consumer reads the same rows. Placement cannot change a result: every
+  * declared query is partitioning-invariant by contract.
+  *
+  * [[both]] overlaps two independent barrier chains. Side `a` runs on a new
+  * thread that the caller creates, so it inherits the caller's Spark local
+  * properties (job tags, job group) and active session; a pooled thread
+  * would carry those of whoever made it. Side `b` runs on the caller. */
 object Checkpoints {
 
-  /** True when `df`'s analyzed plan is only Project/Filter over LogicalRDD
-    * checkpoints — i.e. re-running it per consumer is as cheap as reading
-    * the checkpoint it would create. */
-  private def cheapOverCheckpoint(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collect {
-      case n => n.getClass.getSimpleName
-    }.forall(Set("LogicalRDD", "Project", "Filter").contains)
+  def barrier[T](ds: Dataset[T]): Dataset[T] = {
+    val plan = ds.queryExecution.analyzed
+    val cheap = plan.deterministic && !plan.exists {
+      case r: LogicalRDD => !r.rdd.isCheckpointed
+      case _: Project | _: Filter => false
+      case _ => true
+    }
+    if (cheap) ds else ds.localCheckpoint(true)
+  }
 
-  /** Eager localCheckpoint, skipped when [[cheapOverCheckpoint]]. */
-  private[graft] def ckUnlessCheap(df: DataFrame): DataFrame =
-    if (cheapOverCheckpoint(df)) df else df.localCheckpoint(true)
+  implicit class BarrierOps[T](private val ds: Dataset[T]) extends AnyVal {
+    def barrier(): Dataset[T] = Checkpoints.barrier(ds)
+  }
+
+  /** Runs `a` and `b` at once and waits for both. Throws `a`'s failure
+    * (with `b`'s suppressed) if there is one, else `b`'s. */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    var ra: Either[Throwable, A] = null
+    val t = new Thread(() =>
+      ra = try Right(a) catch { case e: Throwable => Left(e) }, "graft-both")
+    t.setDaemon(true)
+    t.start()
+    val rb = try Right(b) catch { case e: Throwable => Left(e) }
+    t.join()
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(e), r) => r.left.foreach(e.addSuppressed); throw e
+      case (_, Left(e)) => throw e
+    }
+  }
 }

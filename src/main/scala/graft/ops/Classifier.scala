@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -46,7 +47,7 @@ object Classifier {
     // doc frame) must not each re-scan the corpus and re-evaluate the
     // label expression. Doc-count rows × 3 columns.
     val flags = df.select(col(idCol), labelPred.as("__t"), holdoutPred.as("__h"))
-      .localCheckpoint(true)
+      .barrier()
     // (doc, bucket) count spine: md5 bucketing on the reduced distinct
     // (doc, word) pairs, not per occurrence; both aggs combine map-side.
     val docBuckets = df
@@ -58,8 +59,7 @@ object Classifier {
         Normalize.hashBucket(col("__w"), buckets).as("__b"), col("__c"))
       .groupBy(col(idCol), col("__b"))
       .agg(sum(col("__c")).as("__cnt"))
-      .join(flags, Seq(idCol))
-      .localCheckpoint(true)
+      .join(flags, Seq(idCol)).barrier()
     // Closed-form training on the train slice only.
     val trainB = docBuckets.filter(!col("__h")).groupBy(col("__b")).agg(
       sum(when(col("__t"), col("__cnt")).otherwise(0L)).as("__ct"),
@@ -358,7 +358,7 @@ object Classifier {
     // label/holdout evaluated once per doc (the t23 lesson), y in {+1,-1}
     val flags = df.select(col(idCol).as("__id"),
         when(labelPred, 1).otherwise(-1).as("__y"), holdoutPred.as("__h"))
-      .localCheckpoint(true)
+      .barrier()
     val wordBuckets = df
       .select(col(idCol).as("__id"), explode(split(col(textCol), " ")).as("__w"))
       .filter(col("__w") =!= "")
@@ -371,8 +371,7 @@ object Classifier {
     val spine = wordBuckets
       .unionByName(flags.select(col("__id"), lit(buckets.toLong).as("__b"),
         lit(1L).as("__cnt")))
-      .join(flags, Seq("__id"))
-      .localCheckpoint(true)
+      .join(flags, Seq("__id")).barrier()
     // Weight state is B+1 longs — KB driver state (the BPE-table license),
     // so each round holds it as an ARRAY LITERAL instead of a joined
     // DataFrame: the margin is then a window sum over the doc partition and

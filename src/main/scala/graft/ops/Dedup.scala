@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -92,9 +93,9 @@ object Dedup {
     val shDelta = shingles(delta, idCol, textCol, k, dedup = false)
     val shCorpus = shingles(corpus, idCol, textCol, k, dedup = false)
     // each side's signature table materializes once (same frontier as d2)
-    val bDelta = lshBands(minhash(shDelta, idCol, numHashes).localCheckpoint(true),
+    val bDelta = lshBands(minhash(shDelta, idCol, numHashes).barrier(),
       idCol, bandSize, numHashes)
-    val bCorpusRaw = lshBands(minhash(shCorpus, idCol, numHashes).localCheckpoint(true),
+    val bCorpusRaw = lshBands(minhash(shCorpus, idCol, numHashes).barrier(),
       idCol, bandSize, numHashes)
     val bCorpus =
       if (maxBucket == Int.MaxValue) bCorpusRaw
@@ -115,7 +116,7 @@ object Dedup {
       .join(bCorpus.toDF("id_b", "band_b", "sig_b"),
         col("band_a") === col("band_b") && col("sig_a") === col("sig_b"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_bands"))
-      .localCheckpoint(true)
+      .barrier()
     // the exact-Jaccard verify re-shingles CANDIDATE docs only: semi-filter
     // each side's DOC TABLE to its candidate ids BEFORE the explode (a semi
     // join can't push through Generate, so filtering the shingle stream
@@ -146,7 +147,7 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String, k: Int,
       maxDf: Int, floor: Double): DataFrame = {
     val shDist = shingles(df, idCol, textCol, k)
-      .localCheckpoint(true) // feeds df-count + candidate gen + verify
+      .barrier() // feeds df-count + candidate gen + verify
     val rare = shDist.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select(col("shingle"))
     // pairs per rare shingle via a BOUNDED collect_list + double explode:
@@ -197,7 +198,7 @@ object Dedup {
       floorPpm: Long): DataFrame = {
     // distinct (source, shingle): reused by totals AND both join sides
     val sh = shingles(df.select(col(srcCol), col(textCol)), srcCol, textCol, k)
-      .localCheckpoint(true)
+      .barrier()
     val tot = df.select(col(srcCol)).distinct()
       .join(sh.groupBy(col(srcCol)).agg(count(lit(1)).as("n_sh")),
         Seq(srcCol), "left")
@@ -443,8 +444,8 @@ object Dedup {
     // candidate job EAGERLY (plan-only consumers pay it too) — the measured
     // hint decision needs a real count, and every non-trivial caller
     // executes the result anyway.
-    // d2's already-checkpointed pairs are used as-is; a join would re-run 5x.
-    val pairsCk = Checkpoints.ckUnlessCheap(pairs)
+    // d2's checkpointed pairs pass the barrier as-is; a join would re-run 5x.
+    val pairsCk = pairs.barrier()
     val small = pairsCk.count() <= MaxBroadcastPairs
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val candIds = pairsCk.select(col("id_a").as("cid"))
@@ -452,11 +453,10 @@ object Dedup {
     // the deduped candidate shingles feed THREE consumers (sizes, pair-A,
     // pair-B); without materialization each one replays the full corpus
     // shingle explode + semi-filter (measured: 4 Generate subtrees in the
-    // static plan). The set itself is tiny — candidate docs only — so an
-    // eager localCheckpoint turns the heavy explode into exactly one pass.
+    // static plan). The set itself is tiny — candidate docs only — so a
+    // barrier turns the heavy explode into exactly one pass.
     val shCandRaw = shRaw.join(maybeB(candIds), shRaw(idCol) === candIds("cid"), "left_semi")
-    val shCand = (if (shDeduped) shCandRaw else shCandRaw.distinct())
-      .localCheckpoint(true)
+    val shCand = (if (shDeduped) shCandRaw else shCandRaw.distinct()).barrier()
     val sizes = shCand.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
     val shA = shCand.toDF("sa_id", "sa_shingle")
     val shB = shCand.toDF("sb_id", "sb_shingle")
@@ -564,7 +564,7 @@ object Dedup {
     // ReuseExchange, so without the barrier the 64-column vote aggregation
     // would compute twice; the banded explode below is a cheap projection
     // over the checkpoint and may replay per branch
-    val sig = simhash64BandsFromCounts(dw, idCol).localCheckpoint(true)
+    val sig = simhash64BandsFromCounts(dw, idCol).barrier()
     // blocks: bits [0,11) [11,22) [22,33) [33,44) [44,54) [54,64) of the
     // fingerprint, re-sliced from the four 16-bit band ints b0..b3 (bit i
     // of the fingerprint = bit i%16 of band i/16)
@@ -624,7 +624,7 @@ object Dedup {
     // sig is consumed SIX times (4 band joins + 2 verify sides); the frame
     // is doc-count rows of 5 ints, so materialize once rather than lean on
     // exchange reuse to dedupe the 64-column vote aggregation per consumer
-    val sig = simhash64BandsFromCounts(dw, idCol).localCheckpoint(true)
+    val sig = simhash64BandsFromCounts(dw, idCol).barrier()
     val a = sig.toDF("id_a", "a0", "a1", "a2", "a3")
     val b = sig.toDF("id_b", "c0", "c1", "c2", "c3")
     val pairs = (0 until 4).map { k =>
@@ -707,8 +707,7 @@ object Dedup {
     val ranked = tok.join(dfreq, "shingle")
       .withColumn("rn", row_number().over(wDoc))
       .withColumn("n_tok", count(lit(1)).over(Window.partitionBy(col(idCol))))
-      .select(col(idCol), col("shingle"), col("rn"), col("n_tok"))
-      .localCheckpoint(true)
+      .select(col(idCol), col("shingle"), col("rn"), col("n_tok")).barrier()
     val pref = ranked.filter(col("rn") <=
       col("n_tok") - expr(s"(n_tok * $tauNum + ${tauDen - 1}) div $tauDen") + 1)
     val a = pref.select(col(idCol).as("id_a"), col("shingle"),
@@ -738,8 +737,7 @@ object Dedup {
         max(col("na")).as("na"), max(col("nb")).as("nb"))
       .filter(col("o_pref") +
           least(col("na") - col("ra_mx"), col("nb") - col("rb_mx")) >=
-        expr(s"((na + nb) * $tauNum + ${sumND - 1}) div $sumND"))
-      .localCheckpoint(true)
+        expr(s"((na + nb) * $tauNum + ${sumND - 1}) div $sumND")).barrier()
     (ranked, pref, cand)
   }
 
@@ -855,7 +853,7 @@ object Dedup {
       .withColumnRenamed("shingle", "word")
       .filter(col("word") =!= "")
       .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("dw_cnt"))
-      .localCheckpoint(true)
+      .barrier()
     // ONE vocabulary aggregation carries df AND the max term count: the
     // corpus-max weight of a term factors as mw = max(dw_cnt)·idf (idf is
     // per-term constant and positive wherever any wi survives the wi > 0
@@ -907,8 +905,7 @@ object Dedup {
         sum(col("wi") * col("wi")).over(Window.partitionBy(col(idCol))))
       .withColumn("__nxt2", col("n2") - col("__cw2"))
       .select(col(idCol), col("word"), col("wi"), col("rn"), col("__rem"),
-        col("__pot"), col("__nxt2"), col("n2"))
-      .localCheckpoint(true)
+        col("__pot"), col("__nxt2"), col("n2")).barrier()
     ranked
   }
 
@@ -992,8 +989,7 @@ object Dedup {
           sqrt(col("l2_a").cast("double") * col("l2_b").cast("double"))) *
           tauDen >= pairT
       }
-      .drop("l2_a", "l2_b")
-      .localCheckpoint(true)
+      .drop("l2_a", "l2_b").barrier()
     cand
   }
 

@@ -1,14 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import graft.ops.Checkpoints.BarrierOps
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Bounded-iteration graph algorithms over (src, dst) edge frames.
   *
   * Companion to [[Identity.connectedComponents]] (min-label propagation):
   * same execution discipline — each round is one shuffle join + one
-  * map-side-combinable aggregation, with an eager `localCheckpoint` per
-  * round so the plan stays round-sized instead of growing a K-deep lineage.
+  * map-side-combinable aggregation, with a barrier ([[Checkpoints.barrier]])
+  * per round so the plan stays round-sized instead of growing a K-deep
+  * lineage.
   */
 object Graph {
 
@@ -32,94 +34,77 @@ object Graph {
     * count enters as a 1-row broadcast (the a6/t15 pattern), not a driver
     * collect. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 8): DataFrame = {
-    // ckUnlessCheap: gr1/gr5 pass a Project over an already-checkpointed
-    // pair frame — a second barrier there buys nothing (r12, Checkpoints)
-    val e = Checkpoints.ckUnlessCheap(edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val ewd = e.join(deg, "src").localCheckpoint(true) // (src, dst, deg)
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    val nn = nodes.agg(count(lit(1)).as("n"))
-    val base = nodes.crossJoin(broadcast(nn)).localCheckpoint(true)
-    // ranks0 is a Project over the base checkpoint with ONE consumer
-    // (round 1) — an eager barrier here is a pure extra job (r12)
-    var ranks = base
-      .select(col("node"), col("n"),
-        expr("CAST(1000000000000 AS BIGINT) div n").as("r"))
-    for (i <- 1 to iters) {
-      val contrib = ewd
-        .join(ranks.select(col("node"), col("r")), ewd("src") === col("node"))
-        .groupBy(col("dst").as("cnode"))
-        .agg(sum(expr("(r * 85) div (100 * deg)")).as("c"))
-      ranks = base.join(contrib, base("node") === contrib("cnode"), "left")
-        .select(base("node"), base("n"),
-          (expr("CAST(150000000000 AS BIGINT) div n") +
-            coalesce(col("c"), lit(0L))).as("r"))
-      // checkpoint every 4th round: a four-round plan is still bounded
-      // (shallower than the native as-of join trees), and each eager
-      // materialization is a fixed scheduler cost that dominated wall-clock
-      // when checkpointing per round (the result is integer-exact at any
-      // placement — checkpoints cannot change the arithmetic)
-      if (i % 4 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks.select(col("node"), col("r").as("rank_e12"))
-  }
+      iters: Int = 8): DataFrame =
+    walk(edges, srcCol, dstCol, iters,
+      nodes => nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("n")))).barrier(),
+      r0 = expr("CAST(1000000000000 AS BIGINT) div n"),
+      restart = expr("CAST(150000000000 AS BIGINT) div n"))
+      .select(col("node"), col("r").as("rank_e12"))
 
   /** Personalized PageRank (random walk with restart): like [[pageRank]],
     * but ALL restart mass returns to a seed set instead of spreading
     * uniformly — the result scores every node by its graph proximity to the
     * seeds (seed-set expansion: lookalike audiences from known customers,
     * quality-region expansion from curated documents). Same exact integer
-    * fixed-point contract as pageRank (BIGINT 1e-12 units, floor division,
-    * bit-identical across engines/partitionings; an unrolled-rounds SQL
-    * oracle can replay it).
+    * fixed-point contract as pageRank (an unrolled-rounds oracle replays it).
     *
     * Per round, for every node v (S = seed set):
     * r'(v) = (v ∈ S ? 0.15e12 div |S| : 0) + Σ_{u→v} (r(u)·85) div (100·deg(u)),
     * r0(v) = v ∈ S ? 1e12 div |S| : 0. Sink nodes leak their damped mass
     * (same simplification as pageRank; symmetrized graphs have none).
-    *
-    * Scale shape: identical to pageRank — K bounded rounds of one shuffle
-    * join + one map-side-combinable sum; the seed membership is a node-sized
-    * broadcast-able column, the seed COUNT a 1-row broadcast. */
+    * pageRank is the case where every node is a seed; both share one round
+    * loop, so the scale shape is pageRank's. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       srcCol: String, dstCol: String, seedCol: String,
       iters: Int = 8): DataFrame = {
-    val e = Checkpoints.ckUnlessCheap(edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val ewd = e.join(deg, "src").localCheckpoint(true)
     val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
+    walk(edges, srcCol, dstCol, iters, { nodes =>
+        // seeds restricted to graph nodes: a seed outside the edge set has no
+        // edges to push mass through and would silently dilute |S|
+        val seeded = nodes.join(sd.withColumn("__s", lit(1)), Seq("node"), "left")
+          .select(col("node"), col("__s").isNotNull.as("is_seed"))
+        val ns = seeded.filter(col("is_seed")).agg(count(lit(1)).as("ns"))
+        val base = seeded.crossJoin(broadcast(ns)).barrier()
+        require(base.filter(col("is_seed")).head(1).nonEmpty,
+          "personalizedPageRank: no seed intersects the graph's node set")
+        base
+      },
+      r0 = when(col("is_seed"), expr("CAST(1000000000000 AS BIGINT) div ns"))
+        .otherwise(lit(0L)),
+      restart = when(col("is_seed"), expr("CAST(150000000000 AS BIGINT) div ns"))
+        .otherwise(lit(0L)))
+      .select(col("node"), col("is_seed"), col("r").as("rank_e12"))
+  }
+
+  /** The rounds of both PageRanks: `r0` and `restart` are columns of the
+    * node frame `base` builds; returns its columns plus the rank `r`. */
+  private def walk(edges: DataFrame, srcCol: String, dstCol: String,
+      iters: Int, base: DataFrame => DataFrame, r0: Column,
+      restart: Column): DataFrame = {
+    val e = edges.select(
+      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .barrier()
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val ewd = e.join(deg, "src").barrier() // (src, dst, deg)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-    // seeds restricted to graph nodes: a seed outside the edge set has no
-    // edges to push mass through and would silently dilute |S|
-    val seeded = nodes.join(sd.withColumn("__s", lit(1)), Seq("node"), "left")
-      .select(col("node"), col("__s").isNotNull.as("is_seed"))
-    val ns = seeded.filter(col("is_seed")).agg(count(lit(1)).as("ns"))
-    val base = seeded.crossJoin(broadcast(ns)).localCheckpoint(true)
-    require(base.filter(col("is_seed")).head(1).nonEmpty,
-      "personalizedPageRank: no seed intersects the graph's node set")
-    var ranks = base
-      .select(col("node"), col("is_seed"), col("ns"),
-        when(col("is_seed"), expr("CAST(1000000000000 AS BIGINT) div ns"))
-          .otherwise(lit(0L)).as("r"))
+    val b = base(nodes)
+    // ranks0: a Project over the base checkpoint with ONE consumer, no barrier
+    var ranks = b.select(b.columns.map(col) :+ r0.as("r"): _*)
     for (i <- 1 to iters) {
       val contrib = ewd
         .join(ranks.select(col("node"), col("r")), ewd("src") === col("node"))
         .groupBy(col("dst").as("cnode"))
         .agg(sum(expr("(r * 85) div (100 * deg)")).as("c"))
-      ranks = base.join(contrib, base("node") === contrib("cnode"), "left")
-        .select(base("node"), base("is_seed"), base("ns"),
-          (when(col("is_seed"), expr("CAST(150000000000 AS BIGINT) div ns"))
-            .otherwise(lit(0L)) + coalesce(col("c"), lit(0L))).as("r"))
-      // same every-4th-round checkpoint cadence as pageRank (bounded plan,
-      // arithmetic unchanged by placement)
-      if (i % 4 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
+      ranks = b.join(contrib, b("node") === contrib("cnode"), "left")
+        .select(b.columns.map(b(_)) :+
+          (restart + coalesce(col("c"), lit(0L))).as("r"): _*)
+      // checkpoint every 4th round: a four-round plan is still bounded, and
+      // a barrier per round was a fixed scheduler cost that dominated
+      // wall-clock (integer-exact at any placement)
+      if (i % 4 == 0 || i == iters) ranks = ranks.barrier()
     }
-    ranks.select(col("node"), col("is_seed"), col("r").as("rank_e12"))
+    ranks
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR edge
@@ -149,7 +134,7 @@ object Graph {
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct().localCheckpoint(true)
+      .distinct().barrier()
     var iter = 0
     // carry the edge count across rounds: the convergence check is then one
     // count + one anti-join emptiness probe per round, not three jobs (the
@@ -173,7 +158,7 @@ object Graph {
       val next = or2.join(mins2, "c").filter(col("n") =!= col("m"))
         .select(col("m").as("u"), col("n").as("v"))
         .unionByName(mins2.select(col("m").as("u"), col("c").as("v")))
-        .distinct().localCheckpoint(true)
+        .distinct().barrier()
       val nextCount = next.count()
       converged = nextCount == eCount && next.except(e).head(1).isEmpty
       e = next
@@ -236,9 +221,8 @@ object Graph {
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .unionByName(universe.select(col("id").as("src"), col("id").as("dst")))
-      .distinct().localCheckpoint(true)
-    var labels = universe.select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(true)
+      .distinct().barrier()
+    var labels = universe.select(col("id"), col("id").as("lbl")).barrier()
     for (i <- 1 to iters) {
       // The self-loop guarantees every node casts at least its own vote, so
       // the per-round argmin alone IS the complete next label set — no join
@@ -252,7 +236,7 @@ object Graph {
         .agg(count(lit(1)).as("cnt"))
       labels = cnt.groupBy(col("nid").as("id"))
         .agg(min_by(col("lbl"), struct(-col("cnt"), col("lbl"))).as("lbl"))
-      if (i % 2 == 0 || i == iters) labels = labels.localCheckpoint(true)
+      if (i % 2 == 0 || i == iters) labels = labels.barrier()
     }
     labels.withColumnRenamed("lbl", "community_id")
   }
@@ -297,7 +281,7 @@ object Graph {
     var e = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
+      .distinct().barrier()
     // Early exit on fixpoint: peeling is monotone, so once a round removes
     // nothing every later round is a no-op — breaking early is BIT-IDENTICAL
     // to running the full budget (which is what the unrolled oracle does).
@@ -311,14 +295,13 @@ object Graph {
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("kid"))
       val half = e.join(keep, e("src") === keep("kid"), "left_semi")
-      e = half.join(keep, half("dst") === keep("kid"), "left_semi")
-        .localCheckpoint(true)
+      e = half.join(keep, half("dst") === keep("kid"), "left_semi").barrier()
       val cur = e.count()
       i = if (cur == prev) rounds else i + 1
       prev = cur
     }
     val degF = e.groupBy(col("src").as("cid"))
-      .agg(count(lit(1)).as("core_degree")).localCheckpoint(true)
+      .agg(count(lit(1)).as("core_degree")).barrier()
     // empty final graph: MIN over zero rows is NULL -> trivially converged
     val conv = degF.agg(
       coalesce(min(col("core_degree")) >= k, lit(true)).as("converged"))
@@ -358,7 +341,7 @@ object Graph {
     val can = edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct().localCheckpoint(true)
+      .distinct().barrier()
     val universe = nodes.select(col("id"))
       .unionByName(can.select(col("a").as("id")))
       .unionByName(can.select(col("b").as("id")))
@@ -376,7 +359,7 @@ object Graph {
         when(struct(col("dega"), col("a")) < struct(col("degb"), col("b")),
           struct(col("degb").as("d"), col("b").as("v")))
           .otherwise(struct(col("dega").as("d"), col("a").as("v"))).as("rv"))
-      .localCheckpoint(true) // three consumers: two wedge branches + closure
+      .barrier() // three consumers: two wedge branches + closure
     // wedges at the LOW-rank corner only, ordered so each pair appears once
     val wedges = ranked.toDF("u", "r1")
       .join(ranked.toDF("u2", "r2"),
@@ -385,8 +368,7 @@ object Graph {
     // closure: {v, w} exists iff the oriented edge v → w does (rank v < w)
     val tri = wedges.join(
         ranked.select(col("u").as("cu"), col("rv.v").as("cv")),
-        col("v") === col("cu") && col("w") === col("cv"), "left_semi")
-      .localCheckpoint(true)
+        col("v") === col("cu") && col("w") === col("cv"), "left_semi").barrier()
     val perNode = tri.select(explode(array(col("u"), col("v"), col("w"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("t"))
     universe.join(deg, Seq("id"), "left").join(perNode, Seq("id"), "left")
@@ -423,7 +405,7 @@ object Graph {
     val can = edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct().localCheckpoint(true)
+      .distinct().barrier()
     val deg = can.select(col("a").as("id"))
       .unionByName(can.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -433,7 +415,7 @@ object Graph {
     // the edge build + two semi-joins
     val sub = can.join(kept.toDF("a"), Seq("a"), "left_semi")
       .join(kept.toDF("b"), Seq("b"), "left_semi")
-      .select(col("a"), col("b")).localCheckpoint(true)
+      .select(col("a"), col("b")).barrier()
     val deg2 = sub.select(col("a").as("id"))
       .unionByName(sub.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))

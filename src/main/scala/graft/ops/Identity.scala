@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * Components are computed by iterative min-label propagation: each round
   * every node takes the min label among itself and its neighbors — O(diameter)
-  * distributed rounds, each a shuffle-join, with localCheckpoint to keep the
-  * plan from growing. Identity graphs are near-bipartite clusters with tiny
+  * distributed rounds, each a shuffle-join, with a barrier
+  * ([[Checkpoints.barrier]]) to keep the plan from growing. Identity graphs are near-bipartite clusters with tiny
   * diameter, so this converges in a handful of rounds at any scale.
   * For general topologies (where diameter can be O(n)) use
   * [[Graph.connectedComponentsStar]] — O(log n) rounds on any graph, same
@@ -31,10 +32,9 @@ object Identity extends org.apache.spark.internal.Logging {
   def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val und = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct().barrier()
 
-    var labels = nodes.select(col("id"), col("id").as("comp")).localCheckpoint(true)
+    var labels = nodes.select(col("id"), col("id").as("comp")).barrier()
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -48,7 +48,7 @@ object Identity extends org.apache.spark.internal.Logging {
         .select(labels("id"),
           least(labels("comp"), coalesce(col("nbr_comp"), labels("comp"))).as("comp"),
           (coalesce(col("nbr_comp"), labels("comp")) < labels("comp")).as("__chg"))
-        .localCheckpoint(true)
+        .barrier()
       val changed = updatedW.filter(col("__chg")).count()
       labels = updatedW.select(col("id"), col("comp"))
       converged = changed == 0
@@ -134,8 +134,7 @@ object Identity extends org.apache.spark.internal.Logging {
     val ranked = base.withColumn("__rn", row_number().over(wIn))
       .join(bases, "__shard")
       .withColumn("rank", (col("__base") + col("__rn")).cast("long"))
-      .select(col(idCol), col(keyCol), col("rank"))
-      .localCheckpoint(true)
+      .select(col(idCol), col(keyCol), col("rank")).barrier()
     val a = ranked.toDF("id_a", "key_a", "rank_a")
     val b = ranked.toDF("id_b", "key_b", "rank_b")
     a.withColumn("rank_b",

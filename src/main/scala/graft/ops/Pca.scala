@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -75,7 +76,7 @@ object Pca {
       // three consumers (n, mean, gram) — without this checkpoint each one
       // re-executes the whole O(n·d²/2) corpus pass; the partials frame is
       // one row per partition, so the materialization is KB-sized
-      .localCheckpoint(true)
+      .barrier()
     // exact integer reduce of the per-partition partials (rows = partition
     // count, so these aggs are tiny; sums are order-independent)
     val n = partials.agg(sum(col("n"))).head.getLong(0)

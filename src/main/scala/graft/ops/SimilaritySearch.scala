@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -204,7 +205,7 @@ object SimilaritySearch {
     val q = emb.select(col(idCol), col(cellCol), expr(
         s"transform($vecCol, x -> CAST(floor(CAST(x AS DOUBLE) * 1024) AS BIGINT))")
         .as("__qv"))
-      .localCheckpoint(true) // feeds the centroid agg AND the scoring join
+      .barrier() // feeds the centroid agg AND the scoring join
     val cent = q
       .select(col(cellCol), posexplode(col("__qv")).as(Seq("__pos", "__x")))
       .groupBy(col(cellCol), col("__pos")).agg(sum(col("__x")).as("__s"))
@@ -349,7 +350,7 @@ object SimilaritySearch {
     graft.plans.FloatDot.register(emb.sparkSession)
     val base = emb.select(col(idCol), col(vecCol).as("__v"))
       .withColumn("__nsq", expr(normSqExpr("__v")).cast("double"))
-      .localCheckpoint(true) // reused every iteration; truncate lineage once
+      .barrier() // reused every iteration; truncate lineage once
     // seeds: the k lowest-id vectors, cells numbered 0..k-1 in id order
     val seeds = base.orderBy(col(idCol)).limit(k)
       .withColumn("cell", row_number().over(Window.partitionBy(lit(0)).orderBy(col(idCol))) - 1)
@@ -373,7 +374,7 @@ object SimilaritySearch {
         .groupBy(col("cell"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, cx))), s -> s.cx)").as("__c"))
         .withColumn("__cnsq", expr(normSqExpr("__c")).cast("double"))
-        .localCheckpoint(true) // k rows; breaks the growing iteration lineage
+        .barrier() // k rows; breaks the growing iteration lineage
     }
     (assign, cents.select(col("cell"), col("__c")))
   }
@@ -430,7 +431,7 @@ object SimilaritySearch {
     graft.plans.FloatDot.register(blocked.sparkSession)
     val base = blocked.select(col(idCol), col("block"), col(vecCol).as("__v"))
       .withColumn("__nsq", expr(normSqExpr("__v")).cast("double"))
-      .localCheckpoint(true) // reused every iteration; truncate lineage once
+      .barrier() // reused every iteration; truncate lineage once
     // seeds: the k lowest-id vectors (the id set is block-independent), one
     // TakeOrdered on the single-block slice, joined back for every block
     val seedIds = base.filter(col("block") === 0)
@@ -458,7 +459,7 @@ object SimilaritySearch {
         .groupBy(col("block"), col("cell"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, cx))), s -> s.cx)").as("__c"))
         .withColumn("__cnsq", expr(normSqExpr("__c")).cast("double"))
-        .localCheckpoint(true) // m×k rows; breaks the growing iteration lineage
+        .barrier() // m×k rows; breaks the growing iteration lineage
     }
     (assign, cents.select(col("block"), col("cell"), col("__c")))
   }
@@ -497,7 +498,7 @@ object SimilaritySearch {
     registerFns(emb)
     val sub = dim / m
     val (codesRaw, book) = pqModel(emb, idCol, vecCol, dim, m, kCodes, iters)
-    val codes = codesRaw.localCheckpoint(true)
+    val codes = codesRaw.barrier()
     // the query's m sub-vectors: ONE scan, melted by the same explode
     // pattern the codes use below (m filter-scans unioned would re-read
     // the source m times)
@@ -596,7 +597,7 @@ object SimilaritySearch {
       bands: Int, bits: Int): DataFrame = {
     registerFns(emb)
     val sig = emb.select(col(idCol) +: srpBandCols(vecCol, bands, bits, dim): _*)
-      .localCheckpoint(true)
+      .barrier()
     sig.select(col(idCol), expr(
         s"explode(array(${(0 until bands).map(b => s"struct($b AS band, b$b AS sig)").mkString(", ")}))").as("bs"))
       .select(col(idCol), col("bs.band").as("band"), col("bs.sig").as("sig"))
@@ -869,7 +870,7 @@ object SimilaritySearch {
     // checkpointed: CC iterates over the edge set, and without it every
     // iteration would replay the full LSH candidate+verify pipeline
     val pairs = srpNearPairs(emb, idCol, vecCol, dim, bands, bits, threshold)
-      .select(col("id_a"), col("id_b")).localCheckpoint(true)
+      .select(col("id_a"), col("id_b")).barrier()
     val nodes = emb.select(col(idCol).as("id"))
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val w = Window.partitionBy(col("comp_id"))
@@ -908,9 +909,9 @@ object SimilaritySearch {
       threshold: Double): DataFrame = {
     registerFns(delta)
     val sigD = delta.select(col(idCol) +: srpBandCols(vecCol, bands, bits, dim): _*)
-      .localCheckpoint(true)
+      .barrier()
     val sigC = corpus.select(col(idCol) +: srpBandCols(vecCol, bands, bits, dim): _*)
-      .localCheckpoint(true)
+      .barrier()
     val shared = sigD.select(col(idCol)).distinct()
       .join(sigC.select(col(idCol)).distinct(), Seq(idCol)).limit(1).count()
     require(shared == 0L, s"incrementalSemanticAccept: delta and corpus " +

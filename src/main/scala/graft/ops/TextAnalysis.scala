@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -331,7 +332,7 @@ object TextAnalysis {
     // subtrees in the static plan). Map-side combine shrinks the stream to
     // per-doc-distinct words before it ever shuffles.
     unigramSurprisalFromCounts(
-      Dedup.wordCounts(df, idCol, textCol).localCheckpoint(true), idCol)
+      Dedup.wordCounts(df, idCol, textCol).barrier(), idCol)
 
   /** [[unigramSurprisal]] over a pre-built (already materialized)
     * [[Dedup.wordCounts]] frame — composite jobs share one corpus explode
@@ -367,7 +368,7 @@ object TextAnalysis {
       // doc-stream shuffle per consumer at scale (audited: 124-node
       // static plan with 5 scored replays before, 3 columns × |docs|
       // after)
-      .localCheckpoint(true)
+      .barrier()
     // SELF-CALIBRATING band: unusual = outside the corpus' own exact
     // [p5, p95] of bits_per_word. An absolute band goes stale under any
     // distribution shift — the round-5 sf1 probe showed a fixed band
@@ -455,7 +456,7 @@ object TextAnalysis {
           |  i -> struct(__w[i] AS w1, __w[i + 1] AS w2)))""".stripMargin).as("bg"))
       .select(col(idCol), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .groupBy(col(idCol), col("w1"), col("w2")).agg(count(lit(1)).as("db_cnt"))
-      .localCheckpoint(true) // three consumers: corpus counts, contexts, scorer
+      .barrier() // three consumers: corpus counts, contexts, scorer
     val corpus = db.groupBy(col("w1"), col("w2")).agg(sum(col("db_cnt")).as("c12"))
     val contexts = corpus.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     db.join(corpus, Seq("w1", "w2")).join(contexts, Seq("w1"))
@@ -544,12 +545,12 @@ object TextAnalysis {
         col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .groupBy(col(idCol), col("in_model"), col("w1"), col("w2"))
       .agg(count(lit(1)).as("db_cnt"))
-      .localCheckpoint(true) // two consumers: model build + scorer
+      .barrier() // two consumers: model build + scorer
     // model tables: bigram counts from the reference slice only; contexts,
     // continuation counts, and totals all derive from c12 (bounded state)
     val c12 = db.filter(col("in_model"))
       .groupBy(col("w1"), col("w2")).agg(sum(col("db_cnt")).as("c12"))
-      .localCheckpoint(true) // three consumers: ctx, cont, scorer join
+      .barrier() // three consumers: ctx, cont, scorer join
     val ctx = c12.groupBy(col("w1"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))
     val cont = c12.groupBy(col("w2")).agg(count(lit(1)).as("n1p"))
@@ -670,7 +671,7 @@ object TextAnalysis {
     // phrase frame is 1 row — whitelisted broadcast
     val spine = postings.crossJoin(broadcast(top))
       .filter(expr("array_contains(__pw, word)"))
-      .localCheckpoint(true) // consumed once per phrase position
+      .barrier() // consumed once per phrase position
     val first = spine.filter(col("word") === col("__pw")(0))
       .select(col(idCol), col("pos"), col("phrase"), col("__pw"))
     val matched = (1 until phraseLen).foldLeft(first) { (acc, i) =>
@@ -995,7 +996,7 @@ object TextAnalysis {
       k: Int, fpp: Double): (DataFrame,
         org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]) = {
     val benchSh = Dedup.shingles(bench, idCol, textCol, k)
-      .select(col("shingle")).distinct().localCheckpoint(true)
+      .select(col("shingle")).distinct().barrier()
     val expected = math.max(benchSh.count(), 1L)
     val bf = benchSh.stat.bloomFilter("shingle", expected, fpp)
     (benchSh, bench.sparkSession.sparkContext.broadcast(bf))
@@ -1095,8 +1096,7 @@ object TextAnalysis {
         col("dw_cnt").as("__c"))
       .groupBy(col(idCol), col("__b"))
       .agg(sum(col("__c")).as("__cnt"))
-      .join(flags, Seq(idCol))
-      .localCheckpoint(true)
+      .join(flags, Seq(idCol)).barrier()
     val bucketCounts = docBuckets.groupBy(col("__b")).agg(
       sum(when(col("__t"), col("__cnt")).otherwise(0L)).as("__ct"),
       sum(when(!col("__t"), col("__cnt")).otherwise(0L)).as("__cr"))
@@ -1147,7 +1147,7 @@ object TextAnalysis {
       budget: Long): DataFrame = {
     val scored = dsir
       .select(col(idCol), col("n_words"), col("dsir_score"))
-      .localCheckpoint(true) // feeds the histogram AND the tier join
+      .barrier() // feeds the histogram AND the tier join
     val hist = scored.groupBy(col("dsir_score"))
       .agg(sum(col("n_words")).as("__vt"))
       .withColumn("__band", floor(-col("dsir_score") * 4).cast("long"))
@@ -1375,7 +1375,7 @@ object TextAnalysis {
   def sourceDrift(df: DataFrame, srcCol: String, textCol: String,
       buckets: Int = 256, klFactor: Double = 1.5): DataFrame =
     sourceDriftFromBuckets(
-      sourceBucketCounts(df, srcCol, textCol, buckets).localCheckpoint(true),
+      sourceBucketCounts(df, srcCol, textCol, buckets).barrier(),
       srcCol, buckets, klFactor)
 
   /** The drift monitor's STATE spine: per-(source, hashed-unigram-bucket)
@@ -1422,7 +1422,7 @@ object TextAnalysis {
       .agg(first(col("__ns")).as("n_words"),
         round(sum(col("__kl")).cast("double"), 6).as("kl_nats"),
         round(sum(col("__tv")).cast("double"), 6).as("tvd"))
-      .localCheckpoint(true) // sources-row frame; feeds the mean AND the output
+      .barrier() // sources-row frame; feeds the mean AND the output
     // SELF-CALIBRATING drift flag (the t15 lesson: an absolute KL
     // threshold breaks the moment vocabulary/bucket occupancy shifts —
     // every source carries a smoothing-mass floor that scales with
@@ -1492,8 +1492,7 @@ object TextAnalysis {
   def bm25TopK(df: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val dl = df.select(col(idCol), wsTokens(col(textCol)).as("__dl"))
-      .localCheckpoint(true)
+    val dl = df.select(col(idCol), wsTokens(col(textCol)).as("__dl")).barrier()
     val stats = dl.agg(count(lit(1)).as("__nd"),
       (sum(col("__dl")).cast("double") / count(lit(1))).as("__avgdl"))
     val spine = df
@@ -1578,8 +1577,7 @@ object TextAnalysis {
     * scores across different term sets should pre-check corpus presence. */
   def qlTopK(df: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k: Int, mu: Double = 2000.0): DataFrame = {
-    val dl = df.select(col(idCol), wsTokens(col(textCol)).as("__dl"))
-      .localCheckpoint(true)
+    val dl = df.select(col(idCol), wsTokens(col(textCol)).as("__dl")).barrier()
     val toks = df.select(col(idCol), explode(split(col(textCol), " ")).as("__t"))
     val corp = dl.agg(sum(col("__dl")).as("__ct"))
     val ctf = toks.filter(col("__t").isInCollection(terms))
@@ -1645,7 +1643,7 @@ object TextAnalysis {
     // The vocabulary spine feeds three consumers (counters, total, the
     // estimate join); checkpoint it so the corpus explode runs ONCE —
     // the frame is vocabulary-sized, never corpus-sized.
-    val words = cmsWordSpine(df, textCol).localCheckpoint(true)
+    val words = cmsWordSpine(df, textCol).barrier()
     cmsHeavyHittersFromCounters(words,
       cmsCountersFromSpine(words, depth, width), depth, width, den)
   }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.Tables
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -132,11 +133,10 @@ object RefreshPipeline {
         .as[graft.flags.Ev]
         .groupByKey(_.userId)
         .flatMapGroups { (uid, it) => graft.flags.FlagRules.evaluateAll(uid, it.toSeq, asOf) }
-        .toDF()
-        .localCheckpoint(true)
+        .toDF().barrier()
       val uni = Tables.events(spark, sfDir)
         .filter(unix_micros(col("ts")) < asOf)
-        .select(col("user_id")).distinct().localCheckpoint(true) // familyMap reads it twice
+        .select(col("user_id")).distinct().barrier() // familyMap reads it twice
       graft.flags.FlagPasses.childPass(raw, graft.flags.FlagPasses.familyMap(uni))
         .withColumn("added_us", lit(asOf))
     }
@@ -192,8 +192,8 @@ object RefreshPipeline {
     val deltaAgg = orderStatsOver(col("o_orderkey") % 7 === 0)
     // both frames feed three consumers (count, equality check, write) —
     // checkpoint once instead of re-aggregating orders per consumer
-    val advanced = mergeOrderStats(yesterdayState, deltaAgg).localCheckpoint(true)
-    val fullRebuild = a1.run(spark, sfDir).localCheckpoint(true)
+    val advanced = mergeOrderStats(yesterdayState, deltaAgg).barrier()
+    val fullRebuild = a1.run(spark, sfDir).barrier()
     val nFull = fullRebuild.count()
     require(advanced.count() == nFull &&
         advanced.unionByName(fullRebuild).distinct().count() == nFull,

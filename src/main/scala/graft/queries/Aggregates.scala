@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.ops.Categorize
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -245,7 +246,7 @@ object Aggregates {
         graft.plans.HllSketch.register(s)
         val ut = Tables.events(s, d).filter(col("user_id").isNotNull)
           .select(col("event_type").as("t"), col("user_id").as("u"))
-          .distinct().localCheckpoint(true)
+          .distinct().barrier()
         val st = ut.groupBy(col("t"))
           .agg(expr("hll_state(CAST(u AS STRING))").as("st"),
             count(lit(1)).as("nex")) // ut is distinct: count = exact distinct
@@ -827,7 +828,7 @@ object Aggregates {
             .select(col("p_partkey"), col("p_brand"))),
             col("l_partkey") === col("p_partkey"))
           .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
-          .distinct().localCheckpoint(true) // three consumers below
+          .distinct().barrier() // three consumers below
         val nOrders = ob.agg(countDistinct(col("ok")).as("n_orders"))
         val bc = ob.groupBy(col("b")).agg(count(lit(1)).as("nb"))
         val baskets = ob.groupBy(col("ok"))

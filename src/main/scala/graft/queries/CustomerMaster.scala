@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.flags.FlagPasses
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -99,7 +100,7 @@ object CustomerMaster {
         // it, and familyMap itself reads its universe twice — without the
         // checkpoint the customer scan replays 4x (the u1c lesson)
         val fam = FlagPasses.familyMap(
-          base.select(col("c_custkey").as("user_id"))).localCheckpoint(true)
+          base.select(col("c_custkey").as("user_id"))).barrier()
         val kids = fam.groupBy(col("parent_id"))
           .agg(count(lit(1)).as("child_count"),
             concat_ws(",", array_sort(collect_set(col("child_id").cast("string"))))

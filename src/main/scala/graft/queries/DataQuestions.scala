@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.core.Tables
+import graft.ops.Checkpoints
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.functions._
 
 /** DQ1 — the warehouse-health "data questions" mart: customers whose data
@@ -33,25 +35,21 @@ object DataQuestions {
   val qs: Seq[Q] = Seq(
     Q("dq1_data_questions",
       (s, d) => {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
         // §2.6 (overlap independent jobs): the wide-master subtree (flags
         // engine + six keyed rollups) and the behavioral family-edge union
         // (slot equi-join + bucketed proximity) share no inputs beyond the
-        // base scans — submit both barriers from driver threads so the edge
-        // build back-fills the master's barrier tail instead of queuing
+        // base scans — run both barriers at once (Checkpoints.both) so the
+        // edge build back-fills the master's barrier tail instead of queuing
         // behind it. Plans are untouched; results cannot change.
-        // narrow eager checkpoint: three branches consume the master
-        val cmF = Future(CustomerMaster.master(s, d).localCheckpoint(true))
-        // Q1: family-evidence questions over active child-shaped keys
-        val behF = Future(FamilyEdges.reservationEdges(s, d)
-          .unionByName(FamilyEdges.checkinEdges(s, d))
-          .select(col("parent_customer_id").as("b_parent"),
-            col("child_customer_id").as("b_child"))
-          .localCheckpoint(true))
-        val cm = Await.result(cmF, Duration.Inf)
-        val beh = Await.result(behF, Duration.Inf)
+        val (cm, beh) = Checkpoints.both(
+          // three branches consume the master
+          CustomerMaster.master(s, d).barrier(),
+          // Q1: family-evidence questions over active child-shaped keys
+          FamilyEdges.reservationEdges(s, d)
+            .unionByName(FamilyEdges.checkinEdges(s, d))
+            .select(col("parent_customer_id").as("b_parent"),
+              col("child_customer_id").as("b_child"))
+            .barrier())
         val kids = cm.filter(col("customer_id") % 10 >= 8 &&
             col("total_visits") > 0)
           .select(col("customer_id"), col("name"), col("is_child"),

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.core.Tables
-import graft.ops.{Dedup, Normalize}
+import graft.ops.{Checkpoints, Dedup, Normalize}
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,7 +94,7 @@ object DedupQs {
   private def nearDupGraph(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val pairs = Dedup.simhash64NearDupManku(Tables.documents(s, d), "doc_id", "text", 3)
-      .select(col("id_a"), col("id_b")).localCheckpoint(true)
+      .select(col("id_a"), col("id_b")).barrier()
     val nodes = pairs.select(col("id_a").as("id"))
       .unionByName(pairs.select(col("id_b").as("id"))).distinct()
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -146,13 +147,12 @@ object DedupQs {
   private def lshVerified(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val shRaw = Dedup.shingles(Tables.documents(s, d), "doc_id", "text", 3, dedup = false)
-    val mh = Dedup.minhash(shRaw, "doc_id", 8).localCheckpoint(true)
+    val mh = Dedup.minhash(shRaw, "doc_id", 8).barrier()
     // capped candidate generator is the production default: bit-identical
     // to uncapped here (bucket max 8 at sf0.1 << 1024 — see
     // Dedup.DefaultLshMaxBucket), so the uncapped oracle still matches
     val cands = Dedup.lshCandidatesCapped(Dedup.lshBands(mh, "doc_id", 2, 8),
-        "doc_id", Dedup.DefaultLshMaxBucket)
-      .localCheckpoint(true)
+        "doc_id", Dedup.DefaultLshMaxBucket).barrier()
     Dedup.jaccardFor(cands, shRaw, "doc_id")
   }
 
@@ -188,26 +188,21 @@ object DedupQs {
   private def curationStackDsir(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     import graft.ops.TextAnalysis
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val docs = Tables.documents(s, d)
     // the DSIR model scores off the SAME checkpointed word-count spine the
     // gates consume — one corpus explode for gates + model
-    val dw = Dedup.wordCounts(docs, "doc_id", "text").localCheckpoint(true)
+    val dw = Dedup.wordCounts(docs, "doc_id", "text").barrier()
     // §2.6 (overlap independent jobs): given the shared dw spine, the gate
-    // chain's eager barriers (simhash sig → gated keep-set) and the DSIR
-    // scorer's (docBuckets) touch DISJOINT subtrees — submit both from
-    // driver threads so the scorer's job back-fills executor slots the gate
-    // chain's barrier tail leaves idle. Plans are untouched; only the job
-    // submission order changes, which cannot alter any result.
-    val gatedF = Future(gatedFromCounts(docs, dw, containment = false))
-    val scoresF = Future(TextAnalysis.dsirScoresFromCounts(dw,
-        docs.select(col("doc_id"), (col("lang") === "en" &&
-          TextAnalysis.qualityScore("text") >= 0.8).as("__t")), "doc_id")
-      .select(col("doc_id"), col("n_words"), col("dsir_score")))
-    val gated = Await.result(gatedF, Duration.Inf)
-    val scores = Await.result(scoresF, Duration.Inf)
+    // chain's barriers (simhash sig → gated keep-set) and the DSIR scorer's
+    // (docBuckets) touch DISJOINT subtrees — run both at once so the
+    // scorer's job back-fills executor slots the gate chain's barrier tail
+    // leaves idle. Only the job submission order changes, not a result.
+    val (gated, scores) = Checkpoints.both(
+      gatedFromCounts(docs, dw, containment = false),
+      TextAnalysis.dsirScoresFromCounts(dw,
+          docs.select(col("doc_id"), (col("lang") === "en" &&
+            TextAnalysis.qualityScore("text") >= 0.8).as("__t")), "doc_id")
+        .select(col("doc_id"), col("n_words"), col("dsir_score")))
     val trainSel = TextAnalysis.importanceBudgetFromScores(
         gated.filter(col("split") === "train").select("doc_id")
           .join(scores, "doc_id"), "doc_id", budget = 15000L)
@@ -236,7 +231,7 @@ object DedupQs {
     // ReuseExchange read 0.94× on c2 but 1.05×/1.19× on c3/c4 — the c4
     // scores path consumes dw from a SECOND materialization where stage
     // reuse cannot see the first; the checkpoint stays)
-    val dw = Dedup.wordCounts(docs, "doc_id", "text").localCheckpoint(true)
+    val dw = Dedup.wordCounts(docs, "doc_id", "text").barrier()
     (gatedFromCounts(docs, dw, containment), dw)
   }
 
@@ -270,7 +265,7 @@ object DedupQs {
     // doc); mutual containment keeps the min id, consistent with the
     // exact-dup keeper rule.
     val gatedPre = if (!containment) base else {
-      val keepIds = base.select(col("doc_id")).localCheckpoint(true)
+      val keepIds = base.select(col("doc_id")).barrier()
       val survivors = docs.join(keepIds, Seq("doc_id"), "left_semi")
       val contDrop = Dedup.containmentPairs(survivors, "doc_id", "text", k = 3,
           maxDf = 4, floor = 0.8)
@@ -296,7 +291,7 @@ object DedupQs {
       // (doc_id, source, split, n_tokens) is kept; text never re-ships.
       .withColumn("n_tokens", TextAnalysis.wsTokens(col("text")))
       .select(col("doc_id"), col("source"), col("split"), col("n_tokens"))
-      .localCheckpoint(true)
+      .barrier()
     gated
   }
 
@@ -730,33 +725,31 @@ object DedupQs {
     Q("c5_soft_curation",
       (s, d) => {
         import graft.ops.{Identity, TextAnalysis}
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
         // §2.6 (overlap independent jobs): the doc-token side (one corpus
         // scan + wsTokens) shares nothing with the pair-graph + CC chain
-        // until the final weight join — materialize it from a driver thread
-        // so it rides the CC rounds' barrier tails instead of queuing after
+        // until the final weight join — materialize it on a second thread so
+        // it rides the CC rounds' barrier tails instead of queuing after
         // them. Plans untouched; the join consumes the same rows either way.
-        val docTokF = Future(Tables.documents(s, d)
-          .filter(col("lang").isNotNull && col("text").isNotNull)
-          .select(col("doc_id"), col("lang"),
-            TextAnalysis.wsTokens(col("text")).as("n_tokens"))
-          .localCheckpoint(true))
-        val (nodes, edges) = nearDupGraph(s, d)
-        val cw = Window.partitionBy(col("comp_id"))
-        val clusters = Identity.connectedComponents(nodes, edges)
-          .withColumn("cluster_size", count(lit(1)).over(cw))
-          .select(col("id").as("doc_id"), col("cluster_size"))
+        val (docTok, clusters) = Checkpoints.both(
+          Tables.documents(s, d)
+            .filter(col("lang").isNotNull && col("text").isNotNull)
+            .select(col("doc_id"), col("lang"),
+              TextAnalysis.wsTokens(col("text")).as("n_tokens"))
+            .barrier(), {
+            val (nodes, edges) = nearDupGraph(s, d)
+            val cw = Window.partitionBy(col("comp_id"))
+            Identity.connectedComponents(nodes, edges)
+              .withColumn("cluster_size", count(lit(1)).over(cw))
+              .select(col("id").as("doc_id"), col("cluster_size"))
+          })
         // checkpointed frontier: the sizes collect and the prefix-sum cut
         // are separate jobs — without it each replays the pair graph + CC
-        val weighted = Await.result(docTokF, Duration.Inf)
+        val weighted = docTok
           .join(clusters, Seq("doc_id"), "left")
           .withColumn("weight_ppm", expr(
             "CAST(1000000 AS BIGINT) div coalesce(cluster_size, CAST(1 AS BIGINT))"))
           .withColumn("eff_tokens_ppm", col("n_tokens") * col("weight_ppm"))
-          .drop("cluster_size", "n_tokens")
-          .localCheckpoint(true)
+          .drop("cluster_size", "n_tokens").barrier()
         softCurationCut(s, weighted)
       },
       Some(
@@ -874,7 +867,7 @@ object DedupQs {
       (s, d) => {
         import graft.ops.Graph
         val (nodes, edges) = nearDupGraph(s, d)
-        val star = Graph.connectedComponentsStar(nodes, edges).localCheckpoint(true)
+        val star = Graph.connectedComponentsStar(nodes, edges).barrier()
         val lab = star.select(col("id"), col("comp_id"))
         val badEdges = edges
           .join(lab.toDF("id", "ca"), col("src") === col("id")).drop("id")

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.flags.{Ev, FlagRules}
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.functions._
 
 /** Flag-rule evaluation (SURVEY.md §2.9 U1) — typed
@@ -150,12 +151,12 @@ object FlagQs {
         // parent-exists semi-join); the distinct-user frame is tiny, the
         // events scan behind it is not — materialize it once.
         val uni = Tables.events(s, d).filter(Q.usecs(col("ts")) < asOfUs)
-          .select(col("user_id")).distinct().localCheckpoint(true)
+          .select(col("user_id")).distinct().barrier()
         // the flags frame feeds BOTH childPass branches (tagged + parent-own);
         // without a materialization frontier each branch re-runs the whole
-        // per-user rule evaluation. The frame is flag-count sized — eager
-        // localCheckpoint costs one tiny write, saves a full corpus pass.
-        val flags = flagsAt(s, d, asOfUs).localCheckpoint(true)
+        // per-user rule evaluation. The frame is flag-count sized — a
+        // barrier costs one tiny write, saves a full corpus pass.
+        val flags = flagsAt(s, d, asOfUs).barrier()
         FlagPasses.childPass(flags, FlagPasses.familyMap(uni))
       },
       Some {
@@ -264,7 +265,7 @@ object FlagQs {
         // prior feeds both guard lookups (sets + syncs) — checkpoint the
         // tiny filtered frame so the asOf1 evaluation runs exactly once
         val prior = flagsAt(s, d, asOf1Us).filter(col("flag_type") === offer)
-          .localCheckpoint(true)
+          .barrier()
         FlagPasses.guardOffers(cur,
           prior.withColumn("set_us", lit(asOf1Us)),
           prior.withColumn("sync_us", lit(asOf1Us + 3600000000L)),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import graft.ops.Checkpoints.BarrierOps
 import graft.ops.SimilaritySearch
 import org.apache.spark.sql.functions._
 
@@ -507,7 +508,7 @@ object SimilarityQs {
         val cells = SimilaritySearch.diversitySample(emb, "vec_id", "embedding",
           dim, bits = 4, quota = Long.MaxValue, salt = "k8")
           .select(col("vec_id"), col("cell"))
-        val withCells = emb.join(cells, "vec_id").localCheckpoint(true)
+        val withCells = emb.join(cells, "vec_id").barrier()
         val exact = SimilaritySearch.topKNeighbors(
           emb, "vec_id", "embedding", queryId = 0L, k = 5)
         val qCell = withCells.filter(col("vec_id") === 0L)
@@ -829,7 +830,7 @@ object SimilarityQs {
         val exact5 = top5(score(
           emb.crossJoin(broadcast(probes))
             .filter(col("vec_id") =!= col("probe_id"))))
-          .localCheckpoint(true) // two consumers: hit join + unindexed agg
+          .barrier() // two consumers: hit join + unindexed agg
         val hits = exact5
           .join(stale5.withColumnRenamed("vec_id", "__sv"),
             exact5("probe_id") === stale5("probe_id") &&

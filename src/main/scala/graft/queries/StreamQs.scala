@@ -2,6 +2,7 @@ package graft.queries
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.ops.Checkpoints.BarrierOps
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -386,7 +387,7 @@ object StreamQs {
             s"$base/state", s"$base/ckpt")
           .awaitTermination()
         graft.ops.TextAnalysis.sourceDriftFromBuckets(
-          Streams.driftMergedBuckets(ss, s"$base/state").localCheckpoint(true),
+          Streams.driftMergedBuckets(ss, s"$base/state").barrier(),
           "source")
       },
       Some(graft.ops.TextAnalysis.sourceDriftSql("source", "text", "documents"))),
@@ -402,7 +403,7 @@ object StreamQs {
         import graft.ops.TextAnalysis
         TextAnalysis.cmsHeavyHittersFromCounters(
           TextAnalysis.cmsWordSpine(
-            graft.core.Tables.documents(ss, d), "text").localCheckpoint(true),
+            graft.core.Tables.documents(ss, d), "text").barrier(),
           Streams.cmsMergedCounters(ss, s"$base/state"))
       },
       Some(graft.ops.TextAnalysis.cmsHeavyHittersSql("text", "documents"))),
@@ -426,7 +427,7 @@ object StreamQs {
           .awaitTermination()
         import graft.ops.QuantileSketch
         val merged = Streams.quantileMergedHistogram(ss, s"$base/state")
-          .localCheckpoint(true)
+          .barrier()
         val direct = QuantileSketch.histogram(
           graft.core.Tables.events(ss, d)
             .filter(col("value").isNotNull && col("value") >= 0),

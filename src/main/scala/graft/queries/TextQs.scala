@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import graft.ops.Checkpoints.BarrierOps
 import graft.ops.TextAnalysis
 import org.apache.spark.sql.functions._
 
@@ -706,8 +707,7 @@ object TextQs {
         // winnow pipeline per branch (r12). Pairs come from a BOUNDED
         // collect_list + double explode (groups are <= 32 ids after the
         // df cap — the containmentPairs shape), not a renamed self-join.
-        val fps = sel.select(col("doc_id"), col("fp")).distinct()
-          .localCheckpoint(true)
+        val fps = sel.select(col("doc_id"), col("fp")).distinct().barrier()
         val rare = fps.groupBy(col("fp")).agg(count(lit(1)).as("fdf"))
           .filter(col("fdf") <= 32).select(col("fp"))
         val grouped = fps.join(rare, "fp")
@@ -752,8 +752,7 @@ object TextQs {
         val docs = Tables.documents(s, d)
           .filter(col("lang").isNotNull && col("text").isNotNull)
           .select(col("doc_id"), col("lang"),
-            TextAnalysis.wsTokens(col("text")).as("n_tok"))
-          .localCheckpoint(true)
+            TextAnalysis.wsTokens(col("text")).as("n_tok")).barrier()
         val sizes = docs.groupBy(col("lang"))
           .agg(sum(col("n_tok")).as("sz")).collect()
           .map(r => r.getString(0) -> r.getLong(1)).toSeq

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -181,12 +182,12 @@ object Streams {
         batchRaw.select(col("doc_id"), col("text")).dropDuplicates("doc_id")) { sn =>
       batchRaw.select(col("doc_id"), col("text")).dropDuplicates("doc_id")
         .join(sn.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    }.localCheckpoint(true)
+    }.barrier()
     if (fresh.isEmpty) return
 
     val freshBands = Dedup.lshBands(
       Dedup.minhash(Dedup.shingles(fresh, "doc_id", "text", k, dedup = false),
-        "doc_id", numHashes), "doc_id", bandSize, numHashes).localCheckpoint(true)
+        "doc_id", numHashes), "doc_id", bandSize, numHashes).barrier()
     val seenBands = seen.map(_.select(col("doc_id"), explode(col("bands")).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.sig").as("sig")))
 
@@ -218,7 +219,7 @@ object Streams {
         col("band_a") === col("band_b") && col("sig_a") === col("sig_b") &&
           (col("__arrived") || col("id_b") < col("id_a")))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_bands"))
-      .localCheckpoint(true)
+      .barrier()
 
     // exact-Jaccard verify over CANDIDATE docs only: semi-filter the doc
     // tables to candidate ids BEFORE the shingle explode (the d8 contract —
@@ -241,7 +242,7 @@ object Streams {
         Seq("doc_id"), "left")
       .withColumn("bands", coalesce(col("bands"),
         expr("CAST(array() AS ARRAY<STRUCT<band: INT, sig: STRING>>)")))
-    val merged = seen.fold(freshRows)(_.unionByName(freshRows)).localCheckpoint(true)
+    val merged = seen.fold(freshRows)(_.unionByName(freshRows)).barrier()
     graft.core.TableSwap.commit(spark, stateDir)(merged.write.parquet(_))
   }
 

@@ -1,0 +1,128 @@
+package graft
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.jdk.CollectionConverters._
+
+import graft.ops.Checkpoints
+import graft.ops.Checkpoints.BarrierOps
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The barrier contract of `graft.ops.Checkpoints`: when a barrier is
+  * skipped, when it must not be, and what `both` carries to its thread. */
+class CheckpointsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  /** The `spark.job.tags` of every job `body` starts. The listener bus is
+    * asynchronous: poll until the count is stable. */
+  private def jobTags(body: => Unit): Seq[Set[String]] = {
+    val seen = new ConcurrentLinkedQueue[Set[String]]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var last = -1
+      var spins = 0
+      while (seen.size != last && spins < 50) {
+        last = seen.size; spins += 1; Thread.sleep(100)
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    seen.asScala.toSeq
+  }
+
+  private def isCheckpoint(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }
+
+  private def ck: DataFrame = spark.range(100).toDF("id").barrier()
+
+  test("barrier returns a deterministic Project/Filter over a checkpoint unchanged, with no job") {
+    val base = ck
+    assert(isCheckpoint(base))
+    val view = base.filter(col("id") % 2 === 0).select((col("id") * 2).as("x"))
+    var out: DataFrame = null
+    assert(jobTags { out = view.barrier() }.isEmpty)
+    assert(out eq view)
+  }
+
+  test("barrier checkpoints an aggregate") {
+    val agg = ck.groupBy((col("id") % 3).as("k")).count()
+    var out: DataFrame = null
+    assert(jobTags { out = agg.barrier() }.nonEmpty)
+    assert(isCheckpoint(out))
+    assert(out.collect().toSet == agg.collect().toSet)
+  }
+
+  test("barrier checkpoints a non-deterministic Project over a checkpoint") {
+    // Skew's salt: rand(7) re-drawn per consumer would give each consumer
+    // different rows, so the barrier must materialize it once
+    val out = ck.withColumn("salt", rand(7)).barrier()
+    assert(isCheckpoint(out))
+    assert(out.collect().toSeq == out.collect().toSeq)
+  }
+
+  test("barrier checkpoints a Project over an RDD that is not a checkpoint") {
+    // a createDataFrame(rdd) frame (or a foreachBatch micro-batch) is a
+    // LogicalRDD too, but each consumer would re-run its source
+    val schema = StructType(Seq(StructField("id", LongType)))
+    val raw = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L), Row(2L))), schema)
+    val out = raw.select((col("id") + 1).as("x")).barrier()
+    assert(isCheckpoint(out))
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
+  }
+
+  test("both rethrows side a's failure only after side b has finished") {
+    assert(Checkpoints.both(1, "b") == ((1, "b")))
+    val bDone = new AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Checkpoints.both[Int, Int](throw new IllegalStateException("a"),
+        { Thread.sleep(300); bDone.set(true); 2 })
+    }
+    assert(e.getMessage == "a")
+    assert(bDone.get, "side a's failure escaped before side b finished")
+  }
+
+  test("both carries the caller's job tags into side a") {
+    // start the global execution context's threads before the tag exists:
+    // a pooled `Future` for side a would run on one of them, tagless
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val n = Runtime.getRuntime.availableProcessors
+    val started = new CountDownLatch(n)
+    Await.result(Future.sequence(Seq.fill(n)(Future {
+      started.countDown(); started.await(10, TimeUnit.SECONDS)
+    })), 30.seconds)
+
+    val sc = spark.sparkContext
+    sc.addJobTag("t")
+    val tags = try jobTags(Checkpoints.both(spark.range(10).count(), ()))
+      finally sc.removeJobTag("t")
+    assert(tags.nonEmpty)
+    assert(tags.forall(_.contains("t")), tags)
+  }
+
+  test("src/main calls localCheckpoint only in graft/ops/Checkpoints.scala") {
+    assert(SourceScan.filesMatching("""\.\s*localCheckpoint\s*\(""".r) ==
+      Seq("scala/graft/ops/Checkpoints.scala"))
+  }
+
+  test("src/main uses no scala.concurrent Future and no global execution context") {
+    assert(SourceScan.filesMatching(
+      ("""scala\.concurrent\.(Future\b|\{[^}]*\bFuture\b)|""" +
+        """ExecutionContext\s*\.\s*Implicits\s*\.\s*global""").r).isEmpty)
+  }
+}

@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import graft.core.Session
 import graft.plans.AsOfJoinPlan
 import org.apache.logging.log4j.{Level, LogManager}
@@ -25,17 +21,7 @@ class SessionSpec extends AnyFunSuite {
 
   test("src/main builds a SparkSession only in graft/core/Session.scala") {
     // the call only, also split over lines; comments may name the API
-    val call = """SparkSession\s*\.\s*builder\s*\(""".r
-    def calls(p: Path): Boolean = {
-      val code = new String(Files.readAllBytes(p), "UTF-8")
-        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-      call.findFirstIn(code).isDefined
-    }
-    val root = Paths.get("src/main")
-    val builders = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter(calls)
-      .map(p => root.relativize(p).toString).toSeq
-    assert(builders == Seq("scala/graft/core/Session.scala"))
+    assert(SourceScan.filesMatching("""SparkSession\s*\.\s*builder\s*\(""".r) ==
+      Seq("scala/graft/core/Session.scala"))
   }
 }
