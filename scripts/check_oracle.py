@@ -7,9 +7,12 @@ Reads each <out_dir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from <out_dir>/oracle_sql.json in DuckDB over the sf_dir
 parquet tables, and compares: row count, column names, and values (rows and
 columns sorted, exact match; tiny float tolerance report included for triage).
+Each PASS/FAIL line names the query first, then the oracle's wall time, e.g.
+`PASS name (N rows, 12.3 s)` or `FAIL name (12.3 s): rows 5 vs 6`.
 """
 import json
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -45,19 +48,22 @@ def main():
             print(f"FAIL {name}: spark output missing ({ex})")
             n_fail += 1
             continue
+        t0 = time.monotonic()
         try:
             want = con.execute(sql).df()
         except Exception as ex:
-            print(f"FAIL {name}: oracle sql error: {str(ex)[:300]}")
+            secs = time.monotonic() - t0
+            print(f"FAIL {name} ({secs:.1f} s): oracle sql error: {str(ex)[:300]}")
             n_fail += 1
             continue
+        secs = time.monotonic() - t0
         g, w = canon(got), canon(want)
         if list(g.columns) != list(w.columns):
-            print(f"FAIL {name}: columns {list(g.columns)} vs {list(w.columns)}")
+            print(f"FAIL {name} ({secs:.1f} s): columns {list(g.columns)} vs {list(w.columns)}")
             n_fail += 1
             continue
         if len(g) != len(w):
-            print(f"FAIL {name}: rows {len(g)} vs {len(w)}")
+            print(f"FAIL {name} ({secs:.1f} s): rows {len(g)} vs {len(w)}")
             n_fail += 1
             continue
         mismatched = []
@@ -85,7 +91,7 @@ def main():
             if not ok:
                 mismatched.append(c)
         if mismatched:
-            print(f"FAIL {name}: value mismatch in {mismatched}")
+            print(f"FAIL {name} ({secs:.1f} s): value mismatch in {mismatched}")
             for c in mismatched[:2]:
                 diff = g[c].astype(str) != w[c].astype(str)
                 idx = diff[diff].index[:3]
@@ -93,7 +99,7 @@ def main():
                     print(f"   [{c}] row {i}: spark={g[c][i]!r} oracle={w[c][i]!r}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(g)} rows)")
+            print(f"PASS {name} ({len(g)} rows, {secs:.1f} s)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)

@@ -4,17 +4,18 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.ops.Checkpoints.BarrierOps
 import graft.streaming.Streams
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 /** Structured Streaming queries (SURVEY.md §2.10), run to completion inside
   * the registry so the SAME DuckDB oracle gate covers the streaming path.
   *
-  * Each query drives a real `readStream` → transform → memory-sink stream
-  * with `Trigger.AvailableNow` (process-everything-then-stop), then returns
-  * the sink table. Outputs are arrival-order-independent by construction —
+  * Each query drives a real `readStream` → transform → sink stream through
+  * `Streams.runToEnd` (`Trigger.AvailableNow`: process everything, then
+  * stop), then returns the memory-sink table or a frame over the seat's
+  * state. Outputs are arrival-order-independent by construction —
   * windowed aggregates, distinct key sets, and monotone running-state maxima
   * — so batch SQL over the same parquet is an exact oracle even though file
   * split order is not deterministic.
@@ -86,26 +87,29 @@ object StreamQs {
     * bookkeeping) per micro-batch — a FIXED cost that dominates when state
     * is small: st4 at sf0.1 runs 8.4s with 32 partitions, 2.7s with 8,
     * 12.7s with 64. Partition count never changes results (outputs are
-    * key-partitioned and arrival-order-independent), so default it low for
-    * the replay-a-table harness scale and raise via conf on a real cluster
-    * where state volume, not store count, is the bottleneck. */
-  private def statePartitions(s: SparkSession): String =
-    s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("8")
+    * key-partitioned and arrival-order-independent), so keep it low for
+    * the replay-a-table harness scale; a cluster where state volume, not
+    * store count, is the bottleneck wants a larger one. */
+  private val StatePartitions = 8
 
   /** A child session with the stateful partition override — scoped so the
     * override never leaks into batch queries sharing the outer session. */
   private def streamSession(s: SparkSession): SparkSession =
-    Q.scopedSession(s, "spark.sql.shuffle.partitions" -> statePartitions(s))
+    Q.scopedSession(s, "spark.sql.shuffle.partitions" -> StatePartitions.toString)
 
   /** Run a streaming DataFrame to completion into a memory sink; return the
     * collected table (registered on the stream's own session). */
   private def runToMemory(df: DataFrame, mode: OutputMode): DataFrame = {
     val name = s"graft_sink_${sinkId.incrementAndGet()}"
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    Streams.runToEnd(df)(_.format("memory").queryName(name).outputMode(mode))
     df.sparkSession.table(name)
   }
+
+  /** A fresh state + checkpoint dir for one run of an ingest seat, deleted
+    * at JVM exit. Not sooner: the seat returns a lazy frame over the state
+    * written there. */
+  private def seatDir(seat: String): String =
+    GraftBridge.tempDir(s"graft_$seat")
 
   val qs: Seq[Q] = Seq(
 
@@ -255,11 +259,10 @@ object StreamQs {
     Q("st7_stream_neardup_ingest",
       (s, d) => {
         val ss = streamSession(s)
-        val base = java.nio.file.Files.createTempDirectory("graft_st7_").toString
+        val base = seatDir("st7")
         Streams.nearDupIngest(
             Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
             s"$base/state", s"$base/ckpt", threshold = 0.5)
-          .awaitTermination()
         ss.read.parquet(s"$base/state").select(col("doc_id"), col("accepted"))
       },
       Some(s"""WITH ${DedupQs.shinglesCte},
@@ -308,14 +311,13 @@ object StreamQs {
     Q("st8_stream_decontaminate",
       (s, d) => {
         val ss = streamSession(s)
-        val base = java.nio.file.Files.createTempDirectory("graft_st8_").toString
+        val base = seatDir("st8")
         val docs = graft.core.Tables.documents(ss, d)
         Streams.decontaminateIngest(
             Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet"))
               .filter(col("doc_id") % 97 =!= 0),
             docs.filter(col("doc_id") % 97 === 0),
             s"$base/state", s"$base/ckpt")
-          .awaitTermination()
         ss.read.parquet(s"$base/state")
           .select(col("doc_id"), col("n_shingles"), col("n_contam"),
             col("contam_ratio"), col("flagged"))
@@ -332,11 +334,10 @@ object StreamQs {
     Q("st9_stream_compacted_ingest",
       (s, d) => {
         val ss = streamSession(s)
-        val base = java.nio.file.Files.createTempDirectory("graft_st9_").toString
+        val base = seatDir("st9")
         Streams.compactingIngest(
             Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
             s"$base/tbl", s"$base/ckpt")
-          .awaitTermination()
         Streams.readIngested(ss, s"$base/tbl")
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("total_chars"))
@@ -345,14 +346,6 @@ object StreamQs {
              |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
              |FROM documents GROUP BY source""".stripMargin)),
 
-    // ST10: streaming heavy-hitters — t24's count-min sketch as an ingest
-    // seat: each micro-batch lands its own depth×width partial counter
-    // table (replay-idempotent: a replayed batch OVERWRITES its batch_id
-    // dir rather than double-adding), and the current sketch is the
-    // re-summed union of partials — addition IS the sketch's merge
-    // operator, so the streamed counters equal the batch sketch exactly
-    // and t24's oracle carries over unchanged. Multi-batch equality and
-    // restart-resume are StreamsSpec's.
     Q("st11_stream_cdc_census",
       (s, d) => {
         // t28's chunk census as an ingest seat: per-batch partial censuses
@@ -360,11 +353,10 @@ object StreamQs {
         // per-doc dup rollup runs against the MERGED census — equal to the
         // batch stats exactly, so t28's oracle carries over unchanged.
         val ss = streamSession(s)
-        val base = java.nio.file.Files.createTempDirectory("graft_st11_").toString
+        val base = seatDir("st11")
         Streams.cdcIngest(
             Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
             s"$base/state", s"$base/ckpt")
-          .awaitTermination()
         import graft.ops.TextAnalysis
         TextAnalysis.cdcChunkStatsFromCensus(
           TextAnalysis.cdcChunkInstances(
@@ -381,25 +373,31 @@ object StreamQs {
         // the same sourceDriftFromBuckets code as batch t26 — streamed
         // monitoring equals the batch report exactly, oracle unchanged.
         val ss = streamSession(s)
-        val base = java.nio.file.Files.createTempDirectory("graft_st12_").toString
+        val base = seatDir("st12")
         Streams.driftIngest(
             Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
             s"$base/state", s"$base/ckpt")
-          .awaitTermination()
         graft.ops.TextAnalysis.sourceDriftFromBuckets(
           Streams.driftMergedBuckets(ss, s"$base/state").barrier(),
           "source")
       },
       Some(graft.ops.TextAnalysis.sourceDriftSql("source", "text", "documents"))),
 
+    // ST10: streaming heavy-hitters — t24's count-min sketch as an ingest
+    // seat: each micro-batch lands its own depth×width partial counter
+    // table (replay-idempotent: a replayed batch OVERWRITES its batch_id
+    // dir rather than double-adding), and the current sketch is the
+    // re-summed union of partials — addition IS the sketch's merge
+    // operator, so the streamed counters equal the batch sketch exactly
+    // and t24's oracle carries over unchanged. Multi-batch equality and
+    // restart-resume are StreamsSpec's.
     Q("st10_stream_heavy_hitters",
       (s, d) => {
         val ss = streamSession(s)
-        val base = java.nio.file.Files.createTempDirectory("graft_st10_").toString
+        val base = seatDir("st10")
         Streams.cmsIngest(
             Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
             s"$base/state", s"$base/ckpt")
-          .awaitTermination()
         import graft.ops.TextAnalysis
         TextAnalysis.cmsHeavyHittersFromCounters(
           TextAnalysis.cmsWordSpine(
@@ -419,12 +417,11 @@ object StreamQs {
     Q("st13_stream_value_quantiles",
       (s, d) => {
         val ss = streamSession(s)
-        val base = java.nio.file.Files.createTempDirectory("graft_st13_").toString
+        val base = seatDir("st13")
         Streams.quantileIngest(
             Streams.eventStream(ss, asStreamDir(s"$d/events.parquet"))
               .filter(col("value").isNotNull && col("value") >= 0),
             s"$base/state", s"$base/ckpt")
-          .awaitTermination()
         import graft.ops.QuantileSketch
         val merged = Streams.quantileMergedHistogram(ss, s"$base/state")
           .barrier()
@@ -478,11 +475,10 @@ object StreamQs {
       (s, d) => {
         val ss = streamSession(s)
         graft.plans.HllSketch.register(ss)
-        val base = java.nio.file.Files.createTempDirectory("graft_st14_").toString
+        val base = seatDir("st14")
         Streams.hllIngest(
             Streams.eventStream(ss, asStreamDir(s"$d/events.parquet")),
             s"$base/state", s"$base/ckpt", "user_id", "event_type")
-          .awaitTermination()
         val merged = Streams.hllMergedSketch(ss, s"$base/state")
         // the same null-row pre-filter as hllIngest: an event_type whose
         // user_ids are all NULL must vanish on BOTH engines (the oracle's
@@ -558,11 +554,10 @@ object StreamQs {
     Q("st16_stream_pca_moments",
       (s, d) => {
         val ss = streamSession(s)
-        val base = java.nio.file.Files.createTempDirectory("graft_st16_").toString
+        val base = seatDir("st16")
         Streams.pcaMomentsIngest(
             Streams.embeddingStream(ss, asStreamDir(s"$d/embeddings.parquet")),
             s"$base/state", s"$base/ckpt")
-          .awaitTermination()
         val merged = Streams.pcaMergedMoments(ss, s"$base/state")
         val direct = graft.core.Tables.embeddings(ss, d)
           .filter(col("embedding").isNotNull)
@@ -609,8 +604,8 @@ object StreamQs {
     // watermark (max o_orderdate − 90 d) would evict a key's dedup state
     // before a late copy arrived and the copy would re-emit. No trigger
     // pacing option is set here and the directory is static, so batch 0
-    // sees everything; pace the sources and this gate tests file-source
-    // scheduling, not the waterfall.
+    // sees everything (StreamRunSpec asserts it at sf0.01); pace the
+    // sources and this gate tests file-source scheduling, not the waterfall.
     Q("st17_stream_txn_waterfall",
       (s, d) => {
         val ss = streamSession(s)

@@ -4,7 +4,7 @@ import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming forms of the reference's micro-batch behaviors
@@ -18,6 +18,37 @@ import org.apache.spark.sql.types._
   * without code changes downstream.
   */
 object Streams {
+
+  /** Run `df` to its end as an `AvailableNow` stream: process everything its
+    * sources hold at start, then stop. `sink` sets the sink on the writer (a
+    * memory table, or a checkpointed `foreachBatch` body). Returns the
+    * terminated query, whose `recentProgress` holds one entry per
+    * micro-batch; a failed batch rethrows here as the query's
+    * `StreamingQueryException`. Every stream in the engine runs through this
+    * one call. */
+  def runToEnd(df: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val q = sink(df.writeStream).trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** [[runToEnd]] into a `foreachBatch` body under a checkpoint at
+    * `ckptDir`, so a restart resumes after the last committed batch. */
+  private def eachBatch(stream: DataFrame, ckptDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    runToEnd(stream)(_.option("checkpointLocation", ckptDir)
+      .foreachBatch((batch: Dataset[Row], id: Long) => body(batch.toDF(), id)))
+
+  private def fsOf(spark: SparkSession, dir: String) = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  private def exists(spark: SparkSession, dir: String): Boolean = {
+    val (fs, p) = fsOf(spark, dir)
+    fs.exists(p)
+  }
 
   /** Parquet schema of the events table in its original generation (ts is
     * nanos-as-long under `spark.sql.legacy.parquet.nanosAsLong`). */
@@ -120,9 +151,8 @@ object Streams {
     // the merge lazily against it, commit under rename-only replacement — a
     // crash never loses the table or replays into an empty one.
     graft.core.TableSwap.recover(spark, tableDir)
-    val path = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = if (fs.exists(path)) Some(spark.read.parquet(tableDir)) else None
+    val existing =
+      if (exists(spark, tableDir)) Some(spark.read.parquet(tableDir)) else None
     val all = existing.fold(batch)(_.unionByName(batch))
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(versionCol).desc, col(tiebreakCol).desc)
@@ -136,12 +166,8 @@ object Streams {
     * from the last committed batch. */
   def upsertByKey(stream: DataFrame, tableDir: String, ckptDir: String,
       keyCol: String, versionCol: String, tiebreakCol: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch((batch: Dataset[Row], _: Long) =>
-        mergeUpsert(batch.toDF(), tableDir, keyCol, versionCol, tiebreakCol))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(stream, ckptDir)((batch, _) =>
+      mergeUpsert(batch, tableDir, keyCol, versionCol, tiebreakCol))
 
   /** Merge one micro-batch of documents into the near-dup ingest state at
     * `stateDir` — the streaming seat of `Dedup.incrementalNearDup` (d8): a
@@ -174,9 +200,7 @@ object Streams {
     import graft.ops.Dedup
     val spark = batchRaw.sparkSession
     graft.core.TableSwap.recover(spark, stateDir)
-    val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seen = if (fs.exists(path)) Some(spark.read.parquet(stateDir)) else None
+    val seen = if (exists(spark, stateDir)) Some(spark.read.parquet(stateDir)) else None
 
     val fresh = seen.fold(
         batchRaw.select(col("doc_id"), col("text")).dropDuplicates("doc_id")) { sn =>
@@ -253,13 +277,8 @@ object Streams {
       threshold: Double, k: Int = 3, numHashes: Int = 8,
       bandSize: Int = 2,
       maxBucket: Int = graft.ops.Dedup.DefaultLshMaxBucket): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch((batch: Dataset[Row], _: Long) =>
-        nearDupIngestBatch(batch.toDF(), stateDir, threshold, k, numHashes,
-          bandSize, maxBucket))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(stream, ckptDir)((batch, _) =>
+      nearDupIngestBatch(batch, stateDir, threshold, k, numHashes, bandSize, maxBucket))
 
   /** Streaming append ingest with BOUNDED small files — the two-zone
     * (landing + compacted base) pattern a file-backed streaming sink needs
@@ -281,23 +300,14 @@ object Streams {
     */
   def compactingIngest(stream: DataFrame, baseDir: String, ckptDir: String,
       mergeEvery: Int = 4, targetBytes: Long = 128L << 20): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val spark = batch.sparkSession
-        batch.toDF().withColumn("ingest_batch", lit(id))
-          .write.mode("overwrite").parquet(s"$baseDir/landing/b$id")
-        val committed = landingIds(spark, baseDir).filter(_ < id)
-        if (committed.size >= mergeEvery)
-          mergeLanding(spark, baseDir, committed, targetBytes)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  private def fsOf(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+    eachBatch(stream, ckptDir) { (batch, id) =>
+      val spark = batch.sparkSession
+      batch.withColumn("ingest_batch", lit(id))
+        .write.mode("overwrite").parquet(s"$baseDir/landing/b$id")
+      val committed = landingIds(spark, baseDir).filter(_ < id)
+      if (committed.size >= mergeEvery)
+        mergeLanding(spark, baseDir, committed, targetBytes)
+    }
 
   private[graft] def landingIds(spark: SparkSession, baseDir: String): Seq[Long] = {
     val (fs, p) = fsOf(spark, s"$baseDir/landing")
@@ -320,10 +330,8 @@ object Streams {
     val fresh = ids.filterNot(inBase)
     if (fresh.nonEmpty) {
       val landing = spark.read.parquet(fresh.map(i => s"$baseDir/landing/b$i"): _*)
-      val (fs0, _) = fsOf(spark, baseDir)
       val existing =
-        if (fs0.exists(new org.apache.hadoop.fs.Path(s"$baseDir/base")))
-          Some(spark.read.parquet(s"$baseDir/base"))
+        if (exists(spark, s"$baseDir/base")) Some(spark.read.parquet(s"$baseDir/base"))
         else None
       // size the rewrite like Tables.compact: one file per targetBytes
       val bytes = fresh.map { i =>
@@ -350,9 +358,9 @@ object Streams {
     val inBase = baseBatchIds(spark, baseDir)
     val pending = landingIds(spark, baseDir).filterNot(inBase)
       .map(i => s"$baseDir/landing/b$i")
-    val (fs, basePath) = fsOf(spark, s"$baseDir/base")
     val parts =
-      (if (fs.exists(basePath)) Seq(spark.read.parquet(s"$baseDir/base")) else Seq.empty) ++
+      (if (exists(spark, s"$baseDir/base")) Seq(spark.read.parquet(s"$baseDir/base"))
+       else Seq.empty) ++
         (if (pending.nonEmpty) Seq(spark.read.parquet(pending: _*)) else Seq.empty)
     require(parts.nonEmpty, s"nothing ingested under $baseDir")
     parts.reduce(_ unionByName _)
@@ -377,16 +385,12 @@ object Streams {
     import graft.ops.TextAnalysis
     val (benchSh, bfBc) =
       TextAnalysis.benchShingleBloom(bench, "doc_id", "text", k, fpp)
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val report = TextAnalysis.contaminationVsBloom(
-            batch.toDF(), benchSh, bfBc, "doc_id", "text", k)
-          .withColumn("flagged", col("n_contam") > 0)
-        mergeUpsert(report, stateDir, "doc_id", "n_shingles", "n_contam")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(stream, ckptDir) { (batch, _) =>
+      val report = TextAnalysis.contaminationVsBloom(
+          batch, benchSh, bfBc, "doc_id", "text", k)
+        .withColumn("flagged", col("n_contam") > 0)
+      mergeUpsert(report, stateDir, "doc_id", "n_shingles", "n_contam")
+    }
   }
 
   /** Streaming count-min ingest — the mergeability of t24's sketch made
@@ -405,21 +409,21 @@ object Streams {
   def cmsIngest(stream: DataFrame, stateDir: String, ckptDir: String,
       textCol: String = "text", depth: Int = 3,
       width: Int = 1024): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        import graft.ops.TextAnalysis
-        TextAnalysis.cmsCountersFromSpine(
-            TextAnalysis.cmsWordSpine(batch.toDF(), textCol), depth, width)
-          .write.mode("overwrite").parquet(s"$stateDir/batch_id=$id")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    landPartials(stream, stateDir, ckptDir) { batch =>
+      import graft.ops.TextAnalysis
+      TextAnalysis.cmsCountersFromSpine(
+        TextAnalysis.cmsWordSpine(batch, textCol), depth, width)
+    }
 
-  /** Merge the per-batch partial sketches under `stateDir` into the current
-    * counter table — addition is the sketch's merge operator. An ingest
-    * that saw zero batches has no state dir yet; that is the EMPTY sketch,
-    * not an error. */
+  /** [[eachBatch]] for the partial-landing sketch seats: each micro-batch's
+    * reduction lands at `stateDir/batch_id=<id>` by overwrite, so a replayed
+    * batch (foreachBatch is at-least-once) rewrites its own partial instead
+    * of adding it twice. [[mergedState]] reads the partials back. */
+  private def landPartials(stream: DataFrame, stateDir: String, ckptDir: String)(
+      reduce: DataFrame => DataFrame): StreamingQuery =
+    eachBatch(stream, ckptDir)((batch, id) =>
+      reduce(batch).write.mode("overwrite").parquet(s"$stateDir/batch_id=$id"))
+
   /** Shared merged-state reader for the partial-landing ingest seats: read
     * every batch_id partial under `stateDir` and fold `mergeAgg` per
     * `keyCols` (each state's own merge operator — SUM for the additive
@@ -429,10 +433,8 @@ object Streams {
   private def mergedState(spark: SparkSession, stateDir: String,
       emptySchema: StructType, keyCols: Seq[String],
       mergeAgg: Column, moreAggs: Column*): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parts =
-      if (!fs.exists(path))
+      if (!exists(spark, stateDir))
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], emptySchema)
       else spark.read.parquet(stateDir)
     parts.groupBy(keyCols.map(col): _*).agg(mergeAgg, moreAggs: _*)
@@ -454,14 +456,8 @@ object Streams {
     * loses nothing vs a batch rebuild. */
   def quantileIngest(stream: DataFrame, stateDir: String, ckptDir: String,
       valueCol: String = "value"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        graft.ops.QuantileSketch.histogram(batch.toDF(), Seq.empty, valueCol)
-          .write.mode("overwrite").parquet(s"$stateDir/batch_id=$id")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    landPartials(stream, stateDir, ckptDir)(
+      graft.ops.QuantileSketch.histogram(_, Seq.empty, valueCol))
 
   /** Merge the per-batch histogram partials into the current sketch state —
     * bucket-wise addition is the merge. Zero-batch ingest = empty sketch. */
@@ -482,19 +478,13 @@ object Streams {
     * stream in — never a corpus re-scan. */
   def pcaMomentsIngest(stream: DataFrame, stateDir: String, ckptDir: String,
       vecCol: String = "embedding"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        batch.toDF().filter(col(vecCol).isNotNull)
-          .select(posexplode(col(vecCol)).as(Seq("pos", "x")))
-          .withColumn("qv", floor(col("x").cast("double") * 1024).cast("long"))
-          .groupBy(col("pos"))
-          .agg(count(lit(1)).as("n"), sum(col("qv")).as("m"),
-            sum(col("qv") * col("qv")).as("g"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch_id=$id")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    landPartials(stream, stateDir, ckptDir)(
+      _.filter(col(vecCol).isNotNull)
+        .select(posexplode(col(vecCol)).as(Seq("pos", "x")))
+        .withColumn("qv", floor(col("x").cast("double") * 1024).cast("long"))
+        .groupBy(col("pos"))
+        .agg(count(lit(1)).as("n"), sum(col("qv")).as("m"),
+          sum(col("qv") * col("qv")).as("g")))
 
   /** Merge the per-batch moment partials — per-dimension integer addition
     * is the merge. Zero-batch ingest = the empty moment state. */
@@ -518,21 +508,16 @@ object Streams {
   def hllIngest(stream: DataFrame, stateDir: String, ckptDir: String,
       valueCol: String = "user_id",
       groupCol: String = "event_type"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        graft.plans.HllSketch.register(batch.sparkSession)
-        // null values are dropped BEFORE grouping (not just ignored by the
-        // sketch update), so a group whose values are all NULL emits no
-        // partial at all — pinning the group-existence semantics to the
-        // oracle's `WHERE sv IS NOT NULL` exactly
-        batch.toDF().filter(col(valueCol).isNotNull)
-          .groupBy(col(groupCol).as("grp"))
-          .agg(expr(s"hll_state(CAST($valueCol AS STRING))").as("st"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch_id=$id")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    landPartials(stream, stateDir, ckptDir) { batch =>
+      graft.plans.HllSketch.register(batch.sparkSession)
+      // null values are dropped BEFORE grouping (not just ignored by the
+      // sketch update), so a group whose values are all NULL emits no
+      // partial at all — pinning the group-existence semantics to the
+      // oracle's `WHERE sv IS NOT NULL` exactly
+      batch.filter(col(valueCol).isNotNull)
+        .groupBy(col(groupCol).as("grp"))
+        .agg(expr(s"hll_state(CAST($valueCol AS STRING))").as("st"))
+    }
 
   /** Union the per-batch register partials into the current per-group
     * sketch readout — element-wise max (`hll_merge`) is the merge; sketch
@@ -557,14 +542,8 @@ object Streams {
   def cdcIngest(stream: DataFrame, stateDir: String, ckptDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       w: Int = 3, div: Int = 16, salt: String = "cdc"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        graft.ops.TextAnalysis.cdcCensus(batch.toDF(), idCol, textCol, w, div, salt)
-          .write.mode("overwrite").parquet(s"$stateDir/batch_id=$id")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    landPartials(stream, stateDir, ckptDir)(
+      graft.ops.TextAnalysis.cdcCensus(_, idCol, textCol, w, div, salt))
 
   /** Merge the per-batch partial censuses into the current chunk census —
     * summation is the merge. Zero-batch ingest = the empty census. */
@@ -586,15 +565,8 @@ object Streams {
   def driftIngest(stream: DataFrame, stateDir: String, ckptDir: String,
       srcCol: String = "source", textCol: String = "text",
       buckets: Int = 256): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        graft.ops.TextAnalysis
-          .sourceBucketCounts(batch.toDF(), srcCol, textCol, buckets)
-          .write.mode("overwrite").parquet(s"$stateDir/batch_id=$id")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    landPartials(stream, stateDir, ckptDir)(
+      graft.ops.TextAnalysis.sourceBucketCounts(_, srcCol, textCol, buckets))
 
   /** Merge the per-batch (source, bucket) partials — counts are additive.
     * Zero-batch ingest = the empty spine. */

@@ -20,4 +20,10 @@ object GraftBridge {
     settings.foreach { case (k, v) => c.conf.set(k, v) }
     c
   }
+
+  /** A new directory `<prefix>-<uuid>` under `java.io.tmpdir`, deleted with
+    * its contents when the JVM exits (`Utils` is `private[spark]`; it
+    * registers the dir with Spark's shutdown-hook manager). */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).toString
 }

@@ -10,16 +10,19 @@ import scala.util.matching.Regex
   * an API. Paths come back relative to `src/main`, sorted. */
 object SourceScan {
 
-  def filesMatching(code: Regex): Seq[String] = {
-    def matches(p: Path): Boolean = {
-      val text = new String(Files.readAllBytes(p), "UTF-8")
-        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-      code.findFirstIn(text).isDefined
-    }
-    val root = Paths.get("src/main")
+  private val root = Paths.get("src/main")
+
+  private def stripped(p: Path): String =
+    new String(Files.readAllBytes(p), "UTF-8")
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
+  /** The code of one `src/main` file (`rel` as `filesMatching` returns it),
+    * comments stripped. */
+  def code(rel: String): String = stripped(root.resolve(rel))
+
+  def filesMatching(code: Regex): Seq[String] =
     Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filter(matches)
+      .filter(p => code.findFirstIn(stripped(p)).isDefined)
       .map(p => root.relativize(p).toString).toSeq.sorted
-  }
 }

@@ -189,12 +189,10 @@ class StreamsSpec extends AnyFunSuite {
           Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
       }
     }
-    def runOnce(): Unit = {
-      val q = Streams.upsertByKey(
+    def runOnce(): Unit =
+      Streams.upsertByKey(
         spark.readStream.schema(schema).parquet(in.toString),
         table, ckpt, "k", "version", "payload")
-      q.awaitTermination()
-    }
     arrive("a", Seq((1L, 1L, "one_v1"), (2L, 1L, "two_v1")))
     runOnce()
     assert(spark.read.parquet(table).count() == 2)
@@ -275,7 +273,7 @@ class StreamsSpec extends AnyFunSuite {
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
       .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    Streams.compactingIngest(stream, base, ckpt, mergeEvery = 4).awaitTermination()
+    Streams.compactingIngest(stream, base, ckpt, mergeEvery = 4)
 
     def canon(d: org.apache.spark.sql.DataFrame) =
       d.select("doc_id", "n_chars").collect()
@@ -331,7 +329,7 @@ class StreamsSpec extends AnyFunSuite {
       Streams.decontaminateIngest(
         Streams.documentStream(spark, in.toString)
           .filter(col("doc_id") % 97 =!= 0),
-        bench, state, ckpt).awaitTermination()
+        bench, state, ckpt)
 
     def canon(d: org.apache.spark.sql.DataFrame) =
       d.select("doc_id", "n_shingles", "n_contam", "contam_ratio")
@@ -375,7 +373,7 @@ class StreamsSpec extends AnyFunSuite {
     }
     def runOnce(): Unit =
       Streams.nearDupIngest(Streams.documentStream(spark, in.toString),
-        state, ckpt, threshold = 0.5).awaitTermination()
+        state, ckpt, threshold = 0.5)
 
     // wave 1: first half by doc_id; wave 2 arrives after a restart — id-
     // ordered arrival, so the gate must equal the batch smaller-id pair rule
@@ -464,12 +462,12 @@ class StreamsSpec extends AnyFunSuite {
     val mid = 250L
     arrive("a", docs.filter(col("doc_id") < mid))
     Streams.cmsIngest(Streams.documentStream(spark, in.toString),
-      state, ckpt).awaitTermination()
+      state, ckpt)
     val partials1 = spark.read.parquet(state)
       .select("batch_id").distinct().count()
     arrive("b", docs.filter(col("doc_id") >= mid))
     Streams.cmsIngest(Streams.documentStream(spark, in.toString),
-      state, ckpt).awaitTermination()
+      state, ckpt)
     assert(spark.read.parquet(state)
       .select("batch_id").distinct().count() > partials1)
     assert(counters(Streams.cmsMergedCounters(spark, state)) == want,
@@ -512,13 +510,11 @@ class StreamsSpec extends AnyFunSuite {
     arrive("a", ev.filter(col("event_id") < mid))
     Streams.quantileIngest(Streams.eventStream(spark, in.toString)
         .filter(col("value").isNotNull && col("value") >= 0), state, ckpt)
-      .awaitTermination()
     val partials1 = spark.read.parquet(state)
       .select("batch_id").distinct().count()
     arrive("b", ev.filter(col("event_id") >= mid))
     Streams.quantileIngest(Streams.eventStream(spark, in.toString)
         .filter(col("value").isNotNull && col("value") >= 0), state, ckpt)
-      .awaitTermination()
     assert(spark.read.parquet(state)
       .select("batch_id").distinct().count() > partials1)
     assert(hist(Streams.quantileMergedHistogram(spark, state)) == want,
@@ -555,10 +551,10 @@ class StreamsSpec extends AnyFunSuite {
     val mid = 250L
     arrive("a", docs.filter(col("doc_id") < mid))
     Streams.driftIngest(Streams.documentStream(spark, in.toString),
-      state, ckpt).awaitTermination()
+      state, ckpt)
     arrive("b", docs.filter(col("doc_id") >= mid))
     Streams.driftIngest(Streams.documentStream(spark, in.toString),
-      state, ckpt).awaitTermination()
+      state, ckpt)
     assert(spine(Streams.driftMergedBuckets(spark, state)) == want,
       "merged partials must equal the one-shot batch spine")
 
@@ -602,10 +598,10 @@ class StreamsSpec extends AnyFunSuite {
     val mid = 250L
     arrive("a", docs.filter(col("doc_id") < mid))
     Streams.cdcIngest(Streams.documentStream(spark, in.toString),
-      state, ckpt).awaitTermination()
+      state, ckpt)
     arrive("b", docs.filter(col("doc_id") >= mid))
     Streams.cdcIngest(Streams.documentStream(spark, in.toString),
-      state, ckpt).awaitTermination()
+      state, ckpt)
     assert(census(Streams.cdcMergedCensus(spark, state)) == want,
       "merged partial censuses must equal the one-shot batch census")
     // per-doc rollup against the merged census == the pure-batch t28 stats
@@ -650,10 +646,10 @@ class StreamsSpec extends AnyFunSuite {
     val mid = ev.agg(expr("percentile_approx(event_id, 0.5)")).head.getLong(0)
     arrive("a", ev.filter(col("event_id") < mid))
     Streams.hllIngest(Streams.eventStream(spark, in.toString),
-      state, ckpt).awaitTermination()
+      state, ckpt)
     arrive("b", ev.filter(col("event_id") >= mid))
     Streams.hllIngest(Streams.eventStream(spark, in.toString),
-      state, ckpt).awaitTermination()
+      state, ckpt)
     assert(readout(Streams.hllMergedSketch(spark, state), "h") == want,
       "merged register partials must equal the one-shot batch sketch")
 
