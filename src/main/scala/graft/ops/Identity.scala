@@ -123,10 +123,9 @@ object Identity extends org.apache.spark.internal.Logging {
       else size(filter(array(bounds.map(lit): _*), b => b <= col(keyCol)))
     val base = recs.withColumn("__shard", shard)
     val wIn = Window.partitionBy(col("__shard")).orderBy(col(keyCol), col(idCol))
-    // cumulative counts over <= buckets+1 rows — a bounded frame; the
-    // constant partition key silences Spark's global-window warning for
-    // this provably tiny frame (same plan — every row shares the key)
-    val wCum = Window.partitionBy(lit(0)).orderBy(col("__shard"))
+    // cumulative counts over <= buckets+1 rows — one global window over a
+    // provably tiny frame
+    val wCum = Window.orderBy(col("__shard"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val bases = base.groupBy(col("__shard")).agg(count(lit(1)).as("__c"))
       .withColumn("__base", coalesce(sum(col("__c")).over(wCum), lit(0L)))

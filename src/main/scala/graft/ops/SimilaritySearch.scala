@@ -93,7 +93,7 @@ object SimilaritySearch {
           - lit(2.0) * expr(dotExpr(vecCol, "q_vec")).cast("double"), 6))
     scored.orderBy(col("l2_dist").asc, col(idCol)).limit(k)
       .withColumn("rank",
-        row_number().over(Window.partitionBy(lit(0))
+        row_number().over(Window
           .orderBy(col("l2_dist").asc, col(idCol))).cast("long"))
       .select(col(idCol), col("l2_dist"), col("rank"))
   }
@@ -150,13 +150,12 @@ object SimilaritySearch {
     * TakeOrderedAndProject (per-partition k-row heaps, k-row merge) — the
     * global row_number window it replaces funneled the whole scored set into
     * one partition, the plan that dies at cluster scale. The rank window runs
-    * after the limit, over exactly k rows — the constant partition key
-    * silences Spark's global-window warning for this provably tiny frame
-    * (same plan; every row shares the key — the Identity.scala idiom). */
+    * after the limit, over exactly k rows — a global window over a
+    * provably tiny frame. */
   private def rankTopK(scored: DataFrame, idCol: String, k: Int): DataFrame =
     scored.orderBy(col("cos_sim").desc, col(idCol)).limit(k)
       .withColumn("rank",
-        row_number().over(Window.partitionBy(lit(0))
+        row_number().over(Window
           .orderBy(col("cos_sim").desc, col(idCol))).cast("long"))
       .select(col(idCol), col("cos_sim"), col("rank"))
 
@@ -353,7 +352,7 @@ object SimilaritySearch {
       .barrier() // reused every iteration; truncate lineage once
     // seeds: the k lowest-id vectors, cells numbered 0..k-1 in id order
     val seeds = base.orderBy(col(idCol)).limit(k)
-      .withColumn("cell", row_number().over(Window.partitionBy(lit(0)).orderBy(col(idCol))) - 1)
+      .withColumn("cell", row_number().over(Window.orderBy(col(idCol))) - 1)
       .select(col("cell"), col("__v").as("__c"), col("__nsq").as("__cnsq"))
     var cents = seeds
     var assign: DataFrame = null
@@ -437,7 +436,7 @@ object SimilaritySearch {
     val seedIds = base.filter(col("block") === 0)
       .orderBy(col(idCol)).limit(k)
       .withColumn("cell", row_number().over(
-        Window.partitionBy(lit(0)).orderBy(col(idCol))) - 1)
+        Window.orderBy(col(idCol))) - 1)
       .select(col(idCol), col("cell"))
     var cents = base.join(broadcast(seedIds), idCol)
       .select(col("block"), col("cell"), col("__v").as("__c"),
@@ -528,7 +527,7 @@ object SimilaritySearch {
       .agg(round(sum(col("d2").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
         .cast("double"), 6).as("adc_dist"))
       .orderBy(col("adc_dist").asc, col(idCol)).limit(k)
-      .withColumn("rank", row_number().over(Window.partitionBy(lit(0))
+      .withColumn("rank", row_number().over(Window
         .orderBy(col("adc_dist").asc, col(idCol))).cast("long"))
       .select(col(idCol), col("adc_dist"), col("rank"))
   }

@@ -382,12 +382,8 @@ object TextAnalysis {
     // identical element of the identical value set.
     val hist = scored.groupBy(col("bits_per_word")).agg(count(lit(1)).as("__hc"))
       .withColumn("__band", floor(col("bits_per_word") * 10).cast("long"))
-    // constant partition key: the frame is provably band-bounded (~640
-    // rows), and declaring a partition spec keeps Spark's global-window
-    // warning out of the logs so REAL single-partition regressions stay
-    // visible — same plan (every row shares the literal key)
-    val bandW = Window.partitionBy(lit(0))
-      .orderBy(col("__band"))
+    // one global window over a provably band-bounded frame (~640 rows)
+    val bandW = Window.orderBy(col("__band"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val bandTot = hist.groupBy(col("__band")).agg(sum(col("__hc")).as("__bt"))
       .withColumn("__bprev", coalesce(sum(col("__bt")).over(bandW), lit(0L)))
@@ -1151,12 +1147,8 @@ object TextAnalysis {
     val hist = scored.groupBy(col("dsir_score"))
       .agg(sum(col("n_words")).as("__vt"))
       .withColumn("__band", floor(-col("dsir_score") * 4).cast("long"))
-    // constant partition key: the frame is provably band-bounded (~640
-    // rows), and declaring a partition spec keeps Spark's global-window
-    // warning out of the logs so REAL single-partition regressions stay
-    // visible — same plan (every row shares the literal key)
-    val bandW = Window.partitionBy(lit(0))
-      .orderBy(col("__band"))
+    // one global window over a provably band-bounded frame (~640 rows)
+    val bandW = Window.orderBy(col("__band"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val bandTot = hist.groupBy(col("__band")).agg(sum(col("__vt")).as("__bt"))
       .withColumn("__bprev", coalesce(sum(col("__bt")).over(bandW), lit(0L)))

@@ -169,7 +169,7 @@ object DedupQs {
   private def curationStack(s: org.apache.spark.sql.SparkSession, d: String,
       containment: Boolean): org.apache.spark.sql.DataFrame = {
     import graft.ops.TextAnalysis
-    val (gated, _) = gatedFrame(s, d, containment)
+    val gated = gatedFrame(s, d, containment)
     val train = TextAnalysis.globalTokenBudget(
       gated.filter(col("split") === "train"),
       "doc_id", col("n_tokens"), budget = 15000L, salt = "budget")
@@ -193,9 +193,10 @@ object DedupQs {
     // gates consume — one corpus explode for gates + model
     val dw = Dedup.wordCounts(docs, "doc_id", "text").barrier()
     // §2.6 (overlap independent jobs): given the shared dw spine, the gate
-    // chain's barriers (simhash sig → gated keep-set) and the DSIR scorer's
+    // stack's barriers (its four keep-set chains, themselves overlapped in
+    // gatedFromCounts, then the gated frame) and the DSIR scorer's
     // (docBuckets) touch DISJOINT subtrees — run both at once so the
-    // scorer's job back-fills executor slots the gate chain's barrier tail
+    // scorer's job back-fills executor slots the gate chains' barrier tail
     // leaves idle. Only the job submission order changes, not a result.
     val (gated, scores) = Checkpoints.both(
       gatedFromCounts(docs, dw, containment = false),
@@ -221,8 +222,7 @@ object DedupQs {
     * (doc_id, source, split, n_tokens) — c2/c3/c4 diverge only in how the
     * train budget is spent. */
   private def gatedFrame(s: org.apache.spark.sql.SparkSession, d: String,
-      containment: Boolean)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      containment: Boolean): org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d)
     // ONE corpus explode for all three word-side consumers: the shared
     // (doc, word, count) spine feeds the repetition gate, the surprisal
@@ -232,23 +232,33 @@ object DedupQs {
     // scores path consumes dw from a SECOND materialization where stage
     // reuse cannot see the first; the checkpoint stays)
     val dw = Dedup.wordCounts(docs, "doc_id", "text").barrier()
-    (gatedFromCounts(docs, dw, containment), dw)
+    gatedFromCounts(docs, dw, containment)
   }
 
   /** The gate chain downstream of the shared `dw` spine — split out so c4
-    * can overlap it with the DSIR scorer (§2.6). */
+    * can overlap it with the DSIR scorer (§2.6).
+    *
+    * §2.6 inside the stack: the four keep-sets read only `dw` or `docs`,
+    * never each other, so each is narrowed to `doc_id`, barriered, and built
+    * on its own chain (surprisal ∥ simhash ∥ repetition ∥ exact-dup): their
+    * mostly single-task stages fill the executor slots one chain leaves
+    * idle. `base` is then semi/anti joins over four small checkpoints. Only
+    * the job submission order changes, not a result. */
   private def gatedFromCounts(docs: org.apache.spark.sql.DataFrame,
       dw: org.apache.spark.sql.DataFrame, containment: Boolean)
       : org.apache.spark.sql.DataFrame = {
     import graft.ops.TextAnalysis
-    val keepRep = TextAnalysis.repetitionStatsFromCounts(dw, docs, "doc_id", "text")
-      .filter(!col("repetitive")).select("doc_id")
-    val keepSurp = TextAnalysis.unigramSurprisalFromCounts(dw, "doc_id")
-      .filter(!col("unusual")).select("doc_id")
-    val keepers = Dedup.exactDupGroups(docs, "doc_id", "text")
-      .select(col("keeper_id").as("doc_id"))
-    val nearDrop = Dedup.simhash64NearDupMankuFromCounts(dw, "doc_id", 3)
-      .select(col("id_b").as("doc_id")).distinct()
+    val ((keepSurp, nearDrop), (keepRep, keepers)) = Checkpoints.both(
+      Checkpoints.both(
+        TextAnalysis.unigramSurprisalFromCounts(dw, "doc_id")
+          .filter(!col("unusual")).select("doc_id").barrier(),
+        Dedup.simhash64NearDupMankuFromCounts(dw, "doc_id", 3)
+          .select(col("id_b").as("doc_id")).distinct().barrier()),
+      Checkpoints.both(
+        TextAnalysis.repetitionStatsFromCounts(dw, docs, "doc_id", "text")
+          .filter(!col("repetitive")).select("doc_id").barrier(),
+        Dedup.exactDupGroups(docs, "doc_id", "text")
+          .select(col("keeper_id").as("doc_id")).barrier()))
     val base = docs
       .filter(col("lang") === "en" && TextAnalysis.qualityScore("text") >= 0.8)
       .join(keepers, Seq("doc_id"), "left_semi")

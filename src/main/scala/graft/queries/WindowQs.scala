@@ -224,7 +224,7 @@ object WindowQs {
         def newPerDay(df: org.apache.spark.sql.DataFrame, cname: String) =
           df.groupBy(col("user_id")).agg(min(to_date(col("ts"))).as("day"))
             .groupBy(col("day")).agg(count(lit(1)).as(cname))
-        val w = Window.partitionBy(lit(0)).orderBy(col("day"))
+        val w = Window.orderBy(col("day"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         newPerDay(ev, "new_users")
           .join(newPerDay(ev.filter(col("event_type") === "purchase"),

@@ -115,6 +115,37 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(tags.forall(_.contains("t")), tags)
   }
 
+  test("both nested in a both side carries the caller's job tags to the grandchild thread") {
+    // the curation gate stack's shape: both(both(a, b), both(c, d)). The
+    // inner side a runs on a thread made by the outer side a's thread
+    val sc = spark.sparkContext
+    val caller = Thread.currentThread
+    var inner: Thread = null
+    sc.addJobTag("nested")
+    val tags = try jobTags(Checkpoints.both(
+        Checkpoints.both({ inner = Thread.currentThread; spark.range(10).count() }, ()),
+        ()))
+      finally sc.removeJobTag("nested")
+    assert(inner != null && inner != caller)
+    assert(tags.nonEmpty)
+    assert(tags.forall(_.contains("nested")), tags)
+  }
+
+  for (failing <- Seq("a.a", "a.b"))
+    test(s"both rethrows a failure on nested side $failing only after every side has finished") {
+      val done = new ConcurrentLinkedQueue[String]()
+      def side(name: String): String =
+        if (name == failing) throw new IllegalStateException(name)
+        else { Thread.sleep(300); done.add(name); name }
+      val e = intercept[IllegalStateException] {
+        Checkpoints.both(Checkpoints.both(side("a.a"), side("a.b")),
+          Checkpoints.both(side("b.a"), side("b.b")))
+      }
+      assert(e.getMessage == failing)
+      assert(done.asScala.toSet == Set("a.a", "a.b", "b.a", "b.b") - failing,
+        "a nested failure escaped before every other side finished")
+    }
+
   test("src/main calls localCheckpoint only in graft/ops/Checkpoints.scala") {
     assert(SourceScan.filesMatching("""\.\s*localCheckpoint\s*\(""".r) ==
       Seq("scala/graft/ops/Checkpoints.scala"))

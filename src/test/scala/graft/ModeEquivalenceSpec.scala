@@ -45,7 +45,7 @@ class ModeEquivalenceSpec extends AnyFunSuite {
 
   for ((name, what) <- Seq(
       "c3_curation_containment" -> "curation stack, containment",
-      "c4_curation_dsir" -> "curation stack, DSIR (concurrent Future jobs)",
+      "c4_curation_dsir" -> "curation stack, DSIR (nested Checkpoints.both chains)",
       "s1_scan_prune" -> "scan with pruning",
       "gr5_ppr_lookalike" -> "PPR checkpoint iterations",
       "k17_index_rot_audit" -> "FloatDot",
