@@ -19,8 +19,9 @@ import org.apache.spark.sql.SparkSession
   * returning false, and an unchecked false would fall through to exactly the
   * reinitialization this protocol exists to prevent.
   *
-  * Callers run [[recover]] BEFORE reading the current table (so they see the
-  * restored state), build their replacement lazily against it, then hand the
+  * Only [[Tables]] calls it: `Tables.committed` runs [[recover]] BEFORE
+  * reading the current table (so callers see the restored state), callers
+  * build their replacement lazily against it, and `Tables.write` hands the
   * actual write to [[commit]] — the old dir is only read while tmp is being
   * written, never overlapping the swap.
   */

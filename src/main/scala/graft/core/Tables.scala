@@ -22,13 +22,13 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** S2: full-table overwrite sink — the reference's whole-file S3 put
-    * (`upload_data.py:37-46`), as a proper partition-parallel writer.
-    * `atomic = true` routes the overwrite through the [[TableSwap]]
-    * commit protocol: plain mode("overwrite") deletes the target before the
-    * new files land, so a crash mid-write leaves a partial directory that
-    * LOOKS like a complete table to the next reader. Any table that carries
-    * a `._GRAFT_TABLE` marker (i.e. participates in recover/compact) must
-    * be written with `atomic = true`.
+    * (`upload_data.py:37-46`), as a proper partition-parallel writer, and
+    * the only way the engine overwrites a table. Every write commits through
+    * the [[TableSwap]] protocol: recover any interrupted swap, write a
+    * sibling tmp dir, then swap it in by renames and stamp the table's
+    * `._GRAFT_TABLE` marker. A plain mode("overwrite") deletes the target
+    * before the new files land, so a crash mid-write would leave a partial
+    * directory that LOOKS like a complete table to the next reader.
     * `partitionCols` lays the table out hive-style (`col=value/` dirs) so
     * reads carrying a predicate on those columns prune whole directories at
     * planning time — for a date-partitioned fact at 100 TB, a trailing-28d
@@ -37,31 +37,38 @@ object Tables {
     * value is a directory, and a high-cardinality key would shatter the
     * table into millions of small files. */
   def write(df: DataFrame, path: String, format: String = "parquet",
-      atomic: Boolean = false, partitionCols: Seq[String] = Nil): Unit = {
-    def save(p: String): Unit =
+      partitionCols: Seq[String] = Nil): Unit = {
+    TableSwap.recover(df.sparkSession, path)
+    TableSwap.commit(df.sparkSession, path)(
       df.write.mode("overwrite").format(format)
         .partitionBy(partitionCols: _*)
         .option("header", "true") // no-op for parquet, header for csv parity
-        .save(p)
-    if (atomic) {
-      TableSwap.recover(df.sparkSession, path)
-      TableSwap.commit(df.sparkSession, path)(save)
-    } else save(path)
+        .save(_))
+  }
+
+  /** The committed parquet table at `path`, read after [[TableSwap.recover]]
+    * has finished or rolled back any interrupted swap; `None` when no table
+    * exists there yet. The read side of a read-merge-[[write]] cycle. */
+  def committed(spark: SparkSession, path: String): Option[DataFrame] = {
+    TableSwap.recover(spark, path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(spark.read.parquet(path))
+    else None
   }
 
   /** S3: snapshot sink — besides the live table, a dated immutable copy
     * (`pipeline_handler.py:343-354` writes `…_YYYY-MM-DD` on month start). */
-  def writeSnapshot(df: DataFrame, basePath: String, asOfDate: String,
-      format: String = "parquet"): Unit = {
-    write(df, basePath, format)
-    write(df, s"${basePath}_$asOfDate", format)
+  def writeSnapshot(df: DataFrame, basePath: String, asOfDate: String): Unit = {
+    write(df, basePath)
+    write(df, s"${basePath}_$asOfDate")
   }
 
   final case class CompactStats(filesBefore: Int, filesAfter: Int, bytes: Long)
 
   /** Small-file compaction: rewrite a directory-backed parquet table into
-    * ceil(bytes / targetBytes) files under the [[TableSwap]] atomic-replace
-    * protocol. Incremental ingest (streaming upserts, per-batch appends)
+    * ceil(bytes / targetBytes) files through [[write]]'s atomic-replace
+    * swap. Incremental ingest (streaming upserts, per-batch appends)
     * accumulates files far smaller than a scan-efficient split — at warehouse
     * scale the resulting per-file open/footer overhead dominates scan time,
     * so compaction is a first-class maintenance op, not an afterthought.
@@ -81,8 +88,7 @@ object Tables {
     val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     if (dataFiles.length <= target)
       return CompactStats(dataFiles.length, dataFiles.length, bytes)
-    val df = spark.read.parquet(tableDir).repartition(target)
-    TableSwap.commit(spark, tableDir)(df.write.parquet(_))
+    write(spark.read.parquet(tableDir).repartition(target), tableDir)
     CompactStats(dataFiles.length, target, bytes)
   }
 

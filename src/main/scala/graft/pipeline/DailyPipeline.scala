@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.core.{Session, Sizing, Tables}
 import graft.queries.Registry
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The engine's EP1-shaped daily batch: materialize the warehouse's derived
@@ -20,15 +21,44 @@ object DailyPipeline {
     declaredJobs(sfDir, outDir).map(j => j.copy(run = s => j.run(Sizing.session(s, mode))))
   }
 
-  private def declaredJobs(sfDir: String, outDir: String): Seq[Job] = {
+  /** The warehouse at `outDir` as its jobs see it. [[job]] is the one way a
+    * job is declared: its body runs on the job's session with a [[Handle]]
+    * that reads only the job's declared deps and commits every table it
+    * writes through [[Tables.write]]. */
+  private[graft] final class Warehouse(outDir: String) {
+    final class Handle private[Warehouse] (s: SparkSession, job: String,
+        deps: Seq[String]) {
+      /** The materialized table of `dep`, which must be a declared dep. */
+      def read(dep: String): DataFrame = {
+        require(deps.contains(dep), s"job $job reads table $dep, which is not " +
+          s"among its declared deps [${deps.mkString(", ")}]")
+        s.read.parquet(s"$outDir/$dep")
+      }
+      def write(table: String, df: DataFrame, partitionCols: Seq[String] = Nil): Unit =
+        Tables.write(df, s"$outDir/$table", partitionCols = partitionCols)
+      def snapshot(table: String, df: DataFrame, asOfDate: String): Unit =
+        Tables.writeSnapshot(df, s"$outDir/$table", asOfDate)
+    }
+
     // heavy = the declared memory class (see Job.heavy): plans whose shuffle
     // state is candidate-PAIR-sized (simhash/minhash band joins, embedding
     // ring joins), of which the Dag keeps at most one in flight
+    def job(name: String, deps: Seq[String] = Nil, heavy: Boolean = false)(
+        body: (SparkSession, Handle) => Unit): Job =
+      Job(name, deps, s => body(s, new Handle(s, name, deps)), heavy)
+  }
+
+  private def declaredJobs(sfDir: String, outDir: String): Seq[Job] = {
+    val warehouse = new Warehouse(outDir)
+    import warehouse.job
+    // the registry query is resolved here, so a mistyped name fails the
+    // declaration rather than the run
     def materialize(query: String, table: String, deps: Seq[String] = Nil,
-        heavy: Boolean = false): Job =
-      Job(table, deps, s =>
-        Tables.write(Registry.all.find(_.name == query).get.run(s, sfDir),
-          s"$outDir/$table"), heavy)
+        heavy: Boolean = false): Job = {
+      val q = Registry.all.find(_.name == query).getOrElse(throw
+        new NoSuchElementException(s"job $table materializes unknown query $query"))
+      job(table, deps, heavy)((s, t) => t.write(table, q.run(s, sfDir)))
+    }
 
     Seq(
       materialize("o2_union_align", "combined_transactions"),
@@ -130,33 +160,29 @@ object DailyPipeline {
       // ordering.
       materialize("w8_sessionize", "user_sessions"),
       materialize("c1_corpus_curation", "curated_corpus", Seq("document_dedup_groups")),
-      Job("packed_corpus", Seq("curated_corpus"), s =>
-        Tables.write(
-          graft.ops.TextAnalysis.packAssignSharded(
-            s.read.parquet(s"$outDir/curated_corpus"),
-            "source", "doc_id", col("tok"), budget = 2048L, idWidth = 16L),
-          s"$outDir/packed_corpus")),
-      Job("decontamination_report", Seq("curated_corpus"), s => {
+      job("packed_corpus", Seq("curated_corpus")) { (_, t) =>
+        t.write("packed_corpus", graft.ops.TextAnalysis.packAssignSharded(
+          t.read("curated_corpus"),
+          "source", "doc_id", col("tok"), budget = 2048L, idWidth = 16L))
+      },
+      job("decontamination_report", Seq("curated_corpus")) { (s, t) =>
         val docs = Tables.documents(s, sfDir)
-        val curated = s.read.parquet(s"$outDir/curated_corpus").select(col("doc_id"))
+        val curated = t.read("curated_corpus").select(col("doc_id"))
         // train side excludes the benchmark slice (doc_id % 97 == 0), matching
         // t6_decontaminate — a bench doc that survives curation would otherwise
         // self-match at contam_ratio 1.0 and pollute the report
-        Tables.write(
-          graft.ops.TextAnalysis.contamination(
-            docs.join(curated, "doc_id").filter(col("doc_id") % 97 =!= 0),
-            docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", 5),
-          s"$outDir/decontamination_report")
-      }),
+        t.write("decontamination_report", graft.ops.TextAnalysis.contamination(
+          docs.join(curated, "doc_id").filter(col("doc_id") % 97 =!= 0),
+          docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", 5))
+      },
       // corpus-health twin of the decontamination report: duplicated-
       // substring coverage (Lee et al. '21 signal) over the raw corpus —
       // upstream of curation so heavy cross-doc duplication is visible
       // BEFORE the near-dup gates act on it
-      Job("dup_substring_report", Nil, s =>
-        Tables.write(
-          graft.ops.TextAnalysis.dupSubstringRuns(
-            Tables.documents(s, sfDir), "doc_id", "text", k = 8),
-          s"$outDir/dup_substring_report")),
+      job("dup_substring_report") { (s, t) =>
+        t.write("dup_substring_report", graft.ops.TextAnalysis.dupSubstringRuns(
+          Tables.documents(s, sfDir), "doc_id", "text", k = 8))
+      },
       // marginal-content signal per doc (t36): what each doc ADDED first —
       // the containment report's complement, upstream of curation like the
       // dup-substring twin
@@ -164,53 +190,46 @@ object DailyPipeline {
       // DSIR importance scores against the curated target distribution —
       // the data-selection side-channel: which raw docs LOOK curated,
       // regardless of whether the gates kept them
-      Job("dsir_scores", Nil, s =>
-        Tables.write(
-          graft.ops.TextAnalysis.dsirScores(
-            Tables.documents(s, sfDir), "doc_id", "text",
-            col("lang") === "en" &&
-              graft.ops.TextAnalysis.qualityScore("text") >= 0.8),
-          s"$outDir/dsir_scores")),
+      job("dsir_scores") { (s, t) =>
+        t.write("dsir_scores", graft.ops.TextAnalysis.dsirScores(
+          Tables.documents(s, sfDir), "doc_id", "text",
+          col("lang") === "en" && graft.ops.TextAnalysis.qualityScore("text") >= 0.8))
+      },
       // the DSIR SELECTION: buy a 12k-token budget of the most target-like
       // docs from the MATERIALIZED scores (rank + cut only — the corpus is
       // never re-scored; same consume-the-mart seam as nb_model_eval)
-      Job("dsir_selected_corpus", Seq("dsir_scores"), s =>
-        Tables.write(
-          graft.ops.TextAnalysis.importanceBudgetFromScores(
-            s.read.parquet(s"$outDir/dsir_scores"), "doc_id", budget = 12000L),
-          s"$outDir/dsir_selected_corpus")),
+      job("dsir_selected_corpus", Seq("dsir_scores")) { (_, t) =>
+        t.write("dsir_selected_corpus", graft.ops.TextAnalysis
+          .importanceBudgetFromScores(t.read("dsir_scores"), "doc_id", budget = 12000L))
+      },
       // train/val/test assignment for the MATERIALIZED curated corpus —
       // keyed on the content fingerprint (exact dups can never straddle
       // train/eval), so the assignment survives reprocessing verbatim.
-      Job("corpus_splits", Seq("curated_corpus"), s => {
-        val cur = s.read.parquet(s"$outDir/curated_corpus").select(col("doc_id"))
-        Tables.write(
-          graft.ops.TextAnalysis.splitAssign(
-            Tables.documents(s, sfDir).join(cur, "doc_id"), "doc_id", "source", "text"),
-          s"$outDir/corpus_splits")
-      }),
+      job("corpus_splits", Seq("curated_corpus")) { (s, t) =>
+        val cur = t.read("curated_corpus").select(col("doc_id"))
+        t.write("corpus_splits", graft.ops.TextAnalysis.splitAssign(
+          Tables.documents(s, sfDir).join(cur, "doc_id"), "doc_id", "source", "text"))
+      },
       // deterministic training order for the train split: reproducible
       // global shuffle positions (two-level prefix sum — no driver sort).
-      Job("training_order", Seq("corpus_splits"), s => {
-        val train = s.read.parquet(s"$outDir/corpus_splits")
+      job("training_order", Seq("corpus_splits")) { (_, t) =>
+        val train = t.read("corpus_splits")
           .filter(col("split") === "train").select(col("doc_id"), col("source"))
-        Tables.write(
-          graft.ops.TextAnalysis.shuffleRank(train, "doc_id", "epoch0"),
-          s"$outDir/training_order")
-      }),
+        t.write("training_order",
+          graft.ops.TextAnalysis.shuffleRank(train, "doc_id", "epoch0"))
+      },
       // multi-strategy family edges (`build_family_relationships.py`), then
       // the child/parent flag pass fed from the DERIVED edges (high tier)
       // rather than the raw dim — the reference's read order
       materialize("fam1_family_edges", "family_edges"),
-      Job("customer_flags_enriched", Seq("family_edges", "customer_flags"), s => {
-        val fam = s.read.parquet(s"$outDir/family_edges")
+      job("customer_flags_enriched", Seq("family_edges", "customer_flags")) { (_, t) =>
+        val fam = t.read("family_edges")
           .filter(col("confidence") === "high")
           .select(col("child_customer_id").as("child_id"),
             col("parent_customer_id").as("parent_id"))
-        val flags = s.read.parquet(s"$outDir/customer_flags")
-        Tables.write(graft.flags.FlagPasses.childPass(flags, fam),
-          s"$outDir/customer_flags_enriched")
-      }),
+        t.write("customer_flags_enriched",
+          graft.flags.FlagPasses.childPass(t.read("customer_flags"), fam))
+      },
       // embedding-space dedup decision (SemDeDup): keeper/cluster per vector.
       materialize("d7_semantic_dedup", "embedding_dedup_clusters", heavy = true),
       // model-based quality filter: the NB scores are a corpus-wide mart;
@@ -219,18 +238,16 @@ object DailyPipeline {
       // materialized scores (real lineage, like packed_corpus) — training
       // runs once, not once per consumer.
       materialize("ml1_nb_quality_scores", "nb_quality_scores"),
-      Job("nb_model_eval", Seq("nb_quality_scores"), s =>
-        Tables.write(
-          graft.ops.Classifier.nbHoldoutEval(
-            s.read.parquet(s"$outDir/nb_quality_scores")),
-          s"$outDir/nb_model_eval")),
+      job("nb_model_eval", Seq("nb_quality_scores")) { (_, t) =>
+        t.write("nb_model_eval",
+          graft.ops.Classifier.nbHoldoutEval(t.read("nb_quality_scores")))
+      },
       // calibration read of the SAME materialized scores: can nb_score be
       // trusted as a probability (soft-weighting) or only as a ranker?
-      Job("nb_calibration", Seq("nb_quality_scores"), s =>
-        Tables.write(
-          graft.ops.Classifier.nbCalibration(
-            s.read.parquet(s"$outDir/nb_quality_scores")),
-          s"$outDir/nb_calibration")),
+      job("nb_calibration", Seq("nb_quality_scores")) { (_, t) =>
+        t.write("nb_calibration",
+          graft.ops.Classifier.nbCalibration(t.read("nb_quality_scores")))
+      },
       // held-out LM gate scores (t34 Kneser–Ney): per-doc smoothed
       // conditional surprisal + OOV coverage vs the reference slice — the
       // model-based quality readout next to nb_quality_scores' classifier
@@ -313,12 +330,11 @@ object DailyPipeline {
       // waterfall and the ev1 slot election run once per pipeline run —
       // the registry's self-contained ev2 query recomputes them only for
       // the standalone oracle gate.
-      Job("events_table", Seq("customer_transactions", "reservation_events"),
-        s => Tables.write(graft.queries.EventsTable.eventsTableFrom(
+      job("events_table", Seq("customer_transactions", "reservation_events")) { (s, t) =>
+        t.write("events_table", graft.queries.EventsTable.eventsTableFrom(
           Tables.events(s, sfDir),
-          s.read.parquet(s"$outDir/customer_transactions"),
-          s.read.parquet(s"$outDir/reservation_events")),
-          s"$outDir/events_table")),
+          t.read("customer_transactions"), t.read("reservation_events")))
+      },
       // soft-dedup sampling weights: near-dup clusters down-weighted
       // 1/cluster_size (exact ppm) — the mixer-facing alternative to
       // dropping. heavy: rebuilds the d5/d6 simhash pair graph — round 10's
@@ -334,15 +350,15 @@ object DailyPipeline {
       // the dep is a data dep — the simhash pair graph + CC behind the
       // weights runs once per pipeline run, in the d13 job; this seat
       // only joins the weights to the doc spine for lang and cuts)
-      Job("soft_budget_mix", Seq("soft_dedup_weights"), s => {
-        val w = s.read.parquet(s"$outDir/soft_dedup_weights")
+      job("soft_budget_mix", Seq("soft_dedup_weights")) { (s, t) =>
+        val w = t.read("soft_dedup_weights")
           .select(col("doc_id"), col("weight_ppm"), col("eff_tokens_ppm"))
         val docs = Tables.documents(s, sfDir)
           .filter(col("lang").isNotNull && col("text").isNotNull)
           .select(col("doc_id"), col("lang"))
-        Tables.write(graft.queries.DedupQs.softCurationCut(s,
-          docs.join(w, "doc_id")), s"$outDir/soft_budget_mix")
-      }),
+        t.write("soft_budget_mix",
+          graft.queries.DedupQs.softCurationCut(s, docs.join(w, "doc_id")))
+      },
       // index health: new arrivals probed against the stale ANN index —
       // recall verdict + per-probe structural rot floor (exact neighbors
       // the index cannot contain); pairs with ann_ivf_index's cadence
@@ -353,14 +369,12 @@ object DailyPipeline {
       // training mixture: down-sample the MATERIALIZED curated corpus with
       // the per-source rate ladder (salted-hash draws — reproducible across
       // reruns, so a resumed pipeline emits the identical sample).
-      Job("corpus_mix_sample", Seq("curated_corpus"), s => {
+      job("corpus_mix_sample", Seq("curated_corpus")) { (_, t) =>
         import graft.ops.TextAnalysis
-        val cur = s.read.parquet(s"$outDir/curated_corpus")
-        Tables.write(
-          cur.filter(TextAnalysis.hashUnit(col("doc_id"), "mix") <
-            TextAnalysis.mixThresholdCol(col("source"))),
-          s"$outDir/corpus_mix_sample")
-      }),
+        t.write("corpus_mix_sample", t.read("curated_corpus").filter(
+          TextAnalysis.hashUnit(col("doc_id"), "mix") <
+            TextAnalysis.mixThresholdCol(col("source"))))
+      },
       // the corpus data card: per-source release stats (volume, language
       // purity, quality, dup rate) — shipped with every corpus build.
       materialize("ep4_corpus_datacard", "corpus_datacard"),
@@ -368,113 +382,99 @@ object DailyPipeline {
       // build-once/consume-many, rebuilt on corpus cadence) — BPE merges
       // learned from the CURATED corpus, not the raw table: the tokenizer
       // should never see what the gates dropped.
-      Job("bpe_merge_table", Seq("curated_corpus"), s => {
-        val cur = s.read.parquet(s"$outDir/curated_corpus").select(col("doc_id"))
-        Tables.write(
-          graft.ops.Bpe.learnMerges(
-            Tables.documents(s, sfDir).join(cur, "doc_id"), "text", merges = 8),
-          s"$outDir/bpe_merge_table")
-      }),
+      job("bpe_merge_table", Seq("curated_corpus")) { (s, t) =>
+        val cur = t.read("curated_corpus").select(col("doc_id"))
+        t.write("bpe_merge_table", graft.ops.Bpe.learnMerges(
+          Tables.documents(s, sfDir).join(cur, "doc_id"), "text", merges = 8))
+      },
       // the other half of the tokenizer lifecycle: per-doc token counts
       // under the STORED merge table (not re-learned — the tokenizer is
       // state, encoding is a consumer), over the same curated slice.
-      Job("corpus_token_counts", Seq("curated_corpus", "bpe_merge_table"), s => {
-        val cur = s.read.parquet(s"$outDir/curated_corpus").select(col("doc_id"))
-        Tables.write(
-          graft.ops.Bpe.encodeStatsWith(
-            Tables.documents(s, sfDir).join(cur, "doc_id"), "doc_id", "text",
-            s.read.parquet(s"$outDir/bpe_merge_table")),
-          s"$outDir/corpus_token_counts")
-      }),
+      job("corpus_token_counts", Seq("curated_corpus", "bpe_merge_table")) { (s, t) =>
+        val cur = t.read("curated_corpus").select(col("doc_id"))
+        t.write("corpus_token_counts", graft.ops.Bpe.encodeStatsWith(
+          Tables.documents(s, sfDir).join(cur, "doc_id"), "doc_id", "text",
+          t.read("bpe_merge_table")))
+      },
       // retrieval index: overlapping passage windows over the curated
       // corpus (t19's chunking contract) — the RAG-side consumable.
-      Job("passage_index", Seq("curated_corpus"), s => {
-        val cur = s.read.parquet(s"$outDir/curated_corpus").select(col("doc_id"))
-        Tables.write(
-          graft.ops.TextAnalysis.passageWindows(
-            Tables.documents(s, sfDir).join(cur, "doc_id"), "doc_id", "text",
-            width = 32, stride = 16),
-          s"$outDir/passage_index")
-      }),
+      job("passage_index", Seq("curated_corpus")) { (s, t) =>
+        val cur = t.read("curated_corpus").select(col("doc_id"))
+        t.write("passage_index", graft.ops.TextAnalysis.passageWindows(
+          Tables.documents(s, sfDir).join(cur, "doc_id"), "doc_id", "text",
+          width = 32, stride = 16))
+      },
       // ANN index BUILD as warehouse state — the build-once/query-many
       // split the similarity ops are designed around: k-means cell
       // assignments + centroids (IVF probe tables) and per-block PQ codes +
       // codebook (ADC scan tables), with the same parameters the k2c/k6
       // query paths use. At production scale these rebuild on index
       // cadence, not per query.
-      Job("ann_ivf_index", Nil, s => {
+      job("ann_ivf_index") { (s, t) =>
         import graft.ops.SimilaritySearch
         val (assign, cents) = SimilaritySearch.kmeansModel(
           Tables.embeddings(s, sfDir), "vec_id", "embedding", k = 8, iters = 3)
-        Tables.write(assign, s"$outDir/ann_ivf_assignments")
-        Tables.write(cents.select(col("cell"), col("__c").as("centroid")),
-          s"$outDir/ann_ivf_centroids")
-      }),
-      Job("ann_pq_index", Nil, s => {
+        t.write("ann_ivf_assignments", assign)
+        t.write("ann_ivf_centroids", cents.select(col("cell"), col("__c").as("centroid")))
+      },
+      job("ann_pq_index") { (s, t) =>
         import graft.ops.SimilaritySearch
         val emb = Tables.embeddings(s, sfDir)
         val (codes, cents) = SimilaritySearch.pqModel(
           emb, "vec_id", "embedding", dim = 64, m = 4, k = 16, iters = 2)
-        Tables.write(codes, s"$outDir/ann_pq_codes")
-        Tables.write(cents.select(col("block"), col("code"), col("centroid")),
-          s"$outDir/ann_pq_codebook")
-      }),
-      Job("ann_sq8_index", Nil, s => {
-        import graft.ops.SimilaritySearch
-        Tables.write(
-          SimilaritySearch.sq8Codes(Tables.embeddings(s, sfDir),
-            "vec_id", "embedding", keep = Seq("label")),
-          s"$outDir/ann_sq8_codes")
-      }),
+        t.write("ann_pq_codes", codes)
+        t.write("ann_pq_codebook", cents.select(col("block"), col("code"), col("centroid")))
+      },
+      job("ann_sq8_index") { (s, t) =>
+        t.write("ann_sq8_codes", graft.ops.SimilaritySearch.sq8Codes(
+          Tables.embeddings(s, sfDir), "vec_id", "embedding", keep = Seq("label")))
+      },
       // Mergeable quantile-histogram STATE as warehouse state (the a18b
       // lifecycle): per-day KB-sized bucket histograms of event value, and
       // a report job that answers quantiles FROM the stored states — the
       // store-daily/merge-any-range read path, with real lineage.
-      Job("value_quantile_daily", Nil, s => {
+      job("value_quantile_daily") { (s, t) =>
         import org.apache.spark.sql.functions._
         val ev = Tables.events(s, sfDir)
           .filter(col("value").isNotNull && col("value") >= 0)
           .withColumn("day", to_date(col("ts")))
-        Tables.write(graft.ops.QuantileSketch.histogram(ev, Seq("day"), "value"),
-          s"$outDir/value_quantile_daily")
-      }),
-      Job("value_quantile_report", Seq("value_quantile_daily"), s => {
+        t.write("value_quantile_daily",
+          graft.ops.QuantileSketch.histogram(ev, Seq("day"), "value"))
+      },
+      job("value_quantile_report", Seq("value_quantile_daily")) { (_, t) =>
         import org.apache.spark.sql.functions._
-        val merged = s.read.parquet(s"$outDir/value_quantile_daily")
+        val merged = t.read("value_quantile_daily")
           .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
           .withColumn("grp", lit("all"))
-        Tables.write(graft.ops.QuantileSketch.quantiles(merged, Seq("grp"),
-            Seq(("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))),
-          s"$outDir/value_quantile_report")
-      }),
+        t.write("value_quantile_report", graft.ops.QuantileSketch.quantiles(merged,
+          Seq("grp"), Seq(("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))))
+      },
       // Winnowed fingerprint INDEX over the curated corpus — the MOSS-style
       // stored state for incremental copy checks (t31's selection pass,
       // materialized once per corpus build).
-      Job("winnow_fp_index", Seq("curated_corpus"), s => {
-        val cur = s.read.parquet(s"$outDir/curated_corpus").select(col("doc_id"))
-        Tables.write(graft.ops.TextAnalysis.winnowFingerprints(
-            Tables.documents(s, sfDir).join(cur, "doc_id"), "doc_id", "text",
-            k = 4, w = 8),
-          s"$outDir/winnow_fp_index")
-      }),
+      job("winnow_fp_index", Seq("curated_corpus")) { (s, t) =>
+        val cur = t.read("curated_corpus").select(col("doc_id"))
+        t.write("winnow_fp_index", graft.ops.TextAnalysis.winnowFingerprints(
+          Tables.documents(s, sfDir).join(cur, "doc_id"), "doc_id", "text", k = 4, w = 8))
+      },
       // the curated corpus re-clustered on the Morton curve by
       // (source, token count): downstream per-source slices AND
       // length-bounded reads both prune on native file stats — the
       // multi-dimensional companion to the date-partitioned fact layout
-      Job("corpus_layout", Seq("curated_corpus"), s => {
+      job("corpus_layout", Seq("curated_corpus")) { (_, t) =>
         import graft.ops.Layout
-        val cur = s.read.parquet(s"$outDir/curated_corpus")
-        Layout.zorderBy(cur,
-            Layout.stringRangeBucket(cur, "source"),
-            Layout.quantileBucket(cur, "tok"), numFiles = 8)
-          .write.mode("overwrite").parquet(s"$outDir/curated_corpus_zorder")
-      }),
+        val cur = t.read("curated_corpus")
+        t.write("curated_corpus_zorder", Layout.zorderBy(cur,
+          Layout.stringRangeBucket(cur, "source"),
+          Layout.quantileBucket(cur, "tok"), numFiles = 8))
+      },
       // EP1's month-start dated snapshot (`pipeline_handler.py:343-354`):
-      // live table + immutable dated copy.
-      Job("revenue_dashboard_snapshot", Seq("revenue_dashboard"), s =>
-        Tables.writeSnapshot(
-          Registry.all.find(_.name == "ep3_revenue_dashboard").get.run(s, sfDir),
-          s"$outDir/revenue_dashboard_snap", asOfDate = "2024-02-01")),
+      // live table + immutable dated copy of the MATERIALIZED dashboard mart
+      // (its dep is a data dep: ep3 runs once per pipeline run)
+      job("revenue_dashboard_snapshot", Seq("revenue_dashboard")) { (_, t) =>
+        t.snapshot("revenue_dashboard_snap", t.read("revenue_dashboard"),
+          asOfDate = "2024-02-01")
+      },
       // report marts (reference DailyPipeline steps the engine was missing):
       materialize("a11_latest_per_key", "latest_events"),
       // the date-partitioned fact layout (SURVEY §7.4's 100 TB note): the
@@ -483,22 +483,22 @@ object DailyPipeline {
       // time instead of scanning the full history. At warehouse scale this
       // is THE fact layout; the raw single-file parquet stands in for the
       // source extract only.
-      Job("events_fact", Nil, s =>
-        Tables.write(
-          Tables.events(s, sfDir)
-            .withColumn("event_date", org.apache.spark.sql.functions.to_date(col("ts"))),
-          s"$outDir/events_fact", partitionCols = Seq("event_date"))),
+      job("events_fact") { (s, t) =>
+        t.write("events_fact", Tables.events(s, sfDir)
+          .withColumn("event_date", org.apache.spark.sql.functions.to_date(col("ts"))),
+          partitionCols = Seq("event_date"))
+      },
       // leads mart (`build_leads_table.py:30`): identity + trailing-180d
       // timeline rollup per user, enriched with the MATERIALIZED
       // latest_events (real lineage, like packed_corpus). Reads the
       // partitioned fact with a date predicate that is a strict superset of
       // the ts window — the scan prunes to the 180 trailing partitions, the
       // exact ts bound then filters rows within them.
-      Job("leads_table", Seq("latest_events", "events_fact"), s => {
+      job("leads_table", Seq("latest_events", "events_fact")) { (_, t) =>
         import org.apache.spark.sql.functions._
         val asOfUs = 1706659200000000L // 2024-01-31T00:00Z, the flags clock
         val us = unix_micros(col("ts"))
-        val rollup = s.read.parquet(s"$outDir/events_fact")
+        val rollup = t.read("events_fact")
           .filter(col("event_date") >= lit("2023-08-04") &&
             col("event_date") < lit("2024-01-31")) // partition prune (superset)
           .filter(us < asOfUs && us >= asOfUs - 180L * 86400000000L)
@@ -520,20 +520,20 @@ object DailyPipeline {
         // the latest_events mart is unclocked (a11 over all events); keep
         // only rows at or before this mart's as-of clock so one lead row
         // never mixes two as-of semantics
-        val latest = s.read.parquet(s"$outDir/latest_events")
+        val latest = t.read("latest_events")
           .filter(unix_micros(to_timestamp(col("last_ts"))) < asOfUs)
-        Tables.write(rollup.join(latest, Seq("user_id")), s"$outDir/leads_table")
-      }),
+        t.write("leads_table", rollup.join(latest, Seq("user_id")))
+      },
       // new-members mart (`identify_new_members.py:52-127`): users whose most
       // recent membership start (signup) is inside the trailing 28 days,
       // with their activity totals ("checkins").
-      Job("new_members", Seq("events_fact"), s => {
+      job("new_members", Seq("events_fact")) { (_, t) =>
         import org.apache.spark.sql.functions._
         val asOfUs = 1706659200000000L
         val us = unix_micros(col("ts"))
         // event_date < asOf-date is a superset of ts < asOf: every pre-asOf
         // partition survives, future-dated partitions never get opened
-        val ev = s.read.parquet(s"$outDir/events_fact")
+        val ev = t.read("events_fact")
           .filter(col("event_date") < lit("2024-01-31")).filter(us < asOfUs)
         val starts = ev.filter(col("event_type") === "signup")
           .groupBy(col("user_id")).agg(max(unix_micros(col("ts"))).as("start_us"))
@@ -541,31 +541,30 @@ object DailyPipeline {
         val totals = ev.groupBy(col("user_id")).agg(
           count(lit(1)).as("total_events"),
           sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("total_checkins"))
-        Tables.write(starts.join(totals, Seq("user_id")), s"$outDir/new_members")
-      }),
+        t.write("new_members", starts.join(totals, Seq("user_id")))
+      },
       // experiment-entries mart (`customer_flags_engine.py:268-290` +
       // `experiment_tracking.log_experiment_entry`): every emitted A/B-gated
       // offer flag logs an experiment entry with the customer's group.
-      Job("experiment_entries", Seq("customer_flags"), s => {
+      job("experiment_entries", Seq("customer_flags")) { (_, t) =>
         import org.apache.spark.sql.functions._
-        val offers = s.read.parquet(s"$outDir/customer_flags")
+        val offers = t.read("customer_flags")
           .filter(col("flag_type") === "returning_offer_2wk")
-        Tables.write(
+        t.write("experiment_entries",
           offers.select(col("user_id"),
             lit("2wk_offer_v1").as("experiment_id"),
             // the offer rule only fires for group A; recompute the group
             // from the same hash so the mart is self-describing
             when(graft.ops.Normalize.abGroup(col("user_id").cast("string")) <= 4,
               lit("A")).otherwise(lit("B")).as("ab_group"),
-            col("flag_type").as("entry_flag"), col("priority")),
-          s"$outDir/experiment_entries")
-      }),
+            col("flag_type").as("entry_flag"), col("priority")))
+      },
       // contact-preferences mart (`build_contact_preferences.py:445-497`):
       // most recent opt-in status per (user, channel) — clicks are the email
       // channel, views the sms channel, opt-in parity from the event props —
       // pivoted to one row per user with reference-style fill of missing
       // channels to opted-out.
-      Job("contact_preferences", Nil, s => {
+      job("contact_preferences") { (s, t) =>
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions._
         val recs = Tables.events(s, sfDir)
@@ -585,8 +584,8 @@ object DailyPipeline {
           .agg(first(col("opted_in")).as("opt_in"), first(col("us")).as("opt_in_us"))
           .withColumn("email_opt_in", coalesce(col("email_opt_in"), lit(false)))
           .withColumn("sms_opt_in", coalesce(col("sms_opt_in"), lit(false)))
-        Tables.write(prefs, s"$outDir/contact_preferences")
-      }))
+        t.write("contact_preferences", prefs)
+      })
   }
 
   def main(args: Array[String]): Unit = {

@@ -113,7 +113,7 @@ object RefreshPipeline {
 
     // 3: key dedup keep-first (idempotent re-ingest).
     val deduped = dedupKeepFirst(spliced, "event_id", "ts", "user_id")
-    Tables.write(deduped, s"$whDir/events_current", atomic = true)
+    Tables.write(deduped, s"$whDir/events_current")
 
     // 4: flag sync at the refresh clock, merged over the daily run's flags.
     val asOf1 = 1705276800000000L // daily run clock (2024-01-15)
@@ -142,7 +142,7 @@ object RefreshPipeline {
     }
     val merged = mergeFlags(flagsAt(asOf1), flagsAt(asOf2), asOf2, ttl,
       persistent = graft.flags.FlagRules.persistentFlags)
-    Tables.write(merged, s"$whDir/customer_flags_current", atomic = true)
+    Tables.write(merged, s"$whDir/customer_flags_current")
 
     // 5: incremental document ingest — the fresh batch (doc_id % 5 = 0
     // stands in for today's pull) is matched against the indexed corpus and
@@ -151,7 +151,7 @@ object RefreshPipeline {
     val accepted = acceptNonDup(
       docs.filter(col("doc_id") % 5 === 0), docs.filter(col("doc_id") % 5 =!= 0),
       "doc_id", "text", threshold = 0.5)
-    Tables.write(accepted, s"$whDir/documents_ingested", atomic = true)
+    Tables.write(accepted, s"$whDir/documents_ingested")
 
     // 5b: incremental EMBEDDING ingest — the semantic twin of step 5: new
     // vectors pay their own SRP signatures + a banded join vs the corpus
@@ -160,15 +160,13 @@ object RefreshPipeline {
     val accEmb = graft.ops.SimilaritySearch.incrementalSemanticAccept(
       emb.filter(col("vec_id") % 5 === 0), emb.filter(col("vec_id") % 5 =!= 0),
       "vec_id", "embedding", dim = 64, bands = 4, bits = 6, threshold = 0.4)
-    Tables.write(accEmb.filter(col("accepted")),
-      s"$whDir/embeddings_ingested", atomic = true)
+    Tables.write(accEmb.filter(col("accepted")), s"$whDir/embeddings_ingested")
 
     // 6: maintenance — repeated refreshes fragment the refreshed tables
     // into per-run small files; bin-pack them back to scan-efficient sizes
-    // under the atomic swap. The rewrites above use `atomic = true` so every
-    // write to these marker-bearing tables goes through the same swap
-    // protocol compact() relies on — a plain overwrite crash would leave a
-    // partial dir recover() cannot distinguish from a complete table.
+    // under the atomic swap. Tables.write commits every table through the
+    // same swap compact() rewrites under, so no write to these marker-bearing
+    // tables can crash into a partial dir that reads as a complete table.
     val compacted = Seq("events_current", "customer_flags_current", "documents_ingested")
       .map { t =>
         val st = Tables.compact(spark, s"$whDir/$t")
@@ -198,7 +196,7 @@ object RefreshPipeline {
     require(advanced.count() == nFull &&
         advanced.unionByName(fullRebuild).distinct().count() == nFull,
       "incremental order-stats diverged from the full rebuild")
-    Tables.write(advanced, s"$whDir/customer_order_stats", atomic = true)
+    Tables.write(advanced, s"$whDir/customer_order_stats")
 
     val nEvents = spark.read.parquet(s"$whDir/events_current").count()
     val nFlags = spark.read.parquet(s"$whDir/customer_flags_current").count()

@@ -50,9 +50,8 @@ object ScanFilter {
       (s, d) => {
         import org.apache.spark.sql.types._
         val path = s"${sys.props("java.io.tmpdir")}/graft_s2b_json_${Integer.toHexString(d.hashCode)}"
-        Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .write.mode("overwrite").json(path)
+        Tables.write(Tables.orders(s, d)
+          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")), path, "json")
         val schema = StructType(Seq(
           StructField("o_orderkey", LongType), StructField("o_orderstatus", StringType),
           StructField("o_totalprice", DoubleType)))
@@ -68,9 +67,8 @@ object ScanFilter {
     Q("s2c_orc_roundtrip",
       (s, d) => {
         val path = s"${sys.props("java.io.tmpdir")}/graft_s2c_orc_${Integer.toHexString(d.hashCode)}"
-        Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
-          .write.mode("overwrite").orc(path)
+        Tables.write(Tables.lineitem(s, d)
+          .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag")), path, "orc")
         s.read.orc(path)
           .filter(col("l_returnflag") =!= "R")
           .groupBy(col("l_returnflag"))
@@ -92,10 +90,9 @@ object ScanFilter {
         val path = s"${sys.props("java.io.tmpdir")}/graft_s6_z_${Integer.toHexString(d.hashCode)}"
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("source"), col("n_chars"))
-        Layout.zorderBy(docs,
-            Layout.stringRangeBucket(docs, "source"),
-            Layout.quantileBucket(docs, "n_chars"), numFiles = 8)
-          .write.mode("overwrite").parquet(path)
+        Tables.write(Layout.zorderBy(docs,
+          Layout.stringRangeBucket(docs, "source"),
+          Layout.quantileBucket(docs, "n_chars"), numFiles = 8), path)
         s.read.parquet(path)
           .filter(col("n_chars") >= 200 && col("n_chars") <= 400)
           .groupBy(col("source"))
@@ -116,10 +113,9 @@ object ScanFilter {
         // repartition by the partition column first: one file per month dir
         // instead of (shuffle partitions × months) tiny files — the
         // anti-small-files discipline that matters at warehouse scale.
-        Tables.orders(s, d)
+        Tables.write(Tables.orders(s, d)
           .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-          .repartition(col("o_month"))
-          .write.mode("overwrite").partitionBy("o_month").parquet(path)
+          .repartition(col("o_month")), path, partitionCols = Seq("o_month"))
         s.read.parquet(path)
           .filter(col("o_month") === "1996-06")
           .groupBy(col("o_orderstatus"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Tables
 import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -145,20 +146,17 @@ object Streams {
     * MERGE INTO and drops the full rewrite. */
   def mergeUpsert(batch: DataFrame, tableDir: String,
       keyCol: String, versionCol: String, tiebreakCol: String): Unit = {
-    val spark = batch.sparkSession
-    // Commit via the shared atomic-swap protocol (graft.core.TableSwap):
-    // recover any interrupted swap BEFORE reading the current table, build
-    // the merge lazily against it, commit under rename-only replacement — a
-    // crash never loses the table or replays into an empty one.
-    graft.core.TableSwap.recover(spark, tableDir)
-    val existing =
-      if (exists(spark, tableDir)) Some(spark.read.parquet(tableDir)) else None
+    // Read the committed table (any interrupted swap recovered first), build
+    // the merge lazily against it, and commit it through Tables.write's
+    // rename-only swap — a crash never loses the table or replays into an
+    // empty one.
+    val existing = Tables.committed(batch.sparkSession, tableDir)
     val all = existing.fold(batch)(_.unionByName(batch))
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(versionCol).desc, col(tiebreakCol).desc)
     val merged = all.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    graft.core.TableSwap.commit(spark, tableDir)(merged.write.parquet(_))
+    Tables.write(merged, tableDir)
   }
 
   /** Continuous upsert: every micro-batch of `stream` is merged into
@@ -176,7 +174,7 @@ object Streams {
     *
     * State is ONE atomic table (doc_id, text, accepted, bands) where `bands`
     * is the doc's LSH band signatures as an array — signatures ride WITH the
-    * row so a single `TableSwap` commit keeps docs and index consistent
+    * row so a single `Tables.write` commit keeps docs and index consistent
     * across crashes (two tables would need a cross-table transaction).
     * EVERY seen doc persists, accepted or not: the gate compares a new doc
     * against all previously-arrived content, so a doc that near-dups a
@@ -198,9 +196,7 @@ object Streams {
       threshold: Double, k: Int = 3, numHashes: Int = 8, bandSize: Int = 2,
       maxBucket: Int = graft.ops.Dedup.DefaultLshMaxBucket): Unit = {
     import graft.ops.Dedup
-    val spark = batchRaw.sparkSession
-    graft.core.TableSwap.recover(spark, stateDir)
-    val seen = if (exists(spark, stateDir)) Some(spark.read.parquet(stateDir)) else None
+    val seen = Tables.committed(batchRaw.sparkSession, stateDir)
 
     val fresh = seen.fold(
         batchRaw.select(col("doc_id"), col("text")).dropDuplicates("doc_id")) { sn =>
@@ -267,7 +263,7 @@ object Streams {
       .withColumn("bands", coalesce(col("bands"),
         expr("CAST(array() AS ARRAY<STRUCT<band: INT, sig: STRING>>)")))
     val merged = seen.fold(freshRows)(_.unionByName(freshRows)).barrier()
-    graft.core.TableSwap.commit(spark, stateDir)(merged.write.parquet(_))
+    Tables.write(merged, stateDir)
   }
 
   /** Continuous near-dup ingest: every micro-batch of the document stream is
@@ -291,7 +287,7 @@ object Streams {
     *    batch after a crash rewrites the same dir (idempotent).
     *  - Once `mergeEvery` COMMITTED landing batches accumulate (ids below
     *    the current one — their checkpoint offsets are durable), they fold
-    *    into the compacted `base` table under the TableSwap protocol. The
+    *    into the compacted `base` table through `Tables.write`'s swap. The
     *    merge anti-joins on the batch ids already present in base, so a
     *    crash between swap-commit and landing cleanup cannot double rows:
     *    the retried merge sees those ids in base and only deletes.
@@ -325,14 +321,11 @@ object Streams {
 
   private[graft] def mergeLanding(spark: SparkSession, baseDir: String,
       ids: Seq[Long], targetBytes: Long): Unit = {
-    graft.core.TableSwap.recover(spark, s"$baseDir/base")
+    val existing = Tables.committed(spark, s"$baseDir/base")
     val inBase = baseBatchIds(spark, baseDir)
     val fresh = ids.filterNot(inBase)
     if (fresh.nonEmpty) {
       val landing = spark.read.parquet(fresh.map(i => s"$baseDir/landing/b$i"): _*)
-      val existing =
-        if (exists(spark, s"$baseDir/base")) Some(spark.read.parquet(s"$baseDir/base"))
-        else None
       // size the rewrite like Tables.compact: one file per targetBytes
       val bytes = fresh.map { i =>
         val (fs, p) = fsOf(spark, s"$baseDir/landing/b$i")
@@ -343,7 +336,7 @@ object Streams {
       }
       val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       val merged = existing.fold(landing)(_.unionByName(landing)).repartition(target)
-      graft.core.TableSwap.commit(spark, s"$baseDir/base")(merged.write.parquet(_))
+      Tables.write(merged, s"$baseDir/base")
     }
     // cleanup only AFTER the ids are durably in base (swap committed above,
     // or they were already there from a pre-crash merge)

@@ -116,6 +116,23 @@ class DagSpec extends AnyFunSuite {
     assert(slowSawB, "b did not start and finish while slow was still blocked")
   }
 
+  test("a DailyPipeline job body that reads an undeclared table fails, naming it") {
+    val out = java.nio.file.Files.createTempDirectory("graft_dag_deps").toString
+    val wh = new graft.pipeline.DailyPipeline.Warehouse(out)
+    val dag = new Dag(Seq(
+      wh.job("a")((s, t) => t.write("a", s.range(3).toDF("k"))),
+      wh.job("b", Seq("a"))((_, t) => t.write("b", t.read("a"))),
+      // `b` is on disk when `c` runs (one slot, declaration order), but `c`
+      // never declared it
+      wh.job("c", Seq("a"))((_, t) => t.write("c", t.read("b")))))
+    val rs = dag.runParallel(spark, parallelism = 1).map(r => r.name -> r).toMap
+    assert(rs("a").status == "ok" && rs("b").status == "ok")
+    assert(rs("c").status == "failed")
+    assert(rs("c").error.exists(e => e.contains("job c") && e.contains("table b")),
+      rs("c").error)
+    assert(!new java.io.File(s"$out/c").exists())
+  }
+
   test("runParallel: two heavy-class jobs never co-schedule") {
     // round-10 lesson: two simhash pair builds running at once OOM'd
     // the 32-thread JVM at sf10 — the Dag's memory-class admission must make

@@ -109,5 +109,10 @@ class SizingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(!qes.exists(qe => fused(qe.executedPlan)))
     assert(Sizing.runsIn(spark, Compiled))
     assert(spark.read.parquet(s"$out/customer_order_stats").count() > 0)
+    // the write committed through the swap: marker stamped, no residue
+    def sibling(suffix: String) =
+      Files.exists(java.nio.file.Paths.get(s"$out/customer_order_stats.$suffix"))
+    assert(sibling("_GRAFT_TABLE"))
+    assert(!sibling("_GRAFT_TMP") && !sibling("_GRAFT_OLD"))
   }
 }

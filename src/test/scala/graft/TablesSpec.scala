@@ -52,20 +52,20 @@ class TablesSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v1 = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    Tables.write(v1, dir, atomic = true)
+    Tables.write(v1, dir)
     // first atomic write commits data AND the table marker
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir + "._GRAFT_TABLE")))
     assert(spark.read.parquet(dir).count() == 50)
     // overwrite through the same protocol; no tmp/old residue remains
     val v2 = (1 to 20).map(i => (i.toLong, s"w$i")).toDF("k", "v")
-    Tables.write(v2, dir, atomic = true)
+    Tables.write(v2, dir)
     assert(spark.read.parquet(dir).count() == 20)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "._GRAFT_TMP")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "._GRAFT_OLD")))
     // crash after tmp write but before swap: recover restores the NEW data
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(dir + "._GRAFT_TMP")))
-    Tables.write(v1, dir, atomic = true) // write() runs recover() first
+    Tables.write(v1, dir) // write() runs recover() first
     assert(spark.read.parquet(dir).count() == 50)
   }
 
