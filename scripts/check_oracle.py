@@ -9,9 +9,16 @@ parquet tables, and compares: row count, column names, and values (rows and
 columns sorted, exact match; tiny float tolerance report included for triage).
 Each PASS/FAIL line names the query first, then the oracle's wall time, e.g.
 `PASS name (N rows, 12.3 s)` or `FAIL name (12.3 s): rows 5 vs 6`.
+
+DuckDB gets this process's share of the host: CHECK_ORACLE_PROCS (default 1;
+scripts/parallel_check.sh sets it to its chunk count) processes split the
+cpus and 60% of the RAM, and each spills to its own temp directory under
+SPARK_LOCAL_DIRS (else the system temp dir), removed at exit.
 """
 import json
+import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -31,10 +38,30 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def connect(spill_dir):
+    procs = max(1, int(os.environ.get("CHECK_ORACLE_PROCS", "1")))
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect()
+    con.execute(f"SET threads = {max(1, len(os.sched_getaffinity(0)) // procs)}")
+    con.execute(f"SET memory_limit = '{max(1 << 30, int(ram * 0.6) // procs) >> 20}MB'")
+    con.execute(f"SET temp_directory = '{spill_dir}'")
+    return con
+
+
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
+    spill_root = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0] or None
+    if spill_root:
+        os.makedirs(spill_root, exist_ok=True)
+    with tempfile.TemporaryDirectory(prefix="duckdb_oracle_", dir=spill_root) as spill:
+        con = connect(spill)
+        n_fail = check(con, out_dir, sf_dir, only)
+        con.close()
+    sys.exit(1 if n_fail else 0)
+
+
+def check(con, out_dir, sf_dir, only):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -102,7 +129,7 @@ def main():
             print(f"PASS {name} ({len(g)} rows, {secs:.1f} s)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    return n_fail
 
 
 if __name__ == "__main__":

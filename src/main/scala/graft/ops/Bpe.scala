@@ -335,7 +335,7 @@ object Bpe {
   private def bpeCtes(textExpr: String, table: String,
       merges: Int): (String, String) = {
     val init =
-      s"""s0 AS (
+      s"""s0 AS MATERIALIZED (
          |  SELECT word, cnt, u.pos, u.sym FROM (
          |    SELECT word, cnt, unnest(list_transform(range(length(word)),
          |      i -> {'pos': i, 'sym': substr(word, CAST(i AS BIGINT) + 1, 1)})) AS u
@@ -345,13 +345,13 @@ object Bpe {
          |      WHERE word <> '' GROUP BY 1)))""".stripMargin
     val rounds = (1 to merges).map { k =>
       val p = k - 1
-      s"""b$k AS (
+      s"""b$k AS MATERIALIZED (
          |  SELECT sym AS l, nxt AS r, CAST(SUM(cnt) AS BIGINT) AS pc FROM (
          |    SELECT sym, lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt, cnt
          |    FROM s$p)
          |  WHERE nxt IS NOT NULL GROUP BY 1, 2
          |  ORDER BY pc DESC, l, r LIMIT 1),
-         |s$k AS (
+         |s$k AS MATERIALIZED (
          |  SELECT word, cnt,
          |    row_number() OVER (PARTITION BY word ORDER BY pos) - 1 AS pos,
          |    CASE WHEN cand THEN l || r ELSE sym END AS sym

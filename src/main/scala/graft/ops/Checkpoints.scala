@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, GraftBridge}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The engine's one barrier and its one driver-side overlap: no other file
@@ -18,6 +19,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * consumer reads the same rows. Placement cannot change a result: every
   * declared query is partitioning-invariant by contract.
   *
+  * A checkpoint whose RDD has exactly one partition is labelled
+  * `SinglePartition`; `localCheckpoint` would keep the label of the plan it
+  * cut (a hash partitioning, say). `SinglePartition` satisfies every
+  * distribution but broadcast, so an aggregate, `distinct`, `Window.orderBy`
+  * or sort directly above such a barrier plans no exchange, and so no AQE
+  * query stage and no job of its own. A join with a many-partition side
+  * still re-shuffles the one-partition side to that side's partitioning.
+  * A checkpoint of more than one partition keeps its label.
+  *
   * [[both]] overlaps two independent barrier chains. Side `a` runs on a new
   * thread that the caller creates, so it inherits the caller's Spark local
   * properties (job tags, job group) and active session; a pooled thread
@@ -31,8 +41,15 @@ object Checkpoints {
       case _: Project | _: Filter => false
       case _ => true
     }
-    if (cheap) ds else ds.localCheckpoint(true)
+    if (cheap) ds else singlePartition(ds.localCheckpoint(true))
   }
+
+  private def singlePartition[T](ck: Dataset[T]): Dataset[T] =
+    ck.queryExecution.analyzed match {
+      case r: LogicalRDD if r.rdd.getNumPartitions == 1 && r.outputPartitioning != SinglePartition =>
+        GraftBridge.withPartitioning(ck, r, SinglePartition)
+      case _ => ck
+    }
 
   implicit class BarrierOps[T](private val ds: Dataset[T]) extends AnyVal {
     def barrier(): Dataset[T] = Checkpoints.barrier(ds)

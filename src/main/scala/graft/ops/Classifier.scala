@@ -219,7 +219,7 @@ object Classifier {
     * n_words, nb_score) — the oracle replay of [[nbScores]]. */
   private def scoredCtes(idExpr: String, textExpr: String, table: String,
       labelSql: String, holdoutSql: String, buckets: Int): String =
-      s"""flags AS (
+      s"""flags AS MATERIALIZED (
          |  SELECT $idExpr AS id, ($labelSql) AS t, ($holdoutSql) AS h
          |  FROM $table),
          |w AS (
@@ -228,11 +228,11 @@ object Classifier {
          |dw AS (
          |  SELECT id, word, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM w WHERE word <> '' GROUP BY 1, 2),
-         |db AS (
+         |db AS MATERIALIZED (
          |  SELECT id, ${Normalize.hashBucketSql("word", buckets)} AS b,
          |    CAST(SUM(c) AS BIGINT) AS cnt
          |  FROM dw GROUP BY 1, 2),
-         |trainb AS (
+         |trainb AS MATERIALIZED (
          |  SELECT b,
          |    SUM(CASE WHEN t THEN cnt ELSE 0 END) AS ct,
          |    SUM(CASE WHEN NOT t THEN cnt ELSE 0 END) AS cr
@@ -279,7 +279,7 @@ object Classifier {
          |FROM scored""".stripMargin
     else
       s"""WITH $scored,
-         |p AS (SELECT *, nb_score > 0.0 AS predicted FROM scored),
+         |p AS MATERIALIZED (SELECT *, nb_score > 0.0 AS predicted FROM scored),
          |cm AS (
          |  SELECT
          |    SUM(CASE WHEN label AND predicted THEN 1 ELSE 0 END) AS tp,
@@ -413,7 +413,7 @@ object Classifier {
       s"""m$k AS (
          |  SELECT id, SUM(cnt * wt) AS m FROM db JOIN $prev USING (b)
          |  GROUP BY 1),
-         |w$k AS (
+         |w$k AS MATERIALIZED (
          |  SELECT $prev.b, wt + COALESCE(u.d, 0) AS wt
          |  FROM $prev LEFT JOIN (
          |    SELECT b, SUM(y * cnt) AS d
@@ -437,7 +437,7 @@ object Classifier {
        |  UNION ALL
        |  SELECT id, CAST($buckets AS BIGINT) AS b, CAST(1 AS BIGINT) AS cnt
        |  FROM flags),
-       |w0 AS (SELECT r.range AS b, CAST(0 AS BIGINT) AS wt
+       |w0 AS MATERIALIZED (SELECT r.range AS b, CAST(0 AS BIGINT) AS wt
        |       FROM range(${buckets + 1}) r),
        |$roundCtes,
        |mf AS (SELECT id, SUM(cnt * wt) AS m FROM db JOIN w$rounds USING (b)

@@ -163,7 +163,7 @@ object TextAnalysis {
 
   def temperatureMixSql(srcExpr: String, idExpr: String, alpha: Double,
       salt: String, table: String): String =
-    s"""WITH counts AS (
+    s"""WITH counts AS MATERIALIZED (
        |  SELECT $srcExpr, COUNT(*) AS n_docs FROM $table GROUP BY 1),
        |mn AS (SELECT MIN(n_docs) AS n_min FROM counts),
        |rates AS (
@@ -404,25 +404,25 @@ object TextAnalysis {
   }
 
   def unigramSurprisalSql(idExpr: String, textExpr: String, table: String): String =
-    s"""WITH w AS (
+    s"""WITH w AS MATERIALIZED (
        |  SELECT $idExpr AS id, unnest(string_split($textExpr, ' ')) AS word FROM $table),
-       |dw AS (SELECT id, word, CAST(COUNT(*) AS BIGINT) AS dw_cnt FROM w GROUP BY 1, 2),
-       |v AS (SELECT word, CAST(SUM(dw_cnt) AS BIGINT) AS cnt FROM dw GROUP BY 1),
+       |dw AS MATERIALIZED (SELECT id, word, CAST(COUNT(*) AS BIGINT) AS dw_cnt FROM w GROUP BY 1, 2),
+       |v AS MATERIALIZED (SELECT word, CAST(SUM(dw_cnt) AS BIGINT) AS cnt FROM dw GROUP BY 1),
        |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM v),
-       |b AS (
+       |b AS MATERIALIZED (
        |  SELECT dw.id, dw_cnt,
        |    -ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE)) / ln(2.0) AS bits
        |  FROM dw JOIN v USING (word) CROSS JOIN tot),
-       |m AS (
+       |m AS MATERIALIZED (
        |  SELECT id, CAST(SUM(dw_cnt) AS BIGINT) AS n_words,
        |    CAST(SUM(CAST(bits AS DECIMAL(18,4)) * dw_cnt) * 10000 AS BIGINT) AS s4
        |  FROM b GROUP BY 1),
-       |sc AS (SELECT id, n_words,
+       |sc AS MATERIALIZED (SELECT id, n_words,
        |  CAST((200 * s4 + n_words) // (2 * n_words) AS DOUBLE) / 1000000.0 AS bpw
        |  FROM m),
        |hist AS (SELECT bpw, CAST(COUNT(*) AS BIGINT) AS hc FROM sc GROUP BY 1),
-       |cum AS (SELECT bpw, SUM(hc) OVER (ORDER BY bpw) AS c FROM hist),
-       |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sc),
+       |cum AS MATERIALIZED (SELECT bpw, SUM(hc) OVER (ORDER BY bpw) AS c FROM hist),
+       |nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM sc),
        |thr AS (SELECT
        |  (SELECT MIN(bpw) FROM cum, nn WHERE c >= (n * 5 + 99) // 100) AS lo,
        |  (SELECT MIN(bpw) FROM cum, nn WHERE c >= (n * 95 + 99) // 100) AS hi)
@@ -475,10 +475,10 @@ object TextAnalysis {
        |    i -> {'w1': string_split($textExpr, ' ')[i + 1],
        |          'w2': string_split($textExpr, ' ')[i + 2]})) AS bgs
        |  FROM $table),
-       |db AS (
+       |db AS MATERIALIZED (
        |  SELECT id, bgs.w1 AS w1, bgs.w2 AS w2, CAST(COUNT(*) AS BIGINT) AS db_cnt
        |  FROM bg GROUP BY 1, 2, 3),
-       |corpus AS (SELECT w1, w2, CAST(SUM(db_cnt) AS BIGINT) AS c12 FROM db GROUP BY 1, 2),
+       |corpus AS MATERIALIZED (SELECT w1, w2, CAST(SUM(db_cnt) AS BIGINT) AS c12 FROM db GROUP BY 1, 2),
        |ctx AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM corpus GROUP BY 1),
        |b AS (
        |  SELECT db.id, db_cnt,
@@ -593,15 +593,15 @@ object TextAnalysis {
        |      i -> {'w1': string_split($textExpr, ' ')[i + 1],
        |            'w2': string_split($textExpr, ' ')[i + 2]})) AS bgs
        |  FROM $table WHERE $textExpr IS NOT NULL),
-       |db AS (
+       |db AS MATERIALIZED (
        |  SELECT id, in_model, bgs.w1 AS w1, bgs.w2 AS w2,
        |    CAST(COUNT(*) AS BIGINT) AS db_cnt
        |  FROM bg GROUP BY 1, 2, 3, 4),
-       |c12 AS (SELECT w1, w2, CAST(SUM(db_cnt) AS BIGINT) AS c12
+       |c12 AS MATERIALIZED (SELECT w1, w2, CAST(SUM(db_cnt) AS BIGINT) AS c12
        |  FROM db WHERE in_model GROUP BY 1, 2),
        |ctx AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1,
        |  CAST(COUNT(*) AS BIGINT) AS n1f FROM c12 GROUP BY 1),
-       |cont AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1p FROM c12 GROUP BY 1),
+       |cont AS MATERIALIZED (SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1p FROM c12 GROUP BY 1),
        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS v,
        |  CAST(COALESCE(SUM(n1p), 0) AS BIGINT) AS bt FROM cont),
        |pr AS (
@@ -686,7 +686,7 @@ object TextAnalysis {
 
   def phraseSearchSql(idExpr: String, textExpr: String, table: String,
       phraseLen: Int): String =
-    s"""WITH sh AS (
+    s"""WITH sh AS MATERIALIZED (
        |  SELECT $idExpr AS id,
        |    unnest(range(greatest(len(string_split($textExpr, ' ')) - ${phraseLen - 1}, 0)))
        |      AS pos,
@@ -794,20 +794,20 @@ object TextAnalysis {
   val RepDistinctMin = 0.35
 
   def repetitionStatsSql(idExpr: String, textExpr: String, table: String): String =
-    s"""WITH w AS (
+    s"""WITH w AS MATERIALIZED (
        |  SELECT $idExpr AS id, unnest(string_split($textExpr, ' ')) AS gram FROM $table),
        |wg AS (SELECT id, gram, COUNT(*) AS cnt FROM w GROUP BY 1, 2),
        |wd AS (SELECT id, CAST(SUM(cnt) AS BIGINT) AS n_words,
        |         CAST(MAX(cnt) AS BIGINT) AS top_w, COUNT(*) AS n_distinct_words
        |       FROM wg GROUP BY 1),
        |t AS (SELECT $idExpr AS id, string_split($textExpr, ' ') AS ws FROM $table),
-       |b AS (SELECT id, unnest(list_transform(range(len(ws) - 1),
+       |b AS MATERIALIZED (SELECT id, unnest(list_transform(range(len(ws) - 1),
        |         i -> ws[i+1] || ' ' || ws[i+2])) AS gram
        |      FROM t WHERE len(ws) >= 2),
        |bg AS (SELECT id, gram, COUNT(*) AS cnt FROM b GROUP BY 1, 2),
        |bd AS (SELECT id, CAST(SUM(cnt) AS BIGINT) AS n_bg, CAST(MAX(cnt) AS BIGINT) AS top_b
        |       FROM bg GROUP BY 1),
-       |m AS (SELECT wd.id, n_words, n_distinct_words,
+       |m AS MATERIALIZED (SELECT wd.id, n_words, n_distinct_words,
        |        round(CAST(top_w AS DOUBLE) / n_words, 6) AS top_word_frac,
        |        round(CAST(n_distinct_words AS DOUBLE) / n_words, 6) AS distinct_word_ratio,
        |        round(COALESCE(CAST(top_b AS DOUBLE) / n_bg, 0.0), 6) AS top_bigram_frac
@@ -1053,16 +1053,16 @@ object TextAnalysis {
     * cnt) and `{p}lam` (b, lam). */
   def dsirModelCtesSql(p: String, labelSql: String, table: String,
       buckets: Int = 1024): String =
-    s"""${p}w AS (
+    s"""${p}w AS MATERIALIZED (
        |  SELECT doc_id,
        |    ($labelSql) AS t,
        |    unnest(string_split(text, ' ')) AS word
        |  FROM $table),
-       |${p}db AS (
+       |${p}db AS MATERIALIZED (
        |  SELECT doc_id, t, ${Normalize.hashBucketSql("word", buckets)} AS b,
        |    CAST(COUNT(*) AS BIGINT) AS cnt
        |  FROM ${p}w WHERE word <> '' GROUP BY 1, 2, 3),
-       |${p}bc AS (
+       |${p}bc AS MATERIALIZED (
        |  SELECT b, SUM(CASE WHEN t THEN cnt ELSE 0 END) AS ct,
        |    SUM(CASE WHEN NOT t THEN cnt ELSE 0 END) AS cr
        |  FROM ${p}db GROUP BY 1),
@@ -1434,7 +1434,7 @@ object TextAnalysis {
     s"""WITH w AS (
        |  SELECT $srcExpr AS src, unnest(string_split($textExpr, ' ')) AS word
        |  FROM $table),
-       |sb AS (
+       |sb AS MATERIALIZED (
        |  SELECT src, ${Normalize.hashBucketSql("word", buckets)} AS b,
        |    CAST(COUNT(*) AS BIGINT) AS c
        |  FROM w WHERE word <> '' GROUP BY 1, 2),
@@ -1454,7 +1454,7 @@ object TextAnalysis {
        |      (c + 1) / CAST(ns + $buckets AS DOUBLE) AS p,
        |      (COALESCE(cb, 0) + 1) / CAST(n + $buckets AS DOUBLE) AS q
        |    FROM dense LEFT JOIN corpus USING (b) CROSS JOIN grand)),
-       |agg AS (
+       |agg AS MATERIALIZED (
        |  SELECT src, MIN(ns) AS n_words,
        |    round(CAST(SUM(kl) AS DOUBLE), 6) AS kl_nats,
        |    round(CAST(SUM(tv) AS DOUBLE), 6) AS tvd
@@ -1518,14 +1518,14 @@ object TextAnalysis {
       terms: Seq[String], k: Int, k1: Double = 1.2,
       b: Double = 0.75): String = {
     val termList = terms.map(t => s"'$t'").mkString(", ")
-    s"""WITH dl AS (
+    s"""WITH dl AS MATERIALIZED (
        |  SELECT $idExpr AS id,
        |    CAST(len(string_split($textExpr, ' ')) AS BIGINT) AS dl
        |  FROM $table),
-       |stats AS (
+       |stats AS MATERIALIZED (
        |  SELECT COUNT(*) AS nd,
        |    CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-       |spine AS (
+       |spine AS MATERIALIZED (
        |  SELECT id, t, CAST(COUNT(*) AS BIGINT) AS tf FROM (
        |    SELECT $idExpr AS id, unnest(string_split($textExpr, ' ')) AS t
        |    FROM $table)
@@ -1535,7 +1535,7 @@ object TextAnalysis {
        |    ln((nd - df + 0.5) / (df + 0.5) + 1.0), 4) AS DECIMAL(18,4)) AS idf
        |  FROM (SELECT t, COUNT(*) AS df FROM spine GROUP BY 1)
        |  CROSS JOIN stats),
-       |scored AS (
+       |scored AS MATERIALIZED (
        |  SELECT id, CAST(SUM(a) AS DOUBLE) AS bm25 FROM (
        |    SELECT s.id, CAST(round(
        |      idf * tf / (tf + $k1 * ((1.0 - $b) + $b * dl / avgdl)),
@@ -1600,18 +1600,18 @@ object TextAnalysis {
       terms: Seq[String], k: Int, mu: Double = 2000.0): String = {
     val termList = terms.map(t => s"'$t'").mkString(", ")
     val termRows = terms.map(t => s"('$t')").mkString(", ")
-    s"""WITH dl AS (
+    s"""WITH dl AS MATERIALIZED (
        |  SELECT $idExpr AS id,
        |    CAST(len(string_split($textExpr, ' ')) AS BIGINT) AS dl
        |  FROM $table),
        |corp AS (SELECT CAST(SUM(dl) AS BIGINT) AS ct FROM dl),
-       |toks AS (
+       |toks AS MATERIALIZED (
        |  SELECT $idExpr AS id, unnest(string_split($textExpr, ' ')) AS t
        |  FROM $table),
        |ctf AS (
        |  SELECT t, CAST(COUNT(*) AS BIGINT) AS ctf FROM toks
        |  WHERE t IN ($termList) GROUP BY 1),
-       |spine AS (
+       |spine AS MATERIALIZED (
        |  SELECT id, t, CAST(COUNT(*) AS BIGINT) AS tf FROM toks
        |  WHERE t IN ($termList) GROUP BY 1, 2),
        |per_term AS (
@@ -1622,7 +1622,7 @@ object TextAnalysis {
        |  LEFT JOIN spine s ON s.id = dl.id AND s.t = q.t
        |  JOIN ctf c ON c.t = q.t
        |  CROSS JOIN corp),
-       |scored AS (
+       |scored AS MATERIALIZED (
        |  SELECT id, CAST(SUM(a) AS DOUBLE) AS ql FROM per_term GROUP BY 1)
        |SELECT id AS $idExpr, ql,
        |  CAST(row_number() OVER (ORDER BY ql DESC, id) AS BIGINT) AS rank
@@ -1646,11 +1646,11 @@ object TextAnalysis {
     val salted = "'cms' || CAST(j AS VARCHAR) || '|' || word"
     s"""WITH w AS (
        |  SELECT unnest(string_split($textExpr, ' ')) AS word FROM $table),
-       |wc AS (
+       |wc AS MATERIALIZED (
        |  SELECT word, CAST(COUNT(*) AS BIGINT) AS c
        |  FROM w WHERE word <> '' GROUP BY 1),
        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM wc),
-       |r AS (
+       |r AS MATERIALIZED (
        |  SELECT word, c, j, ${Normalize.hashBucketSql(salted, width)} AS b
        |  FROM wc CROSS JOIN (SELECT unnest(range($depth)) AS j)),
        |ctr AS (
@@ -1764,7 +1764,7 @@ object TextAnalysis {
        |      ws[(CASE WHEN j = 0 THEN 1 ELSE e[j] + 1 END):e[j + 1]], ' ')))
        |    AS chunk
        |  FROM ed),
-       |cw AS (
+       |cw AS MATERIALIZED (
        |  SELECT id, chunk, md5(chunk) AS h,
        |    CAST(len(string_split(chunk, ' ')) AS BIGINT) AS nw
        |  FROM ch),

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.core.Tables
 import graft.ops.Checkpoints.BarrierOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * splice is a partition-prunable range predicate, the dedup a keyed window,
   * the flag merge a keyed keep-newest. Runnable:
   * `runMain graft.pipeline.RefreshPipeline <sfDir> <warehouseDir>`
-  * (expects DailyPipeline to have built the warehouse; runs it if absent).
+  * (expects DailyPipeline to have built the warehouse; runs it if absent,
+  * and exits 1 when that build or the refresh fails).
   */
 object RefreshPipeline {
 
@@ -102,9 +103,27 @@ object RefreshPipeline {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val whDir = if (args.length > 1) args(1) else "/tmp/graft_warehouse"
     val spark = graft.core.Session(sfDir)
+    val ok =
+      try { refresh(spark, sfDir, whDir, DailyPipeline.jobs(sfDir, whDir)); true }
+      catch { case e: Exception => println(s"[refresh] FAILED: ${e.getMessage}"); false }
+      finally spark.stop()
+    if (!ok) sys.exit(1)
+  }
 
-    if (!new java.io.File(s"$whDir/combined_transactions").exists())
-      new Dag(DailyPipeline.jobs(sfDir, whDir)).runParallel(spark)
+  /** Runs the refresh over the warehouse at `whDir`, first building it with
+    * the `daily` jobs when it has no `combined_transactions` yet. Throws
+    * before writing anything when a daily job failed or was skipped. */
+  def refresh(spark: SparkSession, sfDir: String, whDir: String, daily: => Seq[Job]): Unit = {
+    val a1 = graft.queries.Registry.all.find(_.name == "a1_multi_agg").getOrElse(throw
+      new NoSuchElementException("refresh step 7 rebuilds from query a1_multi_agg, which is not declared"))
+
+    if (!new java.io.File(s"$whDir/combined_transactions").exists()) {
+      val notOk = new Dag(daily).runParallel(spark).filter(_.status != "ok")
+      if (notOk.nonEmpty) throw new IllegalStateException(
+        s"the daily build of $whDir has ${notOk.size} job(s) not ok: " +
+          notOk.map(r => s"${r.name} ${r.status}${r.error.map(" (" + _ + ")").getOrElse("")}")
+            .mkString("; "))
+    }
 
     // 1-2: refetch the trailing week of events from the source and splice.
     val stored = Tables.events(spark, sfDir) // stands in for the stored fact table
@@ -177,7 +196,6 @@ object RefreshPipeline {
     // from yesterday's state + today's delta alone (no fact re-scan), then
     // proved equal to the full rebuild before the atomic swap publishes it.
     // (o_orderkey % 7 == 0 stands in for today's new orders.)
-    val a1 = graft.queries.Registry.all.find(_.name == "a1_multi_agg").get
     def orderStatsOver(pred: org.apache.spark.sql.Column): DataFrame = {
       val orders = Tables.orders(spark, sfDir).filter(pred)
       orders.groupBy(col("o_custkey"))
@@ -205,6 +223,5 @@ object RefreshPipeline {
     println(s"[refresh] events_current=$nEvents customer_flags_current=$nFlags " +
       s"documents_ingested=$nDocs embeddings_ingested=$nEmb " +
       s"compact[$compacted] -> $whDir")
-    spark.stop()
   }
 }

@@ -51,7 +51,7 @@ object Aggregates {
        |  FROM mx GROUP BY 1),
        |-- int64-safe hi/lo split of s (s = s_hi*2^36 + s_lo): a
        |-- DECIMAL(38,0) ~ 9e21 degrades to float64 in the pandas path
-       |sk2 AS (SELECT grp,
+       |sk2 AS MATERIALIZED (SELECT grp,
        |    CAST(s // 68719476736 AS BIGINT) AS s_hi,
        |    CAST(s % 68719476736 AS BIGINT) AS s_lo,
        |    zeros
@@ -314,9 +314,9 @@ object Aggregates {
                |                WHERE user_id IS NOT NULL) b ON a.t < b.t) p
                |      ON e.event_type IN (p.ga, p.gb)
                |    WHERE e.user_id IS NOT NULL)""".stripMargin)},
-           |ut AS (SELECT DISTINCT event_type AS t, user_id AS u FROM events
+           |ut AS MATERIALIZED (SELECT DISTINCT event_type AS t, user_id AS u FROM events
            |       WHERE user_id IS NOT NULL),
-           |sing AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS nex
+           |sing AS MATERIALIZED (SELECT t, CAST(COUNT(*) AS BIGINT) AS nex
            |         FROM ut GROUP BY 1),
            |tp AS (SELECT a.t AS ta, b.t AS tb
            |       FROM (SELECT DISTINCT t FROM ut) a
@@ -402,7 +402,7 @@ object Aggregates {
           .agg(count(lit(1)).as("n_customers"), sum(col("r30")).as("n_repeat_30d"),
             sum(col("r90")).as("n_repeat_90d"))
       },
-      Some("""WITH first AS (
+      Some("""WITH first AS MATERIALIZED (
              |  SELECT o_custkey AS custkey, MIN(o_orderdate) AS first_dt FROM orders GROUP BY 1),
              |second AS (
              |  SELECT f.custkey, MIN(o.o_orderdate) AS second_dt
@@ -782,7 +782,7 @@ object Aggregates {
       },
       Some {
         import graft.ops.QuantileSketch._
-        s"""WITH src AS (
+        s"""WITH src AS MATERIALIZED (
            |  SELECT ${qunitsSql("value")} AS qv, CAST(ts AS DATE) AS day
            |  FROM events
            |  WHERE value IS NOT NULL AND value >= 0 AND value < 100000000000000.0),
@@ -846,11 +846,11 @@ object Aggregates {
             expr("n_both * 100000 div n_orders").as("support_pct_milli"),
             expr("n_both * n_orders * 1000 div (n_a * n_b)").as("lift_milli"))
       },
-      Some("""WITH ob AS (
+      Some("""WITH ob AS MATERIALIZED (
              |  SELECT DISTINCT l_orderkey AS ok, p_brand AS b
              |  FROM lineitem JOIN part ON l_partkey = p_partkey),
              |n AS (SELECT CAST(COUNT(DISTINCT ok) AS BIGINT) AS n_orders FROM ob),
-             |bc AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS nb FROM ob GROUP BY 1),
+             |bc AS MATERIALIZED (SELECT b, CAST(COUNT(*) AS BIGINT) AS nb FROM ob GROUP BY 1),
              |pr AS (
              |  SELECT x.b AS brand_a, y.b AS brand_b,
              |    CAST(COUNT(*) AS BIGINT) AS n_both

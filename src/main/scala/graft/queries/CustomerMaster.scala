@@ -221,11 +221,11 @@ object CustomerMaster {
            |  SELECT c_custkey, c_name, c_mktsegment, c_nationkey, c_acctbal,
            |    $synthEmailSql AS email
            |  FROM customer),
-           |based AS (
+           |based AS MATERIALIZED (
            |  SELECT *, email IS NOT NULL AND
            |      COUNT(*) OVER (PARTITION BY email) > 1 AS is_potential_duplicate
            |  FROM base),
-           |fam AS (
+           |fam AS MATERIALIZED (
            |  SELECT c_custkey AS child_id, c_custkey - c_custkey % 10 AS parent_id
            |  FROM customer
            |  WHERE c_custkey % 10 >= 8

@@ -98,7 +98,7 @@ object DataQuestions {
         q1.unionByName(q2).unionByName(q3)
       },
       Some(
-        s"""WITH cm AS (${CustomerMaster.masterSql}),
+        s"""WITH cm AS MATERIALIZED (${CustomerMaster.masterSql}),
            |${FamilyEdges.behavioralSqlCtes},
            |beh AS (
            |  SELECT parent_customer_id AS b_parent,
@@ -209,7 +209,7 @@ object DataQuestions {
             col("r.n_checked"), col("r.violations"),
             (col("r.violations") === 0).as("ok"))
       },
-      Some("""WITH o AS (
+      Some("""WITH o AS MATERIALIZED (
              |  SELECT COUNT(*) AS n, COUNT(*) - COUNT(DISTINCT o_orderkey) AS dup_key,
              |    COUNT(*) FILTER (WHERE o_custkey IS NULL) AS null_cust,
              |    COUNT(*) FILTER (WHERE o_totalprice <= 0) AS bad_price
@@ -223,14 +223,14 @@ object DataQuestions {
              |    SELECT 1 FROM customer c2
              |    WHERE c2.c_custkey IS NOT NULL
              |      AND c2.c_custkey = o2.o_custkey)),
-             |e AS (
+             |e AS MATERIALIZED (
              |  SELECT COUNT(*) AS n, COUNT(*) - COUNT(DISTINCT event_id) AS dup_key,
              |    COUNT(*) FILTER (WHERE event_type IS NULL) AS null_type,
              |    COUNT(*) FILTER (WHERE event_type NOT IN
              |      ('click','error','purchase','signup','view')) AS bad_type,
              |    COUNT(*) FILTER (WHERE value < 0) AS neg_value
              |  FROM events),
-             |c AS (
+             |c AS MATERIALIZED (
              |  SELECT COUNT(*) AS n, COUNT(*) - COUNT(DISTINCT c_custkey) AS dup_key,
              |    COUNT(*) FILTER (WHERE c_mktsegment IS NULL) AS null_seg
              |  FROM customer)

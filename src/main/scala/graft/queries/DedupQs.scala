@@ -13,7 +13,7 @@ object DedupQs {
 
   // Shared oracle CTEs: distinct 3-gram shingles per doc.
   private[queries] val shinglesCte =
-    """sh AS (
+    """sh AS MATERIALIZED (
       |  SELECT DISTINCT doc_id, unnest(list_transform(
       |    range(greatest(len(string_split(text, ' ')) - 2, 0)),
       |    i -> array_to_string(string_split(text, ' ')[i+1:i+3], ' '))) AS shingle
@@ -37,7 +37,7 @@ object DedupQs {
        |  SELECT doc_id, i AS bit,
        |    SUM(((($hx - CASE WHEN $hx >= 97 THEN 87 ELSE 48 END) >> (i // 32)) & 1) * 2 - 1) AS votes
        |  FROM toks, range(64) t(i) WHERE tok <> '' GROUP BY 1, 2),
-       |sig AS (
+       |sig AS MATERIALIZED (
        |  SELECT doc_id,
        |$bandCols
        |  FROM votes GROUP BY doc_id),
@@ -61,20 +61,20 @@ object DedupQs {
      |    ('0x' || substr(h, 1, 8))::BIGINT AS x1,
      |    ('0x' || substr(h, 9, 8))::BIGINT AS x2
      |  FROM (SELECT doc_id, md5(shingle) AS h FROM sh)),
-     |mh AS (
+     |mh AS MATERIALIZED (
      |  SELECT doc_id,
      |${Dedup.minhashMinsSql(8)}
      |  FROM lanes GROUP BY doc_id),
-     |bands AS (
+     |bands AS MATERIALIZED (
      |${(0 until 4).map(b =>
          s"  SELECT doc_id, $b AS band, CAST(mh_${2 * b} AS VARCHAR) || '|' || CAST(mh_${2 * b + 1} AS VARCHAR) AS sig FROM mh")
          .mkString("\n  UNION ALL\n")}),
-     |cands AS (
+     |cands AS MATERIALIZED (
      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_bands
      |  FROM bands a JOIN bands b
      |    ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
      |  GROUP BY 1, 2),
-     |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
+     |sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
      |inter AS (
      |  SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
      |  FROM cands c
@@ -324,21 +324,21 @@ object DedupQs {
     // containment runs over SURVIVORS of the other gates (pregate), so a
     // quality-dropped doc can't take a good doc down with it; rarity (df)
     // is measured on the surviving corpus too, mirroring the Spark side
-    val gatedCte = if (!containment) s"gated AS (\n  $gateSelect)" else
-      s"""pregate AS (
+    val gatedCte = if (!containment) s"gated AS MATERIALIZED (\n  $gateSelect)" else
+      s"""pregate AS MATERIALIZED (
          |  $gateSelect),
-         |sh AS (
+         |sh AS MATERIALIZED (
          |  SELECT DISTINCT doc_id, unnest(list_transform(
          |    range(greatest(len(string_split(text, ' ')) - 2, 0)),
          |    i -> array_to_string(string_split(text, ' ')[i+1:i+3], ' '))) AS shingle
          |  FROM documents WHERE len(string_split(text, ' ')) >= 3
          |    AND doc_id IN (SELECT doc_id FROM pregate)),
          |rare AS (SELECT shingle FROM sh GROUP BY 1 HAVING COUNT(*) <= 4),
-         |rs AS (SELECT doc_id, shingle FROM sh JOIN rare USING (shingle)),
-         |ccands AS (
+         |rs AS MATERIALIZED (SELECT doc_id, shingle FROM sh JOIN rare USING (shingle)),
+         |ccands AS MATERIALIZED (
          |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          |  FROM rs a JOIN rs b ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-         |csizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
+         |csizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
          |cinter AS (
          |  SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
          |  FROM ccands c
@@ -358,7 +358,7 @@ object DedupQs {
          |    WHEN ca >= 0.8 AND cb >= 0.8 THEN greatest(id_a, id_b)
          |    WHEN ca >= 0.8 THEN id_a ELSE id_b END AS doc_id
          |  FROM cont WHERE ca >= 0.8 OR cb >= 0.8),
-         |gated AS (
+         |gated AS MATERIALIZED (
          |  SELECT * FROM pregate
          |  WHERE doc_id NOT IN (SELECT doc_id FROM cont_drop))""".stripMargin
     s"""WITH ${curationGateCtes(gatedCte)},
@@ -401,7 +401,7 @@ object DedupQs {
          |    AND doc_id IN (SELECT doc_id FROM rep WHERE NOT repetitive)
          |    AND doc_id IN (SELECT doc_id FROM surp WHERE NOT unusual)
          |    AND doc_id NOT IN (SELECT doc_id FROM near_drop)""".stripMargin
-    s"""WITH ${curationGateCtes(s"gated AS (\n  $gateSelect)")},
+    s"""WITH ${curationGateCtes(s"gated AS MATERIALIZED (\n  $gateSelect)")},
        |${TextAnalysis.dsirModelCtesSql("d",
             s"lang = 'en' AND ${TextAnalysis.qualityScoreSql("text")} >= 0.8",
             "documents")},
@@ -409,7 +409,7 @@ object DedupQs {
        |  SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_words,
        |    round(CAST(SUM(cnt * lam) AS DOUBLE), 6) AS dsir_score
        |  FROM ddb JOIN dlam USING (b) GROUP BY 1),
-       |dsel AS (
+       |dsel AS MATERIALIZED (
        |  SELECT g.doc_id, g.source, g.split, g.n_tokens, dd.n_words, dd.dsir_score
        |  FROM gated g JOIN dd USING (doc_id) WHERE g.split = 'train'),
        |dti AS (SELECT dsir_score, CAST(SUM(n_words) AS BIGINT) AS vt
@@ -420,7 +420,7 @@ object DedupQs {
        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
        |    AS tier_before
        |  FROM dti),
-       |dj AS (
+       |dj AS MATERIALIZED (
        |  SELECT dsel.*, tier_before, vt FROM dsel JOIN dtt USING (dsir_score)),
        |dbd AS (
        |  SELECT *, SUM(n_words) OVER (PARTITION BY dsir_score
@@ -501,12 +501,12 @@ object DedupQs {
           col("containment_a"), col("containment_b"), col("contained")),
       Some(s"""WITH $shinglesCte,
               |rare AS (SELECT shingle FROM sh GROUP BY 1 HAVING COUNT(*) <= 4),
-              |rs AS (SELECT doc_id, shingle FROM sh JOIN rare USING (shingle)),
-              |cands AS (
+              |rs AS MATERIALIZED (SELECT doc_id, shingle FROM sh JOIN rare USING (shingle)),
+              |cands AS MATERIALIZED (
               |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_shared_rare
               |  FROM rs a JOIN rs b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
               |  GROUP BY 1, 2),
-              |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
+              |sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
               |inter AS (
               |  SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
               |  FROM cands c
@@ -544,21 +544,21 @@ object DedupQs {
               |    ('0x' || substr(h, 1, 8))::BIGINT AS x1,
               |    ('0x' || substr(h, 9, 8))::BIGINT AS x2
               |  FROM (SELECT doc_id, md5(shingle) AS h FROM sh)),
-              |mh AS (
+              |mh AS MATERIALIZED (
               |  SELECT doc_id,
               |${Dedup.minhashMinsSql(8)}
               |  FROM lanes GROUP BY doc_id),
-              |bands AS (
+              |bands AS MATERIALIZED (
               |${(0 until 4).map(b =>
                   s"  SELECT doc_id, $b AS band, CAST(mh_${2 * b} AS VARCHAR) || '|' || CAST(mh_${2 * b + 1} AS VARCHAR) AS sig FROM mh")
                   .mkString("\n  UNION ALL\n")}),
-              |cands AS (
+              |cands AS MATERIALIZED (
               |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_bands
               |  FROM bands a JOIN bands b
               |    ON a.band = b.band AND a.sig = b.sig
               |  WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
               |  GROUP BY 1, 2),
-              |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
+              |sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
               |inter AS (
               |  SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
               |  FROM cands c
@@ -648,15 +648,15 @@ object DedupQs {
       },
       Some(
         s"""WITH RECURSIVE $simhash64CtesSql,
-           |np AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-           |uedges AS (
+           |np AS MATERIALIZED (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
+           |uedges AS MATERIALIZED (
            |  SELECT id_a AS src, id_b AS dst FROM np
            |  UNION SELECT id_b, id_a FROM np),
            |reach(id, r) AS (
            |  SELECT DISTINCT src, src FROM uedges
            |  UNION
            |  SELECT reach.id, e.dst FROM reach JOIN uedges e ON reach.r = e.src),
-           |comps AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
+           |comps AS MATERIALIZED (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
            |sized AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM comps GROUP BY 1)
            |SELECT id AS doc_id, cluster_id, cluster_size, id = cluster_id AS is_keeper
            |FROM comps JOIN sized USING (cluster_id)""".stripMargin)),
@@ -694,15 +694,15 @@ object DedupQs {
       },
       Some(
         s"""WITH RECURSIVE $simhash64CtesSql,
-           |np AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-           |uedges AS (
+           |np AS MATERIALIZED (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
+           |uedges AS MATERIALIZED (
            |  SELECT id_a AS src, id_b AS dst FROM np
            |  UNION SELECT id_b, id_a FROM np),
            |reach(id, r) AS (
            |  SELECT DISTINCT src, src FROM uedges
            |  UNION
            |  SELECT reach.id, e.dst FROM reach JOIN uedges e ON reach.r = e.src),
-           |comps AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
+           |comps AS MATERIALIZED (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
            |sized AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM comps GROUP BY 1),
            |cl AS (SELECT id AS doc_id, cluster_size
            |       FROM comps JOIN sized USING (cluster_id))
@@ -764,19 +764,19 @@ object DedupQs {
       },
       Some(
         s"""WITH RECURSIVE $simhash64CtesSql,
-           |np AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-           |uedges AS (
+           |np AS MATERIALIZED (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
+           |uedges AS MATERIALIZED (
            |  SELECT id_a AS src, id_b AS dst FROM np
            |  UNION SELECT id_b, id_a FROM np),
            |reach(id, r) AS (
            |  SELECT DISTINCT src, src FROM uedges
            |  UNION
            |  SELECT reach.id, e.dst FROM reach JOIN uedges e ON reach.r = e.src),
-           |comps AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
+           |comps AS MATERIALIZED (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
            |sized AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM comps GROUP BY 1),
            |cl AS (SELECT id AS doc_id, cluster_size
            |       FROM comps JOIN sized USING (cluster_id)),
-           |t AS (
+           |t AS MATERIALIZED (
            |  SELECT d.doc_id, d.lang,
            |    CAST(1000000 // COALESCE(cl.cluster_size, 1) AS BIGINT)
            |      AS weight_ppm,
@@ -786,8 +786,8 @@ object DedupQs {
            |    ${graft.ops.TextAnalysis.hashUnitSql("d.doc_id", "softcur")} AS h
            |  FROM documents d LEFT JOIN cl USING (doc_id)
            |  WHERE d.lang IS NOT NULL AND d.text IS NOT NULL),
-           |sz AS (SELECT lang, SUM(eff_tokens_ppm) AS s FROM t GROUP BY 1),
-           |ord AS (
+           |sz AS MATERIALIZED (SELECT lang, SUM(eff_tokens_ppm) AS s FROM t GROUP BY 1),
+           |ord AS MATERIALIZED (
            |  SELECT lang, s,
            |    CAST(row_number() OVER (ORDER BY s, lang) AS BIGINT) AS i,
            |    (SELECT COUNT(*) FROM sz) AS l
@@ -850,12 +850,12 @@ object DedupQs {
              |    GROUP BY 1) s ON s.node = nd.node)""".stripMargin
         }.mkString(",\n")
         s"""WITH $simhash64CtesSql,
-           |np AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-           |e AS (SELECT id_a AS src, id_b AS dst FROM np
+           |np AS MATERIALIZED (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
+           |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM np
            |      UNION ALL SELECT id_b, id_a FROM np),
-           |deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY 1),
-           |nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-           |nn AS (SELECT COUNT(*) AS n FROM nd),
+           |deg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM e GROUP BY 1),
+           |nd AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
+           |nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nd),
            |r0 AS (SELECT node, 1000000000000 // n AS r FROM nd CROSS JOIN nn),
            |$rounds
            |SELECT node AS doc_id, CAST(r AS BIGINT) AS rank_e12 FROM r8""".stripMargin
@@ -889,8 +889,8 @@ object DedupQs {
       },
       Some(
         s"""WITH RECURSIVE $simhash64CtesSql,
-           |np AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-           |uedges AS (
+           |np AS MATERIALIZED (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
+           |uedges AS MATERIALIZED (
            |  SELECT id_a AS src, id_b AS dst FROM np
            |  UNION SELECT id_b, id_a FROM np),
            |reach(id, r) AS (
@@ -944,13 +944,13 @@ object DedupQs {
              |    PARTITION BY nid ORDER BY cnt DESC, lbl) = 1)""".stripMargin
         }.mkString(",\n")
         s"""WITH $simhash64CtesSql,
-           |np AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-           |sym AS (
+           |np AS MATERIALIZED (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
+           |sym AS MATERIALIZED (
            |  SELECT id_a AS src, id_b AS dst FROM np
            |  UNION SELECT id_b, id_a FROM np),
-           |nd AS (SELECT src AS id FROM sym UNION SELECT dst FROM sym),
+           |nd AS MATERIALIZED (SELECT src AS id FROM sym UNION SELECT dst FROM sym),
            |-- self-vote rows: the deterministic oscillation damper
-           |uedges AS (SELECT * FROM sym UNION SELECT id, id FROM nd),
+           |uedges AS MATERIALIZED (SELECT * FROM sym UNION SELECT id, id FROM nd),
            |l0 AS (SELECT id, id AS lbl FROM nd),
            |$rounds
            |SELECT id AS doc_id, lbl AS community_id,
@@ -995,7 +995,7 @@ object DedupQs {
              |  JOIN k$i a ON e.src = a.id JOIN k$i b ON e.dst = b.id)""".stripMargin
         }.mkString(",\n")
         s"""WITH $simhash64CtesSql,
-           |np AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
+           |np AS MATERIALIZED (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
            |e0 AS MATERIALIZED (
            |  SELECT id_a AS src, id_b AS dst FROM np
            |  UNION SELECT id_b, id_a FROM np),
@@ -1035,7 +1035,7 @@ object DedupQs {
       Some(
         s"""WITH $simhash64CtesSql,
            |np AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-           |ue AS (
+           |ue AS MATERIALIZED (
            |  SELECT LEAST(id_a, id_b) AS a, GREATEST(id_a, id_b) AS b
            |  FROM np WHERE id_a <> id_b GROUP BY 1, 2),
            |nd AS (SELECT a AS id FROM ue UNION SELECT b FROM ue),
@@ -1043,7 +1043,7 @@ object DedupQs {
            |  SELECT id, CAST(COUNT(*) AS BIGINT) AS degree
            |  FROM (SELECT a AS id FROM ue UNION ALL SELECT b FROM ue)
            |  GROUP BY 1),
-           |tri AS (
+           |tri AS MATERIALIZED (
            |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
            |  FROM ue e1 JOIN ue e2 ON e2.a = e1.b
            |  JOIN ue e3 ON e3.a = e1.a AND e3.b = e2.b),
@@ -1160,10 +1160,10 @@ object DedupQs {
           .select(col("id_a"), col("id_b"), col("jaccard"))
       },
       Some(s"""WITH $shinglesCte,
-              |ds AS (
+              |ds AS MATERIALIZED (
               |  SELECT sh.doc_id, shingle, source FROM sh
               |  JOIN documents USING (doc_id)),
-              |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM ds GROUP BY 1),
+              |sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n_sh FROM ds GROUP BY 1),
               |inter AS (
               |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
               |  FROM ds a JOIN ds b
@@ -1189,16 +1189,16 @@ object DedupQs {
         .select(col("id_a"), col("id_b"), col("n_inter"),
           col("n_a"), col("n_b"), col("jaccard")),
       Some(s"""WITH $shinglesCte,
-             |sz AS (SELECT doc_id, COUNT(*) AS n_tok FROM sh GROUP BY 1),
+             |sz AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n_tok FROM sh GROUP BY 1),
              |dfq AS (SELECT shingle, COUNT(*) AS dfq FROM sh GROUP BY 1),
              |rnk AS (SELECT t.doc_id, t.shingle,
              |    row_number() OVER (PARTITION BY t.doc_id
              |                       ORDER BY f.dfq, t.shingle) AS rn
              |  FROM sh t JOIN dfq f ON t.shingle = f.shingle),
-             |pref AS (SELECT r.doc_id, r.shingle, s.n_tok, r.rn
+             |pref AS MATERIALIZED (SELECT r.doc_id, r.shingle, s.n_tok, r.rn
              |  FROM rnk r JOIN sz s ON r.doc_id = s.doc_id
              |  WHERE r.rn <= s.n_tok - (s.n_tok * 1 + 1) // 2 + 1),
-             |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+             |cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
              |  FROM pref a JOIN pref b
              |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
              |  WHERE b.n_tok * 2 >= a.n_tok * 1 AND a.n_tok * 2 >= b.n_tok * 1
@@ -1234,24 +1234,24 @@ object DedupQs {
     Q("d11_cosine_allpairs",
       (s, d) => Dedup.cosinePrefixPairs(Tables.documents(s, d),
         "doc_id", "text", tauNum = 3, tauDen = 5, shingleK = 3),
-      Some("""WITH de AS (SELECT doc_id, text FROM documents),
+      Some("""WITH de AS MATERIALIZED (SELECT doc_id, text FROM documents),
              |toks AS (SELECT doc_id, unnest(list_transform(
              |    range(greatest(len(string_split(text, ' ')) - 2, 0)),
              |    i -> array_to_string(string_split(text, ' ')[i + 1:i + 3], ' ')))
              |    AS word
              |  FROM de),
-             |tf AS (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tfc
+             |tf AS MATERIALIZED (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tfc
              |  FROM toks WHERE word <> '' GROUP BY 1, 2),
              |dfq AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS dfq
              |  FROM tf GROUP BY 1),
              |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM de),
-             |wp AS (SELECT doc_id, word, wi FROM (
+             |wp AS MATERIALIZED (SELECT doc_id, word, wi FROM (
              |    SELECT doc_id, word, tfc * CAST(round(ln(
              |        CAST(n_docs AS DOUBLE) / CAST(dfq AS DOUBLE)) * 1000, 0)
              |        AS BIGINT) AS wi
              |    FROM tf JOIN dfq USING (word) CROSS JOIN n)
              |  WHERE wi > 0),
-             |n2 AS (SELECT doc_id, CAST(SUM(wi * wi) AS BIGINT) AS n2
+             |n2 AS MATERIALIZED (SELECT doc_id, CAST(SUM(wi * wi) AS BIGINT) AS n2
              |  FROM wp GROUP BY 1),
              |dots AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              |    CAST(SUM(a.wi * b.wi) AS BIGINT) AS dot
@@ -1279,13 +1279,13 @@ object DedupQs {
     Q("d12_source_overlap",
       (s, d) => Dedup.sourceOverlap(Tables.documents(s, d),
         "source", "text", k = 3, floorPpm = 100000L),
-      Some("""WITH sh AS (
+      Some("""WITH sh AS MATERIALIZED (
              |  SELECT DISTINCT source, unnest(list_transform(
              |    range(greatest(len(string_split(text, ' ')) - 2, 0)),
              |    i -> array_to_string(string_split(text, ' ')[i+1:i+3], ' ')))
              |    AS shingle
              |  FROM documents WHERE len(string_split(text, ' ')) >= 3),
-             |tot AS (
+             |tot AS MATERIALIZED (
              |  SELECT d.source, CAST(COALESCE(t.n_sh, 0) AS BIGINT) AS n_sh
              |  FROM (SELECT DISTINCT source FROM documents) d
              |  LEFT JOIN (SELECT source, COUNT(*) AS n_sh FROM sh

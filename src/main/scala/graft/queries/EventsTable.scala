@@ -299,7 +299,7 @@ object EventsTable {
 
   /** EV1 oracle body (a full SELECT — EV2 embeds it as a CTE). */
   private[queries] val reservationEventsSql: String =
-    s"""WITH res AS (
+    s"""WITH res AS MATERIALIZED (
        |  SELECT o_orderkey, o_custkey, o_orderdate, o_orderpriority,
        |    $resNameLadderSql AS event_name
        |  FROM orders WHERE o_orderkey % 23 <> 11),

@@ -91,7 +91,7 @@ object Experiments {
       .mkString("\nUNION ALL\n")
     s"""$cohorts,
        |uni AS ($uni),
-       |e AS (
+       |e AS MATERIALIZED (
        |  SELECT user_id, entry_flag, MIN(entry_us) AS entry_us,
        |    CASE WHEN entry_flag = 'inactive_24h' THEN 'winback_2024_01'
        |      ELSE 'member_retention_2024_01' END AS experiment_id,
@@ -232,13 +232,13 @@ object Experiments {
         s"""WITH $entriesCtes,
            |ev AS (SELECT user_id, event_type, ${Q.usecsSql("ts")} AS us
            |       FROM events),
-           |j AS (
+           |j AS MATERIALIZED (
            |  SELECT e.user_id, e.experiment_id, e.ab_group,
            |    ev.event_type, ev.us
            |  FROM e JOIN ev USING (user_id) WHERE ev.us > e.entry_us),
-           |s1 AS (SELECT user_id, experiment_id, ab_group, MIN(us) AS t1
+           |s1 AS MATERIALIZED (SELECT user_id, experiment_id, ab_group, MIN(us) AS t1
            |  FROM j WHERE event_type = 'view' GROUP BY 1, 2, 3),
-           |s2 AS (SELECT j.user_id, j.experiment_id, j.ab_group,
+           |s2 AS MATERIALIZED (SELECT j.user_id, j.experiment_id, j.ab_group,
            |    MIN(us) AS t2
            |  FROM j JOIN s1 USING (user_id, experiment_id, ab_group)
            |  WHERE event_type = 'click' AND us > t1 AND us <= t1 + $w

@@ -122,7 +122,7 @@ object Explodes {
             col("o_totalprice"))).as("other"))
         .selectExpr("o_custkey",
           "stack(3, 'urgent', urgent, 'high', high, 'other', other) AS (prio, revenue)"),
-      Some(s"""WITH wide AS (SELECT o_custkey,
+      Some(s"""WITH wide AS MATERIALIZED (SELECT o_custkey,
               |  ${Q.dsumSql("CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice END")} AS urgent,
               |  ${Q.dsumSql("CASE WHEN o_orderpriority = '2-HIGH' THEN o_totalprice END")} AS high,
               |  ${Q.dsumSql("CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN o_totalprice END")} AS other

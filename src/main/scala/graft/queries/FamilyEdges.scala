@@ -246,7 +246,7 @@ object FamilyEdges {
            |  SELECT n.node, sd.user_id IS NOT NULL AS is_seed
            |  FROM (SELECT src AS node FROM e UNION SELECT dst FROM e) n
            |  LEFT JOIN sd ON sd.user_id = n.node),
-           |ss AS (SELECT COUNT(*) AS ns FROM nd WHERE is_seed),
+           |ss AS MATERIALIZED (SELECT COUNT(*) AS ns FROM nd WHERE is_seed),
            |r0 AS (
            |  SELECT nd.node, nd.is_seed,
            |    CASE WHEN nd.is_seed THEN 1000000000000 // ss.ns

@@ -19,7 +19,7 @@ object FlagQs {
   /** Oracle-side per-user flag evaluation at a parameterized clock —
     * mirrors `FlagRules.active` exactly (shared by u1 and u1b). */
   private[queries] def flagsSql(asOf: Long): String =
-    s"""WITH per_user AS (
+    s"""WITH per_user AS MATERIALIZED (
        |  SELECT user_id,
        |    MAX(CASE WHEN epoch_us(ts) < $asOf THEN epoch_us(ts) END) AS last_us,
        |    SUM(CASE WHEN epoch_us(ts) >= $asOf - 2592000000000 AND epoch_us(ts) < $asOf
@@ -161,9 +161,9 @@ object FlagQs {
       },
       Some {
         val eligible = graft.flags.FlagPasses.childEligible.map(f => s"'$f'").mkString(", ")
-        s"""WITH f AS (${flagsSql(asOfUs)}),
-           |uni AS (SELECT DISTINCT user_id FROM events WHERE epoch_us(ts) < $asOfUs),
-           |fam AS (
+        s"""WITH f AS MATERIALIZED (${flagsSql(asOfUs)}),
+           |uni AS MATERIALIZED (SELECT DISTINCT user_id FROM events WHERE epoch_us(ts) < $asOfUs),
+           |fam AS MATERIALIZED (
            |  SELECT user_id AS child_id, user_id - user_id % 10 AS parent_id
            |  FROM uni WHERE user_id % 10 >= 8
            |    AND (user_id - user_id % 10) IN (SELECT user_id FROM uni)),
@@ -213,9 +213,9 @@ object FlagQs {
       Some {
         val asOfDay = asOfUs / 86400000000L
         val base = graft.flags.PartyFlags.PartyBaseDay
-        s"""WITH uni AS (
+        s"""WITH uni AS MATERIALIZED (
            |  SELECT DISTINCT user_id FROM events WHERE epoch_us(ts) < $asOfUs),
-           |rsvps_all AS (
+           |rsvps_all AS MATERIALIZED (
            |  SELECT o_orderkey AS party_id, o_custkey + t.i AS attendee_user,
            |    CASE WHEN (o_orderkey + t.i) % 4 = 0 THEN 'no' ELSE 'yes' END AS attending
            |  FROM orders, UNNEST(range(1, CAST(o_orderkey % 3 AS BIGINT) + 1)) AS t(i)
@@ -223,7 +223,7 @@ object FlagQs {
            |yes_counts AS (
            |  SELECT party_id, COUNT(*) AS n_yes FROM rsvps_all
            |  WHERE attending = 'yes' GROUP BY 1),
-           |parties AS (
+           |parties AS MATERIALIZED (
            |  SELECT o_orderkey AS party_id, o_custkey AS host_user,
            |    $base + o_orderkey % 14 AS party_day,
            |    COALESCE(y.n_yes, 0) AS rsvp_yes

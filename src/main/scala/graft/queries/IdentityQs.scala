@@ -40,7 +40,7 @@ object IdentityQs {
   // 9-digit suffixes are within levenshtein 1. Suppliers offset to a disjoint
   // id space.
   private val edgeSqlCte =
-    """edges_raw AS (
+    """edges_raw AS MATERIALIZED (
       |  SELECT c_custkey AS src, 1099511627776 + s_suppkey AS dst
       |  FROM customer JOIN supplier
       |    ON CAST(regexp_extract(c_name, '#([0-9]+)', 1) AS BIGINT) % 100
@@ -157,15 +157,15 @@ object IdentityQs {
                | WHEN $key % 10 = 8 THEN 'climb.org'
                | ELSE 'yahoo.met' END""".stripMargin.replaceAll("\n", " ")
         s"""WITH RECURSIVE
-           |c AS (
+           |c AS MATERIALIZED (
            |  SELECT c_custkey AS id, regexp_extract(c_name, '#([0-9]+)', 1) AS num,
            |    ${Normalize.fixDomainTyposSql(domSql("c_custkey", 0))} AS dom
            |  FROM customer),
-           |s AS (
+           |s AS MATERIALIZED (
            |  SELECT 1099511627776 + s_suppkey AS id, regexp_extract(s_name, '#([0-9]+)', 1) AS num,
            |    ${Normalize.fixDomainTyposSql(domSql("(s_suppkey // 10)", 1))} AS dom
            |  FROM supplier),
-           |edges_raw AS (
+           |edges_raw AS MATERIALIZED (
            |  SELECT c.id AS src, s.id AS dst
            |  FROM c JOIN s
            |    ON CAST(c.num AS BIGINT) % 100 = CAST(s.num AS BIGINT) % 100
@@ -212,7 +212,7 @@ object IdentityQs {
               |  SELECT CAST(c_custkey AS BIGINT) AS id,
               |    ${CustomerMaster.synthEmailSql} AS email
               |  FROM customer),
-              |ranked AS (
+              |ranked AS MATERIALIZED (
               |  SELECT id, email,
               |    CAST(row_number() OVER (ORDER BY email, id) AS BIGINT) AS rnk
               |  FROM recs WHERE email IS NOT NULL)
@@ -278,7 +278,7 @@ object IdentityQs {
               |      AS num
               |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
               |  WHERE (${CustomerMaster.synthEmailSql}) IS NULL),
-              |sup AS (
+              |sup AS MATERIALIZED (
               |  SELECT s_suppkey, s_acctbal,
               |    regexp_extract(lower(trim(s_name)), '#([0-9]+)', 1) AS num,
               |    's' || CAST(s_suppkey AS VARCHAR) || '@supplier.net' AS email

@@ -382,7 +382,7 @@ object Joins {
             round(col("linked_refunds") + col("total_unmatched") *
               (col("linked_refunds") / col("total_linked")), 4).as("effective_refunds"))
       },
-      Some(s"""WITH linked AS (
+      Some(s"""WITH linked AS MATERIALIZED (
               |  SELECT e_id, e_value, p_cat FROM (
               |    SELECT e.event_id AS e_id, e.value AS e_value,
               |           CAST(json_extract_string(p.props, '$$.k') AS BIGINT) % 5 AS p_cat,
@@ -394,7 +394,7 @@ object Joins {
               |     AND epoch_us(p.ts) >= epoch_us(e.ts) - 604800000000
               |    QUALIFY row_number() OVER (PARTITION BY e.event_id
               |      ORDER BY epoch_us(p.ts) DESC, p.event_id) = 1)),
-              |by_cat AS (
+              |by_cat AS MATERIALIZED (
               |  SELECT p_cat AS category, ${Q.dsumSql("e_value")} AS linked_refunds
               |  FROM linked GROUP BY 1),
               |tot AS (SELECT ${Q.dsumSql("linked_refunds")} AS total_linked FROM by_cat),

@@ -82,7 +82,7 @@ object MultimodalQs {
              |  FROM (SELECT doc_id, frame_no,
              |          substring(text, CAST(frame_no * 256 + 1 AS INT), 256) AS f
              |        FROM fr)),
-             |cells AS (
+             |cells AS MATERIALIZED (
              |  SELECT doc_id, frame_no, h1, h2, h3, h4,
              |    CAST(h1 // 4 AS VARCHAR) || '|' || CAST(h2 // 4 AS VARCHAR) || '|' ||
              |    CAST(h3 // 4 AS VARCHAR) || '|' || CAST(h4 // 4 AS VARCHAR) AS cell

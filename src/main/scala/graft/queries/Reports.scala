@@ -132,7 +132,7 @@ object Reports {
             .otherwise(col("previous_checkins_count").cast("string"))
             .as("checkins_bucket"))
       },
-      Some(s"""WITH ev AS (
+      Some(s"""WITH ev AS MATERIALIZED (
               |  SELECT *, ${Q.usecsSql("ts")} AS us FROM events
               |  WHERE ${Q.usecsSql("ts")} < $asOfUs),
               |fm AS (
@@ -278,7 +278,7 @@ object Reports {
               |         ELSE 'Membership Check-in' END AS pass_type
               |  FROM events
               |  WHERE event_type = 'view' AND ${Q.usecsSql("ts")} < $asOfUs),
-              |dp AS (SELECT * FROM v WHERE pass_type <> 'Membership Check-in'),
+              |dp AS MATERIALIZED (SELECT * FROM v WHERE pass_type <> 'Membership Check-in'),
               |g AS (
               |  SELECT fam, date,
               |    CAST(COUNT(DISTINCT user_id) AS BIGINT) AS family_size
@@ -352,7 +352,7 @@ object Reports {
                 .otherwise("customer_request")).as("revoked_method"),
             col("n_opt_ins"), col("n_ledger_rows"))
       },
-      Some(s"""WITH led AS (
+      Some(s"""WITH led AS MATERIALIZED (
               |  SELECT user_id, event_id, ${Q.usecsSql("ts")} AS us,
               |    CASE WHEN event_type = 'signup' THEN 'opt_in'
               |         ELSE 'revoke' END AS action
@@ -433,10 +433,10 @@ object Reports {
           .withColumn("retained_pct_milli",
             expr("n_active * 100000 div cohort_size"))
       },
-      Some("""WITH ev AS (
+      Some("""WITH ev AS MATERIALIZED (
              |  SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS w
              |  FROM events),
-             |f AS (SELECT user_id, MIN(w) AS cohort_week FROM ev GROUP BY 1),
+             |f AS MATERIALIZED (SELECT user_id, MIN(w) AS cohort_week FROM ev GROUP BY 1),
              |act AS (SELECT DISTINCT user_id, w FROM ev),
              |cs AS (SELECT cohort_week, COUNT(*) AS cohort_size
              |       FROM f GROUP BY 1),
@@ -506,7 +506,7 @@ object Reports {
           .withColumn("insufficient_funds_rate_pct_milli",
             expr("unique_with_insuff_funds * 100000 div active_memberships"))
       },
-      Some("""WITH m AS (
+      Some("""WITH m AS MATERIALIZED (
              |  SELECT o_orderkey AS membership_id, o_orderpriority AS pr,
              |    o_totalprice AS tp
              |  FROM orders WHERE o_orderstatus = 'O'),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** Scans, projections, filters, predicates (SURVEY.md §2.1–2.2).
@@ -11,6 +12,12 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/data_pipeline/upload_data.py:69-95`).
   */
 object ScanFilter {
+
+  /** A fresh path for one call's round-trip table, in a dir deleted at JVM
+    * exit (not sooner: the query returns a lazy frame over it). Two
+    * processes over one scale dir never write or recover the same path. */
+  private def roundTripPath(name: String): String =
+    s"${GraftBridge.tempDir(s"graft_$name")}/t"
 
   val qs: Seq[Q] = Seq(
 
@@ -31,7 +38,7 @@ object ScanFilter {
     Q("s2_csv_roundtrip",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val path = s"${sys.props("java.io.tmpdir")}/graft_s2_csv_${Integer.toHexString(d.hashCode)}"
+        val path = roundTripPath("s2_csv")
         Tables.write(Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal")), path, "csv")
         val schema = StructType(Seq(
@@ -49,7 +56,7 @@ object ScanFilter {
     Q("s2b_json_roundtrip",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val path = s"${sys.props("java.io.tmpdir")}/graft_s2b_json_${Integer.toHexString(d.hashCode)}"
+        val path = roundTripPath("s2b_json")
         Tables.write(Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")), path, "json")
         val schema = StructType(Seq(
@@ -66,7 +73,7 @@ object ScanFilter {
     // (pushdown/pruning work the same as parquet).
     Q("s2c_orc_roundtrip",
       (s, d) => {
-        val path = s"${sys.props("java.io.tmpdir")}/graft_s2c_orc_${Integer.toHexString(d.hashCode)}"
+        val path = roundTripPath("s2c_orc")
         Tables.write(Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag")), path, "orc")
         s.read.orc(path)
@@ -87,7 +94,7 @@ object ScanFilter {
     Q("s6_zorder_roundtrip",
       (s, d) => {
         import graft.ops.Layout
-        val path = s"${sys.props("java.io.tmpdir")}/graft_s6_z_${Integer.toHexString(d.hashCode)}"
+        val path = roundTripPath("s6_z")
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("source"), col("n_chars"))
         Tables.write(Layout.zorderBy(docs,
@@ -109,7 +116,7 @@ object ScanFilter {
     // (PartitionFilters in the plan), not the whole table.
     Q("s3_snapshot_prune",
       (s, d) => {
-        val path = s"${sys.props("java.io.tmpdir")}/graft_s3_part_${Integer.toHexString(d.hashCode)}"
+        val path = roundTripPath("s3_part")
         // repartition by the partition column first: one file per month dir
         // instead of (shuffle partitions × months) tiny files — the
         // anti-small-files discipline that matters at warehouse scale.

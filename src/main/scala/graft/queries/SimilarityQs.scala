@@ -79,21 +79,21 @@ object SimilarityQs {
     * the grid constant / rounding / zero-norm guard cannot drift between
     * the two hash gates (both mirror SimilaritySearch.quantizedCentroidScores). */
   private def centroidCosCtes: String =
-    s"""q AS (
+    s"""q AS MATERIALIZED (
        |  SELECT vec_id, label, list_transform(embedding,
        |    x -> CAST(floor(CAST(x AS DOUBLE) * 1024) AS BIGINT)) AS qv
        |  FROM embeddings),
        |cpos AS (
        |  SELECT label, i AS pos, CAST(SUM(qv[i + 1]) AS BIGINT) AS s
        |  FROM q, range($dim) t(i) GROUP BY 1, 2),
-       |cent AS (SELECT label, list(s ORDER BY pos) AS c FROM cpos GROUP BY 1),
+       |cent AS MATERIALIZED (SELECT label, list(s ORDER BY pos) AS c FROM cpos GROUP BY 1),
        |sc AS (
        |  SELECT vec_id, q.label AS label,
        |    CAST((SELECT SUM(qv[i + 1] * c[i + 1]) FROM range($dim) t(i)) AS BIGINT) AS dot,
        |    CAST((SELECT SUM(qv[i + 1] * qv[i + 1]) FROM range($dim) t(i)) AS BIGINT) AS nv,
        |    CAST((SELECT SUM(c[i + 1] * c[i + 1]) FROM range($dim) t(i)) AS BIGINT) AS nc
        |  FROM q JOIN cent USING (label)),
-       |cs AS (
+       |cs AS MATERIALIZED (
        |  SELECT vec_id, label,
        |    CASE WHEN nv = 0 OR nc = 0 THEN 0.0
        |      ELSE round(CAST(dot AS DOUBLE) /
@@ -105,7 +105,7 @@ object SimilarityQs {
     val bandCols = (0 until bands).map { b =>
       s"${srpBandSql(bands, bits, b)} AS b$b"
     }.mkString(",\n")
-    s"""sig AS (
+    s"""sig AS MATERIALIZED (
        |  SELECT vec_id,
        |$bandCols
        |  FROM embeddings)""".stripMargin
@@ -159,7 +159,7 @@ object SimilarityQs {
               |    list_max(list_transform(embedding,
               |      x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS s
               |  FROM embeddings),
-              |codes AS (
+              |codes AS MATERIALIZED (
               |  SELECT vec_id,
               |    CASE WHEN s = 0 THEN list_transform(embedding, x -> CAST(0 AS DOUBLE))
               |         ELSE list_transform(embedding,
@@ -191,7 +191,7 @@ object SimilarityQs {
               |    list_max(list_transform(embedding,
               |      x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS s
               |  FROM embeddings),
-              |codes AS (
+              |codes AS MATERIALIZED (
               |  SELECT vec_id, label,
               |    CASE WHEN s = 0 THEN list_transform(embedding, x -> CAST(0 AS DOUBLE))
               |         ELSE list_transform(embedding,
@@ -373,12 +373,12 @@ object SimilarityQs {
         Tables.embeddings(s, d), "vec_id", "embedding", dim,
         bands = 4, bits = 6, threshold = 0.4),
       Some(s"""WITH RECURSIVE ${srpCandCtes(4, 6)},
-              |np AS (
+              |np AS MATERIALIZED (
               |  SELECT id_a, id_b
               |  FROM cand JOIN embeddings a ON a.vec_id = id_a
               |    JOIN embeddings b ON b.vec_id = id_b
               |  WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.4),
-              |uedges AS (
+              |uedges AS MATERIALIZED (
               |  SELECT id_a AS src, id_b AS dst FROM np
               |  UNION SELECT id_b, id_a FROM np),
               |reach(id, r) AS (
@@ -386,7 +386,7 @@ object SimilarityQs {
               |  UNION
               |  SELECT reach.id, e.dst FROM reach JOIN uedges e ON reach.r = e.src),
               |comps AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
-              |allv AS (
+              |allv AS MATERIALIZED (
               |  SELECT vec_id, COALESCE(cluster_id, vec_id) AS cluster_id
               |  FROM embeddings LEFT JOIN comps ON vec_id = id),
               |sized AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM allv GROUP BY 1)
@@ -437,7 +437,7 @@ object SimilarityQs {
         Tables.embeddings(s, d), "vec_id", "embedding", dim,
         bands = 4, bits = 6, k = 3),
       Some(s"""WITH ${srpCandCtes(4, 6)},
-              |scored AS (
+              |scored AS MATERIALIZED (
               |  SELECT id_a, id_b, ${cosSql("a.embedding", "b.embedding")} AS cos_sim
               |  FROM cand JOIN embeddings a ON a.vec_id = id_a
               |    JOIN embeddings b ON b.vec_id = id_b),
@@ -476,12 +476,12 @@ object SimilarityQs {
           .select(lit(5).as("k"), col("n_hit"),
             round(col("n_hit").cast("double") / 5.0, 6).as("recall"))
       },
-      Some(s"""WITH sig AS (
+      Some(s"""WITH sig AS MATERIALIZED (
               |  SELECT vec_id, ${srpBandSql(1, 4, 0)} AS cell FROM embeddings),
               |q AS (
               |  SELECT embedding AS q_vec, cell AS q_cell
               |  FROM embeddings JOIN sig USING (vec_id) WHERE vec_id = 0),
-              |scored AS (
+              |scored AS MATERIALIZED (
               |  SELECT e.vec_id, sig.cell, ${cosSql("e.embedding", "q_vec")} AS cos_sim,
               |    q_cell FROM embeddings e JOIN sig USING (vec_id), q
               |  WHERE e.vec_id <> 0),
@@ -529,19 +529,19 @@ object SimilarityQs {
               round(col("n_hit").cast("double") / 5.0, 6).as("recall"))
         }.reduce(_ unionByName _)
       },
-      Some(s"""WITH sig AS (
+      Some(s"""WITH sig AS MATERIALIZED (
               |  SELECT vec_id, ${srpBandSql(1, 4, 0)} AS cell FROM embeddings),
               |q AS (
               |  SELECT embedding AS q_vec, cell AS q_cell
               |  FROM embeddings JOIN sig USING (vec_id) WHERE vec_id = 0),
-              |scored AS (
+              |scored AS MATERIALIZED (
               |  SELECT e.vec_id, sig.cell, ${cosSql("e.embedding", "q_vec")} AS cos_sim,
               |    q_cell FROM embeddings e JOIN sig USING (vec_id), q
               |  WHERE e.vec_id <> 0),
               |exact AS (
               |  SELECT vec_id FROM scored
               |  QUALIFY row_number() OVER (ORDER BY cos_sim DESC, vec_id) <= 5),
-              |r AS (SELECT unnest([0, 1, 2]) AS radius),
+              |r AS MATERIALIZED (SELECT unnest([0, 1, 2]) AS radius),
               |ap AS (
               |  SELECT radius, vec_id FROM scored CROSS JOIN r
               |  WHERE bit_count(xor(cell, q_cell)) <= radius
@@ -735,8 +735,8 @@ object SimilarityQs {
           s"    SELECT a.vec_id AS id_a, b.vec_id AS id_b FROM ds a JOIN ds b ON a.b$k = b.b$k AND b.vec_id < a.vec_id")
           .mkString("\n    UNION ALL\n")
         s"""WITH ${srpSigCte(4, 6)},
-           |ds AS (SELECT * FROM sig WHERE vec_id % 5 = 0),
-           |cs AS (SELECT * FROM sig WHERE vec_id % 5 <> 0),
+           |ds AS MATERIALIZED (SELECT * FROM sig WHERE vec_id % 5 = 0),
+           |cs AS MATERIALIZED (SELECT * FROM sig WHERE vec_id % 5 <> 0),
            |cc AS (SELECT DISTINCT id_a, id_b FROM (
            |$bandJoinsCross)),
            |ci AS (SELECT DISTINCT id_a, id_b FROM (
@@ -960,15 +960,15 @@ object SimilarityQs {
            |  SELECT id, CAST(COUNT(*) AS BIGINT) AS deg
            |  FROM (SELECT a AS id FROM ue UNION ALL SELECT b FROM ue)
            |  GROUP BY 1),
-           |kept AS (SELECT id FROM deg WHERE deg <= 64),
+           |kept AS MATERIALIZED (SELECT id FROM deg WHERE deg <= 64),
            |sub AS MATERIALIZED (
            |  SELECT a, b FROM ue
            |  WHERE a IN (SELECT id FROM kept) AND b IN (SELECT id FROM kept)),
-           |deg2 AS (
+           |deg2 AS MATERIALIZED (
            |  SELECT id, CAST(COUNT(*) AS BIGINT) AS deg
            |  FROM (SELECT a AS id FROM sub UNION ALL SELECT b FROM sub)
            |  GROUP BY 1),
-           |adj AS (SELECT a AS v, b AS n FROM sub
+           |adj AS MATERIALIZED (SELECT a AS v, b AS n FROM sub
            |        UNION ALL SELECT b, a FROM sub),
            |cn AS (
            |  SELECT a1.n AS id_a, a2.n AS id_b,

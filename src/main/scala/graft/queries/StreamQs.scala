@@ -190,7 +190,7 @@ object StreamQs {
           .select(col("user_id"), Q.usecs(col("session_start")).as("start_us"),
             col("n_events"))
       },
-      Some("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+      Some("""WITH e AS MATERIALIZED (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
              |m AS (SELECT user_id, event_id, us,
              |  CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w >= 1800000000
              |       THEN 1 ELSE 0 END AS nf
@@ -271,20 +271,20 @@ object StreamQs {
               |    ('0x' || substr(h, 1, 8))::BIGINT AS x1,
               |    ('0x' || substr(h, 9, 8))::BIGINT AS x2
               |  FROM (SELECT doc_id, md5(shingle) AS h FROM sh)),
-              |mh AS (
+              |mh AS MATERIALIZED (
               |  SELECT doc_id,
               |${graft.ops.Dedup.minhashMinsSql(8)}
               |  FROM lanes GROUP BY doc_id),
-              |bands AS (
+              |bands AS MATERIALIZED (
               |${(0 until 4).map(b =>
                    s"  SELECT doc_id, $b AS band, CAST(mh_${2 * b} AS VARCHAR) || '|' || CAST(mh_${2 * b + 1} AS VARCHAR) AS sig FROM mh")
                    .mkString("\n  UNION ALL\n")}),
-              |cands AS (
+              |cands AS MATERIALIZED (
               |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
               |  FROM bands a JOIN bands b
               |    ON a.band = b.band AND a.sig = b.sig AND b.doc_id < a.doc_id
               |  GROUP BY 1, 2),
-              |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
+              |sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
               |inter AS (
               |  SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
               |  FROM cands c

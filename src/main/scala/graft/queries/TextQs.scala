@@ -32,7 +32,7 @@ object TextQs {
       |    range(greatest(len(string_split(text, ' ')) - 4, 0)),
       |    i -> array_to_string(string_split(text, ' ')[i+1:i+5], ' '))) AS shingle
       |  FROM documents WHERE doc_id % 97 = 0 AND len(string_split(text, ' ')) >= 5),
-      |tsh AS (
+      |tsh AS MATERIALIZED (
       |  SELECT DISTINCT doc_id, unnest(list_transform(
       |    range(greatest(len(string_split(text, ' ')) - 4, 0)),
       |    i -> array_to_string(string_split(text, ' ')[i+1:i+5], ' '))) AS shingle
@@ -200,7 +200,7 @@ object TextQs {
       },
       Some("""WITH toks AS (
              |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-             |tf AS (
+             |tf AS MATERIALIZED (
              |  SELECT doc_id, tok AS term, CAST(COUNT(*) AS BIGINT) AS tf
              |  FROM toks WHERE tok <> '' GROUP BY 1, 2),
              |dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
@@ -246,7 +246,7 @@ object TextQs {
              |   unnest(list_transform(range((len(p) + 7) // 8),
              |     i -> array_to_string(p[i*8+1:i*8+8], ' '))) AS passage
              | FROM parts),
-             |keyed AS (SELECT doc_id, idx, passage, md5(passage) AS k FROM pass),
+             |keyed AS MATERIALIZED (SELECT doc_id, idx, passage, md5(passage) AS k FROM pass),
              |freq AS (SELECT k, COUNT(*) AS df FROM keyed GROUP BY 1)
              |SELECT doc_id,
              |  COUNT(*) AS n_passages,
@@ -265,7 +265,7 @@ object TextQs {
     Q("t22_dup_substring_runs",
       (s, d) => TextAnalysis.dupSubstringRuns(
         Tables.documents(s, d), "doc_id", "text", k = 8),
-      Some("""WITH sh AS (
+      Some("""WITH sh AS MATERIALIZED (
              |  SELECT doc_id, unnest(range(len(w) - 7)) AS pos,
              |    unnest(list_transform(range(len(w) - 7),
              |      i -> array_to_string(w[i+1:i+8], ' '))) AS gram
@@ -315,7 +315,7 @@ object TextQs {
     Q("t30_dup_span_scrub",
       (s, d) => TextAnalysis.scrubDupSpans(
         Tables.documents(s, d), "doc_id", "text", k = 8),
-      Some("""WITH sh AS (
+      Some("""WITH sh AS MATERIALIZED (
              |  SELECT doc_id, unnest(range(len(w) - 7)) AS pos,
              |    unnest(list_transform(range(len(w) - 7),
              |      i -> array_to_string(w[i+1:i+8], ' '))) AS gram
@@ -473,7 +473,7 @@ object TextQs {
       Some(s"""WITH ${TextAnalysis.dsirModelCtesSql("",
                 s"lang = 'en' AND ${TextAnalysis.qualityScoreSql("text")} >= 0.8",
                 "documents")},
-              |d AS (
+              |d AS MATERIALIZED (
               |  SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_words,
               |    round(CAST(SUM(cnt * lam) AS DOUBLE), 6) AS dsir_score
               |  FROM db JOIN lam USING (b) GROUP BY 1),
@@ -485,7 +485,7 @@ object TextQs {
               |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
               |    AS tier_before
               |  FROM ti),
-              |j AS (
+              |j AS MATERIALIZED (
               |  SELECT d.doc_id, d.n_words, d.dsir_score, tier_before, vt
               |  FROM d JOIN tt2 USING (dsir_score)),
               |fl AS (
@@ -721,9 +721,9 @@ object TextQs {
       },
       Some(s"""WITH ${graft.ops.TextAnalysis.winnowFingerprintsSql(
                 "doc_id", "text", "documents", 4, 8)},
-              |fps AS (SELECT DISTINCT doc_id, fp FROM wsel),
+              |fps AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM wsel),
               |rare AS (SELECT fp FROM fps GROUP BY fp HAVING COUNT(*) <= 32),
-              |kept AS (SELECT f.doc_id, f.fp FROM fps f JOIN rare r ON f.fp = r.fp)
+              |kept AS MATERIALIZED (SELECT f.doc_id, f.fp FROM fps f JOIN rare r ON f.fp = r.fp)
               |SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_shared
               |FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
               |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin),
@@ -767,13 +767,13 @@ object TextQs {
           .select(col("doc_id"), col("lang"), col("n_tokens"),
             col("cum_tokens"), col("lang_budget"), col("alloc_rule"))
       },
-      Some(s"""WITH RECURSIVE t AS (
+      Some(s"""WITH RECURSIVE t AS MATERIALIZED (
               |  SELECT doc_id, lang, ${TextAnalysis.wsTokensSql("text")} AS n_tokens,
               |    ${TextAnalysis.hashUnitSql("doc_id", "unimax")} AS h
               |  FROM documents
               |  WHERE lang IS NOT NULL AND text IS NOT NULL),
-              |sz AS (SELECT lang, SUM(n_tokens) AS s FROM t GROUP BY 1),
-              |ord AS (
+              |sz AS MATERIALIZED (SELECT lang, SUM(n_tokens) AS s FROM t GROUP BY 1),
+              |ord AS MATERIALIZED (
               |  SELECT lang, s,
               |    CAST(row_number() OVER (ORDER BY s, lang) AS BIGINT) AS i,
               |    (SELECT COUNT(*) FROM sz) AS l

@@ -297,11 +297,11 @@ object WindowQs {
           Q.usecs(col("ts")).as("us")),
         "user_id", "event_type", "us", Seq("view", "click", "purchase"),
         windowUs = 72L * 3600L * 1000000L),
-      Some(s"""WITH e AS (
+      Some(s"""WITH e AS MATERIALIZED (
               |  SELECT user_id, event_type, ${Q.usecsSql("ts")} AS us FROM events),
-              |s1 AS (SELECT user_id, MIN(us) AS t1 FROM e
+              |s1 AS MATERIALIZED (SELECT user_id, MIN(us) AS t1 FROM e
               |  WHERE event_type = 'view' GROUP BY 1),
-              |s2 AS (SELECT e.user_id, MIN(us) AS t2 FROM e JOIN s1 USING (user_id)
+              |s2 AS MATERIALIZED (SELECT e.user_id, MIN(us) AS t2 FROM e JOIN s1 USING (user_id)
               |  WHERE event_type = 'click' AND us > t1
               |    AND us <= t1 + ${72L * 3600L * 1000000L} GROUP BY 1),
               |s3 AS (SELECT e.user_id, MIN(us) AS t3 FROM e JOIN s2 USING (user_id)

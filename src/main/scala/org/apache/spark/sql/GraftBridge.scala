@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Package-private escape hatches into Spark SQL. */
 object GraftBridge {
@@ -10,6 +12,17 @@ object GraftBridge {
     * (graft.plans.AsOfJoin) to the planner. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `ds`, a Dataset whose plan is the LogicalRDD `r`, with `r` relabelled
+    * as partitioned by `p`. `LogicalRDD`'s second parameter list (session,
+    * stats, constraints) is reachable only through `makeCopy`, and
+    * `classic.Dataset`'s plan constructor is `private[sql]`. */
+  def withPartitioning[T](ds: Dataset[T], r: LogicalRDD, p: Partitioning): Dataset[T] = {
+    val args = r.productIterator.map(_.asInstanceOf[AnyRef]).toArray
+    args(r.productElementNames.indexOf("outputPartitioning")) = p
+    classic.Dataset[T](ds.sparkSession.asInstanceOf[classic.SparkSession],
+      r.makeCopy(args))(ds.encoder)
+  }
 
   /** A clone of `s` with `settings` applied to the clone's conf only
     * (`cloneSession` is `private[sql]`). Unlike `newSession()`, a clone keeps

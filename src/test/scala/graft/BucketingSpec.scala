@@ -19,7 +19,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   private val sf = "/root/testdata/sf0.001"
-  private val base = s"${sys.props("java.io.tmpdir")}/graft_bucketing_spec"
+  private val base = TestDirs("graft_bucketing_spec").toString
 
   test("joining two tables bucketed on the key needs no shuffle") {
     Tables.orders(spark, sf).write.mode("overwrite")

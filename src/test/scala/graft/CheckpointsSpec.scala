@@ -9,14 +9,18 @@ import graft.ops.Checkpoints
 import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The barrier contract of `graft.ops.Checkpoints`: when a barrier is
   * skipped, when it must not be, and what `both` carries to its thread. */
-class CheckpointsSpec extends AnyFunSuite {
+class CheckpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
   /** The `spark.job.tags` of every job `body` starts. The listener bus is
@@ -47,6 +51,25 @@ class CheckpointsSpec extends AnyFunSuite {
     }
 
   private def ck: DataFrame = spark.range(100).toDF("id").barrier()
+
+  /** A barrier over a `createDataFrame(rdd)` frame of `n` partitions: the
+    * plan it cuts reports no partitioning, unlike a one-slice `range`. */
+  private def ckOf(n: Int): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType)))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize((0L until 100L).map(Row(_)), n), schema).barrier()
+  }
+
+  /** The shuffles in `df`'s final (post-AQE) plan, after running it. */
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
+    df.collect()
+    collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }
+  }
+
+  private def partitioning(df: DataFrame) = df.queryExecution.analyzed match {
+    case r: LogicalRDD => r.outputPartitioning
+    case p => fail(s"not a checkpoint: $p")
+  }
 
   test("barrier returns a deterministic Project/Filter over a checkpoint unchanged, with no job") {
     val base = ck
@@ -82,6 +105,48 @@ class CheckpointsSpec extends AnyFunSuite {
     val out = raw.select((col("id") + 1).as("x")).barrier()
     assert(isCheckpoint(out))
     assert(out.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
+  }
+
+  test("a one-partition barrier is labelled SinglePartition") {
+    assert(partitioning(ckOf(1)) == SinglePartition)
+  }
+
+  private val above: Seq[(String, DataFrame => DataFrame, Array[Row] => Unit)] = Seq(
+    ("groupBy", _.groupBy((col("id") % 3).as("k")).count(),
+      rows => assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet ==
+        Set((0L, 34L), (1L, 33L), (2L, 33L)))),
+    ("distinct", _.select((col("id") % 7).as("m")).distinct(),
+      rows => assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 7L))),
+    ("Window.orderBy", _.withColumn("rn", row_number().over(Window.orderBy(col("id").desc))),
+      rows => assert(rows.map(r => (r.getLong(0), r.getInt(1))).toSet ==
+        (0L until 100L).map(i => (i, 100 - i.toInt)).toSet)))
+
+  for ((name, op, check) <- above)
+    test(s"$name directly above a one-partition barrier plans no shuffle") {
+      val df = op(ckOf(1))
+      assert(shuffles(df).isEmpty, df.queryExecution.executedPlan.treeString)
+      check(df.collect())
+    }
+
+  test("a four-partition barrier keeps its label and still shuffles under groupBy") {
+    val four = ckOf(4)
+    assert(partitioning(four) != SinglePartition)
+    val grouped = four.groupBy((col("id") % 3).as("k")).count()
+    assert(shuffles(grouped).nonEmpty)
+    assert(grouped.collect().map(_.getLong(1)).sorted.toSeq == Seq(33L, 33L, 34L))
+  }
+
+  test("a join of a one-partition barrier with a four-partition frame returns the same rows") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val other = spark.range(0, 100, 1, 4).toDF("id").withColumn("sq", col("id") * col("id"))
+      val joined = ckOf(1).join(other, "id")
+      assert(shuffles(joined).nonEmpty, "the one-partition side must meet the other side's partitioning")
+      val want = (0L until 100L).map(i => (i, i * i)).toSet
+      assert(joined.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("both rethrows side a's failure only after side b has finished") {

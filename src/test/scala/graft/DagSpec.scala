@@ -117,7 +117,7 @@ class DagSpec extends AnyFunSuite {
   }
 
   test("a DailyPipeline job body that reads an undeclared table fails, naming it") {
-    val out = java.nio.file.Files.createTempDirectory("graft_dag_deps").toString
+    val out = TestDirs("graft_dag_deps").toString
     val wh = new graft.pipeline.DailyPipeline.Warehouse(out)
     val dag = new Dag(Seq(
       wh.job("a")((s, t) => t.write("a", s.range(3).toDF("k"))),

@@ -70,7 +70,7 @@ class HllSketchSpec extends AnyFunSuite {
     val direct = df.agg(expr("hll_sketch(v)").as("h"))
       .select(col("h.s_hi"), col("h.s_lo"), col("h.zeros")).head()
     // store per-part states through a parquet roundtrip (the mart lifecycle)
-    val dir = java.nio.file.Files.createTempDirectory("hll_states").toString
+    val dir = TestDirs("hll_states").toString
     df.groupBy(col("part")).agg(expr("hll_state(v)").as("st"))
       .write.mode("overwrite").parquet(dir)
     val merged = spark.read.parquet(dir)

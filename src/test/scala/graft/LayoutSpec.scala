@@ -36,7 +36,7 @@ class LayoutSpec extends AnyFunSuite {
   test("z-order prunes BOTH dims at once; each linear layout fails on one") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("source"), col("n_chars")).localCheckpoint(true)
-    val base = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val base = TestDirs("graft_layout").toString
     // with F files the curve yields log2(F) bits of combined pruning split
     // across the dims (per-dim candidate sets shrink toward sqrt-of-F, not
     // 1 — that residual is the price of serving BOTH predicate shapes from

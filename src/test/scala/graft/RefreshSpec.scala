@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.RefreshPipeline
+import graft.pipeline.{Job, RefreshPipeline}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +9,22 @@ import org.scalatest.funsuite.AnyFunSuite
 class RefreshSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  test("refresh fails, naming the jobs, and writes nothing when a daily job it runs failed") {
+    val wh = TestDirs("graft_refresh_fail")
+    val daily = Seq(
+      Job("combined_transactions", Nil, _ => throw new IllegalStateException("source down")),
+      Job("customer_order_stats", Seq("combined_transactions"), _ => ()),
+      Job("side", Nil, _ => ()))
+    val e = intercept[IllegalStateException] {
+      RefreshPipeline.refresh(spark, "/root/testdata/sf0.001", wh.toString, daily)
+    }
+    assert(e.getMessage.contains("2 job(s) not ok"), e.getMessage)
+    assert(e.getMessage.contains(
+      "combined_transactions failed (java.lang.IllegalStateException: source down)"), e.getMessage)
+    assert(e.getMessage.contains("customer_order_stats skipped"), e.getMessage)
+    assert(wh.toFile.list().isEmpty, "the refresh wrote over a partial warehouse")
+  }
 
   test("splice keeps outside rows and replaces the window from fresh") {
     val stored = Seq(

@@ -15,7 +15,7 @@ class SessionBoundarySpec extends AnyFunSuite {
     import java.nio.file.Files
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_swb_in")
+    val in = TestDirs("graft_swb_in")
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("ts", TimestampType)))
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")

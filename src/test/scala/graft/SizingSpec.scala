@@ -100,7 +100,7 @@ class SizingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("DailyPipeline.jobs run in the mode of their input, seen by the caller's listeners") {
-    val out = Files.createTempDirectory("graft_sizing_dag").toString
+    val out = TestDirs("graft_sizing_dag").toString
     val job = DailyPipeline.jobs(TestSpark.data("sf0.001"), out)
       .find(_.name == "customer_order_stats").get
     val qes = observed(job.run(spark))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -38,10 +37,10 @@ class StreamRunSpec extends AnyFunSuite {
   }
 
   test("a seat whose batch body throws fails the seat call itself") {
-    val in = Files.createTempDirectory("graft_run_in").resolve("a").toString
+    val in = TestDirs("graft_run_in").resolve("a").toString
     spark.range(3).toDF("k").withColumn("v", col("k")).write.parquet(in)
-    val table = Files.createTempDirectory("graft_run_tbl").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_run_ckpt").toString
+    val table = TestDirs("graft_run_tbl").toString + "/t"
+    val ckpt = TestDirs("graft_run_ckpt").toString
     // no column `nope`: the merge fails inside micro-batch 0, after start()
     // has returned, so only a call that waits for the end can see it
     val ex = intercept[StreamingQueryException] {

@@ -14,7 +14,7 @@ class StreamsSpec extends AnyFunSuite {
   /** Streaming file sources require a directory; stage the single events
     * parquet into a temp dir via symlink (testdata itself is read-only). */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_src")
+    val d = TestDirs("graft_stream_src")
     java.nio.file.Files.createSymbolicLink(
       d.resolve("events.parquet"),
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"))
@@ -55,9 +55,9 @@ class StreamsSpec extends AnyFunSuite {
 
   test("checkpointed file-sink stream resumes exactly-once across restarts") {
     import java.nio.file.{Files, Paths}
-    val in = Files.createTempDirectory("graft_ckpt_in")
-    val outDir = Files.createTempDirectory("graft_ckpt_out").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt_state").toString
+    val in = TestDirs("graft_ckpt_in")
+    val outDir = TestDirs("graft_ckpt_out").toString
+    val ckpt = TestDirs("graft_ckpt_state").toString
     val all = batchEvents.select("event_id", "user_id").orderBy("event_id")
 
     def startOnce(): Unit = {
@@ -132,7 +132,7 @@ class StreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_ttl_in")
+    val in = TestDirs("graft_ttl_in")
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_type", StringType), StructField("ts", TimestampType)))
     def arrive(tag: String, rows: Seq[(Long, String, java.sql.Timestamp)]): Unit = {
@@ -175,9 +175,9 @@ class StreamsSpec extends AnyFunSuite {
   test("upsertByKey merges micro-batches into a keyed table, newest wins") {
     import java.nio.file.Files
     import org.apache.spark.sql.types._
-    val in = Files.createTempDirectory("graft_upsert_in")
-    val table = Files.createTempDirectory("graft_upsert_tbl").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_upsert_ckpt").toString
+    val in = TestDirs("graft_upsert_in")
+    val table = TestDirs("graft_upsert_tbl").toString + "/t"
+    val ckpt = TestDirs("graft_upsert_ckpt").toString
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("version", LongType), StructField("payload", StringType)))
     import spark.implicits._
@@ -208,7 +208,7 @@ class StreamsSpec extends AnyFunSuite {
   test("mergeUpsert refuses to reinitialize a destroyed table, and self-heals an interrupted swap") {
     import java.nio.file.{Files, Paths}
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_merge_atom").toString
+    val root = TestDirs("graft_merge_atom").toString
     val table = s"$root/t"
     def batch(rows: (Long, Long, String)*) = rows.toDF("k", "version", "payload")
     Streams.mergeUpsert(batch((1L, 1L, "a")), table, "k", "version", "payload")
@@ -256,9 +256,9 @@ class StreamsSpec extends AnyFunSuite {
 
   test("compactingIngest bounds file count and survives the crash windows") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft_ci_in")
-    val base = Files.createTempDirectory("graft_ci_base").toString + "/tbl"
-    val ckpt = Files.createTempDirectory("graft_ci_ckpt").toString
+    val in = TestDirs("graft_ci_in")
+    val base = TestDirs("graft_ci_base").toString + "/tbl"
+    val ckpt = TestDirs("graft_ci_ckpt").toString
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     // six waves, one file each; maxFilesPerTrigger=1 → six micro-batches
@@ -310,9 +310,9 @@ class StreamsSpec extends AnyFunSuite {
   test("decontaminateIngest resumes across restarts and equals the batch gate") {
     import java.nio.file.Files
     import graft.ops.TextAnalysis
-    val in = Files.createTempDirectory("graft_dc_in")
-    val state = Files.createTempDirectory("graft_dc_state").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_dc_ckpt").toString
+    val in = TestDirs("graft_dc_in")
+    val state = TestDirs("graft_dc_state").toString + "/t"
+    val ckpt = TestDirs("graft_dc_ckpt").toString
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     val bench = docs.filter(col("doc_id") % 97 === 0)
@@ -357,9 +357,9 @@ class StreamsSpec extends AnyFunSuite {
   test("nearDupIngest resumes across restarts and matches the batch gate") {
     import java.nio.file.Files
     import graft.ops.Dedup
-    val in = Files.createTempDirectory("graft_nd_in")
-    val state = Files.createTempDirectory("graft_nd_state").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_nd_ckpt").toString
+    val in = TestDirs("graft_nd_in")
+    val state = TestDirs("graft_nd_state").toString + "/t"
+    val ckpt = TestDirs("graft_nd_ckpt").toString
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     val mid = 250L
@@ -410,9 +410,8 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("nearDupIngestBatch maxBucket: boilerplate storm still rejected via representatives") {
-    import java.nio.file.Files
     import spark.implicits._
-    val state = Files.createTempDirectory("graft_nd_cap_state").toString + "/t"
+    val state = TestDirs("graft_nd_cap_state").toString + "/t"
     val boiler = "the same boilerplate paragraph repeated across many pages " * 3
     // wave 1: 40 identical docs — the degenerate one-signature bucket
     val wave1 = (100L until 140L).map(i => (i, boiler)).toDF("doc_id", "text")
@@ -439,9 +438,9 @@ class StreamsSpec extends AnyFunSuite {
   test("cmsIngest partial sketches merge to the batch sketch; replay overwrites") {
     import java.nio.file.Files
     import graft.ops.TextAnalysis
-    val in = Files.createTempDirectory("graft_cms_in")
-    val state = Files.createTempDirectory("graft_cms_state").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_cms_ckpt").toString
+    val in = TestDirs("graft_cms_in")
+    val state = TestDirs("graft_cms_state").toString + "/t"
+    val ckpt = TestDirs("graft_cms_ckpt").toString
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
@@ -485,9 +484,9 @@ class StreamsSpec extends AnyFunSuite {
   test("quantileIngest partial histograms merge to the batch sketch; replay overwrites") {
     import java.nio.file.Files
     import graft.ops.QuantileSketch
-    val in = Files.createTempDirectory("graft_qs_in")
-    val state = Files.createTempDirectory("graft_qs_state").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_qs_ckpt").toString
+    val in = TestDirs("graft_qs_in")
+    val state = TestDirs("graft_qs_state").toString + "/t"
+    val ckpt = TestDirs("graft_qs_ckpt").toString
     val ev = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(col("value").isNotNull && col("value") >= 0).localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
@@ -530,9 +529,9 @@ class StreamsSpec extends AnyFunSuite {
   test("driftIngest partial spines merge to the batch spine; replay overwrites") {
     import java.nio.file.Files
     import graft.ops.TextAnalysis
-    val in = Files.createTempDirectory("graft_drift_in")
-    val state = Files.createTempDirectory("graft_drift_state").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_drift_ckpt").toString
+    val in = TestDirs("graft_drift_in")
+    val state = TestDirs("graft_drift_state").toString + "/t"
+    val ckpt = TestDirs("graft_drift_ckpt").toString
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
@@ -577,9 +576,9 @@ class StreamsSpec extends AnyFunSuite {
   test("cdcIngest partial censuses merge to the batch census; replay overwrites") {
     import java.nio.file.Files
     import graft.ops.TextAnalysis
-    val in = Files.createTempDirectory("graft_cdc_in")
-    val state = Files.createTempDirectory("graft_cdc_state").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_cdc_ckpt").toString
+    val in = TestDirs("graft_cdc_in")
+    val state = TestDirs("graft_cdc_state").toString + "/t"
+    val ckpt = TestDirs("graft_cdc_ckpt").toString
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
@@ -623,9 +622,9 @@ class StreamsSpec extends AnyFunSuite {
   test("hllIngest register partials merge to the batch sketch; double-merge is a no-op") {
     import java.nio.file.Files
     graft.plans.HllSketch.register(spark)
-    val in = Files.createTempDirectory("graft_hll_in")
-    val state = Files.createTempDirectory("graft_hll_state").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft_hll_ckpt").toString
+    val in = TestDirs("graft_hll_in")
+    val state = TestDirs("graft_hll_state").toString + "/t"
+    val ckpt = TestDirs("graft_hll_ckpt").toString
     val ev = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
       .localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {

@@ -10,7 +10,7 @@ class TablesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("CSV round-trip preserves values under an explicit schema") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = TestDirs("graft_csv").toString
     val src = Tables.orders(spark, "/root/testdata/sf0.001")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate", "o_orderstatus")
     Tables.write(src, s"$tmp/orders_csv", "csv")
@@ -21,7 +21,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("snapshot sink writes the live table plus a dated copy") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_snap").toString
+    val tmp = TestDirs("graft_snap").toString
     val src = Tables.nation(spark, "/root/testdata/sf0.001")
     Tables.writeSnapshot(src, s"$tmp/nation", "2026-08-12")
     assert(spark.read.parquet(s"$tmp/nation").count() == src.count())
@@ -29,7 +29,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("asOf resolves the newest snapshot at or before the date, refuses older asks") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    val tmp = TestDirs("graft_asof").toString
     val v1 = Seq((1L, "a")).toDF("k", "v")
     val v2 = Seq((1L, "b"), (2L, "c")).toDF("k", "v")
     Tables.writeSnapshot(v1, s"$tmp/t", "2026-01-01")
@@ -47,7 +47,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("atomic write routes through the swap: marker stamped, crash-consistent") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_atomic").toString
+    val tmp = TestDirs("graft_atomic").toString
     val dir = s"$tmp/t"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -70,7 +70,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("compact bin-packs small files, preserves content, no-ops when already compact") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val tmp = TestDirs("graft_compact").toString
     val dir = s"$tmp/t"
     val src = (1 to 1000).map(i => (i.toLong, s"row_$i")).toDF("id", "s")
     src.repartition(20).write.parquet(dir) // the small-file ingest shape
@@ -87,7 +87,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("TableSwap.recover finishes an interrupted swap from the complete tmp copy") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_swap").toString
+    val tmp = TestDirs("graft_swap").toString
     val dir = s"$tmp/t"
     val src = (1 to 100).map(i => (i.toLong, i * 2L)).toDF("k", "v")
     src.repartition(4).write.parquet(dir)
@@ -115,7 +115,7 @@ class TablesSpec extends AnyFunSuite {
 
   test("date-partitioned fact: clock predicate prunes partitions at plan time") {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val tmp = TestDirs("graft_part").toString
     val dir = s"$tmp/events_fact"
     val src = Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("event_date", to_date(col("ts")))
@@ -152,7 +152,7 @@ class TablesSpec extends AnyFunSuite {
   test("clock-filtered marts read the partitioned fact with PartitionFilters") {
     // the leads/new-members mart shape from DailyPipeline: their event_date
     // predicates must reach the scan as partition filters, not row filters
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mart").toString
+    val tmp = TestDirs("graft_mart").toString
     val dir = s"$tmp/events_fact"
     Tables.write(
       Tables.events(spark, "/root/testdata/sf0.001")
