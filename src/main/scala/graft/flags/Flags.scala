@@ -190,9 +190,9 @@ object FlagRules {
 
   /** Persistent (never-expiring) flag types — the reference's
     * PERSISTENT_FLAGS (`customer_flags_config.py:22-42`). THE single source
-    * of truth: the u1b lifecycle query and RefreshPipeline's flag-sync merge
-    * both read this list, so the daily and refresh paths can never disagree
-    * on which flags outlive the TTL. */
+    * of truth: `FlagQs.mergeFlags`, the merge the u1b lifecycle query and
+    * the refresh's flag sync both run, reads this list, so the daily and
+    * refresh paths can never disagree on which flags outlive the TTL. */
   val persistentFlags: Seq[String] = Seq("error_prone", "active_member")
 
   /** Registry — mirrors `ACTIVE_RULES` `customer_flags_config.py:1888-1905`.

@@ -13,50 +13,15 @@ import org.apache.spark.sql.functions.col
   * Runnable: `runMain graft.pipeline.DailyPipeline <sfDir> <outDir>` */
 object DailyPipeline {
 
-  /** The warehouse build: raw → facts → derived reports → dashboard marts.
-    * Every job runs in the execution mode `sfDir` calls for (`Sizing.mode`),
-    * on a session scoped to that job. */
+  /** The warehouse build: raw → facts → derived reports → dashboard marts. */
   def jobs(sfDir: String, outDir: String): Seq[Job] = {
-    val mode = Sizing.mode(sfDir)
-    declaredJobs(sfDir, outDir).map(j => j.copy(run = s => j.run(Sizing.session(s, mode))))
-  }
-
-  /** The warehouse at `outDir` as its jobs see it. [[job]] is the one way a
-    * job is declared: its body runs on the job's session with a [[Handle]]
-    * that reads only the job's declared deps and commits every table it
-    * writes through [[Tables.write]]. */
-  private[graft] final class Warehouse(outDir: String) {
-    final class Handle private[Warehouse] (s: SparkSession, job: String,
-        deps: Seq[String]) {
-      /** The materialized table of `dep`, which must be a declared dep. */
-      def read(dep: String): DataFrame = {
-        require(deps.contains(dep), s"job $job reads table $dep, which is not " +
-          s"among its declared deps [${deps.mkString(", ")}]")
-        s.read.parquet(s"$outDir/$dep")
-      }
-      def write(table: String, df: DataFrame, partitionCols: Seq[String] = Nil): Unit =
-        Tables.write(df, s"$outDir/$table", partitionCols = partitionCols)
-      def snapshot(table: String, df: DataFrame, asOfDate: String): Unit =
-        Tables.writeSnapshot(df, s"$outDir/$table", asOfDate)
-    }
-
-    // heavy = the declared memory class (see Job.heavy): plans whose shuffle
-    // state is candidate-PAIR-sized (simhash/minhash band joins, embedding
-    // ring joins), of which the Dag keeps at most one in flight
-    def job(name: String, deps: Seq[String] = Nil, heavy: Boolean = false)(
-        body: (SparkSession, Handle) => Unit): Job =
-      Job(name, deps, s => body(s, new Handle(s, name, deps)), heavy)
-  }
-
-  private def declaredJobs(sfDir: String, outDir: String): Seq[Job] = {
-    val warehouse = new Warehouse(outDir)
+    val warehouse = new Warehouse(sfDir, outDir)
     import warehouse.job
     // the registry query is resolved here, so a mistyped name fails the
     // declaration rather than the run
     def materialize(query: String, table: String, deps: Seq[String] = Nil,
         heavy: Boolean = false): Job = {
-      val q = Registry.all.find(_.name == query).getOrElse(throw
-        new NoSuchElementException(s"job $table materializes unknown query $query"))
+      val q = Registry.named(query)
       job(table, deps, heavy)((s, t) => t.write(table, q.run(s, sfDir)))
     }
 
@@ -588,16 +553,68 @@ object DailyPipeline {
       })
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Warehouse.main(args)(jobs)
+}
+
+/** The warehouse at `outDir`, built from the raw tables at `sfDir`, as its
+  * jobs see it. [[job]] is the one way a job is declared: its body runs on a
+  * session in the execution mode `sfDir` calls for (`Sizing.mode`), scoped to
+  * the job, with a [[Handle]] that reads only the job's declared deps and
+  * commits every table it writes through [[Tables.write]]. */
+private[graft] final class Warehouse(sfDir: String, outDir: String) {
+  private val mode = Sizing.mode(sfDir)
+
+  final class Handle private[Warehouse] (s: SparkSession, job: String,
+      deps: Seq[String]) {
+    private def dir(dep: String): String = {
+      require(deps.contains(dep), s"job $job reads table $dep, which is not " +
+        s"among its declared deps [${deps.mkString(", ")}]")
+      s"$outDir/$dep"
+    }
+    /** The materialized table of `dep`, which must be a declared dep. */
+    def read(dep: String): DataFrame = s.read.parquet(dir(dep))
+    /** Bin-packs the files of `dep`, which must be a declared dep. */
+    def compact(dep: String): Tables.CompactStats = Tables.compact(s, dir(dep))
+    def write(table: String, df: DataFrame, partitionCols: Seq[String] = Nil): Unit =
+      Tables.write(df, s"$outDir/$table", partitionCols = partitionCols)
+    def snapshot(table: String, df: DataFrame, asOfDate: String): Unit =
+      Tables.writeSnapshot(df, s"$outDir/$table", asOfDate)
+  }
+
+  // heavy = the declared memory class (see Job.heavy): plans whose shuffle
+  // state is candidate-PAIR-sized (simhash/minhash band joins, embedding
+  // ring joins), of which the Dag keeps at most one in flight
+  def job(name: String, deps: Seq[String] = Nil, heavy: Boolean = false)(
+      body: (SparkSession, Handle) => Unit): Job =
+    Job(name, deps, { s =>
+      val js = Sizing.session(s, mode)
+      body(js, new Handle(js, name, deps))
+    }, heavy)
+}
+
+/** The one runner of warehouse jobs, shared by both pipeline mains. */
+private[graft] object Warehouse {
+  /** Runs `jobs` on one [[Dag]] and prints one `[pipeline]` line per job and
+    * the count of jobs ok. Results come back in declaration order. */
+  def run(spark: SparkSession, jobs: Seq[Job], outDir: String): Seq[JobResult] = {
+    val results = new Dag(jobs).runParallel(spark)
+    results.foreach(r => println(
+      s"[pipeline] ${r.name}: ${r.status} (${r.durationMs} ms)${r.error.map(" - " + _).getOrElse("")}"))
+    println(s"[pipeline] ${results.count(_.status == "ok")}/${results.size} jobs ok -> $outDir")
+    results
+  }
+
+  /** A pipeline main's exit status: 0 when every job is ok, else 1. */
+  def exitCode(results: Seq[JobResult]): Int =
+    if (results.forall(_.status == "ok")) 0 else 1
+
+  /** `main <sfDir> <outDir>`: runs the jobs `jobsOf(sfDir, outDir)` declares
+    * and exits 1 unless every one is ok. */
+  def main(args: Array[String])(jobsOf: (String, String) => Seq[Job]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_warehouse"
     val spark = Session(sfDir)
-    val results = new Dag(jobs(sfDir, outDir)).runParallel(spark)
-    results.foreach(r => println(
-      s"[pipeline] ${r.name}: ${r.status} (${r.durationMs} ms)${r.error.map(" — " + _).getOrElse("")}"))
-    val ok = results.count(_.status == "ok")
-    println(s"[pipeline] $ok/${results.size} jobs ok → $outDir")
-    spark.stop()
-    if (ok != results.size) sys.exit(1)
+    val code = try exitCode(run(spark, jobsOf(sfDir, outDir), outDir)) finally spark.stop()
+    if (code != 0) sys.exit(code)
   }
 }

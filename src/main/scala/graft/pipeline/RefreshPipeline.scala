@@ -2,27 +2,34 @@ package graft.pipeline
 
 import graft.core.Tables
 import graft.ops.Checkpoints.BarrierOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.{Aggregates, FlagQs, Registry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The engine's EP2-shaped light refresh (SURVEY.md §3 EP2 — the reference's
-  * 3×/day `run_data_refresh.py` + `run_flag_sync.py`):
+  * 3×/day `run_data_refresh.py` + `run_flag_sync.py`), declared as
+  * [[Warehouse]] jobs and run by the same [[Dag]] as the daily build:
   *
-  *   1. refetch a trailing window of the fact table from the source,
-  *   2. SPLICE it into the stored table (keep rows outside the window, insert
-  *      the refetched slice — `pipeline_handler.py:366-426`),
-  *   3. dedup by business key, keep-first by (event time, id) — `:331`,
-  *   4. re-evaluate flags at the refresh clock and MERGE keep-newest per
-  *      (user, flag) with the 14-day TTL + persistent carve-out
-  *      (`customer_flags_engine.py:362-408,666-698`).
+  *   - `events_current`: refetch a trailing window of the fact table from
+  *     the source, SPLICE it into the stored table (keep rows outside the
+  *     window, insert the refetched slice — `pipeline_handler.py:366-426`),
+  *     then dedup by business key, keep-first by (event time, id) — `:331`;
+  *   - `customer_flags_current`: re-evaluate flags at the refresh clock and
+  *     MERGE keep-newest per (user, flag) with the 14-day TTL + persistent
+  *     carve-out (`customer_flags_engine.py:362-408,666-698`);
+  *   - `documents_ingested` / `embeddings_ingested`: incremental ingest of
+  *     today's documents and vectors, accepting only non-near-dups;
+  *   - `compact_refreshed`: bin-packs the refreshed tables;
+  *   - `incremental_order_stats`: advances customer_order_stats from the
+  *     stored state and today's delta, proved equal to the full rebuild.
   *
   * Every step is a full-scan-free relational op at warehouse scale: the
   * splice is a partition-prunable range predicate, the dedup a keyed window,
   * the flag merge a keyed keep-newest. Runnable:
   * `runMain graft.pipeline.RefreshPipeline <sfDir> <warehouseDir>`
-  * (expects DailyPipeline to have built the warehouse; runs it if absent,
-  * and exits 1 when that build or the refresh fails).
+  * (expects DailyPipeline to have built the warehouse; builds it first in
+  * the same run if absent, and exits 1 unless every job is ok).
   */
 object RefreshPipeline {
 
@@ -40,17 +47,6 @@ object RefreshPipeline {
   def dedupKeepFirst(df: DataFrame, key: String, orderCol: String, tieCol: String): DataFrame = {
     val w = Window.partitionBy(col(key)).orderBy(col(orderCol).asc, col(tieCol).asc)
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** Merge a fresh flag run over stored flags: keep-newest per (user, type),
-    * then expire non-persistent flags older than `ttlUs` at `asOfUs`. */
-  def mergeFlags(stored: DataFrame, fresh: DataFrame, asOfUs: Long, ttlUs: Long,
-      persistent: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(col("user_id"), col("flag_type"))
-      .orderBy(col("added_us").desc)
-    stored.unionByName(fresh)
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-      .filter(col("added_us") >= asOfUs - ttlUs || col("flag_type").isin(persistent: _*))
   }
 
   /** Incremental ingest accept-filter, three gates:
@@ -99,129 +95,85 @@ object RefreshPipeline {
         sum(col("lifetime_value").cast(org.apache.spark.sql.types.DecimalType(18, 4)))
           .cast("double").as("lifetime_value"))
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val whDir = if (args.length > 1) args(1) else "/tmp/graft_warehouse"
-    val spark = graft.core.Session(sfDir)
-    val ok =
-      try { refresh(spark, sfDir, whDir, DailyPipeline.jobs(sfDir, whDir)); true }
-      catch { case e: Exception => println(s"[refresh] FAILED: ${e.getMessage}"); false }
-      finally spark.stop()
-    if (!ok) sys.exit(1)
+  /** The refresh of the warehouse at `whDir`. */
+  def jobs(sfDir: String, whDir: String): Seq[Job] = {
+    val warehouse = new Warehouse(sfDir, whDir)
+    import warehouse.job
+    val a1 = Registry.named("a1_multi_agg")
+    val k16 = Registry.named("k16_incremental_embed_dedup")
+    val refreshed = Seq("events_current", "customer_flags_current", "documents_ingested")
+    Seq(
+      // refetch the trailing week of events from the source, splice it in,
+      // then key dedup keep-first (idempotent re-ingest)
+      job("events_current") { (s, t) =>
+        val stored = Tables.events(s, sfDir) // stands in for the stored fact table
+        val fresh = Tables.events(s, sfDir)  // refetch = same source, later pull
+        t.write("events_current", dedupKeepFirst(
+          splice(stored, fresh, "ts", "2024-01-24", "2024-01-31"), "event_id", "ts", "user_id"))
+      },
+      // flag sync: u1c's flags at the refresh clock merged over the daily
+      // run's (2024-01-15), each run child-passed before the merge
+      job("customer_flags_current") { (s, t) =>
+        def run(asOf: Long) = FlagQs.childFlagsAt(s, sfDir, asOf).withColumn("added_us", lit(asOf))
+        t.write("customer_flags_current",
+          FlagQs.mergeFlags(run(FlagQs.asOf1Us), run(FlagQs.asOfUs), FlagQs.asOfUs))
+      },
+      // incremental document ingest — the fresh batch (doc_id % 5 = 0
+      // stands in for today's pull) is matched against the indexed corpus
+      // and only non-near-dups are accepted. heavy: a band join, like d8.
+      job("documents_ingested", heavy = true) { (s, t) =>
+        val docs = Tables.documents(s, sfDir)
+        t.write("documents_ingested", acceptNonDup(
+          docs.filter(col("doc_id") % 5 === 0), docs.filter(col("doc_id") % 5 =!= 0),
+          "doc_id", "text", threshold = 0.5))
+      },
+      // incremental EMBEDDING ingest — the semantic twin: k16's accepted
+      // vectors. heavy: k16's SRP band join, like d7.
+      job("embeddings_ingested", heavy = true) { (s, t) =>
+        t.write("embeddings_ingested", k16.run(s, sfDir).filter(col("accepted")))
+      },
+      // maintenance — repeated refreshes fragment the refreshed tables into
+      // per-run small files; bin-pack them back to scan-efficient sizes
+      // under the same atomic swap every table write commits through
+      job("compact_refreshed", refreshed) { (_, t) =>
+        println("[refresh] compact " + refreshed.map { d =>
+          val st = t.compact(d)
+          s"$d: ${st.filesBefore} -> ${st.filesAfter} files"
+        }.mkString(", "))
+      },
+      // incremental AGGREGATE maintenance — customer_order_stats advanced
+      // from yesterday's state + today's delta alone (no fact re-scan), then
+      // proved equal to the full rebuild before the swap publishes it.
+      // (o_orderkey % 7 == 0 stands in for today's new orders.)
+      job("incremental_order_stats") { (s, t) =>
+        val orders = Tables.orders(s, sfDir)
+        // both frames feed three consumers (count, equality check, write) —
+        // checkpoint once instead of re-aggregating orders per consumer
+        val advanced = mergeOrderStats(
+          Aggregates.orderStats(orders.filter(col("o_orderkey") % 7 =!= 0)),
+          Aggregates.orderStats(orders.filter(col("o_orderkey") % 7 === 0))).barrier()
+        val fullRebuild = a1.run(s, sfDir).barrier()
+        val nFull = fullRebuild.count()
+        require(advanced.count() == nFull &&
+            advanced.unionByName(fullRebuild).distinct().count() == nFull,
+          "incremental order-stats diverged from the full rebuild")
+        t.write("customer_order_stats", advanced)
+      })
   }
 
-  /** Runs the refresh over the warehouse at `whDir`, first building it with
-    * the `daily` jobs when it has no `combined_transactions` yet. Throws
-    * before writing anything when a daily job failed or was skipped. */
-  def refresh(spark: SparkSession, sfDir: String, whDir: String, daily: => Seq[Job]): Unit = {
-    val a1 = graft.queries.Registry.all.find(_.name == "a1_multi_agg").getOrElse(throw
-      new NoSuchElementException("refresh step 7 rebuilds from query a1_multi_agg, which is not declared"))
-
-    if (!new java.io.File(s"$whDir/combined_transactions").exists()) {
-      val notOk = new Dag(daily).runParallel(spark).filter(_.status != "ok")
-      if (notOk.nonEmpty) throw new IllegalStateException(
-        s"the daily build of $whDir has ${notOk.size} job(s) not ok: " +
-          notOk.map(r => s"${r.name} ${r.status}${r.error.map(" (" + _ + ")").getOrElse("")}")
-            .mkString("; "))
+  /** The refresh's run: its [[jobs]], after the `daily` jobs when the
+    * warehouse at `whDir` has no `combined_transactions` yet. Every refresh
+    * job then depends on every daily job, so a daily job not ok skips the
+    * whole refresh and nothing is written over a partial warehouse. */
+  def plan(sfDir: String, whDir: String, daily: => Seq[Job]): Seq[Job] = {
+    val own = jobs(sfDir, whDir)
+    if (new java.io.File(s"$whDir/combined_transactions").exists()) own
+    else {
+      val first = daily
+      first ++ own.map(j => j.copy(deps = j.deps ++ first.map(_.name)))
     }
-
-    // 1-2: refetch the trailing week of events from the source and splice.
-    val stored = Tables.events(spark, sfDir) // stands in for the stored fact table
-    val fresh = Tables.events(spark, sfDir)  // refetch = same source, later pull
-    val spliced = splice(stored, fresh, "ts", "2024-01-24", "2024-01-31")
-
-    // 3: key dedup keep-first (idempotent re-ingest).
-    val deduped = dedupKeepFirst(spliced, "event_id", "ts", "user_id")
-    Tables.write(deduped, s"$whDir/events_current")
-
-    // 4: flag sync at the refresh clock, merged over the daily run's flags.
-    val asOf1 = 1705276800000000L // daily run clock (2024-01-15)
-    val asOf2 = 1706659200000000L // refresh clock  (2024-01-31)
-    val ttl = 14L * 86400L * 1000000L
-    // Each run applies the child/parent pass BEFORE merging, like the
-    // reference's evaluate_all_customers tail (suppression happens at
-    // evaluation time, so the synced flags are post-pass). The flags frame
-    // is checkpointed: childPass consumes it in two branches.
-    def flagsAt(asOf: Long): DataFrame = {
-      import spark.implicits._
-      val raw = Tables.events(spark, sfDir)
-        .filter(unix_micros(col("ts")) < asOf)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"), col("value"))
-        .toDF("userId", "eventId", "eventType", "us", "value")
-        .as[graft.flags.Ev]
-        .groupByKey(_.userId)
-        .flatMapGroups { (uid, it) => graft.flags.FlagRules.evaluateAll(uid, it.toSeq, asOf) }
-        .toDF().barrier()
-      val uni = Tables.events(spark, sfDir)
-        .filter(unix_micros(col("ts")) < asOf)
-        .select(col("user_id")).distinct().barrier() // familyMap reads it twice
-      graft.flags.FlagPasses.childPass(raw, graft.flags.FlagPasses.familyMap(uni))
-        .withColumn("added_us", lit(asOf))
-    }
-    val merged = mergeFlags(flagsAt(asOf1), flagsAt(asOf2), asOf2, ttl,
-      persistent = graft.flags.FlagRules.persistentFlags)
-    Tables.write(merged, s"$whDir/customer_flags_current")
-
-    // 5: incremental document ingest — the fresh batch (doc_id % 5 = 0
-    // stands in for today's pull) is matched against the indexed corpus and
-    // only non-near-dups are accepted into the warehouse.
-    val docs = Tables.documents(spark, sfDir)
-    val accepted = acceptNonDup(
-      docs.filter(col("doc_id") % 5 === 0), docs.filter(col("doc_id") % 5 =!= 0),
-      "doc_id", "text", threshold = 0.5)
-    Tables.write(accepted, s"$whDir/documents_ingested")
-
-    // 5b: incremental EMBEDDING ingest — the semantic twin of step 5: new
-    // vectors pay their own SRP signatures + a banded join vs the corpus
-    // index, accepted only with no cosine near-dup (k16's operator).
-    val emb = Tables.embeddings(spark, sfDir)
-    val accEmb = graft.ops.SimilaritySearch.incrementalSemanticAccept(
-      emb.filter(col("vec_id") % 5 === 0), emb.filter(col("vec_id") % 5 =!= 0),
-      "vec_id", "embedding", dim = 64, bands = 4, bits = 6, threshold = 0.4)
-    Tables.write(accEmb.filter(col("accepted")), s"$whDir/embeddings_ingested")
-
-    // 6: maintenance — repeated refreshes fragment the refreshed tables
-    // into per-run small files; bin-pack them back to scan-efficient sizes
-    // under the atomic swap. Tables.write commits every table through the
-    // same swap compact() rewrites under, so no write to these marker-bearing
-    // tables can crash into a partial dir that reads as a complete table.
-    val compacted = Seq("events_current", "customer_flags_current", "documents_ingested")
-      .map { t =>
-        val st = Tables.compact(spark, s"$whDir/$t")
-        s"$t:${st.filesBefore}->${st.filesAfter}"
-      }.mkString(" ")
-
-    // 7: incremental AGGREGATE maintenance — customer_order_stats advanced
-    // from yesterday's state + today's delta alone (no fact re-scan), then
-    // proved equal to the full rebuild before the atomic swap publishes it.
-    // (o_orderkey % 7 == 0 stands in for today's new orders.)
-    def orderStatsOver(pred: org.apache.spark.sql.Column): DataFrame = {
-      val orders = Tables.orders(spark, sfDir).filter(pred)
-      orders.groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          min(col("o_orderdate")).cast("date").as("first_order"),
-          max(col("o_orderdate")).cast("date").as("last_order"),
-          graft.queries.Q.dsum(col("o_totalprice")).as("lifetime_value"))
-    }
-    val yesterdayState = orderStatsOver(col("o_orderkey") % 7 =!= 0)
-    val deltaAgg = orderStatsOver(col("o_orderkey") % 7 === 0)
-    // both frames feed three consumers (count, equality check, write) —
-    // checkpoint once instead of re-aggregating orders per consumer
-    val advanced = mergeOrderStats(yesterdayState, deltaAgg).barrier()
-    val fullRebuild = a1.run(spark, sfDir).barrier()
-    val nFull = fullRebuild.count()
-    require(advanced.count() == nFull &&
-        advanced.unionByName(fullRebuild).distinct().count() == nFull,
-      "incremental order-stats diverged from the full rebuild")
-    Tables.write(advanced, s"$whDir/customer_order_stats")
-
-    val nEvents = spark.read.parquet(s"$whDir/events_current").count()
-    val nFlags = spark.read.parquet(s"$whDir/customer_flags_current").count()
-    val nDocs = spark.read.parquet(s"$whDir/documents_ingested").count()
-    val nEmb = spark.read.parquet(s"$whDir/embeddings_ingested").count()
-    println(s"[refresh] events_current=$nEvents customer_flags_current=$nFlags " +
-      s"documents_ingested=$nDocs embeddings_ingested=$nEmb " +
-      s"compact[$compacted] -> $whDir")
   }
+
+  def main(args: Array[String]): Unit =
+    Warehouse.main(args)((sfDir, whDir) => plan(sfDir, whDir, DailyPipeline.jobs(sfDir, whDir)))
 }

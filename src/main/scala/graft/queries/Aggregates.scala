@@ -3,7 +3,7 @@ package graft.queries
 import graft.core.Tables
 import graft.ops.Categorize
 import graft.ops.Checkpoints.BarrierOps
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,17 +57,23 @@ object Aggregates {
        |    zeros
        |  FROM sk)""".stripMargin
 
+  /** a1's per-customer order stats over `orders`: (o_custkey, n_orders,
+    * first_order, last_order, lifetime_value), the customer_order_stats
+    * mart. Every column is mergeable, which the refresh's incremental
+    * maintenance of the mart relies on. */
+  def orderStats(orders: DataFrame): DataFrame =
+    orders.groupBy(col("o_custkey"))
+      .agg(count(lit(1)).as("n_orders"),
+        min(col("o_orderdate")).cast("date").as("first_order"),
+        max(col("o_orderdate")).cast("date").as("last_order"),
+        Q.dsum(col("o_totalprice")).as("lifetime_value"))
+
   val qs: Seq[Q] = Seq(
 
     // A1: multi-function hash agg per key (count/min/max/sum).
     // Reference: checkin stats `build_customer_master.py:335-339`.
     Q("a1_multi_agg",
-      (s, d) => Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          min(col("o_orderdate")).cast("date").as("first_order"),
-          max(col("o_orderdate")).cast("date").as("last_order"),
-          Q.dsum(col("o_totalprice")).as("lifetime_value")),
+      (s, d) => orderStats(Tables.orders(s, d)),
       Some(s"""SELECT o_custkey, COUNT(*) AS n_orders,
               |CAST(MIN(o_orderdate) AS DATE) AS first_order,
               |CAST(MAX(o_orderdate) AS DATE) AS last_order,

@@ -119,7 +119,7 @@ object Experiments {
               .as("n_converted_ever"),
             // decimal SUM (order-independent), DOUBLE division at the end —
             // decimal division scale/rounding is engine-specific (the k2b
-            // lesson), so Q.davg's decimal-divide can't be used here
+            // lesson), so the divide stays out of decimal here
             (sum(when(col("p_us").isNotNull, dDays).cast(DecimalType(18, 4)))
               .cast("double") /
               count(when(col("p_us").isNotNull, dDays)))

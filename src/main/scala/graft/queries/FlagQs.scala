@@ -3,6 +3,7 @@ package graft.queries
 import graft.core.Tables
 import graft.flags.{Ev, FlagRules}
 import graft.ops.Checkpoints.BarrierOps
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Flag-rule evaluation (SURVEY.md §2.9 U1) — typed
@@ -11,10 +12,10 @@ import org.apache.spark.sql.functions._
 object FlagQs {
 
   /** Evaluation clock: 2024-01-31T00:00:00Z (data ends 2024-01-30). */
-  private[queries] val asOfUs = 1706659200000000L
+  private[graft] val asOfUs = 1706659200000000L
 
   /** Earlier clock for the lifecycle query: 2024-01-15T00:00:00Z. */
-  private val asOf1Us = 1705276800000000L
+  private[graft] val asOf1Us = 1705276800000000L
 
   /** Oracle-side per-user flag evaluation at a parameterized clock —
     * mirrors `FlagRules.active` exactly (shared by u1 and u1b). */
@@ -79,8 +80,7 @@ object FlagQs {
        |FROM per_user WHERE s14 >= 1""".stripMargin
 
   /** Typed per-user evaluation at a clock (events strictly before it). */
-  private[queries] def flagsAt(s: org.apache.spark.sql.SparkSession, d: String, asOf: Long)
-      : org.apache.spark.sql.DataFrame = {
+  private[queries] def flagsAt(s: SparkSession, d: String, asOf: Long): DataFrame = {
     import s.implicits._
     Tables.events(s, d)
       .filter(Q.usecs(col("ts")) < asOf)
@@ -93,13 +93,43 @@ object FlagQs {
       .toDF()
   }
 
+  /** u1c's flags at a clock: [[flagsAt]] followed by the child/parent pass,
+    * the form the reference's evaluate_all_customers tail leaves (minors'
+    * suppression happens at evaluation time, so synced flags are post-pass). */
+  private[graft] def childFlagsAt(s: SparkSession, d: String, asOf: Long): DataFrame = {
+    import graft.flags.FlagPasses
+    // familyMap consumes the universe twice (child derivation + the
+    // parent-exists semi-join); the distinct-user frame is tiny, the
+    // events scan behind it is not — materialize it once.
+    val uni = Tables.events(s, d).filter(Q.usecs(col("ts")) < asOf)
+      .select(col("user_id")).distinct().barrier()
+    // the flags frame feeds BOTH childPass branches (tagged + parent-own);
+    // without a materialization frontier each branch re-runs the whole
+    // per-user rule evaluation. The frame is flag-count sized — a
+    // barrier costs one tiny write, saves a full corpus pass.
+    val flags = flagsAt(s, d, asOf).barrier()
+    FlagPasses.childPass(flags, FlagPasses.familyMap(uni))
+  }
+
   private val ttlUs = 14L * 86400L * 1000000L
 
-  /** Shared persistent-type list (see FlagRules.persistentFlags — the
-    * single source of truth also consumed by RefreshPipeline). error_prone
+  /** Shared persistent-type list (see FlagRules.persistentFlags). error_prone
     * is the one whose qualification can lapse between runs; active_member
     * is the billing-status archetype the reference marks persistent. */
   private val persistentFlags = FlagRules.persistentFlags
+
+  /** The flag lifecycle merge of two runs, each stamped with its `added_us`:
+    * keep the newest row per (user, flag_type), then expire non-persistent
+    * flags older than `ttl` at `asOf`. u1b and the refresh's flag sync. */
+  private[graft] def mergeFlags(stored: DataFrame, fresh: DataFrame, asOf: Long,
+      ttl: Long = ttlUs, persistent: Seq[String] = persistentFlags): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("user_id"), col("flag_type"))
+      .orderBy(col("added_us").desc)
+    stored.unionByName(fresh)
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+      .filter(col("added_us") >= asOf - ttl || col("flag_type").isin(persistent: _*))
+  }
 
   val qs: Seq[Q] = Seq(
     Q("u1_flag_rules",
@@ -113,14 +143,8 @@ object FlagQs {
     // TTL `:362-408`, persistent types `customer_flags_config.py:22-42`.
     Q("u1b_flag_lifecycle",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val merged = flagsAt(s, d, asOf1Us).withColumn("added_us", lit(asOf1Us))
-          .unionByName(flagsAt(s, d, asOfUs).withColumn("added_us", lit(asOfUs)))
-        val w = Window.partitionBy(col("user_id"), col("flag_type"))
-          .orderBy(col("added_us").desc)
-        merged.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-          .filter(col("added_us") >= asOfUs - ttlUs ||
-            col("flag_type").isin(persistentFlags: _*))
+        def run(asOf: Long) = flagsAt(s, d, asOf).withColumn("added_us", lit(asOf))
+        mergeFlags(run(asOf1Us), run(asOfUs), asOfUs)
           .select(col("user_id"), col("flag_type"), col("flag_data"),
             col("priority"),
             date_format(timestamp_micros(col("added_us")), "yyyy-MM-dd").as("flag_added"))
@@ -145,20 +169,7 @@ object FlagQs {
     // parent raised the same base flag themselves. Reference: prefixing
     // `customer_flags_engine.py:184-205`, suppression `:276-312`.
     Q("u1c_child_suppression",
-      (s, d) => {
-        import graft.flags.FlagPasses
-        // familyMap consumes the universe twice (child derivation + the
-        // parent-exists semi-join); the distinct-user frame is tiny, the
-        // events scan behind it is not — materialize it once.
-        val uni = Tables.events(s, d).filter(Q.usecs(col("ts")) < asOfUs)
-          .select(col("user_id")).distinct().barrier()
-        // the flags frame feeds BOTH childPass branches (tagged + parent-own);
-        // without a materialization frontier each branch re-runs the whole
-        // per-user rule evaluation. The frame is flag-count sized — a
-        // barrier costs one tiny write, saves a full corpus pass.
-        val flags = flagsAt(s, d, asOfUs).barrier()
-        FlagPasses.childPass(flags, FlagPasses.familyMap(uni))
-      },
+      (s, d) => childFlagsAt(s, d, asOfUs),
       Some {
         val eligible = graft.flags.FlagPasses.childEligible.map(f => s"'$f'").mkString(", ")
         s"""WITH f AS MATERIALIZED (${flagsSql(asOfUs)}),

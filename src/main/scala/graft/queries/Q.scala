@@ -32,13 +32,6 @@ object Q {
   def dsumSql(expr: String): String =
     s"CAST(SUM(CAST(($expr) AS DECIMAL(18,4))) AS DOUBLE)"
 
-  /** Deterministic average (decimal sum / count, in double at the end). */
-  def davg(c: Column): Column =
-    (sum(c.cast(DecimalType(18, 4))) / count(c)).cast("double")
-
-  def davgSql(expr: String): String =
-    s"CAST(SUM(CAST(($expr) AS DECIMAL(18,4))) / COUNT($expr) AS DOUBLE)"
-
   /** Epoch microseconds — the cross-engine time axis.
     *
     * `events.ts` is nanosecond-precision in parquet; both Spark and DuckDB
@@ -48,12 +41,6 @@ object Q {
   def usecs(c: Column): Column = unix_micros(c)
 
   def usecsSql(expr: String): String = s"epoch_us($expr)"
-
-  /** Epoch seconds (floored) — coarser cross-engine time axis. */
-  def secs(c: Column): Column = unix_timestamp(c)
-
-  def secsSql(expr: String): String =
-    s"CAST(FLOOR(EXTRACT(EPOCH FROM ($expr))) AS BIGINT)"
 
   /** Second-granularity formatted timestamp for human-readable output cols. */
   def tsFmt(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")

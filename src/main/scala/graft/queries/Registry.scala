@@ -44,4 +44,9 @@ object Registry {
     * input directory calls for (`Sizing.mode`), scoped to that call. */
   lazy val all: Seq[Q] =
     declared.map(q => q.copy(run = (s, d) => q.run(Sizing.session(s, Sizing.mode(d)), d)))
+
+  /** The query called `name` among [[all]]; throws `NoSuchElementException`
+    * naming it when no such query is declared. */
+  def named(name: String): Q = all.find(_.name == name).getOrElse(
+    throw new NoSuchElementException(s"no query named $name is declared"))
 }

@@ -118,7 +118,7 @@ class DagSpec extends AnyFunSuite {
 
   test("a DailyPipeline job body that reads an undeclared table fails, naming it") {
     val out = TestDirs("graft_dag_deps").toString
-    val wh = new graft.pipeline.DailyPipeline.Warehouse(out)
+    val wh = new graft.pipeline.Warehouse(TestSpark.data("sf0.001"), out)
     val dag = new Dag(Seq(
       wh.job("a")((s, t) => t.write("a", s.range(3).toDF("k"))),
       wh.job("b", Seq("a"))((_, t) => t.write("b", t.read("a"))),

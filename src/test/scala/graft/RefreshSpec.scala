@@ -1,29 +1,80 @@
 package graft
 
-import graft.pipeline.{Job, RefreshPipeline}
+import graft.pipeline.{Job, RefreshPipeline, Warehouse}
+import graft.queries.{Aggregates, FlagQs, Registry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EP2 refresh semantics: splice replaces exactly the window, dedup is
-  * idempotent, flag merge keeps newest and expires by TTL. */
+  * idempotent, flag merge keeps newest and expires by TTL; and the tables
+  * the refresh jobs write equal the oracle-gated queries they derive from. */
 class RefreshSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  private val sf = TestSpark.data("sf0.001")
+
+  /** Whether `a` and `b` hold the same rows, duplicates counted. */
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   test("refresh fails, naming the jobs, and writes nothing when a daily job it runs failed") {
-    val wh = TestDirs("graft_refresh_fail")
+    val wh = TestDirs("graft_refresh_fail").toString
     val daily = Seq(
       Job("combined_transactions", Nil, _ => throw new IllegalStateException("source down")),
       Job("customer_order_stats", Seq("combined_transactions"), _ => ()),
       Job("side", Nil, _ => ()))
-    val e = intercept[IllegalStateException] {
-      RefreshPipeline.refresh(spark, "/root/testdata/sf0.001", wh.toString, daily)
-    }
-    assert(e.getMessage.contains("2 job(s) not ok"), e.getMessage)
-    assert(e.getMessage.contains(
-      "combined_transactions failed (java.lang.IllegalStateException: source down)"), e.getMessage)
-    assert(e.getMessage.contains("customer_order_stats skipped"), e.getMessage)
-    assert(wh.toFile.list().isEmpty, "the refresh wrote over a partial warehouse")
+    val rs = Warehouse.run(spark, RefreshPipeline.plan(sf, wh, daily), wh)
+    val byName = rs.map(r => r.name -> r).toMap
+    assert(byName("combined_transactions").status == "failed")
+    assert(byName("combined_transactions").error
+      .contains("java.lang.IllegalStateException: source down"), byName("combined_transactions"))
+    assert(byName("customer_order_stats").status == "skipped")
+    assert(byName("side").status == "ok")
+    val refresh = RefreshPipeline.jobs(sf, wh).map(_.name)
+    assert(rs.map(_.name) == daily.map(_.name) ++ refresh)
+    assert(refresh.forall(byName(_).status == "skipped"), rs)
+    assert(Warehouse.exitCode(rs) == 1)
+    assert(new java.io.File(wh).list().isEmpty, "the refresh wrote over a partial warehouse")
+  }
+
+  test("the refresh jobs write k16's accepted rows, a1's order stats and u1c's merged flags") {
+    val wh = TestDirs("graft_refresh_tables").toString
+    val rs = Warehouse.run(spark, RefreshPipeline.jobs(sf, wh), wh)
+    assert(rs.forall(_.status == "ok"), rs)
+    def table(t: String) = spark.read.parquet(s"$wh/$t")
+    assert(sameRows(table("embeddings_ingested"),
+      Registry.named("k16_incremental_embed_dedup").run(spark, sf).filter(col("accepted"))))
+    assert(sameRows(table("customer_order_stats"), Registry.named("a1_multi_agg").run(spark, sf)))
+    // every flag of the refresh-clock run (u1c) survives; of the daily run's
+    // flags, only persistent types the refresh run did not raise again
+    val fresh = Registry.named("u1c_child_suppression").run(spark, sf)
+    val kept = FlagQs.childFlagsAt(spark, sf, FlagQs.asOf1Us)
+      .join(fresh, Seq("user_id", "flag_type"), "left_anti")
+      .filter(col("flag_type").isin(graft.flags.FlagRules.persistentFlags: _*))
+    val expected = fresh.withColumn("added_us", lit(FlagQs.asOfUs))
+      .unionByName(kept.withColumn("added_us", lit(FlagQs.asOf1Us)))
+    assert(sameRows(table("customer_flags_current"), expected))
+    assert(table("events_current").count() > 0 && table("documents_ingested").count() > 0)
+  }
+
+  test("a refresh job that throws fails alone: the independent jobs still write") {
+    val wh = TestDirs("graft_refresh_job_fail").toString
+    val jobs = RefreshPipeline.jobs(sf, wh).map(j =>
+      if (j.name != "customer_flags_current") j
+      else j.copy(run = _ => throw new IllegalStateException("flag source down")))
+    val byName = Warehouse.run(spark, jobs, wh).map(r => r.name -> r).toMap
+    assert(byName("customer_flags_current").status == "failed")
+    assert(byName("customer_flags_current").error.exists(_.contains("flag source down")))
+    assert(byName("compact_refreshed").status == "skipped") // compacts the flags table
+    val independent = Seq("events_current", "documents_ingested", "embeddings_ingested",
+      "incremental_order_stats")
+    assert(independent.forall(byName(_).status == "ok"), byName)
+    for (t <- Seq("events_current", "documents_ingested", "embeddings_ingested",
+        "customer_order_stats"))
+      assert(spark.read.parquet(s"$wh/$t").count() > 0, t)
+    assert(!new java.io.File(s"$wh/customer_flags_current").exists())
+    assert(Warehouse.exitCode(byName.values.toSeq) == 1)
   }
 
   test("splice keeps outside rows and replaces the window from fresh") {
@@ -70,14 +121,8 @@ class RefreshSpec extends AnyFunSuite {
   }
 
   test("mergeOrderStats(state, delta-agg) equals the full rebuild bit-for-bit") {
-    val sf = "/root/testdata/sf0.001"
     def statsOver(pred: org.apache.spark.sql.Column) =
-      graft.core.Tables.orders(spark, sf).filter(pred)
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          min(col("o_orderdate")).cast("date").as("first_order"),
-          max(col("o_orderdate")).cast("date").as("last_order"),
-          graft.queries.Q.dsum(col("o_totalprice")).as("lifetime_value"))
+      Aggregates.orderStats(graft.core.Tables.orders(spark, sf).filter(pred))
     // arbitrary split: the merge must not care where yesterday ended
     for (m <- Seq(2, 7)) {
       val merged = RefreshPipeline.mergeOrderStats(
@@ -110,7 +155,7 @@ class RefreshSpec extends AnyFunSuite {
     val fresh = Seq(
       (1L, "power_user", "new", asOf)
     ).toDF("user_id", "flag_type", "flag_data", "added_us")
-    val out = RefreshPipeline.mergeFlags(stored, fresh, asOf, 14 * day, Seq("error_prone"))
+    val out = FlagQs.mergeFlags(stored, fresh, asOf, 14 * day, Seq("error_prone"))
       .select("user_id", "flag_type", "flag_data").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     assert(out == Set(
