@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time, AQE on, UI off, log level WARN;
   *  - both parquet timestamp flags. The testdata has shipped timestamps in
   *    two generations: `nanosAsLong` reads the original TIMESTAMP(NANOS)
-  *    files as epoch-nanos longs (converted in `Tables.events`), and with
+  *    files as epoch-nanos longs (converted by `Tables` on read), and with
   *    `inferTimestampNTZ` off the regenerated TIMESTAMP(MICROS,
   *    isAdjustedToUTC=false) files read as TIMESTAMP, not TIMESTAMP_NTZ,
   *    which `unix_micros` rejects in batch and streaming watermarks silently

@@ -1,8 +1,10 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Named-table IO over a scale-factor directory of parquet files.
   *
@@ -12,14 +14,66 @@ import org.apache.spark.sql.types.LongType
   * tables; reads are lazy scans so Catalyst can push filters/projections into
   * the parquet reader (column pruning + predicate pushdown are the first-order
   * wins at 100 TB — the reference always reads whole files).
+  *
+  * [[apply]] (batch) and [[stream]] are the only readers of the input tables.
+  * Both declare the table's schema, read once per path from its parquet
+  * footer, and both pass the frame through the same timestamp
+  * normalisation, so a table reads the same way in both modes.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Input table `name` under `dir` as a batch scan. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    normalised(name, spark.read.schema(schemaOf(spark, path)).parquet(path))
+  }
+
+  /** Input table `name` under `dir` as a file stream: the files it holds
+    * when the stream starts, then each file that lands in it later. The file
+    * source takes a directory or a glob, and a single-file table is neither,
+    * so the stream reads the one-alternative glob `<dir>/{<name>.parquet}`:
+    * it matches the single file or the table directory, whose files the
+    * source then lists. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    normalised(name, spark.readStream.schema(schemaOf(spark, s"$dir/$name.parquet"))
+      .parquet(s"$dir/{$name.parquet}"))
+
+  /** The parquet timestamp flags, which decide how a footer's timestamps
+    * read (see [[normalised]]). */
+  private val timestampFlags = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val schemas = new ConcurrentHashMap[(String, Seq[Option[String]]), StructType]()
+
+  /** The schema Spark reads from the parquet footer at `path`, once per
+    * path and setting of [[timestampFlags]]: inferring it is a Spark job,
+    * and the input tables are read-only. */
+  private def schemaOf(spark: SparkSession, path: String): StructType =
+    schemas.computeIfAbsent((path, timestampFlags.map(spark.conf.getOption)),
+      _ => spark.read.parquet(path).schema)
+
+  /** The input timestamps the original generation stored as
+    * TIMESTAMP(NANOS). */
+  private val timestampCols = Map("events" -> "ts", "orders" -> "o_orderdate")
+
+  /** The input tables' timestamps have shipped in two parquet generations.
+    * The original files store TIMESTAMP(NANOS), which Spark 4 rejects unless
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by [[Session]]) — that
+    * reads it as epoch-nanos LongType, converted here to microsecond
+    * TimestampType by integral division, the exact truncation DuckDB applies
+    * when it reads the same file as TIMESTAMP. Regenerated files store
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false); every session also sets
+    * `spark.sql.parquet.inferTimestampNTZ.enabled=false` so those read as
+    * plain (UTC-session) TimestampType with the same epoch-micros values
+    * DuckDB sees — not TIMESTAMP_NTZ, which half the time-axis functions
+    * (`unix_micros` etc.) reject and which a streaming watermark never
+    * advances past. Those come back unchanged. */
+  private def normalised(name: String, df: DataFrame): DataFrame =
+    timestampCols.get(name).filter(c => df.schema(c).dataType == LongType)
+      .fold(df)(c => df.withColumn(c, timestamp_micros(expr(s"$c div 1000"))))
 
   /** S2: full-table overwrite sink — the reference's whole-file S3 put
     * (`upload_data.py:37-46`), as a proper partition-parallel writer, and
@@ -122,23 +176,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = apply(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = apply(s, d, "lineitem")
-  /** `events.ts` has shipped in two parquet generations. The original files
-    * store TIMESTAMP(NANOS), which Spark 4 rejects unless
-    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by every session builder
-    * in this repo) — that reads it as epoch-nanos LongType, converted here to
-    * microsecond TimestampType by integral division, the exact truncation
-    * DuckDB applies when it reads the same file as TIMESTAMP. Regenerated
-    * files store TIMESTAMP(MICROS, isAdjustedToUTC=false); every session also
-    * sets `spark.sql.parquet.inferTimestampNTZ.enabled=false` so those read
-    * as plain (UTC-session) TimestampType with the same epoch-micros values
-    * DuckDB sees — not TIMESTAMP_NTZ, which half the time-axis functions
-    * (`unix_micros` etc.) reject. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = apply(s, d, "events")
-    if (raw.schema("ts").dataType == LongType)
-      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else raw
-  }
+  def events(s: SparkSession, d: String): DataFrame    = apply(s, d, "events")
   // NOTE (r12 optimization round, measured REJECTION): a scan-parallelism
   // floor — repartition(cores) after the read when the file layout yields
   // < cores/2 scan partitions (the single-file/one-row-group testdata

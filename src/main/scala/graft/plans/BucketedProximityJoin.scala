@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -89,12 +88,5 @@ object BucketedProximityJoin extends Rule[LogicalPlan] with PredicateHelper {
     // Branches are disjoint in bucket delta — plain union, then restore the
     // original output (dropping the bucket columns).
     Project(j.output, Union(branches))
-  }
-
-  /** This rule alone, for a session builder's `withExtensions(...)`; the
-    * engine's sessions get it through [[GraftExtensions]]. */
-  class Extensions extends (SparkSessionExtensions => Unit) {
-    override def apply(e: SparkSessionExtensions): Unit =
-      e.injectOptimizerRule(_ => BucketedProximityJoin)
   }
 }

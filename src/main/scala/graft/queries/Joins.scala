@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.ops.{Normalize, TimeJoins}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** Joins (SURVEY.md §2.3 J1–J11).
@@ -125,7 +126,7 @@ object Joins {
     // on epoch-micros with a day-unit width would bucket-explode).
     Q("j4b_interval_rule",
       (outer, d) => {
-        val s = Q.scopedSession(outer, graft.plans.IntervalBucketJoin.WidthKey -> "32")
+        val s = GraftBridge.cloneWith(outer, Map(graft.plans.IntervalBucketJoin.WidthKey -> "32"))
         val o = Tables.orders(s, d).select(
             datediff(col("o_orderdate"), lit("1995-01-01").cast("timestamp")).as("start_day"))
           .withColumn("end_day", col("start_day") + 30)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -46,14 +46,4 @@ object Q {
   def tsFmt(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
   def tsFmtSql(expr: String): String = s"strftime(($expr), '%Y-%m-%d %H:%M:%S')"
-
-  /** Child session sharing the SparkContext, extensions, temp views,
-    * functions and QueryExecutionListeners, but with its OWN SQLConf: the
-    * parent's, then the given overrides. Conf-driven optimizer rules read the
-    * conf at optimization time — which happens later, at execution in
-    * Verify/Bench — so a query that armed a rule on the SHARED session would
-    * leave it armed for every subsequently planned query. Building the plan
-    * on a scoped child session keeps the setting query-local. */
-  def scopedSession(s: SparkSession, overrides: (String, String)*): SparkSession =
-    GraftBridge.cloneWith(s, overrides.toMap)
 }

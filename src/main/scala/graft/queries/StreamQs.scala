@@ -2,6 +2,7 @@ package graft.queries
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.core.Tables
 import graft.ops.Checkpoints.BarrierOps
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
@@ -24,64 +25,6 @@ object StreamQs {
 
   private val sinkId = new AtomicInteger(0)
 
-  /** The file stream source requires a DIRECTORY of data files; testdata
-    * tables are single read-only files, and ScaleUp-written tables are
-    * parquet DIRECTORIES (whose part files a file stream will not find
-    * through one directory symlink — it does not recurse). Stage a
-    * per-table temp dir holding symlinks to the actual part file(s)
-    * (cheap, idempotent) and stream from that. */
-  private def asStreamDir(path: String): String = {
-    import java.nio.file.{Files, Path, Paths}
-    import scala.jdk.CollectionConverters._
-    def listed(p: Path): Seq[Path] = {
-      val s = Files.list(p) // Files.list streams must be closed (fd leak)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-    val src0 = Paths.get(path)
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_${Integer.toHexString(path.hashCode)}")
-    Files.createDirectories(dir)
-    val parts =
-      if (Files.isDirectory(src0))
-        listed(src0).filter(_.getFileName.toString.endsWith(".parquet"))
-      else Seq(src0)
-    for (src <- parts) linkOne(dir, src)
-    // a REWRITTEN parquet directory gets fresh UUID part names, so links
-    // staged for the previous write would dangle (the file source stats
-    // them and dies) — drop any link not in the current part set
-    val current = parts.map(_.getFileName.toString).toSet
-    for (link <- listed(dir) if !current.contains(link.getFileName.toString))
-      Files.deleteIfExists(link)
-    dir.toString
-  }
-
-  private def linkOne(dir: java.nio.file.Path, src: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    val link = dir.resolve(src.getFileName)
-    // A pre-existing link may be stale (regenerated testdata at a different
-    // target, or a path.hashCode collision between two dataset dirs) — verify
-    // it points at THIS source and recreate it if not, rather than silently
-    // streaming the wrong or missing file. Concurrent JVMs race the
-    // delete/create window, so a lost race re-validates instead of failing.
-    def ensure(attempt: Int): Unit =
-      try {
-        if (Files.isSymbolicLink(link)) {
-          if (Files.readSymbolicLink(link) != src) {
-            Files.delete(link)
-            Files.createSymbolicLink(link, src)
-          }
-        } else {
-          Files.deleteIfExists(link)
-          Files.createSymbolicLink(link, src)
-        }
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.NoSuchFileException if attempt < 3 =>
-          ensure(attempt + 1)
-      }
-    ensure(0)
-  }
-
   /** Stateful-operator partition count for the streaming queries. Every
     * stateful partition commits its state stores (delta file + snapshot
     * bookkeeping) per micro-batch — a FIXED cost that dominates when state
@@ -95,7 +38,7 @@ object StreamQs {
   /** A child session with the stateful partition override — scoped so the
     * override never leaks into batch queries sharing the outer session. */
   private def streamSession(s: SparkSession): SparkSession =
-    Q.scopedSession(s, "spark.sql.shuffle.partitions" -> StatePartitions.toString)
+    GraftBridge.cloneWith(s, Map("spark.sql.shuffle.partitions" -> StatePartitions.toString))
 
   /** Run a streaming DataFrame to completion into a memory sink; return the
     * collected table (registered on the stream's own session). */
@@ -119,7 +62,7 @@ object StreamQs {
     Q("st1_stream_window_counts",
       (s, d) => {
         val ss = streamSession(s)
-        val agg = Streams.eventStream(ss, asStreamDir(s"$d/events.parquet"))
+        val agg = Tables.stream(ss, d, "events")
           .withWatermark("ts", "90 days")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -140,7 +83,7 @@ object StreamQs {
     Q("st2_stream_dedup_keys",
       (s, d) => {
         val ss = streamSession(s)
-        val pairs = Streams.eventStream(ss, asStreamDir(s"$d/events.parquet"))
+        val pairs = Tables.stream(ss, d, "events")
           .select(col("ts"), col("user_id"), col("event_type"))
         val dd = Streams.dedupByKey(pairs, "user_id", "90 days")
           .select(col("user_id"))
@@ -156,7 +99,7 @@ object StreamQs {
       (s, d) => {
         val ss = streamSession(s)
         def side(tpe: String, pfx: String) =
-          Streams.eventStream(ss, asStreamDir(s"$d/events.parquet"))
+          Tables.stream(ss, d, "events")
             .filter(col("event_type") === tpe)
             .select(col("user_id").as(s"${pfx}_user"), col("event_id").as(s"${pfx}_id"),
               col("ts").as(s"${pfx}_ts"))
@@ -184,7 +127,7 @@ object StreamQs {
     Q("st5_stream_sessions",
       (s, d) => {
         val sessions = Streams.userSessions(
-          Streams.eventStream(streamSession(s), asStreamDir(s"$d/events.parquet")),
+          Tables.stream(streamSession(s), d, "events"),
           "30 minutes", "0 seconds")
         runToMemory(sessions, OutputMode.Append())
           .select(col("user_id"), Q.usecs(col("session_start")).as("start_us"),
@@ -209,7 +152,7 @@ object StreamQs {
     Q("st3_stream_running_totals",
       (s, d) => {
         val ss = streamSession(s)
-        val stream = Streams.eventStream(ss, asStreamDir(s"$d/events.parquet"))
+        val stream = Tables.stream(ss, d, "events")
         val totals = Streams.runningUserTotals(ss, stream).toDF()
         runToMemory(totals, OutputMode.Update())
           .groupBy(col("userId").as("user_id"))
@@ -231,7 +174,7 @@ object StreamQs {
       (s, d) => {
         import graft.ops.TextAnalysis
         val ss = streamSession(s)
-        val gated = Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet"))
+        val gated = Tables.stream(ss, d, "documents")
           .filter(col("lang") === "en" && TextAnalysis.qualityScore("text") >= 0.8)
         val keyed = TextAnalysis.splitAssign(gated, "doc_id", "source", "text")
           .select(col("fp"), col("split"))
@@ -261,7 +204,7 @@ object StreamQs {
         val ss = streamSession(s)
         val base = seatDir("st7")
         Streams.nearDupIngest(
-            Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
+            Tables.stream(ss, d, "documents"),
             s"$base/state", s"$base/ckpt", threshold = 0.5)
         ss.read.parquet(s"$base/state").select(col("doc_id"), col("accepted"))
       },
@@ -312,9 +255,9 @@ object StreamQs {
       (s, d) => {
         val ss = streamSession(s)
         val base = seatDir("st8")
-        val docs = graft.core.Tables.documents(ss, d)
+        val docs = Tables.documents(ss, d)
         Streams.decontaminateIngest(
-            Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet"))
+            Tables.stream(ss, d, "documents")
               .filter(col("doc_id") % 97 =!= 0),
             docs.filter(col("doc_id") % 97 === 0),
             s"$base/state", s"$base/ckpt")
@@ -336,7 +279,7 @@ object StreamQs {
         val ss = streamSession(s)
         val base = seatDir("st9")
         Streams.compactingIngest(
-            Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
+            Tables.stream(ss, d, "documents"),
             s"$base/tbl", s"$base/ckpt")
         Streams.readIngested(ss, s"$base/tbl")
           .groupBy(col("source"))
@@ -355,12 +298,12 @@ object StreamQs {
         val ss = streamSession(s)
         val base = seatDir("st11")
         Streams.cdcIngest(
-            Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
+            Tables.stream(ss, d, "documents"),
             s"$base/state", s"$base/ckpt")
         import graft.ops.TextAnalysis
         TextAnalysis.cdcChunkStatsFromCensus(
           TextAnalysis.cdcChunkInstances(
-            graft.core.Tables.documents(ss, d), "doc_id", "text"),
+            Tables.documents(ss, d), "doc_id", "text"),
           Streams.cdcMergedCensus(ss, s"$base/state"), "doc_id")
       },
       Some(graft.ops.TextAnalysis.cdcChunkStatsSql("doc_id", "text", "documents"))),
@@ -375,7 +318,7 @@ object StreamQs {
         val ss = streamSession(s)
         val base = seatDir("st12")
         Streams.driftIngest(
-            Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
+            Tables.stream(ss, d, "documents"),
             s"$base/state", s"$base/ckpt")
         graft.ops.TextAnalysis.sourceDriftFromBuckets(
           Streams.driftMergedBuckets(ss, s"$base/state").barrier(),
@@ -396,12 +339,12 @@ object StreamQs {
         val ss = streamSession(s)
         val base = seatDir("st10")
         Streams.cmsIngest(
-            Streams.documentStream(ss, asStreamDir(s"$d/documents.parquet")),
+            Tables.stream(ss, d, "documents"),
             s"$base/state", s"$base/ckpt")
         import graft.ops.TextAnalysis
         TextAnalysis.cmsHeavyHittersFromCounters(
           TextAnalysis.cmsWordSpine(
-            graft.core.Tables.documents(ss, d), "text").barrier(),
+            Tables.documents(ss, d), "text").barrier(),
           Streams.cmsMergedCounters(ss, s"$base/state"))
       },
       Some(graft.ops.TextAnalysis.cmsHeavyHittersSql("text", "documents"))),
@@ -419,14 +362,14 @@ object StreamQs {
         val ss = streamSession(s)
         val base = seatDir("st13")
         Streams.quantileIngest(
-            Streams.eventStream(ss, asStreamDir(s"$d/events.parquet"))
+            Tables.stream(ss, d, "events")
               .filter(col("value").isNotNull && col("value") >= 0),
             s"$base/state", s"$base/ckpt")
         import graft.ops.QuantileSketch
         val merged = Streams.quantileMergedHistogram(ss, s"$base/state")
           .barrier()
         val direct = QuantileSketch.histogram(
-          graft.core.Tables.events(ss, d)
+          Tables.events(ss, d)
             .filter(col("value").isNotNull && col("value") >= 0),
           Seq.empty, "value")
         val bad = merged.withColumnRenamed("cnt", "cm")
@@ -477,13 +420,13 @@ object StreamQs {
         graft.plans.HllSketch.register(ss)
         val base = seatDir("st14")
         Streams.hllIngest(
-            Streams.eventStream(ss, asStreamDir(s"$d/events.parquet")),
+            Tables.stream(ss, d, "events"),
             s"$base/state", s"$base/ckpt", "user_id", "event_type")
         val merged = Streams.hllMergedSketch(ss, s"$base/state")
         // the same null-row pre-filter as hllIngest: an event_type whose
         // user_ids are all NULL must vanish on BOTH engines (the oracle's
         // hx filters before grouping), not linger as an all-zero sketch
-        val direct = graft.core.Tables.events(ss, d)
+        val direct = Tables.events(ss, d)
           .filter(col("user_id").isNotNull)
           .groupBy(col("event_type").as("grp"))
           .agg(expr("hll_sketch(CAST(user_id AS STRING))").as("hd"),
@@ -529,7 +472,7 @@ object StreamQs {
       (s, d) => {
         val ss = streamSession(s)
         val dd = EventsTable.eventSlices(
-            Streams.eventStream(ss, asStreamDir(s"$d/events.parquet")))
+            Tables.stream(ss, d, "events"))
           .withWatermark("ts", "90 days")
           .dropDuplicatesWithinWatermark(
             "customer_id", "event_type", "event_date", "details")
@@ -556,10 +499,10 @@ object StreamQs {
         val ss = streamSession(s)
         val base = seatDir("st16")
         Streams.pcaMomentsIngest(
-            Streams.embeddingStream(ss, asStreamDir(s"$d/embeddings.parquet")),
+            Tables.stream(ss, d, "embeddings"),
             s"$base/state", s"$base/ckpt")
         val merged = Streams.pcaMergedMoments(ss, s"$base/state")
-        val direct = graft.core.Tables.embeddings(ss, d)
+        val direct = Tables.embeddings(ss, d)
           .filter(col("embedding").isNotNull)
           .select(posexplode(col("embedding")).as(Seq("pos", "x")))
           .withColumn("qv", floor(col("x").cast("double") * 1024).cast("long"))
@@ -609,8 +552,7 @@ object StreamQs {
     Q("st17_stream_txn_waterfall",
       (s, d) => {
         val ss = streamSession(s)
-        val dir = asStreamDir(s"$d/orders.parquet")
-        val resync = Seq.fill(3)(Streams.orderStream(ss, dir))
+        val resync = Seq.fill(3)(Tables.stream(ss, d, "orders"))
           .reduce(_.unionByName(_))
         val arrivals = resync
           .withColumn("ts", col("o_orderdate"))

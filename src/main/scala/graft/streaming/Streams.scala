@@ -51,66 +51,6 @@ object Streams {
     fs.exists(p)
   }
 
-  /** Parquet schema of the events table in its original generation (ts is
-    * nanos-as-long under `spark.sql.legacy.parquet.nanosAsLong`). */
-  val eventsRawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", LongType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** Regenerated-file schema: ts is TIMESTAMP(MICROS) (read as UTC-session
-    * TimestampType — `inferTimestampNTZ` disabled everywhere). */
-  val eventsMicrosSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** File-based event stream over a directory of parquet files, normalized to
-    * a microsecond `ts` timestamp. Streaming sources need a declared schema;
-    * sniff the footer with a driver-side batch read so both file generations
-    * work (see [[graft.core.Tables.events]] for the two-generation story —
-    * declaring the wrong one silently yields NULL event time, which a
-    * watermark never advances past: append-mode output stays empty forever).
-    */
-  def eventStream(spark: SparkSession, dir: String): DataFrame =
-    if (spark.read.parquet(dir).schema("ts").dataType == LongType)
-      spark.readStream.schema(eventsRawSchema).parquet(dir)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else
-      spark.readStream.schema(eventsMicrosSchema).parquet(dir)
-
-  /** Streaming read of the orders/transactions ledger (the cm2 waterfall's
-    * front door). Same two-generation footer sniff as [[eventStream]]:
-    * a nanos-long `o_orderdate` converts by the same integral division
-    * DuckDB applies reading the file as TIMESTAMP. */
-  def orderStream(spark: SparkSession, dir: String): DataFrame = {
-    val micros = StructType(Seq(
-      StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-      StructField("o_orderstatus", StringType),
-      StructField("o_totalprice", DoubleType),
-      StructField("o_orderdate", TimestampType),
-      StructField("o_orderpriority", StringType)))
-    if (spark.read.parquet(dir).schema("o_orderdate").dataType == LongType)
-      spark.readStream.schema(StructType(micros.map {
-          case f if f.name == "o_orderdate" => f.copy(dataType = LongType)
-          case f => f
-        })).parquet(dir)
-        .withColumn("o_orderdate", timestamp_micros(expr("o_orderdate div 1000")))
-    else spark.readStream.schema(micros).parquet(dir)
-  }
-
-  /** Streaming read of the documents table (curation front door). */
-  def documentStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(
-      "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .parquet(dir)
-
-  /** Streaming read of the embeddings table (the ANN/PCA front door). */
-  def embeddingStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(
-      "vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-      .parquet(dir)
-
   /** Incremental append + key dedup: the `drop_duplicates(transaction_id,
     * keep='first')` pattern with a watermark bounding the dedup state —
     * exactly-once per key within the lateness horizon.

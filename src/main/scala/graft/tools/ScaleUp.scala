@@ -42,7 +42,7 @@ object ScaleUp {
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
     val spark = graft.core.Session(src)
 
-    def table(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
+    def table(n: String): DataFrame = graft.core.Tables(spark, src, n)
     // cast before getLong: key columns are int64 today, but an int32
     // regeneration would otherwise throw ClassCastException here
     def stride(df: DataFrame, key: String): Long =

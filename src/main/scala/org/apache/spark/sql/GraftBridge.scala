@@ -27,7 +27,11 @@ object GraftBridge {
   /** A clone of `s` with `settings` applied to the clone's conf only
     * (`cloneSession` is `private[sql]`). Unlike `newSession()`, a clone keeps
     * the caller's temp views, registered functions and
-    * QueryExecutionListeners. */
+    * QueryExecutionListeners. Conf-driven optimizer rules read the conf at
+    * optimization time — which happens later, at execution in Verify/Bench —
+    * so a query that armed a rule on the SHARED session would leave it armed
+    * for every query planned after it; a query that builds its plan on a
+    * clone keeps the setting to itself. */
   def cloneWith(s: SparkSession, settings: Map[String, String]): SparkSession = {
     val c = s.asInstanceOf[classic.SparkSession].cloneSession()
     settings.foreach { case (k, v) => c.conf.set(k, v) }

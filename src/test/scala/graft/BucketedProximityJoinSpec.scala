@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.BucketedProximityJoin
+import graft.core.Session
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,22 +11,26 @@ class BucketedProximityJoinSpec extends AnyFunSuite {
 
   /** `getOrCreate` returns the default session and silently IGNORES
     * `withExtensions` when one exists — so both sessions here are created
-    * fresh after clearing the default (they still share the SparkContext). */
+    * fresh after clearing the default (they still share the SparkContext).
+    * The rule-on session is the engine's own (`graft.core.Session`); the
+    * control is built by hand, because it must lack the rule. */
   private def freshSession(withExt: Boolean): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-prox-rule-ext-$withExt")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    val s = (if (withExt) b.withExtensions(new BucketedProximityJoin.Extensions) else b)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    if (withExt) Session(TestSpark.data("sf0.001"))
+    else {
+      val s = SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-prox-rule-control")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      s.sparkContext.setLogLevel("WARN")
+      s
+    }
   }
 
   private lazy val spark: SparkSession = freshSession(withExt = true)

@@ -45,10 +45,10 @@ class BucketingSpec extends AnyFunSuite {
     // are scoped to zero to prove the engine's config leaves Spark's
     // runtime row-level filtering ON: the selective dim side publishes a
     // bloom filter that prunes lineitem rows BEFORE the shuffle.
-    val s2 = graft.queries.Q.scopedSession(spark,
+    val s2 = org.apache.spark.sql.GraftBridge.cloneWith(spark, Map(
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "true")
+      "spark.sql.adaptive.enabled" -> "true"))
     val li = Tables.lineitem(s2, sf)
     val sel = Tables.orders(s2, sf).filter(col("o_totalprice") > 300000)
       .select(col("o_orderkey"))

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Session
 import graft.plans.IntervalBucketJoin
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -118,7 +118,7 @@ class IntervalBucketJoinSpec extends AnyFunSuite {
     assert(anti == 0)
   }
 
-  test("scopedSession arms the rule for one query without leaking to parent") {
+  test("cloneWith arms the rule for one query without leaking to parent") {
     val parent = freshSession(width = 0L)
     def naiveJoin(s: SparkSession) = {
       import s.implicits._
@@ -127,7 +127,7 @@ class IntervalBucketJoinSpec extends AnyFunSuite {
         .toDF("iid", "s", "e")
       pdf.join(idf, col("p") >= col("s") && col("p") <= col("e"))
     }
-    val child = graft.queries.Q.scopedSession(parent, IntervalBucketJoin.WidthKey -> "100")
+    val child = GraftBridge.cloneWith(parent, Map(IntervalBucketJoin.WidthKey -> "100"))
     val childPlan = naiveJoin(child).queryExecution.optimizedPlan.toString
     assert(childPlan.contains("__iv_bkt"), s"child session should apply the rule:\n$childPlan")
     assert(naiveJoin(child).count() == naiveJoin(parent).count())

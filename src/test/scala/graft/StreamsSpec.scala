@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Tables
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -11,20 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** Streaming file sources require a directory; stage the single events
-    * parquet into a temp dir via symlink (testdata itself is read-only). */
-  private lazy val dir: String = {
-    val d = TestDirs("graft_stream_src")
-    java.nio.file.Files.createSymbolicLink(
-      d.resolve("events.parquet"),
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"))
-    d.toString
-  }
+  private val sf = TestSpark.data("sf0.001")
 
-  private def batchEvents = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
+  private def batchEvents = Tables.events(spark, sf)
 
   test("windowed counts match the batch equivalent") {
-    val q = Streams.windowedCounts(Streams.eventStream(spark, dir), "1 hour", "10 minutes")
+    val q = Streams.windowedCounts(Tables.stream(spark, sf, "events"), "1 hour", "10 minutes")
       .writeStream.outputMode(OutputMode.Append).format("memory").queryName("win_counts").start()
     q.processAllAvailable(); q.stop()
     // Append mode only emits closed windows; the final (unclosed) windows stay
@@ -43,7 +36,7 @@ class StreamsSpec extends AnyFunSuite {
 
   test("dedupByKey keeps one row per key") {
     val q = Streams.dedupByKey(
-        Streams.eventStream(spark, dir).withColumn("dup_key", expr("event_id div 4")),
+        Tables.stream(spark, sf, "events").withColumn("dup_key", expr("event_id div 4")),
         "dup_key", "10 minutes")
       .writeStream.outputMode(OutputMode.Append).format("memory").queryName("dedup_out").start()
     q.processAllAvailable(); q.stop()
@@ -99,7 +92,7 @@ class StreamsSpec extends AnyFunSuite {
     // session windows only support append mode; with zero lateness the
     // watermark reaches max(ts) and the post-batch no-data run flushes every
     // session that closed before it
-    val q = Streams.userSessions(Streams.eventStream(spark, dir), "30 minutes", "0 seconds")
+    val q = Streams.userSessions(Tables.stream(spark, sf, "events"), "30 minutes", "0 seconds")
       .writeStream.outputMode(OutputMode.Append).format("memory").queryName("sessions").start()
     q.processAllAvailable(); q.stop()
     val got = spark.table("sessions")
@@ -239,7 +232,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("runningUserTotals accumulates keyed state across a batch") {
-    val q = Streams.runningUserTotals(spark, Streams.eventStream(spark, dir))
+    val q = Streams.runningUserTotals(spark, Tables.stream(spark, sf, "events"))
       .writeStream.outputMode(OutputMode.Update).format("memory").queryName("totals").start()
     q.processAllAvailable(); q.stop()
     // Latest state per user must equal the batch per-user counts.
@@ -259,7 +252,7 @@ class StreamsSpec extends AnyFunSuite {
     val in = TestDirs("graft_ci_in")
     val base = TestDirs("graft_ci_base").toString + "/tbl"
     val ckpt = TestDirs("graft_ci_ckpt").toString
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     // six waves, one file each; maxFilesPerTrigger=1 → six micro-batches
     (0 until 6).foreach { w =>
@@ -311,9 +304,10 @@ class StreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     import graft.ops.TextAnalysis
     val in = TestDirs("graft_dc_in")
+    val tbl = Files.createDirectories(in.resolve("documents.parquet"))
     val state = TestDirs("graft_dc_state").toString + "/t"
     val ckpt = TestDirs("graft_dc_ckpt").toString
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     val bench = docs.filter(col("doc_id") % 97 === 0)
     val train = docs.filter(col("doc_id") % 97 =!= 0)
@@ -322,12 +316,12 @@ class StreamsSpec extends AnyFunSuite {
       part.coalesce(1).write.parquet(sub.toString)
       Files.list(sub).forEach { p =>
         if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
+          Files.move(p, tbl.resolve(tag + "_" + p.getFileName.toString))
       }
     }
     def runOnce(): Unit =
       Streams.decontaminateIngest(
-        Streams.documentStream(spark, in.toString)
+        Tables.stream(spark, in.toString, "documents")
           .filter(col("doc_id") % 97 =!= 0),
         bench, state, ckpt)
 
@@ -358,9 +352,10 @@ class StreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     import graft.ops.Dedup
     val in = TestDirs("graft_nd_in")
+    val tbl = Files.createDirectories(in.resolve("documents.parquet"))
     val state = TestDirs("graft_nd_state").toString + "/t"
     val ckpt = TestDirs("graft_nd_ckpt").toString
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     val mid = 250L
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
@@ -368,11 +363,11 @@ class StreamsSpec extends AnyFunSuite {
       part.coalesce(1).write.parquet(sub.toString)
       Files.list(sub).forEach { p =>
         if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
+          Files.move(p, tbl.resolve(tag + "_" + p.getFileName.toString))
       }
     }
     def runOnce(): Unit =
-      Streams.nearDupIngest(Streams.documentStream(spark, in.toString),
+      Streams.nearDupIngest(Tables.stream(spark, in.toString, "documents"),
         state, ckpt, threshold = 0.5)
 
     // wave 1: first half by doc_id; wave 2 arrives after a restart — id-
@@ -439,16 +434,17 @@ class StreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     import graft.ops.TextAnalysis
     val in = TestDirs("graft_cms_in")
+    val tbl = Files.createDirectories(in.resolve("documents.parquet"))
     val state = TestDirs("graft_cms_state").toString + "/t"
     val ckpt = TestDirs("graft_cms_ckpt").toString
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
       val sub = in.resolve(tag)
       part.coalesce(1).write.parquet(sub.toString)
       Files.list(sub).forEach { p =>
         if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
+          Files.move(p, tbl.resolve(tag + "_" + p.getFileName.toString))
       }
     }
     def counters(d: org.apache.spark.sql.DataFrame) =
@@ -460,12 +456,12 @@ class StreamsSpec extends AnyFunSuite {
     // two arrival waves → two micro-batches → two partial sketches
     val mid = 250L
     arrive("a", docs.filter(col("doc_id") < mid))
-    Streams.cmsIngest(Streams.documentStream(spark, in.toString),
+    Streams.cmsIngest(Tables.stream(spark, in.toString, "documents"),
       state, ckpt)
     val partials1 = spark.read.parquet(state)
       .select("batch_id").distinct().count()
     arrive("b", docs.filter(col("doc_id") >= mid))
-    Streams.cmsIngest(Streams.documentStream(spark, in.toString),
+    Streams.cmsIngest(Tables.stream(spark, in.toString, "documents"),
       state, ckpt)
     assert(spark.read.parquet(state)
       .select("batch_id").distinct().count() > partials1)
@@ -485,16 +481,17 @@ class StreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     import graft.ops.QuantileSketch
     val in = TestDirs("graft_qs_in")
+    val tbl = Files.createDirectories(in.resolve("events.parquet"))
     val state = TestDirs("graft_qs_state").toString + "/t"
     val ckpt = TestDirs("graft_qs_ckpt").toString
-    val ev = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
+    val ev = Tables.events(spark, sf)
       .filter(col("value").isNotNull && col("value") >= 0).localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
       val sub = in.resolve(tag)
       part.coalesce(1).write.parquet(sub.toString)
       Files.list(sub).forEach { p =>
         if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
+          Files.move(p, tbl.resolve(tag + "_" + p.getFileName.toString))
       }
     }
     def hist(d: org.apache.spark.sql.DataFrame) =
@@ -507,12 +504,12 @@ class StreamsSpec extends AnyFunSuite {
 
     val mid = 500L
     arrive("a", ev.filter(col("event_id") < mid))
-    Streams.quantileIngest(Streams.eventStream(spark, in.toString)
+    Streams.quantileIngest(Tables.stream(spark, in.toString, "events")
         .filter(col("value").isNotNull && col("value") >= 0), state, ckpt)
     val partials1 = spark.read.parquet(state)
       .select("batch_id").distinct().count()
     arrive("b", ev.filter(col("event_id") >= mid))
-    Streams.quantileIngest(Streams.eventStream(spark, in.toString)
+    Streams.quantileIngest(Tables.stream(spark, in.toString, "events")
         .filter(col("value").isNotNull && col("value") >= 0), state, ckpt)
     assert(spark.read.parquet(state)
       .select("batch_id").distinct().count() > partials1)
@@ -530,16 +527,17 @@ class StreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     import graft.ops.TextAnalysis
     val in = TestDirs("graft_drift_in")
+    val tbl = Files.createDirectories(in.resolve("documents.parquet"))
     val state = TestDirs("graft_drift_state").toString + "/t"
     val ckpt = TestDirs("graft_drift_ckpt").toString
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
       val sub = in.resolve(tag)
       part.coalesce(1).write.parquet(sub.toString)
       Files.list(sub).forEach { p =>
         if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
+          Files.move(p, tbl.resolve(tag + "_" + p.getFileName.toString))
       }
     }
     def spine(d: org.apache.spark.sql.DataFrame) =
@@ -549,10 +547,10 @@ class StreamsSpec extends AnyFunSuite {
 
     val mid = 250L
     arrive("a", docs.filter(col("doc_id") < mid))
-    Streams.driftIngest(Streams.documentStream(spark, in.toString),
+    Streams.driftIngest(Tables.stream(spark, in.toString, "documents"),
       state, ckpt)
     arrive("b", docs.filter(col("doc_id") >= mid))
-    Streams.driftIngest(Streams.documentStream(spark, in.toString),
+    Streams.driftIngest(Tables.stream(spark, in.toString, "documents"),
       state, ckpt)
     assert(spine(Streams.driftMergedBuckets(spark, state)) == want,
       "merged partials must equal the one-shot batch spine")
@@ -577,16 +575,17 @@ class StreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     import graft.ops.TextAnalysis
     val in = TestDirs("graft_cdc_in")
+    val tbl = Files.createDirectories(in.resolve("documents.parquet"))
     val state = TestDirs("graft_cdc_state").toString + "/t"
     val ckpt = TestDirs("graft_cdc_ckpt").toString
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
       val sub = in.resolve(tag)
       part.coalesce(1).write.parquet(sub.toString)
       Files.list(sub).forEach { p =>
         if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
+          Files.move(p, tbl.resolve(tag + "_" + p.getFileName.toString))
       }
     }
     def census(d: org.apache.spark.sql.DataFrame) =
@@ -596,10 +595,10 @@ class StreamsSpec extends AnyFunSuite {
 
     val mid = 250L
     arrive("a", docs.filter(col("doc_id") < mid))
-    Streams.cdcIngest(Streams.documentStream(spark, in.toString),
+    Streams.cdcIngest(Tables.stream(spark, in.toString, "documents"),
       state, ckpt)
     arrive("b", docs.filter(col("doc_id") >= mid))
-    Streams.cdcIngest(Streams.documentStream(spark, in.toString),
+    Streams.cdcIngest(Tables.stream(spark, in.toString, "documents"),
       state, ckpt)
     assert(census(Streams.cdcMergedCensus(spark, state)) == want,
       "merged partial censuses must equal the one-shot batch census")
@@ -623,16 +622,17 @@ class StreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     graft.plans.HllSketch.register(spark)
     val in = TestDirs("graft_hll_in")
+    val tbl = Files.createDirectories(in.resolve("events.parquet"))
     val state = TestDirs("graft_hll_state").toString + "/t"
     val ckpt = TestDirs("graft_hll_ckpt").toString
-    val ev = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
+    val ev = Tables.events(spark, sf)
       .localCheckpoint(true)
     def arrive(tag: String, part: org.apache.spark.sql.DataFrame): Unit = {
       val sub = in.resolve(tag)
       part.coalesce(1).write.parquet(sub.toString)
       Files.list(sub).forEach { p =>
         if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
+          Files.move(p, tbl.resolve(tag + "_" + p.getFileName.toString))
       }
     }
     def readout(d: org.apache.spark.sql.DataFrame, h: String) =
@@ -644,10 +644,10 @@ class StreamsSpec extends AnyFunSuite {
 
     val mid = ev.agg(expr("percentile_approx(event_id, 0.5)")).head.getLong(0)
     arrive("a", ev.filter(col("event_id") < mid))
-    Streams.hllIngest(Streams.eventStream(spark, in.toString),
+    Streams.hllIngest(Tables.stream(spark, in.toString, "events"),
       state, ckpt)
     arrive("b", ev.filter(col("event_id") >= mid))
-    Streams.hllIngest(Streams.eventStream(spark, in.toString),
+    Streams.hllIngest(Tables.stream(spark, in.toString, "events"),
       state, ckpt)
     assert(readout(Streams.hllMergedSketch(spark, state), "h") == want,
       "merged register partials must equal the one-shot batch sketch")
