@@ -512,11 +512,8 @@ object Dedup {
     * digit i%32, shift i/32 — two independent bits per hex digit, 64 from the
     * 128-bit digest. Keeping the fingerprint as four small ints instead of
     * one BIGINT sidesteps 2^63 sign overflow AND is exactly the shape banded
-    * hamming-LSH needs: each band column is an equi-join key. */
-  def simhash64Bands(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhash64BandsFromCounts(wordCounts(df, idCol, textCol), idCol)
-
-  /** [[simhash64Bands]] over a pre-built [[wordCounts]] frame. */
+    * hamming-LSH needs: each band column is an equi-join key. Input: a
+    * [[wordCounts]] frame. */
   def simhash64BandsFromCounts(dw: DataFrame, idCol: String): DataFrame = {
     val hx = "ascii(substr(h, bit % 32 + 1, 1))"
     val votes = voteSumsFromCounts(dw, idCol, 64,

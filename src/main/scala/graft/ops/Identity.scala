@@ -60,20 +60,6 @@ object Identity extends org.apache.spark.internal.Logging {
     labels.withColumnRenamed("comp", "comp_id")
   }
 
-  /** Resolve records into identity clusters by exact shared identifiers.
-    * `identifiers`: (record_id, id_value) — pre-normalized (Normalize.normText
-    * / alnumOnly). Records sharing any id_value land in one component. */
-  def resolveByExactKeys(identifiers: DataFrame): DataFrame = {
-    val nodes = identifiers.select(col("record_id").as("id")).distinct()
-    // Edge via the identifier hub: star topology (min record per value <-> others)
-    // keeps edge count linear in records, not quadratic per shared value.
-    val hubs = identifiers.groupBy(col("id_value")).agg(min(col("record_id")).as("hub"))
-    val edges = identifiers.join(hubs, Seq("id_value"))
-      .filter(col("record_id") =!= col("hub"))
-      .select(col("hub").as("src"), col("record_id").as("dst"))
-    connectedComponents(nodes, edges)
-  }
-
   /** Sorted-neighborhood candidate pairs (SNM, Hernández & Stolfo '95) —
     * the SORT-ORDER blocking family next to J7/u2b's key-EQUALITY blocks:
     * rank every record under one global (key, id) order and emit every pair

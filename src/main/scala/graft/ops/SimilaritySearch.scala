@@ -378,21 +378,16 @@ object SimilaritySearch {
     (assign, cents.select(col("cell"), col("__c")))
   }
 
-  /** Product-quantization codes (Jégou et al. '11): the vector is split into
-    * `m` contiguous sub-blocks and each block is quantized by its own
-    * deterministic k-means codebook ([[kmeansAssign]] on the sub-vectors).
-    * Output: (idCol, code_0..code_{m-1}) — the compressed representation an
-    * ANN index stores instead of raw vectors (dim×4 bytes → m bytes at
-    * k<=256), which is what makes billion-vector indexes fit in memory.
-    * Codebook training is index-build-time work, not query-time. */
-  def pqCodes(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
-      m: Int, k: Int, iters: Int): DataFrame =
-    pqModel(emb, idCol, vecCol, dim, m, k, iters)._1
-
-  /** PQ codes AND the per-block codebooks from the same k-means runs —
-    * (codes, (block, code, centroid)). The codebook rides out of
-    * [[kmeansModel]]'s final update step, so building the index pays the
-    * corpus passes once, not twice. */
+  /** Product quantization (Jégou et al. '11): the vector is split into `m`
+    * contiguous sub-blocks and each block is quantized by its own
+    * deterministic k-means codebook. Returns the codes (idCol,
+    * code_0..code_{m-1}) — the compressed representation an ANN index
+    * stores instead of raw vectors (dim×4 bytes → m bytes at k<=256), which
+    * is what makes billion-vector indexes fit in memory — AND the per-block
+    * codebooks (code, centroid, block) from the same k-means runs: the
+    * codebook rides out of the final update step, so building the index
+    * pays the corpus passes once. Codebook training is index-build-time
+    * work, not query-time. */
   def pqModel(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       m: Int, k: Int, iters: Int): (DataFrame, DataFrame) = {
     require(dim % m == 0, s"dim $dim not divisible into $m blocks")
@@ -461,27 +456,6 @@ object SimilaritySearch {
         .barrier() // m×k rows; breaks the growing iteration lineage
     }
     (assign, cents.select(col("block"), col("cell"), col("__c")))
-  }
-
-  /** Per-block PQ codebook: the exact-decimal mean sub-vector of every
-    * (block, code) cell, as float (same arithmetic as [[kmeansAssign]]'s
-    * update step). (block, code, centroid). */
-  def pqCodebook(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
-      m: Int, codes: DataFrame): DataFrame = {
-    val sub = dim / m
-    (0 until m).map { b =>
-      val sv = expr(s"CAST(slice($vecCol, ${b * sub + 1}, $sub) AS ARRAY<FLOAT>)")
-      emb.select(col(idCol), sv.as("__sv")).join(codes.select(col(idCol),
-          col(s"code_$b").as("code")), idCol)
-        .select(col("code"), posexplode(col("__sv")).as(Seq("pos", "x")))
-        .groupBy(col("code"), col("pos"))
-        .agg((sum(col("x").cast(DecimalType(28, 9))) / count(lit(1)))
-          .cast("float").as("cx"))
-        .groupBy(col("code"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, cx))), s -> s.cx)")
-          .as("centroid"))
-        .withColumn("block", lit(b))
-    }.reduce(_.unionByName(_))
   }
 
   /** PQ-ADC search (asymmetric distance computation): the query stays

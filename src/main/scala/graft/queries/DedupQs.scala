@@ -21,7 +21,7 @@ object DedupQs {
 
   /** Shared oracle CTE chain for the 64-bit banded simhash: toks → votes →
     * sig (4 × 16-bit bands) → pairs (band collisions) → ham (exact hamming).
-    * Mirrors `Dedup.simhash64Bands`/`simhash64NearDup`. */
+    * Mirrors `Dedup.simhash64BandsFromCounts`/`simhash64NearDup`. */
   private val simhash64CtesSql: String = {
     val hx = "ascii(substr(md5(tok), i % 32 + 1, 1))"
     val bandCols = (0 until 4).map(b =>

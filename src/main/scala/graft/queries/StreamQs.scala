@@ -127,8 +127,7 @@ object StreamQs {
     Q("st5_stream_sessions",
       (s, d) => {
         val sessions = Streams.userSessions(
-          Tables.stream(streamSession(s), d, "events"),
-          "30 minutes", "0 seconds")
+          Tables.stream(streamSession(s), d, "events"))
         runToMemory(sessions, OutputMode.Append())
           .select(col("user_id"), Q.usecs(col("session_start")).as("start_us"),
             col("n_events"))
@@ -205,7 +204,7 @@ object StreamQs {
         val base = seatDir("st7")
         Streams.nearDupIngest(
             Tables.stream(ss, d, "documents"),
-            s"$base/state", s"$base/ckpt", threshold = 0.5)
+            s"$base/state", s"$base/ckpt")
         ss.read.parquet(s"$base/state").select(col("doc_id"), col("accepted"))
       },
       Some(s"""WITH ${DedupQs.shinglesCte},
@@ -421,7 +420,7 @@ object StreamQs {
         val base = seatDir("st14")
         Streams.hllIngest(
             Tables.stream(ss, d, "events"),
-            s"$base/state", s"$base/ckpt", "user_id", "event_type")
+            s"$base/state", s"$base/ckpt")
         val merged = Streams.hllMergedSketch(ss, s"$base/state")
         // the same null-row pre-filter as hllIngest: an event_type whose
         // user_ids are all NULL must vanish on BOTH engines (the oracle's

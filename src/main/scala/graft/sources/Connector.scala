@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -11,9 +10,10 @@ import org.apache.spark.sql.types.StructType
   * `/root/reference/data_pipeline/fetch_capitan_membership_data.py:31-109`,
   * `fetch_square_data.py:128-177`, `fetch_stripe_data.py:123-160`) into
   * row lists. The engine keeps network IO out of core and models every
-  * source as "something that yields a DataFrame": file-backed connectors
-  * for warehouse tables, and a paged connector whose page-fetch function is
-  * injected — API clients plug in there, tests inject synthetic pagers.
+  * source as "something that yields a DataFrame": a paged connector whose
+  * page-fetch function is injected — API clients plug in there, tests
+  * inject synthetic pagers. File-backed tables are read through
+  * `graft.core.Tables`.
   *
   * Paged fetches are driver-side by nature (sequential cursors — the
   * reference takes ~21 min for one such fetch); the contract is that a
@@ -22,16 +22,6 @@ import org.apache.spark.sql.types.StructType
   */
 trait Connector {
   def load(spark: SparkSession): DataFrame
-}
-
-/** S1: one named parquet table of a scale-factor directory. */
-final class ParquetTableConnector(dir: String, table: String) extends Connector {
-  override def load(spark: SparkSession): DataFrame = Tables(spark, dir, table)
-}
-
-/** S1 CSV parity: schema-on-read CSV with permissive coercion. */
-final class CsvConnector(path: String, schema: StructType) extends Connector {
-  override def load(spark: SparkSession): DataFrame = Tables.readCsv(spark, path, schema)
 }
 
 /** S4: cursor/offset pagination — `fetchPage(cursor)` returns a page of rows

@@ -5,7 +5,7 @@ import graft.ops.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming forms of the reference's micro-batch behaviors
@@ -67,14 +67,6 @@ object Streams {
   def dedupByKey(stream: DataFrame, keyCol: String, lateness: String): DataFrame =
     stream.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keyCol)
 
-  /** Tumbling-window per-type counts + value sums with watermarking —
-    * the streaming form of A2's calendar-period aggregation. */
-  def windowedCounts(stream: DataFrame, window_ : String, lateness: String): DataFrame =
-    stream.withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), window_).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total_value"))
-
   /** Merge one batch into a keyed parquet table: new keys append, existing
     * keys are replaced by the row with the highest (version, tiebreak).
     * Keep-newest is a per-key window — idempotent, so a replayed micro-batch
@@ -99,13 +91,13 @@ object Streams {
     Tables.write(merged, tableDir)
   }
 
-  /** Continuous upsert: every micro-batch of `stream` is merged into
-    * `tableDir` via [[mergeUpsert]] under a checkpoint, so restarts resume
-    * from the last committed batch. */
-  def upsertByKey(stream: DataFrame, tableDir: String, ckptDir: String,
-      keyCol: String, versionCol: String, tiebreakCol: String): StreamingQuery =
-    eachBatch(stream, ckptDir)((batch, _) =>
-      mergeUpsert(batch, tableDir, keyCol, versionCol, tiebreakCol))
+  // shingle width, minhash count and band size of the near-dup seat: 8
+  // hashes in 4 bands of 2, the banding st7's oracle spells out; and the
+  // exact-Jaccard threshold of its stream
+  private val NearDupK = 3
+  private val NearDupHashes = 8
+  private val NearDupBandSize = 2
+  private val NearDupThreshold = 0.5
 
   /** Merge one micro-batch of documents into the near-dup ingest state at
     * `stateDir` — the streaming seat of `Dedup.incrementalNearDup` (d8): a
@@ -133,8 +125,7 @@ object Streams {
     * format-agnostic merge (same trade as [[mergeUpsert]]); on an ACID table
     * format the same call site becomes an append + MERGE. */
   def nearDupIngestBatch(batchRaw: DataFrame, stateDir: String,
-      threshold: Double, k: Int = 3, numHashes: Int = 8, bandSize: Int = 2,
-      maxBucket: Int = graft.ops.Dedup.DefaultLshMaxBucket): Unit = {
+      threshold: Double, maxBucket: Int = graft.ops.Dedup.DefaultLshMaxBucket): Unit = {
     import graft.ops.Dedup
     val seen = Tables.committed(batchRaw.sparkSession, stateDir)
 
@@ -146,8 +137,8 @@ object Streams {
     if (fresh.isEmpty) return
 
     val freshBands = Dedup.lshBands(
-      Dedup.minhash(Dedup.shingles(fresh, "doc_id", "text", k, dedup = false),
-        "doc_id", numHashes), "doc_id", bandSize, numHashes).barrier()
+      Dedup.minhash(Dedup.shingles(fresh, "doc_id", "text", NearDupK, dedup = false),
+        "doc_id", NearDupHashes), "doc_id", NearDupBandSize, NearDupHashes).barrier()
     val seenBands = seen.map(_.select(col("doc_id"), explode(col("bands")).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.sig").as("sig")))
 
@@ -190,7 +181,7 @@ object Streams {
       sn.select(col("doc_id"), col("text")).unionByName(fresh))
     val candDocs = allDocs.join(candIds, allDocs("doc_id") === col("__cid"), "left_semi")
     val rejected = Dedup.jaccardFor(cands,
-        Dedup.shingles(candDocs, "doc_id", "text", k, dedup = false), "doc_id")
+        Dedup.shingles(candDocs, "doc_id", "text", NearDupK, dedup = false), "doc_id")
       .filter(col("jaccard") >= threshold)
       .select(col("id_a").as("doc_id")).distinct()
 
@@ -209,12 +200,13 @@ object Streams {
   /** Continuous near-dup ingest: every micro-batch of the document stream is
     * gated through [[nearDupIngestBatch]] under a checkpoint, so restarts
     * resume from the last committed batch and replays converge. */
-  def nearDupIngest(stream: DataFrame, stateDir: String, ckptDir: String,
-      threshold: Double, k: Int = 3, numHashes: Int = 8,
-      bandSize: Int = 2,
-      maxBucket: Int = graft.ops.Dedup.DefaultLshMaxBucket): StreamingQuery =
+  def nearDupIngest(stream: DataFrame, stateDir: String, ckptDir: String): StreamingQuery =
     eachBatch(stream, ckptDir)((batch, _) =>
-      nearDupIngestBatch(batch, stateDir, threshold, k, numHashes, bandSize, maxBucket))
+      nearDupIngestBatch(batch, stateDir, NearDupThreshold))
+
+  // landing batches per merge into base, and the bytes per base file
+  private val CompactMergeEvery = 4
+  private val CompactTargetBytes = 128L << 20
 
   /** Streaming append ingest with BOUNDED small files — the two-zone
     * (landing + compacted base) pattern a file-backed streaming sink needs
@@ -225,24 +217,24 @@ object Streams {
     *  - Each micro-batch lands in its own `landing/b<id>` dir, stamped with
     *    an `ingest_batch` column and written with overwrite — a replayed
     *    batch after a crash rewrites the same dir (idempotent).
-    *  - Once `mergeEvery` COMMITTED landing batches accumulate (ids below
-    *    the current one — their checkpoint offsets are durable), they fold
-    *    into the compacted `base` table through `Tables.write`'s swap. The
+    *  - Once `CompactMergeEvery` COMMITTED landing batches accumulate (ids
+    *    below the current one — their checkpoint offsets are durable), they
+    *    fold into the compacted `base` table through `Tables.write`'s swap. The
     *    merge anti-joins on the batch ids already present in base, so a
     *    crash between swap-commit and landing cleanup cannot double rows:
     *    the retried merge sees those ids in base and only deletes.
     *  - [[readIngested]] is the read view: base ∪ landing batches whose id
     *    is not yet in base — exactly-once visibility at every point.
     */
-  def compactingIngest(stream: DataFrame, baseDir: String, ckptDir: String,
-      mergeEvery: Int = 4, targetBytes: Long = 128L << 20): StreamingQuery =
+  def compactingIngest(stream: DataFrame, baseDir: String,
+      ckptDir: String): StreamingQuery =
     eachBatch(stream, ckptDir) { (batch, id) =>
       val spark = batch.sparkSession
       batch.withColumn("ingest_batch", lit(id))
         .write.mode("overwrite").parquet(s"$baseDir/landing/b$id")
       val committed = landingIds(spark, baseDir).filter(_ < id)
-      if (committed.size >= mergeEvery)
-        mergeLanding(spark, baseDir, committed, targetBytes)
+      if (committed.size >= CompactMergeEvery)
+        mergeLanding(spark, baseDir, committed)
     }
 
   private[graft] def landingIds(spark: SparkSession, baseDir: String): Seq[Long] = {
@@ -260,13 +252,13 @@ object Streams {
   }
 
   private[graft] def mergeLanding(spark: SparkSession, baseDir: String,
-      ids: Seq[Long], targetBytes: Long): Unit = {
+      ids: Seq[Long]): Unit = {
     val existing = Tables.committed(spark, s"$baseDir/base")
     val inBase = baseBatchIds(spark, baseDir)
     val fresh = ids.filterNot(inBase)
     if (fresh.nonEmpty) {
       val landing = spark.read.parquet(fresh.map(i => s"$baseDir/landing/b$i"): _*)
-      // size the rewrite like Tables.compact: one file per targetBytes
+      // size the rewrite like Tables.compact: one file per CompactTargetBytes
       val bytes = fresh.map { i =>
         val (fs, p) = fsOf(spark, s"$baseDir/landing/b$i")
         fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
@@ -274,7 +266,8 @@ object Streams {
         val (fs, p) = fsOf(spark, s"$baseDir/base")
         fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
       }
-      val target = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+      val target = math.max(1L,
+        (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
       val merged = existing.fold(landing)(_.unionByName(landing)).repartition(target)
       Tables.write(merged, s"$baseDir/base")
     }
@@ -299,6 +292,10 @@ object Streams {
     parts.reduce(_ unionByName _)
   }
 
+  // benchmark shingle width and Bloom false-positive rate (t6's)
+  private val DecontamK = 5
+  private val DecontamFpp = 0.01
+
   /** Continuous benchmark decontamination on ingest: the benchmark shingle
     * set collapses ONCE to (distinct-shingle frame, broadcast Bloom filter)
     * — `TextAnalysis.benchShingleBloom` — and every micro-batch of arriving
@@ -313,14 +310,13 @@ object Streams {
     * is paid once per STREAM, not once per batch — the build-once/apply-
     * many split that matters when the trigger fires every few seconds. */
   def decontaminateIngest(stream: DataFrame, bench: DataFrame,
-      stateDir: String, ckptDir: String, k: Int = 5,
-      fpp: Double = 0.01): StreamingQuery = {
+      stateDir: String, ckptDir: String): StreamingQuery = {
     import graft.ops.TextAnalysis
-    val (benchSh, bfBc) =
-      TextAnalysis.benchShingleBloom(bench, "doc_id", "text", k, fpp)
+    val (benchSh, bfBc) = TextAnalysis.benchShingleBloom(
+      bench, "doc_id", "text", DecontamK, DecontamFpp)
     eachBatch(stream, ckptDir) { (batch, _) =>
       val report = TextAnalysis.contaminationVsBloom(
-          batch, benchSh, bfBc, "doc_id", "text", k)
+          batch, benchSh, bfBc, "doc_id", "text", DecontamK)
         .withColumn("flagged", col("n_contam") > 0)
       mergeUpsert(report, stateDir, "doc_id", "n_shingles", "n_contam")
     }
@@ -339,13 +335,10 @@ object Streams {
     * State growth is batches × depth × width tiny rows, never corpus- or
     * vocabulary-sized; compaction is the same re-sum landed back as one
     * partial. */
-  def cmsIngest(stream: DataFrame, stateDir: String, ckptDir: String,
-      textCol: String = "text", depth: Int = 3,
-      width: Int = 1024): StreamingQuery =
+  def cmsIngest(stream: DataFrame, stateDir: String, ckptDir: String): StreamingQuery =
     landPartials(stream, stateDir, ckptDir) { batch =>
       import graft.ops.TextAnalysis
-      TextAnalysis.cmsCountersFromSpine(
-        TextAnalysis.cmsWordSpine(batch, textCol), depth, width)
+      TextAnalysis.cmsCountersFromSpine(TextAnalysis.cmsWordSpine(batch, "text"))
     }
 
   /** [[eachBatch]] for the partial-landing sketch seats: each micro-batch's
@@ -387,10 +380,9 @@ object Streams {
     * bucketing is deterministic, so the merged state equals the one-pass
     * batch histogram BIT-FOR-BIT (the a18b property) — streaming ingest
     * loses nothing vs a batch rebuild. */
-  def quantileIngest(stream: DataFrame, stateDir: String, ckptDir: String,
-      valueCol: String = "value"): StreamingQuery =
+  def quantileIngest(stream: DataFrame, stateDir: String, ckptDir: String): StreamingQuery =
     landPartials(stream, stateDir, ckptDir)(
-      graft.ops.QuantileSketch.histogram(_, Seq.empty, valueCol))
+      graft.ops.QuantileSketch.histogram(_, Seq.empty, "value"))
 
   /** Merge the per-batch histogram partials into the current sketch state —
     * bucket-wise addition is the merge. Zero-batch ingest = empty sketch. */
@@ -409,11 +401,10 @@ object Streams {
     * equals the one-pass batch moments integer-for-integer, and `Pca.fit`
     * can refresh the model from KB-sized stored partials as vectors
     * stream in — never a corpus re-scan. */
-  def pcaMomentsIngest(stream: DataFrame, stateDir: String, ckptDir: String,
-      vecCol: String = "embedding"): StreamingQuery =
+  def pcaMomentsIngest(stream: DataFrame, stateDir: String, ckptDir: String): StreamingQuery =
     landPartials(stream, stateDir, ckptDir)(
-      _.filter(col(vecCol).isNotNull)
-        .select(posexplode(col(vecCol)).as(Seq("pos", "x")))
+      _.filter(col("embedding").isNotNull)
+        .select(posexplode(col("embedding")).as(Seq("pos", "x")))
         .withColumn("qv", floor(col("x").cast("double") * 1024).cast("long"))
         .groupBy(col("pos"))
         .agg(count(lit(1)).as("n"), sum(col("qv")).as("m"),
@@ -438,18 +429,16 @@ object Streams {
     * idempotent — even a double-merged partial cannot change the union,
     * the property the additive CMS/quantile states do NOT have. State
     * growth is one 256-byte row per (batch, group). */
-  def hllIngest(stream: DataFrame, stateDir: String, ckptDir: String,
-      valueCol: String = "user_id",
-      groupCol: String = "event_type"): StreamingQuery =
+  def hllIngest(stream: DataFrame, stateDir: String, ckptDir: String): StreamingQuery =
     landPartials(stream, stateDir, ckptDir) { batch =>
       graft.plans.HllSketch.register(batch.sparkSession)
       // null values are dropped BEFORE grouping (not just ignored by the
       // sketch update), so a group whose values are all NULL emits no
       // partial at all — pinning the group-existence semantics to the
       // oracle's `WHERE sv IS NOT NULL` exactly
-      batch.filter(col(valueCol).isNotNull)
-        .groupBy(col(groupCol).as("grp"))
-        .agg(expr(s"hll_state(CAST($valueCol AS STRING))").as("st"))
+      batch.filter(col("user_id").isNotNull)
+        .groupBy(col("event_type").as("grp"))
+        .agg(expr("hll_state(CAST(user_id AS STRING))").as("st"))
     }
 
   /** Union the per-batch register partials into the current per-group
@@ -472,11 +461,9 @@ object Streams {
     * partials; a replayed batch (foreachBatch's at-least-once) OVERWRITES
     * its batch_id dir instead of double-counting. State is
     * distinct-chunks-sized per batch, never corpus-sized. */
-  def cdcIngest(stream: DataFrame, stateDir: String, ckptDir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      w: Int = 3, div: Int = 16, salt: String = "cdc"): StreamingQuery =
+  def cdcIngest(stream: DataFrame, stateDir: String, ckptDir: String): StreamingQuery =
     landPartials(stream, stateDir, ckptDir)(
-      graft.ops.TextAnalysis.cdcCensus(_, idCol, textCol, w, div, salt))
+      graft.ops.TextAnalysis.cdcCensus(_, "doc_id", "text"))
 
   /** Merge the per-batch partial censuses into the current chunk census —
     * summation is the merge. Zero-batch ingest = the empty census. */
@@ -495,85 +482,31 @@ object Streams {
     * over [[driftMergedBuckets]] — the SAME report code as the batch path,
     * so streamed monitoring equals the batch t26 exactly and its oracle
     * carries over unchanged. */
-  def driftIngest(stream: DataFrame, stateDir: String, ckptDir: String,
-      srcCol: String = "source", textCol: String = "text",
-      buckets: Int = 256): StreamingQuery =
+  def driftIngest(stream: DataFrame, stateDir: String, ckptDir: String): StreamingQuery =
     landPartials(stream, stateDir, ckptDir)(
-      graft.ops.TextAnalysis.sourceBucketCounts(_, srcCol, textCol, buckets))
+      graft.ops.TextAnalysis.sourceBucketCounts(_, "source", "text"))
 
   /** Merge the per-batch (source, bucket) partials — counts are additive.
     * Zero-batch ingest = the empty spine. */
-  def driftMergedBuckets(spark: SparkSession, stateDir: String,
-      srcCol: String = "source"): DataFrame =
+  def driftMergedBuckets(spark: SparkSession, stateDir: String): DataFrame =
     mergedState(spark, stateDir, StructType(Seq(
-        StructField(srcCol, StringType), StructField("__b", LongType),
+        StructField("source", StringType), StructField("__b", LongType),
         StructField("__c", LongType))),
-      Seq(srcCol, "__b"), sum(col("__c")).as("__c"))
+      Seq("source", "__b"), sum(col("__c")).as("__c"))
 
   /** Gap-based session windows per user: `session_window` keeps a window
-    * open while events keep arriving within `gap` of the last one, merging
-    * across micro-batches — the streaming form of `ops.Windows.sessionize`
-    * (boundary nuance documented there: the window is half-open
-    * [start, last+gap), so a step of exactly `gap` starts a new session). */
-  def userSessions(stream: DataFrame, gap: String, lateness: String): DataFrame =
-    stream.withWatermark("ts", lateness)
-      .groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
+    * open while events keep arriving within 30 minutes of the last one,
+    * merging across micro-batches — the streaming form of
+    * `ops.Windows.sessionize` (boundary nuance documented there: the window
+    * is half-open [start, last+gap), so a step of exactly the gap starts a
+    * new session). Zero lateness: the final watermark is max(ts), so append
+    * mode emits exactly the sessions that closed before it. */
+  def userSessions(stream: DataFrame): DataFrame =
+    stream.withWatermark("ts", "0 seconds")
+      .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end"), col("n_events"))
-
-  final case class FlagState(lastPurchaseMs: Long)
-  final case class FlagEvent(userId: Long, flag: String, active: Boolean, atMs: Long)
-
-  /** Flag lifecycle with true streaming TTL (the batch twin is u1b's 14-day
-    * merge filter): a purchase raises `recent_purchase` and arms an
-    * event-time timeout at lastPurchase + ttl; when the WATERMARK passes it
-    * with no newer purchase, the state expires and the flag-clear event is
-    * emitted from the timeout callback — no scan ever revisits quiet users,
-    * state size is one row per currently-flagged user. */
-  def recentPurchaseFlags(spark: SparkSession, stream: DataFrame,
-      ttlMs: Long): Dataset[FlagEvent] = {
-    import spark.implicits._
-    stream.withWatermark("ts", "0 seconds")
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .as[(Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[FlagState, FlagEvent](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (uid, _, state: GroupState[FlagState]) if state.hasTimedOut =>
-          val out = FlagEvent(uid, "recent_purchase", active = false,
-            state.get.lastPurchaseMs + ttlMs)
-          state.remove()
-          Iterator.single(out)
-        case (uid, rows, state: GroupState[FlagState]) =>
-          val purchases = rows.collect {
-            case (_, "purchase", ts) => ts.getTime
-          }.toSeq.sorted
-          if (purchases.isEmpty) Iterator.empty
-          else {
-            // walk the purchase times and emit every OFF→ON edge, INCLUDING
-            // gaps longer than the ttl that are bridged inside one batch
-            // (the armed timeout never fires if the re-purchase arrives
-            // first — the expiry must be synthesized here or it is lost)
-            val out = Seq.newBuilder[FlagEvent]
-            var last: Option[Long] = state.getOption.map(_.lastPurchaseMs)
-            purchases.foreach { t =>
-              last match {
-                case None =>
-                  out += FlagEvent(uid, "recent_purchase", active = true, t)
-                case Some(prev) if t > prev + ttlMs =>
-                  out += FlagEvent(uid, "recent_purchase", active = false, prev + ttlMs)
-                  out += FlagEvent(uid, "recent_purchase", active = true, t)
-                case _ => () // refresh inside the ttl window: silent
-              }
-              last = Some(math.max(t, last.getOrElse(Long.MinValue)))
-            }
-            state.update(FlagState(last.get))
-            state.setTimeoutTimestamp(last.get + ttlMs)
-            out.result().iterator
-          }
-      }
-  }
 
   final case class UserTotals(userId: Long, n: Long, purchases: Long)
 

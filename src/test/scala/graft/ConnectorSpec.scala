@@ -1,12 +1,12 @@
 package graft
 
-import graft.sources.{PagedConnector, ParquetTableConnector}
+import graft.sources.PagedConnector
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source connectors: the paged connector must drain a cursor sequence into
-  * one DataFrame; the file connectors delegate to Tables. */
+  * one DataFrame. */
 class ConnectorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -30,10 +30,5 @@ class ConnectorSpec extends AnyFunSuite {
     def loop(c: Int): (Seq[Row], Option[Int]) = (Seq(Row(c.toLong)), Some(c + 1))
     val df = new PagedConnector[Int](schema, 0, loop, maxPages = 7).load(spark)
     assert(df.count() == 7)
-  }
-
-  test("ParquetTableConnector loads a warehouse table") {
-    val df = new ParquetTableConnector("/root/testdata/sf0.001", "nation").load(spark)
-    assert(df.count() == 25)
   }
 }

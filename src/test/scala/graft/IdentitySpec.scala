@@ -21,18 +21,6 @@ class IdentitySpec extends AnyFunSuite {
       5L -> 5L, 6L -> 5L, 7L -> 5L, 8L -> 8L, 9L -> 9L))
   }
 
-  test("resolveByExactKeys merges records sharing any identifier") {
-    // records: 10 & 11 share an email; 11 & 12 share a phone (transitive);
-    // 13 alone; 14 & 15 share a phone.
-    val ids = Seq(
-      (10L, "alice@x.com"), (11L, "alice@x.com"), (11L, "555-1"), (12L, "555-1"),
-      (13L, "bob@y.com"), (14L, "555-9"), (15L, "555-9"))
-      .toDF("record_id", "id_value")
-    val got = Identity.resolveByExactKeys(ids)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 13L, 14L -> 14L, 15L -> 14L))
-  }
-
   test("ambiguous fuzzy match resolves deterministically: both candidates merge, min id canonical") {
     // The reference's order-dependent fold would attach record 30 to
     // whichever of 10/20 it scanned first; set-based CC instead merges all

@@ -155,13 +155,13 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("PQ: codes cover all vectors in-range and are partitioning-independent") {
-    val c1 = SimilaritySearch.pqCodes(emb, "vec_id", "embedding", 64, m = 4,
-        k = 16, iters = 2)
+    val c1 = SimilaritySearch.pqModel(emb, "vec_id", "embedding", 64, m = 4,
+        k = 16, iters = 2)._1
       .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getInt)).toMap
     assert(c1.size == emb.count())
     assert(c1.values.forall(_.forall(c => c >= 0 && c < 16)))
-    val c2 = SimilaritySearch.pqCodes(emb.repartition(7), "vec_id", "embedding",
-        64, m = 4, k = 16, iters = 2)
+    val c2 = SimilaritySearch.pqModel(emb.repartition(7), "vec_id", "embedding",
+        64, m = 4, k = 16, iters = 2)._1
       .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getInt)).toMap
     assert(c1 == c2)
   }
@@ -180,9 +180,9 @@ class IvfSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
     assert(got.toSeq == rep.toSeq)
     // recompute the winners' ADC distances driver-side from codes + codebook
-    val codes = SimilaritySearch.pqCodes(emb, "vec_id", "embedding", 64, m, 16, 2)
-    val book = SimilaritySearch.pqCodebook(emb, "vec_id", "embedding", 64, m, codes)
-      .collect().map(r => (r.getInt(2), r.getInt(0)) -> r.getSeq[Float](1)).toMap
+    val (codes, codebook) = SimilaritySearch.pqModel(emb, "vec_id", "embedding", 64, m, 16, 2)
+    val book = codebook.collect()
+      .map(r => (r.getInt(2), r.getInt(0)) -> r.getSeq[Float](1)).toMap
     val codeMap = codes.collect().map(r => r.getLong(0) -> (1 to m).map(r.getInt)).toMap
     val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 0L)
       .collect().head.getSeq[Float](1)

@@ -108,7 +108,8 @@ class OpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pairs.contains((1L, 4L)) && pairs((1L, 4L)) == 0L)
     assert(pairs.keySet.forall { case (a, b) => Set(a, b).subsetOf(Set(1L, 2L, 4L)) })
-    val sig = Dedup.simhash64Bands(docs, "doc_id", "text").collect()
+    val sig = Dedup.simhash64BandsFromCounts(
+      Dedup.wordCounts(docs, "doc_id", "text"), "doc_id").collect()
     assert(sig.forall(r => (0 until 4).forall(k => r.getInt(k + 1) >= 0 && r.getInt(k + 1) < 65536)))
   }
 

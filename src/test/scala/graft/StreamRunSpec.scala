@@ -8,7 +8,6 @@ import graft.queries.Registry
 import graft.streaming.Streams
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,17 +37,16 @@ class StreamRunSpec extends AnyFunSuite {
 
   test("a seat whose batch body throws fails the seat call itself") {
     val in = TestDirs("graft_run_in").resolve("a").toString
-    spark.range(3).toDF("k").withColumn("v", col("k")).write.parquet(in)
-    val table = TestDirs("graft_run_tbl").toString + "/t"
+    spark.range(3).toDF("k").write.parquet(in)
+    val state = TestDirs("graft_run_state").toString + "/t"
     val ckpt = TestDirs("graft_run_ckpt").toString
-    // no column `nope`: the merge fails inside micro-batch 0, after start()
-    // has returned, so only a call that waits for the end can see it
+    // no column `text`: the partial fails inside micro-batch 0, after
+    // start() has returned, so only a call that waits for the end can see it
     val ex = intercept[StreamingQueryException] {
-      Streams.upsertByKey(spark.readStream.schema("k LONG, v LONG").parquet(in),
-        table, ckpt, "nope", "v", "v")
+      Streams.cmsIngest(spark.readStream.schema("k LONG").parquet(in), state, ckpt)
     }
     assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
-      .exists(e => String.valueOf(e.getMessage).contains("`nope`")), ex)
+      .exists(e => String.valueOf(e.getMessage).contains("`text`")), ex)
   }
 
   test("an ingest seat's state and checkpoint dir is deleted at JVM exit") {

@@ -16,24 +16,6 @@ class StreamsSpec extends AnyFunSuite {
 
   private def batchEvents = Tables.events(spark, sf)
 
-  test("windowed counts match the batch equivalent") {
-    val q = Streams.windowedCounts(Tables.stream(spark, sf, "events"), "1 hour", "10 minutes")
-      .writeStream.outputMode(OutputMode.Append).format("memory").queryName("win_counts").start()
-    q.processAllAvailable(); q.stop()
-    // Append mode only emits closed windows; the final (unclosed) windows stay
-    // in state. Compare the emitted subset against batch truth.
-    val got = spark.table("win_counts")
-      .select("window_start", "event_type", "n").collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val want = batchEvents
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start"), col("event_type"), col("n")).collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(got.nonEmpty)
-    assert(got.subsetOf(want), "every emitted window must match batch truth")
-  }
-
   test("dedupByKey keeps one row per key") {
     val q = Streams.dedupByKey(
         Tables.stream(spark, sf, "events").withColumn("dup_key", expr("event_id div 4")),
@@ -92,7 +74,7 @@ class StreamsSpec extends AnyFunSuite {
     // session windows only support append mode; with zero lateness the
     // watermark reaches max(ts) and the post-batch no-data run flushes every
     // session that closed before it
-    val q = Streams.userSessions(Tables.stream(spark, sf, "events"), "30 minutes", "0 seconds")
+    val q = Streams.userSessions(Tables.stream(spark, sf, "events"))
       .writeStream.outputMode(OutputMode.Append).format("memory").queryName("sessions").start()
     q.processAllAvailable(); q.stop()
     val got = spark.table("sessions")
@@ -119,83 +101,6 @@ class StreamsSpec extends AnyFunSuite {
     assert(got.nonEmpty)
     assert(got.subsetOf(wantAll), "every emitted session must match batch truth")
     assert(mustEmit.subsetOf(got), "every watermark-closed session must be emitted")
-  }
-
-  test("recentPurchaseFlags raises on purchase and expires via event-time TTL") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val in = TestDirs("graft_ttl_in")
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("ts", TimestampType)))
-    def arrive(tag: String, rows: Seq[(Long, String, java.sql.Timestamp)]): Unit = {
-      val sub = in.resolve(tag)
-      rows.toDF("user_id", "event_type", "ts").coalesce(1).write.parquet(sub.toString)
-      Files.list(sub).forEach { p =>
-        if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
-      }
-    }
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def ts(offsetMs: Long) = new java.sql.Timestamp(t0.getTime + offsetMs)
-    val ttl = 60L * 60 * 1000 // 1 hour
-    val q = Streams.recentPurchaseFlags(spark,
-        spark.readStream.schema(schema).parquet(in.toString), ttl)
-      .writeStream.outputMode(OutputMode.Append).format("memory").queryName("ttl_flags").start()
-    // wave 1: users 1, 2, 4 purchase; user 3 only clicks
-    arrive("a", Seq((1L, "purchase", ts(0)), (2L, "purchase", ts(1000)),
-      (3L, "click", ts(2000)), (4L, "purchase", ts(500))))
-    q.processAllAvailable()
-    // wave 2: user 2 re-purchases AFTER a bridged >ttl quiet gap (the armed
-    // timeout never fires — the expiry must be synthesized in the data
-    // branch); user 4 refreshes within the ttl (silent), then expires via
-    // the timeout as the watermark passes; user 1 expires via the timeout
-    arrive("b", Seq((2L, "purchase", ts(ttl * 3)), (4L, "purchase", ts(ttl / 2)),
-      (9L, "click", ts(ttl * 3))))
-    q.processAllAvailable()
-    q.stop()
-    val byUser = spark.table("ttl_flags").collect()
-      .map(r => (r.getLong(0), r.getBoolean(2), r.getLong(3) - t0.getTime))
-      .groupBy(_._1).map { case (u, evs) => u -> evs.map(e => (e._2, e._3)).sortBy(_._2).toSeq }
-    assert(byUser(1L) == Seq((true, 0L), (false, ttl)), s"u1: ${byUser.get(1L)}")
-    assert(byUser(2L) == Seq((true, 1000L), (false, 1000L + ttl), (true, ttl * 3)),
-      s"u2 must clear across the bridged gap then re-raise: ${byUser.get(2L)}")
-    assert(byUser(4L) == Seq((true, 500L), (false, ttl / 2 + ttl)),
-      s"u4 refresh must be silent, then timeout-expire: ${byUser.get(4L)}")
-    assert(!byUser.contains(3L) && !byUser.contains(9L), "click-only users never flagged")
-  }
-
-  test("upsertByKey merges micro-batches into a keyed table, newest wins") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types._
-    val in = TestDirs("graft_upsert_in")
-    val table = TestDirs("graft_upsert_tbl").toString + "/t"
-    val ckpt = TestDirs("graft_upsert_ckpt").toString
-    val schema = StructType(Seq(StructField("k", LongType),
-      StructField("version", LongType), StructField("payload", StringType)))
-    import spark.implicits._
-    def arrive(tag: String, rows: Seq[(Long, Long, String)]): Unit = {
-      val sub = in.resolve(tag)
-      rows.toDF("k", "version", "payload").coalesce(1).write.parquet(sub.toString)
-      Files.list(sub).forEach { p =>
-        if (p.toString.endsWith(".parquet"))
-          Files.move(p, in.resolve(tag + "_" + p.getFileName.toString))
-      }
-    }
-    def runOnce(): Unit =
-      Streams.upsertByKey(
-        spark.readStream.schema(schema).parquet(in.toString),
-        table, ckpt, "k", "version", "payload")
-    arrive("a", Seq((1L, 1L, "one_v1"), (2L, 1L, "two_v1")))
-    runOnce()
-    assert(spark.read.parquet(table).count() == 2)
-    // second wave: k=2 updated, k=3 new; restart resumes from the checkpoint
-    arrive("b", Seq((2L, 5L, "two_v5"), (3L, 1L, "three_v1")))
-    runOnce()
-    val got = spark.read.parquet(table).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
-    assert(got == Map(1L -> ((1L, "one_v1")), 2L -> ((5L, "two_v5")),
-      3L -> ((1L, "three_v1"))))
   }
 
   test("mergeUpsert refuses to reinitialize a destroyed table, and self-heals an interrupted swap") {
@@ -229,6 +134,12 @@ class StreamsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(got2 == Map(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d"))
     assert(!Files.exists(Paths.get(table + "._GRAFT_OLD")), "aside copy dropped after commit")
+    // keep-newest: a higher version of an existing key replaces its row
+    Streams.mergeUpsert(batch((2L, 5L, "two_v5")), table, "k", "version", "payload")
+    val got3 = spark.read.parquet(table).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
+    assert(got3 == Map(1L -> ((1L, "a")), 2L -> ((5L, "two_v5")),
+      3L -> ((1L, "c")), 4L -> ((1L, "d"))))
   }
 
   test("runningUserTotals accumulates keyed state across a batch") {
@@ -266,7 +177,7 @@ class StreamsSpec extends AnyFunSuite {
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
       .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    Streams.compactingIngest(stream, base, ckpt, mergeEvery = 4)
+    Streams.compactingIngest(stream, base, ckpt)
 
     def canon(d: org.apache.spark.sql.DataFrame) =
       d.select("doc_id", "n_chars").collect()
@@ -288,7 +199,7 @@ class StreamsSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$base/landing/b2")
     assert(canon(Streams.readIngested(spark, base)) == want)
     // ...and the retried merge only cleans it up
-    Streams.mergeLanding(spark, base, Seq(2L), 128L << 20)
+    Streams.mergeLanding(spark, base, Seq(2L))
     assert(!new java.io.File(s"$base/landing/b2").exists())
     assert(canon(Streams.readIngested(spark, base)) == want)
 
@@ -368,7 +279,7 @@ class StreamsSpec extends AnyFunSuite {
     }
     def runOnce(): Unit =
       Streams.nearDupIngest(Tables.stream(spark, in.toString, "documents"),
-        state, ckpt, threshold = 0.5)
+        state, ckpt)
 
     // wave 1: first half by doc_id; wave 2 arrives after a restart — id-
     // ordered arrival, so the gate must equal the batch smaller-id pair rule
